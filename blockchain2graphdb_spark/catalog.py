@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .plans.memo import SessionMemo, _fixture_identity, session_token  # noqa: F401
+
 TABLES = (
     "region",
     "nation",
@@ -75,70 +77,17 @@ def prep(spark: SparkSession) -> SparkSession:
 # executor state, zero materialized rows): every action on it still
 # scans the parquet from disk, so no result or intermediate is ever
 # reused — this is the DataFrame-level analogue of Spark's own
-# session-scoped InMemoryFileIndex cache.
-#
-# Key safety:
-#   * applicationId + id(session): a new session/context never sees a
-#     stale plan (and plans are session-bound objects anyway);
-#   * fixture identity (abs path + size + mtime_ns, plus the one-level
-#     entry listing for directory datasets): a regenerated fixture at
-#     the same path misses the memo;
-#   * SPARK_GRAFT_CHAOS value: _chaos_wrap binds the fault-injection
-#     env var at plan-construction time (see its docstring), so the
-#     chaos spec is part of the key — a witness toggling the var can
-#     never be served a plan built under the other setting. The retry
-#     witness's reset_session_reuse additionally clears this memo.
-_TABLE_MEMO: dict = {}
-
-
-def _fixture_identity(sf_dir: str, name: str) -> tuple:
-    import os
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    st = os.stat(path)
-    ident: tuple = (os.path.abspath(path), st.st_size, st.st_mtime_ns)
-    if os.path.isdir(path):
-        # recursive walk (ADVICE r16): a nested/partitioned layout can
-        # rewrite a leaf file without changing the top directory's
-        # size/mtime; one flat scandir level would then serve a stale
-        # listing from the memo
-        entries = []
-        for root, _dirs, files in os.walk(path):
-            rel = os.path.relpath(root, path)
-            for fn in files:
-                fst = os.stat(os.path.join(root, fn))
-                entries.append((os.path.join(rel, fn), fst.st_size, fst.st_mtime_ns))
-        ident += tuple(sorted(entries))
-    return ident
-
-
-def session_token(spark: SparkSession) -> str:
-    """Non-recyclable identity for a SparkSession (ADVICE r16): id() can
-    be recycled after a sibling session is GC'd, which could serve a
-    plan bound to a dead session. A uuid stashed on the session object
-    lives exactly as long as the session and never repeats."""
-    import uuid
-
-    tok = getattr(spark, "_b2g_session_token", None)
-    if tok is None:
-        tok = uuid.uuid4().hex
-        spark._b2g_session_token = tok
-    return tok
+# session-scoped InMemoryFileIndex cache. Key safety (session, chaos
+# spec, recursive fixture identity) is plans/memo.py's.
+_PLANS = SessionMemo(64)  # plans are tiny; the bound caps handle count
+_PLAN_SERIAL = 0
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    import os
-
     if name not in TABLES:
         raise KeyError(f"unknown fixture table {name!r}; have {TABLES}")
-    key = (
-        spark.sparkContext.applicationId,
-        session_token(spark),
-        os.environ.get("SPARK_GRAFT_CHAOS", ""),
-        name,
-        _fixture_identity(sf_dir, name),
-    )
-    hit = _TABLE_MEMO.get(key)
+    key = _PLANS.key(spark, sf_dir, (name,))
+    hit = _PLANS.get(key)
     if hit is not None:
         return hit
     if name == "events":
@@ -148,19 +97,13 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             _dates_to_timestamps(spark.read.parquet(f"{sf_dir}/{name}.parquet")),
             name,
         )
-    while len(_TABLE_MEMO) >= 64:  # plans are tiny; bound handle count
-        _TABLE_MEMO.pop(next(iter(_TABLE_MEMO)))
     # monotone serial: a never-reused identity for "this exact plan"
     # (object ids recycle after GC; consumers like register_views key
     # skip-decisions on this instead)
     global _PLAN_SERIAL
     _PLAN_SERIAL += 1
     df._b2g_plan_serial = _PLAN_SERIAL
-    _TABLE_MEMO[key] = df
-    return df
-
-
-_PLAN_SERIAL = 0
+    return _PLANS.put(key, df)
 
 
 def parquet_num_rows(sf_dir: str, name: str) -> int:

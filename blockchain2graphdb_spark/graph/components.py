@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.iterate import local_checkpoint, observed_checkpoint
-from ..plans.sizing import adaptive_broadcast_rows, est_row_bytes
+from ..plans.sizing import broadcast_hint
 
 
 def connected_components(
@@ -43,7 +43,6 @@ def connected_components(
     max_iter: int = 50,
     broadcast_nodes: int | None = None,
     canonical: bool = False,
-    probe_every: int = 2,
     driver_threshold: int = 100_000,
 ) -> DataFrame:
     """Undirected connected components; returns (node, component) where
@@ -132,13 +131,7 @@ def connected_components(
         .select("node", F.least(F.col("node"), F.col("mb")).alias("comp")),
         F.count(F.lit(1)),
     )
-    if broadcast_nodes is None:
-        # adaptive (SURVEY §8 limit closed; plans/sizing.py): gate from
-        # the ACTUAL label-row schema, not a constant row size
-        broadcast_nodes = adaptive_broadcast_rows(
-            edges.sparkSession, bytes_per_row=est_row_bytes(comp.schema)
-        )
-    hint = F.broadcast if n_nodes <= broadcast_nodes else (lambda df: df)
+    hint = broadcast_hint(edges.sparkSession, n_nodes, comp.schema, broadcast_nodes)
 
     # Shiloach–Vishkin-style union-find in rounds; each outer round:
     #   (1) hash-min — every node takes the min label over itself and
@@ -222,7 +215,6 @@ def list_rank(
     parent_col: str = "parent",
     broadcast_nodes: int | None = None,
     max_iter: int = 64,
-    probe_every: int = 2,
 ) -> DataFrame:
     """Position of each node in its chain (1-based), from (id, parent)
     links alone, parent NULL at the head. Pointer jumping with THREE
@@ -237,8 +229,7 @@ def list_rank(
 
     The liveness probe rides the per-round checkpoint job as an
     `observe()` metric (zero extra jobs), so the loop exits exactly at
-    resolution; `probe_every` is retained for API compatibility but no
-    longer matters. max_iter (chains up to 2^64) is a divergence
+    resolution. max_iter (chains up to 2^64) is a divergence
     backstop only.
     """
     # eager checkpoint with the hint-sizing count riding the job
@@ -252,13 +243,7 @@ def list_rank(
         ),
         F.count(F.lit(1)),
     )
-    if broadcast_nodes is None:
-        # adaptive (SURVEY §8 limit closed; plans/sizing.py): gate from
-        # the ACTUAL pointer-row schema, not a constant row size
-        broadcast_nodes = adaptive_broadcast_rows(
-            links.sparkSession, bytes_per_row=est_row_bytes(cur.schema)
-        )
-    hint = F.broadcast if n_nodes <= broadcast_nodes else (lambda df: df)
+    hint = broadcast_hint(links.sparkSession, n_nodes, cur.schema, broadcast_nodes)
 
     def jump(base: DataFrame, lk: DataFrame) -> DataFrame:
         # one pointer-jump composition against lk: ptr := lk[ptr].ptr,
@@ -301,8 +286,7 @@ def list_rank(
         # estimates every round (see connected_components / STATUS.md)
         # the liveness probe rides the checkpoint job (observe): an
         # unresolved-pointer count per round costs zero extra jobs, so
-        # the loop exits exactly at resolution instead of up to
-        # probe_every - 1 no-op rounds later
+        # the loop exits exactly at resolution
         cur, unresolved = observed_checkpoint(
             stepped,
             F.count(F.when(F.col("ptr").isNotNull(), 1)),

@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.iterate import local_checkpoint, observed_checkpoint
-from ..plans.sizing import adaptive_broadcast_rows, est_row_bytes
+from ..plans.sizing import broadcast_hint
 
 
 def pregel(
@@ -40,7 +40,6 @@ def pregel(
     broadcast_nodes: int | None = None,
     needs_dst_attr: bool = True,
     check_convergence: bool = True,
-    probe_every: int = 2,
 ) -> DataFrame:
     """Returns (id, attr) at fixpoint (or after max_iter supersteps).
 
@@ -55,8 +54,7 @@ def pregel(
     The convergence probe rides the per-superstep checkpoint job as an
     `observe()` metric (plans.iterate.observed_checkpoint), so checking
     every superstep costs zero extra jobs and the loop exits exactly at
-    the fixpoint. `probe_every` is retained for API compatibility but
-    no longer matters.
+    the fixpoint.
     """
     v = vertices.select("id", "attr")
     if initial_msg is not None:
@@ -64,14 +62,9 @@ def pregel(
     # eager checkpoint (accumulator-lifecycle rule) with the hint-sizing
     # count riding the materialization job as an observe() metric
     v, n_vertices = observed_checkpoint(v, F.count(F.lit(1)))
-    if broadcast_nodes is None:
-        # adaptive (SURVEY §8 limit closed): derived from the session's
-        # executor/driver heap AND the actual vertex schema, resolved
-        # once per loop (plans/sizing.py)
-        broadcast_nodes = adaptive_broadcast_rows(
-            vertices.sparkSession, bytes_per_row=est_row_bytes(v.schema)
-        )
-    hint = F.broadcast if n_vertices <= broadcast_nodes else (lambda df: df)
+    # resolved once per loop from the session heap and the actual vertex
+    # schema (plans/sizing.py)
+    hint = broadcast_hint(vertices.sparkSession, n_vertices, v.schema, broadcast_nodes)
 
     for i in range(max_iter):
         src = v.select(F.col("id").alias("src"), F.col("attr").alias("src_attr"))

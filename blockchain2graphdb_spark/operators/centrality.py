@@ -47,7 +47,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import parquet_num_rows, prep, table
 from ..plans.iterate import local_checkpoint
-from ..plans.sizing import adaptive_broadcast_rows, est_row_bytes
+from ..plans.memo import SessionMemo, release_checkpoints
+from ..plans.sizing import broadcast_hint
 from ..registry import query
 from .graphops import _copurchase_pairs, _pair_nodes, _sym_edges
 
@@ -58,13 +59,13 @@ _CLO_SEEDS = 8
 
 # Session-scoped BFS memo (VERDICT r11 #3, the _copurchase_pairs
 # discipline): betweenness, closeness, and edge-betweenness all need
-# the same sampled-seed BFS — build it ONCE per (application, fixture
+# the same sampled-seed BFS — build it ONCE per (session, fixture
 # identity, depth) at the largest seed count and derive smaller seed
 # sets by exact root filtering (the k smallest-md5 seeds are a prefix
 # of the 2k smallest, and per-root BFS results are independent, so the
 # filter is bit-exact). Evicted entries unpersist their checkpoint
 # blocks so stale fixtures don't pin executor storage.
-_SEED_BFS_MEMO: dict = {}
+_SEED_BFS = SessionMemo(8, release=lambda v: release_checkpoints(v[2]))
 
 
 def _seed_bfs(
@@ -76,22 +77,11 @@ def _seed_bfs(
     if n_seeds > _BTW_SEEDS:
         bfs, seeds, _cks = _seed_bfs_build(spark, sf_dir, n_seeds, depth)
         return bfs, seeds
-    from .graphops import _pairs_memo_key
-
-    key = _pairs_memo_key(spark, sf_dir) + (depth,)
-    hit = _SEED_BFS_MEMO.get(key)
+    # the build reads lineitem (the pair list) and part (the gate)
+    key = _SEED_BFS.key(spark, sf_dir, ("lineitem", "part"), depth)
+    hit = _SEED_BFS.get(key)
     if hit is None:
-        while len(_SEED_BFS_MEMO) >= 8:  # bound driver-side handles
-            _old_bfs, _old_seeds, old_cks = _SEED_BFS_MEMO.pop(
-                next(iter(_SEED_BFS_MEMO))
-            )
-            for ck in old_cks:
-                try:
-                    ck.rdd.unpersist(False)
-                except Exception:
-                    pass
-        hit = _seed_bfs_build(spark, sf_dir, _BTW_SEEDS, depth)
-        _SEED_BFS_MEMO[key] = hit
+        hit = _SEED_BFS.put(key, _seed_bfs_build(spark, sf_dir, _BTW_SEEDS, depth))
     bfs, seeds, _cks = hit
     if n_seeds == _BTW_SEEDS:
         return bfs, seeds
@@ -142,11 +132,7 @@ def _seed_bfs_build(
     # frontier rows ≤ n_seeds · |parts| (nodes are part keys); broadcast
     # under the memory-adaptive gate (sized from the actual frontier
     # schema), keyed shuffles above it
-    n_parts = parquet_num_rows(sf_dir, "part")
-    gate = adaptive_broadcast_rows(
-        spark, bytes_per_row=est_row_bytes(frontier.schema)
-    )
-    hint = F.broadcast if n_seeds * n_parts <= gate else (lambda df: df)
+    hint = broadcast_hint(spark, n_seeds * parquet_num_rows(sf_dir, "part"), frontier.schema)
     levels = [frontier.withColumn("dist", F.lit(0))]
     seen = frontier.select("root", "node")
     for h in range(1, depth + 1):
@@ -406,18 +392,14 @@ def edge_betweenness_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unconditionally, which on a huge graph could blow the broadcast
     # ceiling; above the gate the joins degrade to keyed shuffles, the
     # same fallback every frontier operator takes)
-    gate = adaptive_broadcast_rows(spark, bytes_per_row=32)
-    side = (
-        F.broadcast
-        if half * parquet_num_rows(sf_dir, "part") <= gate
-        else (lambda df: df)
-    )
-    sd = side(F.broadcast(p).join(bfs, bfs["root"] == F.col("s")).select(
+    sd = F.broadcast(p).join(bfs, bfs["root"] == F.col("s")).select(
         "pid",
         F.col("node").alias("u"),
         F.col("dist").alias("dsu"),
         F.col("sigma").alias("ssu"),
-    ))
+    )
+    side = broadcast_hint(spark, half * parquet_num_rows(sf_dir, "part"), sd.schema)
+    sd = side(sd)
     # r16: td is node-sized x #pids — the SAME size class as sd, which
     # was already broadcast; leaving it unhinted made the second join a
     # sort-merge that shuffled the sd-expanded edge stream (profiled:
@@ -560,9 +542,7 @@ def graph_diameter_lb(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).unionByName(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
     nodes = _pair_nodes(pairs)
-    n_parts = parquet_num_rows(sf_dir, "part")
-    gate = adaptive_broadcast_rows(spark, bytes_per_row=16)
-    hint = F.broadcast if n_parts <= gate else (lambda df: df)
+    hint = broadcast_hint(spark, parquet_num_rows(sf_dir, "part"), nodes.schema)
 
     def sweep(seed_df: DataFrame) -> DataFrame:
         frontier = local_checkpoint(seed_df.select(F.col("n").alias("node")))
@@ -860,9 +840,7 @@ def katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("node", F.lit(1000000).cast("decimal(38,0)").alias("v"))
     )
     v = local_checkpoint(v)
-    n_parts = parquet_num_rows(sf_dir, "part")
-    gate = adaptive_broadcast_rows(spark, bytes_per_row=24)
-    hint = F.broadcast if n_parts <= gate else (lambda df: df)
+    hint = broadcast_hint(spark, parquet_num_rows(sf_dir, "part"), v.schema)
     for _ in range(_KATZ_ROUNDS):
         w = local_checkpoint(
             sym.join(

@@ -114,7 +114,7 @@ def influence_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep(spark)
     from ..catalog import parquet_num_rows
     from ..plans.confs import scoped_confs
-    from ..plans.sizing import adaptive_broadcast_rows
+    from ..plans.sizing import broadcast_hint
 
     pairs, n_edges = _copurchase_pairs(spark, sf_dir)
     # r13 perf pass (the eigenvector_centrality lesson, ARCHITECTURE
@@ -127,9 +127,6 @@ def influence_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     # degrade to keyed shuffles exactly as before.
     default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     nparts = max(4, min(default_parts, (2 * (n_edges or 0)) // 75_000 or 4))
-    n_parts_tbl = parquet_num_rows(sf_dir, "part")
-    gate = adaptive_broadcast_rows(spark, bytes_per_row=16)
-    hint = F.broadcast if n_parts_tbl <= gate else (lambda df: df)
     with scoped_confs(
         spark,
         {
@@ -165,6 +162,8 @@ def influence_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(_IC_SEEDS)
             .select(F.col("n").alias("node"))
         )
+        # frontier and seen hold at most one row per part
+        hint = broadcast_hint(spark, parquet_num_rows(sf_dir, "part"), frontier.schema)
         seen = frontier
         counts = [(0, frontier.count())]
         for h in range(1, _IC_ROUNDS + 1):

@@ -13,6 +13,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import parquet_num_rows, prep, table
 from ..plans.iterate import local_checkpoint
+from ..plans.memo import SessionMemo, release_checkpoints
+from ..plans.sizing import broadcast_hint
 from ..graph.components import (
     connected_components,
     incremental_components,
@@ -363,25 +365,11 @@ def wallet_ids_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # session-scoped memo for the checkpointed co-purchase edge list: the
 # driver gate and bench run MANY graph keys in one SparkSession, and
-# each used to rebuild the same ~1.5-2s edge list. Keyed by the Spark
-# application + the fixture's identity (abs path + size + mtime), so a
-# regenerated fixture or a new session can never serve stale edges;
-# localCheckpoint RDDs live for the session, so the cached DataFrame
-# stays valid exactly as long as the key does.
-_PAIRS_MEMO: dict = {}
-
-
-def _pairs_memo_key(spark: SparkSession, sf_dir: str) -> tuple:
-    import os
-
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    st = os.stat(src)
-    return (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        st.st_size,
-        st.st_mtime_ns,
-    )
+# each used to rebuild the same ~1.5-2s edge list. localCheckpoint RDDs
+# live for the session, so a memoized (pairs, edge_count) stays valid
+# exactly as long as its key (plans/memo.py); eviction releases the
+# checkpoint blocks of a stale fixture.
+_PAIRS = SessionMemo(8, release=lambda v: release_checkpoints([v[0]]))
 
 
 def _expand_scope(spark: SparkSession, sf_dir: str | None = None):
@@ -407,7 +395,10 @@ def _expand_scope(spark: SparkSession, sf_dir: str | None = None):
     (OPTIMIZATION_r17.md): 64k / derived / off are within the noise
     band at sf0.1; the derived form is kept for the scale-adaptive
     shape, not a local win."""
+    from pyarrow import ArrowInvalid
+
     from ..plans.confs import scoped_confs
+    from ..plans.fallback import warn_once
 
     floor = 64 * 1024
     if sf_dir is not None:
@@ -415,8 +406,9 @@ def _expand_scope(spark: SparkSession, sf_dir: str | None = None):
             est_bytes = parquet_num_rows(sf_dir, "lineitem") * 16
             par = max(1, spark.sparkContext.defaultParallelism)
             floor = max(64 * 1024, min(1024 * 1024, est_bytes // par))
-        except OSError:
-            pass
+        except (OSError, ArrowInvalid) as e:
+            # advisory only: an unreadable footer keeps the 64 KB floor
+            warn_once("_expand_scope", f"lineitem footer unreadable ({e}); floor 64 KB")
     return scoped_confs(
         spark,
         {"spark.sql.adaptive.coalescePartitions.minPartitionSize": str(floor)},
@@ -486,8 +478,8 @@ def _copurchase_pairs(
         .distinct()
     )
     if checkpoint:
-        key = _pairs_memo_key(spark, sf_dir)
-        hit = _PAIRS_MEMO.get(key)
+        key = _PAIRS.key(spark, sf_dir, ("lineitem",))
+        hit = _PAIRS.get(key)
         if hit is not None:
             return hit
         # reused by adjacency + both probes in the callers; the eager
@@ -495,18 +487,7 @@ def _copurchase_pairs(
         # explode is not packed onto a handful of tasks (see its doc)
         with _expand_scope(spark, sf_dir):
             pairs = pairs.localCheckpoint(eager=True)
-        while len(_PAIRS_MEMO) >= 8:  # bound driver-side handles
-            # Evict oldest-first (dict insertion order) and release its
-            # checkpoint blocks so stale fixtures don't pin executor
-            # storage for the whole session. Best-effort: the RDD may
-            # already be gone if the context restarted.
-            old_df, _cnt = _PAIRS_MEMO.pop(next(iter(_PAIRS_MEMO)))
-            try:
-                old_df.rdd.unpersist(False)
-            except Exception:
-                pass
-        _PAIRS_MEMO[key] = (pairs, pairs.count())
-        return _PAIRS_MEMO[key]
+        return _PAIRS.put(key, (pairs, pairs.count()))
     return pairs, None
 
 
@@ -525,7 +506,7 @@ def _copurchase_pairs(
     """,
 )
 def triangle_count(
-    spark: SparkSession, sf_dir: str, broadcast_edges_max: int = 4_000_000
+    spark: SparkSession, sf_dir: str, broadcast_edges_max: int | None = None
 ) -> DataFrame:
     """G2-family: global triangle count on the part co-purchase graph.
 
@@ -554,17 +535,15 @@ def triangle_count(
     pairs, n_edges = _copurchase_pairs(spark, sf_dir)
     adj = pairs.groupBy("a").agg(F.array_sort(F.collect_list("b")).alias("nb"))
     # total adjacency payload ≈ one array cell per edge, so gate the
-    # broadcast on the edge count (folded into the checkpoint
-    # materialization job inside _copurchase_pairs — no separate count).
+    # broadcast on the edge count (counted once per memoized pair list
+    # inside _copurchase_pairs) at the pair-row width.
     # Broadcast path: leave adj unmaterialized — each broadcast build is
     # one cheap partial agg over the checkpointed pairs, cheaper than an
     # extra localCheckpoint round-trip (measured). Shuffle path: the two
     # probes would each recompute the aggregate, so checkpoint it once.
-    if n_edges <= broadcast_edges_max:
-        hint = F.broadcast
-    else:
+    hint = broadcast_hint(spark, n_edges, pairs.schema, broadcast_edges_max)
+    if hint is not F.broadcast:
         adj = adj.localCheckpoint(eager=True)
-        hint = lambda df: df  # noqa: E731
         # Size the probe-join shuffles to the edge payload (one array
         # cell per edge on both the pairs and the joined-intermediate
         # side): 32 partitions hold ~190 MB each at 36M edges and the
@@ -614,7 +593,7 @@ def triangle_count(
     """,
 )
 def clustering_coefficient(
-    spark: SparkSession, sf_dir: str, broadcast_edges_max: int = 4_000_000
+    spark: SparkSession, sf_dir: str, broadcast_edges_max: int | None = None
 ) -> DataFrame:
     """G8 companion: local clustering coefficient for a seed set (the
     p_size=50 parts, same seeds as bfs_distance) on the part
@@ -650,7 +629,7 @@ def clustering_coefficient(
         F.count(F.lit(1)).alias("degree"),
     )
     fwd = pairs.groupBy("u").agg(F.array_sort(F.collect_list("v")).alias("fwd"))
-    hint = F.broadcast if n_edges <= broadcast_edges_max else (lambda df: df)
+    hint = broadcast_hint(spark, n_edges, pairs.schema, broadcast_edges_max)
     closed = (
         nb_edges.join(nb_arr.select("u", "nbu"), "u")
         .join(
@@ -739,7 +718,6 @@ def bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # FOOTER (genuinely metadata-only — a Spark count() would be a real
     # scan job per invocation; directory-tolerant per ADVICE r6)
     n_orders = parquet_num_rows(sf_dir, "orders")
-    hint = F.broadcast if n_orders <= 4_000_000 else (lambda df: df)
 
     # p_partkey is the part table's key — no dedup needed; checkpoint
     # because seeds is referenced ~5x (level-1 frontier, the seen set
@@ -750,6 +728,7 @@ def bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("p_partkey").alias("id"))
         .localCheckpoint(eager=True)
     )
+    hint = broadcast_hint(spark, n_orders, seeds.schema)
     # textbook frontier BFS: each level expands ONLY the nodes first
     # discovered at the previous level (anti-join against everything
     # seen), so each lineitem row is emitted O(1) times across the run;
@@ -885,11 +864,11 @@ def pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("a").alias("src"), F.col("b").alias("dst")).localCheckpoint(
         eager=True
     )
-    deg = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("deg")
-    ).localCheckpoint(eager=True)
-    n_nodes = deg.count()
-    hint = F.broadcast if n_nodes <= 4_000_000 else (lambda df: df)
+    deg, n_nodes = observed_checkpoint(
+        sym.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg")),
+        F.count(F.lit(1)),
+    )
+    hint = broadcast_hint(spark, n_nodes, deg.schema)
 
     scores = deg.select("id", F.lit(_PR_SCALE).cast("long").alias("score"), "deg")
     for _ in range(_PR_ITERS):
@@ -985,7 +964,7 @@ def personalized_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("_s", F.lit(1))
     )
-    base = (
+    base, n_nodes = observed_checkpoint(
         deg.join(seeds, "id", "left")
         .select(
             "id",
@@ -993,11 +972,11 @@ def personalized_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("_s") == 1, F.lit(_PR_SCALE).cast("long"))
             .otherwise(F.lit(0).cast("long"))
             .alias("r"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        F.count(F.lit(1)),
     )
-    n_nodes = base.count()
-    hint = F.broadcast if n_nodes <= 4_000_000 else (lambda df: df)
+    # the broadcast side is the (id, contribution) table, deg-shaped
+    hint = broadcast_hint(spark, n_nodes, deg.schema)
 
     scores = base.select("id", F.col("r").alias("score"), "deg", "r")
     for _ in range(_PR_ITERS):
@@ -1196,7 +1175,7 @@ def personalized_pagerank_ranks(
     """,
 )
 def neighbor_jaccard(
-    spark: SparkSession, sf_dir: str, broadcast_edges_max: int = 4_000_000
+    spark: SparkSession, sf_dir: str, broadcast_edges_max: int | None = None
 ) -> DataFrame:
     """G8 companion: per-edge neighborhood Jaccard similarity on the
     part co-purchase graph — |N(a) ∩ N(b)| / |N(a) ∪ N(b)| for every
@@ -1224,11 +1203,10 @@ def neighbor_jaccard(
         F.array_sort(F.collect_list("b")).alias("nb"),
         F.count(F.lit(1)).alias("d"),
     )
-    if n_edges > broadcast_edges_max:
+    # the full adjacency holds both orientations: 2·|pairs| cells
+    hint = broadcast_hint(spark, 2 * n_edges, pairs.schema, broadcast_edges_max)
+    if hint is not F.broadcast:
         adj = adj.localCheckpoint(eager=True)
-        hint = lambda df: df  # noqa: E731
-    else:
-        hint = F.broadcast
     adj_a = adj.select(F.col("a").alias("ja"), F.col("nb").alias("nba"), F.col("d").alias("da"))
     adj_b = adj.select(F.col("a").alias("jb"), F.col("nb").alias("nbb"), F.col("d").alias("db"))
     inter = F.size(F.array_intersect("nba", "nbb")).cast("long")
@@ -1336,9 +1314,9 @@ def kcore(
     sym = pairs.union(
         pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint(eager=True)
-    # |sym| = 2·|pairs| by construction — gate the hint without a job
-    # (the eager checkpoint above materialized sym already)
-    hint = F.broadcast if 2 * n_edges <= 8_000_000 else (lambda df: df)
+    # the broadcast side is a node set no larger than |sym| = 2·|pairs|
+    # by construction — gate the hint without a job
+    hint = broadcast_hint(spark, 2 * n_edges, sym.select("a").schema)
 
     edges = sym
     for _ in range(max_iter):
@@ -1653,16 +1631,15 @@ def sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         sym = sym.localCheckpoint(eager=True)
     # the broadcast side is the node-sized frontier table, so gate on
     # the actual node count (sym is symmetric: src spans every node) —
-    # same 4M-node bound as pagerank_exact, one count on the
-    # checkpointed edge partitions
+    # one count on the checkpointed edge partitions
     n_nodes = sym.select("src").distinct().count()
-    hint = F.broadcast if n_nodes <= 4_000_000 else (lambda df: df)
 
     dist = (
         table(spark, sf_dir, "part")
         .where(F.col("p_size") == 50)
         .select(F.col("p_partkey").alias("id"), F.lit(0).cast("long").alias("dist"))
     )
+    hint = broadcast_hint(spark, n_nodes, dist.schema)
     for _ in range(_SSSP_ROUNDS):
         relax = (
             sym.join(hint(dist), sym["src"] == dist["id"])
@@ -1742,15 +1719,10 @@ def hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the broadcast sides are the hub/authority score tables (one row
     # per distinct supplier / part), so gate on those counts directly
     # rather than the edge-row proxy — one agg job on the checkpointed
-    # edges; same 4M-node bound as pagerank_exact
+    # edges
     sides = e.agg(
         F.countDistinct("s").alias("ns"), F.countDistinct("p").alias("np")
     ).head()
-    hint = (
-        F.broadcast
-        if max(sides["ns"], sides["np"]) <= 4_000_000
-        else (lambda df: df)
-    )
 
     def guarded(col, what):
         return F.when(col < _HITS_GUARD, col).otherwise(
@@ -1765,6 +1737,7 @@ def hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     a1 = e.groupBy("p").agg(guarded(F.count(F.lit(1)), "a1").alias("a"))
+    hint = broadcast_hint(spark, max(sides["ns"], sides["np"]), a1.schema)
     h1 = (
         e.join(hint(a1), "p")
         .groupBy("s")
@@ -2011,14 +1984,16 @@ def _lpa_labels(spark: SparkSession, sf_dir: str):
     # so the (cnt DESC, lbl ASC) winner is just min(neighbor) — the
     # components.py first-round hash-min fold. One groupBy replaces the
     # join + two-level vote aggregate of a full round.
-    labels = local_checkpoint(
-        sym.groupBy(F.col("src").alias("node")).agg(F.min("dst").alias("lbl"))
-    )
     # checkpointed label tables carry no size stats, so gate the
     # broadcast explicitly (the connected_components discipline): while
     # the node table fits, every round streams the checkpointed edges
-    # map-side with zero edge shuffle
-    hint = F.broadcast if labels.count() <= 4_000_000 else (lambda df: df)
+    # map-side with zero edge shuffle. The node count rides the
+    # checkpoint job.
+    labels, n_nodes = observed_checkpoint(
+        sym.groupBy(F.col("src").alias("node")).agg(F.min("dst").alias("lbl")),
+        F.count(F.lit(1)),
+    )
+    hint = broadcast_hint(spark, n_nodes, labels.schema)
     for _ in range(_LPA_ROUNDS - 1):
         votes = (
             sym.join(hint(labels.select(F.col("node").alias("dst"), "lbl")), "dst")

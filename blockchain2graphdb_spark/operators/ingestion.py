@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 
 from ..chain import fixtures
 from ..paths import tmp_root as _tmp_root
+from ..plans.iterate import observed_checkpoint
+from ..plans.sizing import broadcast_hint
 from ..registry import query
 from ..sources.blockfile import read_blocks, normalize
 
@@ -355,17 +357,19 @@ def taint_flow_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     genesis_cb = next(t[0] for t in c.transactions if t[4] and t[1] == genesis_hash)
     seed_addr = next(o[4] for o in c.outputs if o[0] == genesis_cb)
 
-    outs = tables["outputs"].select(
-        F.col("output_id").alias("id"),
-        "address",
-        "value",
-        F.when(F.col("address") == seed_addr, F.lit(_TAINT_SCALE))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("floor"),
-    ).localCheckpoint(eager=True)
-    n_outs = outs.count()
-    hint = F.broadcast if n_outs <= 4_000_000 else (lambda df: df)
+    outs, n_outs = observed_checkpoint(
+        tables["outputs"].select(
+            F.col("output_id").alias("id"),
+            "address",
+            "value",
+            F.when(F.col("address") == seed_addr, F.lit(_TAINT_SCALE))
+            .otherwise(F.lit(0))
+            .cast("long")
+            .alias("floor"),
+        ),
+        F.count(F.lit(1)),
+    )
+    hint = broadcast_hint(spark, n_outs, outs.schema)
 
     spent = tables["inputs"].join(
         tables["outputs"].select(
@@ -410,7 +414,7 @@ def taint_flow_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     return (
         taint.where(F.col("taint") > 0)
-        .join(outs.select("id", "address", "value"), "id")
+        .join(hint(outs.select("id", "address", "value")), "id")
         .orderBy(F.col("taint").desc(), F.col("id"))
         .limit(_TAINT_TOPK)
         .select(F.col("id").alias("output_id"), "address", "value", "taint")

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import TABLES, prep, table
+from ..plans.memo import SessionMemo
 from ..registry import query
 
 
@@ -24,27 +25,24 @@ from ..registry import query
 # could change a view (sf_dir, fixture mtime/size, chaos spec) — when
 # it matches what this session last registered, re-registering would
 # bind the exact same plans and is skipped. Nothing else in the
-# package (or tests) writes these view names.
-_VIEWS_STATE: dict = {}
+# package writes these view names. One entry per session; an evicted
+# entry only costs one re-registration.
+_VIEWS = SessionMemo(8)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Expose the fixture tables to spark.sql under their plain names."""
-    from ..catalog import session_token
-
     dfs = {t: table(spark, sf_dir, t) for t in TABLES}
-    # session_token, not id(spark): a recycled object id must never
-    # skip registration for a fresh session (ADVICE r16)
-    skey = (spark.sparkContext.applicationId, session_token(spark))
+    key = _VIEWS.key(spark, None)
     state = tuple(df._b2g_plan_serial for df in dfs.values())
-    # belt-and-braces sentinel (ADVICE r16): an external dropTempView
-    # would leave _VIEWS_STATE claiming the views exist forever; one
-    # catalog existence probe per skip is ~1 ms vs 10 re-registrations
-    if _VIEWS_STATE.get(skey) == state and spark.catalog.tableExists(TABLES[0]):
+    # sentinel (ADVICE r16/r17): an external dropTempView of ANY view
+    # would leave the memo claiming the views exist; one catalog probe
+    # per view is ~1 ms each vs 10 re-registrations
+    if _VIEWS.get(key) == state and all(spark.catalog.tableExists(t) for t in TABLES):
         return
     for t, df in dfs.items():
         df.createOrReplaceTempView(t)
-    _VIEWS_STATE[skey] = state
+    _VIEWS.put(key, state)
 
 
 def _sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:

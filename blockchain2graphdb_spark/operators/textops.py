@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import prep, table
 from ..functions.ranking import bucketed_global_rank
+from ..plans.iterate import observed_checkpoint
+from ..plans.sizing import broadcast_hint
 from ..registry import query
 
 
@@ -847,15 +849,14 @@ def text_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from it AND the scoring join probes it — without the checkpoint
     # the plan re-tokenizes and re-aggregates the full corpus for each
     # consumer (3 scans, verified with .explain; the hypertable_rollup
-    # pattern)
-    cnts = toks.groupBy("t").agg(F.count(F.lit(1)).alias("c")).localCheckpoint(
-        eager=True
+    # pattern). The vocabulary size rides the checkpoint job.
+    cnts, n_vocab = observed_checkpoint(
+        toks.groupBy("t").agg(F.count(F.lit(1)).alias("c")), F.count(F.lit(1))
     )
     tot = cnts.agg(F.sum("c").cast("long").alias("n"))
     # checkpointed plans lose size stats, so gate the vocab broadcast
-    # explicitly (count over materialized blocks — the codebase-wide
-    # discipline); past the gate the scoring join shuffles on the token
-    hint = F.broadcast if cnts.count() <= 4_000_000 else (lambda df: df)
+    # explicitly; past the gate the scoring join shuffles on the token
+    hint = broadcast_hint(spark, n_vocab, cnts.schema)
     contrib = (
         toks.join(hint(cnts), "t")
         .crossJoin(F.broadcast(tot))

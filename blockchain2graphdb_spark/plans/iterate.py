@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-_WARNED_FALLBACK = False
+from .fallback import warn_once
 
 
 def observed_checkpoint(df: DataFrame, metric):
@@ -102,17 +102,10 @@ def local_checkpoint(
         # internals moved (future Spark) — correct but slow fallback.
         # Warn once so the exponential driver-side stats blow-up past
         # ~15 rounds is discoverable instead of a silent perf cliff.
-        global _WARNED_FALLBACK
-        if not _WARNED_FALLBACK:
-            _WARNED_FALLBACK = True
-            import warnings
-
-            warnings.warn(
-                "local_checkpoint: LogicalRDD stats-reset rebuild failed "
-                "(Spark internals changed?); falling back to plain "
-                "localCheckpoint. Iterative fixpoints may slow down "
-                "exponentially past ~15 rounds.",
-                RuntimeWarning,
-                stacklevel=2,
-            )
+        warn_once(
+            "local_checkpoint",
+            "LogicalRDD stats-reset rebuild failed (Spark internals "
+            "changed?); falling back to plain localCheckpoint. Iterative "
+            "fixpoints may slow down exponentially past ~15 rounds.",
+        )
         return ck

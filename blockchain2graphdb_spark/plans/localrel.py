@@ -16,13 +16,18 @@ the same 4-row result; guide §6 "Arrow for driver transfers").
 Schemas and values are identical: the pandas frame is built with
 dtype=object so ints/strings/None reach Arrow unwidened, and the
 explicit `schema` argument pins the result types exactly as before.
-Any failure (pandas missing, exotic schema) falls back to the classic
-path, which is correct, just slower.
+A conversion failure (pandas missing, an exotic schema the flat name
+split or Arrow cannot take) falls back to the classic path, which is
+correct, just slower, and warns once.
 """
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
+from pyarrow import ArrowException
 from pyspark.sql import DataFrame, SparkSession
+
+from .fallback import warn_once
 
 
 def local_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
@@ -42,5 +47,6 @@ def local_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
         if len(pdf) != len(rows):  # pragma: no cover — defensive
             raise ValueError("row count drift in pandas conversion")
         return out
-    except Exception:
+    except (ImportError, ValueError, TypeError, ArrowException, Py4JError) as e:
+        warn_once("local_rows_df", f"Arrow local relation failed ({e!r}); using a pickled RDD")
         return spark.createDataFrame(rows, schema)

@@ -1,12 +1,13 @@
-"""Memory-adaptive broadcast gating for iterative operators.
+"""Memory-adaptive broadcast gating: `broadcast_hint` is the one gate.
 
-Every iterative loop in graph/ gates its per-round `broadcast` hint on a
-row-count threshold (the checkpoint-loses-stats story in
-plans/iterate.py: Catalyst can't auto-broadcast a LogicalRDD with no
-statistics, so the loops count once and hint explicitly). The threshold
-used to be a fixed 4M-row config — SURVEY §8 listed that as an honest
-limit, because whether 4M rows of labels actually fit depends on the
-executor heap, not on a constant.
+Every operator that joins against a checkpointed or driver-sized table
+gates its `broadcast` hint on a row-count threshold (the
+checkpoint-loses-stats story in plans/iterate.py: Catalyst can't
+auto-broadcast a LogicalRDD with no statistics, so the operators count
+once and hint explicitly). The threshold used to be a fixed 4M-row
+config — SURVEY §8 listed that as an honest limit, because whether 4M
+rows of labels actually fit depends on the executor heap, not on a
+constant.
 
 `adaptive_broadcast_rows` derives the threshold from the session's
 memory configuration instead:
@@ -39,6 +40,11 @@ past that the per-round keyed shuffle with AQE skew handling wins on
 wall-clock anyway, because the broadcast rebuild itself is a scan of
 the loop-carried table every round).
 
+`broadcast_hint(spark, n_rows, schema)` applies that model with
+bytes_per_row = `est_row_bytes(schema)` of the side being broadcast,
+so callers state only how many rows they would broadcast and what those
+rows look like; no caller carries its own constant.
+
 The threshold is resolved ONCE per loop (not per round) from static
 conf — deliberately: a loop flip-flopping join strategies between
 rounds would thrash executor block managers with alternating broadcast
@@ -48,8 +54,10 @@ registrations.
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _SIZE_RE = re.compile(r"^\s*(\d+)\s*([kmgt]?)b?\s*$", re.IGNORECASE)
 
@@ -138,3 +146,19 @@ def est_row_bytes(schema) -> int:
 
     raw = sum(field_bytes(f.dataType) for f in schema.fields)
     return max(16, raw) * _HASH_RELATION_OVERHEAD
+
+
+def _no_hint(df: DataFrame) -> DataFrame:
+    return df
+
+
+def broadcast_hint(
+    spark: SparkSession, n_rows: int, schema, max_rows: int | None = None
+) -> Callable[[DataFrame], DataFrame]:
+    """`F.broadcast` when `n_rows` rows of `schema` fit the adaptive
+    budget of this session, else the identity (the join shuffles, with
+    AQE skew handling). `max_rows` replaces the derived limit; it exists
+    for tests that force one join side."""
+    if max_rows is None:
+        max_rows = adaptive_broadcast_rows(spark, bytes_per_row=est_row_bytes(schema))
+    return F.broadcast if n_rows <= max_rows else _no_hint

@@ -16,7 +16,8 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(app_name: str = "blockchain2graphdb-spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # default: the cores this process may run on, not the host's total
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     # Local mode pins spark.task.maxFailures to 1 unless the master
     # string itself carries a retry budget (`local[N,F]`). The retry
     # witness (tools/retry_witness.py, VERDICT r14 #2) sets this to 2+

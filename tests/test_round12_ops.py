@@ -368,12 +368,13 @@ def test_seed_bfs_broadcast_switch_equivalence(spark, monkeypatch):
     extended to the centrality BFS (its gate is the documented 100 TB
     degradation path)."""
     from blockchain2graphdb_spark.operators import centrality as C
+    from blockchain2graphdb_spark.plans import sizing
 
     key = lambda r: (r["root"], r["node"])
     b_bfs, b_seeds, _ = C._seed_bfs_build(spark, SF_DIR, 8)
     broadcast_res = {key(r): (r["dist"], r["sigma"]) for r in b_bfs.collect()}
 
-    monkeypatch.setattr(C, "adaptive_broadcast_rows", lambda *a, **k: 0)
+    monkeypatch.setattr(sizing, "adaptive_broadcast_rows", lambda *a, **k: 0)
     s_bfs, s_seeds, _ = C._seed_bfs_build(spark, SF_DIR, 8)
     shuffle_res = {key(r): (r["dist"], r["sigma"]) for r in s_bfs.collect()}
 

@@ -41,6 +41,25 @@ def test_local_rows_df_plans_as_local_scan(spark):
     assert "ExistingRDD" not in plan
 
 
+def test_local_rows_df_fallback_is_correct_and_warns_once(spark, monkeypatch):
+    """A schema the flat name split cannot take (a map type's comma)
+    falls back to the pickled-RDD path: same rows, one warning."""
+    import warnings
+
+    from blockchain2graphdb_spark.plans import fallback
+    from blockchain2graphdb_spark.plans.localrel import local_rows_df
+
+    monkeypatch.setattr(fallback, "_WARNED", set())
+    sch = "k long, m map<string,long>"
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        outs = [local_rows_df(spark, [(1, {"x": 2})], sch) for _ in range(2)]
+    mine = [w for w in seen if str(w.message).startswith("local_rows_df:")]
+    assert len(mine) == 1
+    for out in outs:
+        assert [(r.k, r.m) for r in out.collect()] == [(1, {"x": 2})]
+
+
 def test_local_rows_df_structtype_schema(spark):
     from pyspark.sql.types import LongType, StructField, StructType
 
@@ -188,3 +207,27 @@ def test_expand_scope_floor_derivation(spark):
     # a 6M-row (sf1-sized) input must derive exactly the AQE default —
     # the provable-no-op-at-scale property the round rules require
     assert max(64 * 1024, min(1024 * 1024, 6_000_000 * 16 // par)) == 1024 * 1024
+
+
+def test_expand_scope_truncated_footer_keeps_floor(spark, tmp_path, monkeypatch):
+    """The floor is advisory: an unreadable lineitem footer keeps the
+    64 KB floor and warns once instead of failing the query."""
+    import os
+    import warnings
+
+    from blockchain2graphdb_spark.operators.graphops import _expand_scope
+    from blockchain2graphdb_spark.plans import fallback
+
+    with open(os.path.join(SF_DIR, "lineitem.parquet"), "rb") as f:
+        body = f.read()
+    (tmp_path / "lineitem.parquet").write_bytes(body[: len(body) - 100])
+    monkeypatch.setattr(fallback, "_WARNED", set())
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        for _ in range(2):
+            with _expand_scope(spark, str(tmp_path)):
+                v = spark.conf.get(
+                    "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+                )
+            assert int(v) == 64 * 1024
+    assert len([w for w in seen if str(w.message).startswith("_expand_scope:")]) == 1

@@ -1,11 +1,11 @@
-"""Capture `.explain("formatted")` for bench queries into plans/r17/.
+"""Capture `.explain("formatted")` for bench queries into plans/<round>/.
 
 Optimization-round evidence (guide §1): one file per query,
-`plans/r17/<key>_<tag>.txt`, where tag is `before` or `after`.
+`plans/<round>/<key>_<tag>.txt`, where tag is `before` or `after`.
 
 Usage:
-    python tools/gen_plans_r17.py before [key ...]
-    python tools/gen_plans_r17.py after  [key ...]
+    python tools/capture_plans.py r18 before [key ...]
+    python tools/capture_plans.py r18 after  [key ...]
 
 With no keys, captures the full bench set (HEADLINE + SECONDARY).
 Plans are captured at sf0.001 (plan shape is scale-independent; the
@@ -24,26 +24,26 @@ from blockchain2graphdb_spark import registry
 from blockchain2graphdb_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                   "plans", "r17")
+PLANS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans")
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    assert tag in ("before", "after"), "tag must be before|after"
-    keys = sys.argv[2:]
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        sys.exit("usage: capture_plans.py ROUND before|after [key ...]")
+    rnd, tag, keys = sys.argv[1], sys.argv[2], sys.argv[3:]
+    out = os.path.join(PLANS, rnd)
     if not keys:
         import bench
         keys = list(bench.HEADLINE) + list(bench.SECONDARY)
-    os.makedirs(OUT, exist_ok=True)
+    os.makedirs(out, exist_ok=True)
     specs = registry.load_all()
-    spark = get_spark("plans-r17")
+    spark = get_spark(f"plans-{rnd}")
     for k in keys:
         df = specs[k].builder(spark, SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        with open(os.path.join(OUT, f"{k}_{tag}.txt"), "w") as f:
+        with open(os.path.join(out, f"{k}_{tag}.txt"), "w") as f:
             f.write(plan)
         print(f"wrote {k}_{tag}.txt ({plan.count('Exchange')} Exchange lines)")
 

@@ -178,19 +178,9 @@ def main() -> None:
         scans — otherwise the second run reuses checkpointed edges /
         already-committed group logs, the wrap never executes, and the
         non-vacuity guard (rightly) fails the witness."""
-        from blockchain2graphdb_spark import catalog as _cat
-        from blockchain2graphdb_spark.operators import (
-            centrality,
-            graphops,
-            sqlsuite,
-        )
+        from blockchain2graphdb_spark.plans import memo
 
-        graphops._PAIRS_MEMO.clear()
-        centrality._SEED_BFS_MEMO.clear()
-        # plan-level memos (r16): keys already include the chaos spec,
-        # so clearing is belt-and-braces against future key changes
-        _cat._TABLE_MEMO.clear()
-        sqlsuite._VIEWS_STATE.clear()
+        memo.reset()
         if key == "stream_multi_table_ingest":
             import glob
             import shutil
