@@ -39,9 +39,11 @@ SESSION_GAP_US = 1_800 * 1_000_000
 def prep(spark: SparkSession) -> SparkSession:
     """Pin runtime confs the correctness gate depends on.
 
-    Idempotent; called by every query builder because the driver owns the
-    SparkSession and we must not depend on its defaults. UTC makes
-    timestamp collection match DuckDB's naive timestamps.
+    Idempotent; `registry.query`'s wrapper calls it before every
+    registered builder (and `__spark_entry__.entry` calls it directly)
+    because the driver owns the SparkSession and we must not depend on
+    its defaults. UTC makes timestamp collection match DuckDB's naive
+    timestamps.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # Arrow driver transfers (guide §6): off by default in Spark; needed

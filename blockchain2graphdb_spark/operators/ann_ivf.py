@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import prep, table
+from ..catalog import table
 from ..functions.vectors import float_cosine
 from ..registry import query
 
@@ -52,7 +52,6 @@ def _assign(emb: DataFrame, cents: DataFrame, n: int, out: str) -> DataFrame:
 def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3 IVF: inverted-file ANN — assign to cells, probe nprobe cells,
     exact rerank within probed cells, top-3 per query (vec_id < 5)."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     cents = _centroids(emb)
 
@@ -155,7 +154,6 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     stable across runs."""
     from ..functions.vectors import quantize
 
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     pts = emb.select("vec_id", quantize("embedding").alias("q"))
     assign, cents = kmeans_fit(pts, k=8, n_iter=3)
@@ -244,7 +242,6 @@ def kmeans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..functions.vectors import quantize
 
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     q = emb.select("vec_id", quantize("embedding").alias("qv")).localCheckpoint(
         eager=True
@@ -345,7 +342,6 @@ def ivf_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a JVM zip_with/aggregate (one row per (vector, centroid), no
     explode); the argmin is a per-vector window over k rows. Nothing
     pairwise over the base."""
-    prep(spark)
     from ..functions.vectors import quantize
 
     emb = table(spark, sf_dir, "embeddings").where(F.size("embedding") > 0)
@@ -501,7 +497,6 @@ def ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (queries x corpus) with the small side broadcast — the acceptance
     eval is sampled by design; the production index swaps the centroid
     stand-in for kmeans_fit output, unchanged plan."""
-    prep(spark)
     from .similarity import _quantized
 
     qdf = _quantized(spark, sf_dir).select("vec_id", "q", "norm2")

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import prep, table
+from ..catalog import table
 from ..functions.vectors import quantize
 from ..registry import query
 
@@ -90,7 +90,6 @@ def similarity_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the codebooks, approximate distance = sum of m table lookups —
     an equi-join on (s, code) and a sum, with no raw candidate vectors
     in the scoring path. Top-3 per query (vec_id < 5)."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     pts = emb.select("vec_id", quantize("embedding").alias("q"))
     books = pq_codebooks(pts).localCheckpoint(eager=True)

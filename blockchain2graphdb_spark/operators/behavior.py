@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 # promises its semantics) — the shared constant lives in catalog so a
 # tuning there cannot silently desync either operator
 from ..catalog import SESSION_GAP_US as _SF_GAP_US
-from ..catalog import prep, table
+from ..catalog import table
 from ..exact import dec2, money_sum
 from ..functions.ranking import bucketed_global_rank, bucketed_prefix_sum
 from ..plans.iterate import local_checkpoint
@@ -81,7 +81,6 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id; nothing is ever pairwise. Steps come from _FUNNEL_STEPS on
     both the Spark and oracle side.
     """
-    prep(spark)
     e = table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.unix_micros("ts").alias("us")
     )
@@ -136,7 +135,6 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash partitioning; the join is keyed, the result is |weeks|² rows
     at most — tiny regardless of corpus size.
     """
-    prep(spark)
     uw = (
         table(spark, sf_dir, "events")
         .select(
@@ -189,7 +187,6 @@ def event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale. Ordering ties broken by event_id (ts alone is not unique per
     user), same rule as sessionize_batch.
     """
-    prep(spark)
     e = table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", F.unix_micros("ts").alias("us")
     )
@@ -247,7 +244,6 @@ def anomaly_daily_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     silently where DuckDB raises). Two keyed aggregates; the
     per-type stats join is |event types| rows, broadcast trivially.
     """
-    prep(spark)
     daily = (
         table(spark, sf_dir, "events")
         .groupBy(
@@ -319,7 +315,6 @@ def orders_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     base grows. Monetary uses the exact-decimal money path
     (`exact.money_sum` contract) so the double is bit-identical
     cross-engine."""
-    prep(spark)
     orders = table(spark, sf_dir, "orders")
     ref = orders.agg(F.max("o_orderdate").alias("ref_date"))
     per_cust = (
@@ -421,7 +416,6 @@ def session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: no joins at all — window passes over one partitioning,
     then a 3-row result. Compare funnel_conversion (global, per-user
     chains via joins); this is the session-granular form."""
-    prep(spark)
     e = table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", F.unix_micros("ts").alias("us")
     )
@@ -536,7 +530,6 @@ def session_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the running session sum, and both leads (same partitioning, same
     sort — Catalyst runs them in one WindowExec pass); the path count
     is map-side combinable over O(#type³) keys."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", F.unix_micros("ts").alias("us")
     )
@@ -622,7 +615,6 @@ def concurrent_sessions_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     hour bucket — never an unpartitioned window over the boundary
     stream; the argmax is one broadcast of the 1-row max joined back.
     All int64, fully deterministic."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "event_id", F.unix_micros("ts").alias("us")
     )
@@ -703,7 +695,6 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     carry-forward window (gap_fill_locf's mechanism), then a map-side
     filter and an O(#channels) aggregate — no self-join of the event
     log against itself."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", "value", F.unix_micros("ts").alias("us")
     )
@@ -793,7 +784,6 @@ def kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     per user, a second to one row per DAY; the risk-set cumulative and
     the survival cumulative are windows over that bounded per-day
     table (the auc_exact shape). Nothing data-scale passes a window."""
-    prep(spark)
     e = table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.unix_micros("ts").alias("us")
     )
@@ -897,7 +887,6 @@ def attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     unkeyed interval join), and per-purchase n/rank come from windows
     partitioned by purchase id; cents are non-negative (fixture
     money), so truncating div == floor div on both engines."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
@@ -1082,7 +1071,6 @@ def attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the documented bounded-state collect (the
     graph/components.py:103 convention): the collect is O(#channels^2)
     at ANY data scale, never O(data)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", F.unix_micros("ts").alias("us")
     )
@@ -1242,7 +1230,6 @@ def cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cumulative window runs OVER that bounded triangle partitioned
     by cohort (the sweep-exempt shape). Nothing scales with the data
     but the two keyed passes."""
-    prep(spark)
     e = table(spark, sf_dir, "events").select(
         "user_id",
         F.expr(f"unix_micros(ts) div {_WEEK_US}").alias("w"),
@@ -1336,7 +1323,6 @@ def nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to kaplan_meier — one user-keyed reduction
     to durations, one per-day aggregate, cumulative windows OVER that
     bounded per-day table."""
-    prep(spark)
     e = table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.unix_micros("ts").alias("us")
     )
@@ -1428,7 +1414,6 @@ def herfindahl_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one customer-keyed aggregate (orders → O(#customers)),
     one nation-keyed moment aggregate (→ O(#nations)), one broadcast
     dim join. No windows, nothing pairwise."""
-    prep(spark)
     o = table(spark, sf_dir, "orders").select(
         "o_custkey", (dec2("o_totalprice") * 100).cast("long").alias("cents")
     )
@@ -1510,7 +1495,6 @@ def lorenz_curve_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast offsets + in-bucket windows, never one WindowExec
     partition); the decile fold is a 10-row aggregate and the
     cumulative window runs over those 10 rows."""
-    prep(spark)
     cc = (
         table(spark, sf_dir, "orders")
         .select(
@@ -1614,7 +1598,6 @@ def item_cf_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialize full candidate lists). Nothing is ever
     all-pairs-of-parts: only parts that actually co-occur in an order
     produce weight rows."""
-    prep(spark)
     li = (
         table(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p"))
@@ -1733,7 +1716,6 @@ def attribution_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
     zeta transform v(S), and the Shapley sum are all constant-size
     joins; the lattice is generated distributively (range filtered by
     a broadcast 1-row k) — no driver-side k, no collect anywhere."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.unix_micros("ts").alias("us")
     )
@@ -1874,7 +1856,6 @@ def cold_start_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user- and part-keyed equi-joins, broadcast when the train side
     fits), one revenue aggregate — every stage is keyed, nothing is
     pairwise, and the date cut is a 1-row broadcast."""
-    prep(spark)
     o = table(spark, sf_dir, "orders").select(
         "o_custkey",
         "o_orderkey",
@@ -1998,7 +1979,6 @@ def fulfillment_latency_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one fact join (orders side broadcast or shuffled by
     Catalyst), ONE (group, latency) hash aggregate collapsing the
     join, then constant-size windows and one group reduce."""
-    prep(spark)
     o = table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("ok"),
         F.col("o_orderpriority").alias("grp"),

@@ -45,12 +45,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import parquet_num_rows, prep, table
+from ..catalog import parquet_num_rows, table
 from ..plans.iterate import local_checkpoint
 from ..plans.memo import SessionMemo, release_checkpoints
 from ..plans.sizing import broadcast_hint
 from ..registry import query
-from .graphops import _copurchase_pairs, _pair_nodes, _sym_edges
+from .graphops import _copurchase_pairs, _pair_nodes, _sym_union
 
 _DEPTH = 3
 _BTW_SEEDS = 16  # 8 source/target pairs
@@ -99,14 +99,7 @@ def _seed_bfs_build(
     one frontier DataFrame for ALL seeds, `depth` unrolled join
     rounds; the handles let the memo release blocks on eviction."""
     pairs, _n_edges = _copurchase_pairs(spark, sf_dir)
-    # union form, NOT _sym_edges: this sym is consumed LAZILY and
-    # re-referenced (per BFS level / per round), where the explode's
-    # Generate re-executes per reference and measured 10-20% slower
-    # than the two narrow union branches (see OPTIMIZATION_r17.md);
-    # the one-pass form pays only when immediately checkpointed
-    sym = pairs.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).unionByName(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+    sym = _sym_union(pairs)
     nodes = _pair_nodes(pairs)
     hkey = F.md5(F.col("n").cast("string"))
     # TakeOrdered top-k by content hash, then indices 0..k-1 via a
@@ -243,7 +236,6 @@ def betweenness_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     node, top-50. See module docstring for the scale shape; the whole
     computation is ONE multi-source BFS plus three broadcast-sized
     joins — no per-seed loop, nothing pairwise over the graph."""
-    prep(spark)
     bfs, seeds = _seed_bfs(spark, sf_dir, _BTW_SEEDS)
     half = _BTW_SEEDS // 2
     a, b = seeds.alias("a"), seeds.alias("b")
@@ -307,7 +299,6 @@ def closeness_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     Harmonic (not classic) closeness so unreachable seeds simply
     contribute 0 — no connectivity assumption, the estimator of choice
     on disconnected graphs."""
-    prep(spark)
     bfs, _seeds = _seed_bfs(spark, sf_dir, _CLO_SEEDS)
     return (
         bfs.where(F.col("dist") > 0)
@@ -365,17 +356,9 @@ def edge_betweenness_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     the broadcast-sized per-pair BFS tables once — one keyed shuffle to
     the (pid, v) join, one hash aggregate; comparable to one extra BFS
     level, never pairwise."""
-    prep(spark)
     bfs, seeds = _seed_bfs(spark, sf_dir, _BTW_SEEDS)
     pairs, _n = _copurchase_pairs(spark, sf_dir)
-    # union form, NOT _sym_edges: this sym is consumed LAZILY and
-    # re-referenced (per BFS level / per round), where the explode's
-    # Generate re-executes per reference and measured 10-20% slower
-    # than the two narrow union branches (see OPTIMIZATION_r17.md);
-    # the one-pass form pays only when immediately checkpointed
-    sym = pairs.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).unionByName(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+    sym = _sym_union(pairs)
     half = _BTW_SEEDS // 2
     a, b = seeds.alias("sa"), seeds.alias("sb")
     p = (
@@ -531,16 +514,8 @@ def graph_diameter_lb(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered result — no driver-side argmax, no per-node loop. The
     edge list is built once and checkpointed (`_copurchase_pairs`).
     """
-    prep(spark)
     pairs, _ = _copurchase_pairs(spark, sf_dir)
-    # union form, NOT _sym_edges: this sym is consumed LAZILY and
-    # re-referenced (per BFS level / per round), where the explode's
-    # Generate re-executes per reference and measured 10-20% slower
-    # than the two narrow union branches (see OPTIMIZATION_r17.md);
-    # the one-pass form pays only when immediately checkpointed
-    sym = pairs.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).unionByName(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+    sym = _sym_union(pairs)
     nodes = _pair_nodes(pairs)
     hint = broadcast_hint(spark, parquet_num_rows(sf_dir, "part"), nodes.schema)
 
@@ -664,7 +639,6 @@ def eigenvector_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     node-sized table. Partition count and AQE are scoped-and-restored
     confs (see inline rationale). Edge list memoized per session
     (`_copurchase_pairs`)."""
-    prep(spark)
     pairs, n_edges = _copurchase_pairs(spark, sf_dir)
     # r13 structural pass (VERDICT r12 #2): the 8 supersteps are a
     # CO-PARTITIONED shuffle-hash pipeline under two SCOPED confs
@@ -822,16 +796,8 @@ def katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape), per-round localCheckpoint cuts the lineage, att is a 1-row
     broadcast, x is node-sized and broadcast under the adaptive gate.
     Edge list memoized per session (`_copurchase_pairs`)."""
-    prep(spark)
     pairs, _ = _copurchase_pairs(spark, sf_dir)
-    # union form, NOT _sym_edges: this sym is consumed LAZILY and
-    # re-referenced (per BFS level / per round), where the explode's
-    # Generate re-executes per reference and measured 10-20% slower
-    # than the two narrow union branches (see OPTIMIZATION_r17.md);
-    # the one-pass form pays only when immediately checkpointed
-    sym = pairs.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).unionByName(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+    sym = _sym_union(pairs)
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     att = deg.agg((F.max("d") + 1).cast("decimal(38,0)").alias("att"))
     v = (
@@ -906,7 +872,6 @@ def khop_induced_subgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast under the adaptive gate inside `_seed_bfs`'s machinery;
     here Catalyst-decided) plus one 1-row aggregate. Nothing pairwise,
     no windows over data-sized input."""
-    prep(spark)
     bfs, _seeds = _seed_bfs(spark, sf_dir, _BTW_SEEDS)
     pairs, _ = _copurchase_pairs(spark, sf_dir)
     s = bfs.select("node").distinct()
@@ -985,7 +950,6 @@ def landmark_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     pivot aggregate, and a TakeOrdered — no new graph traversal. The
     pivot is k columns BY CONSTRUCTION (k landmarks is a config
     constant, never data-sized)."""
-    prep(spark)
     bfs, seeds = _seed_bfs(spark, sf_dir, 4)
     j = bfs.join(
         F.broadcast(seeds.select(F.col("n").alias("root"), "i")), "root"
@@ -1060,7 +1024,6 @@ def rich_club_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins edges to the (broadcastable) degree table twice and reduces
     per k over the constant 3-row k dimension — nothing pairwise, no
     per-k rescan of the data (CASE sums share one pass)."""
-    prep(spark)
     pairs, _ = _copurchase_pairs(spark, sf_dir)
     deg = (
         _pair_nodes(pairs, distinct=False)

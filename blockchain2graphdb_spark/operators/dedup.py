@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import prep, table
+from ..catalog import table
 from ..graph.components import connected_components
 from ..registry import query
 
@@ -38,7 +38,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: group on md5/xxhash of content (never the raw payload) so
     the shuffle carries 16 bytes per row, then semi-join keepers back.
     """
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     return (
         docs.groupBy(F.md5(F.col("text").cast("binary")).alias("fp"))
@@ -114,7 +113,6 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pipeline in `minhash_clusters` (reused by tests with synthetic
     near-dup corpora, where the fixture corpus has none).
     """
-    prep(spark)
     return minhash_clusters(table(spark, sf_dir, "documents").select("doc_id", "text"))
 
 
@@ -332,7 +330,6 @@ def dedup_minhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same 100 TB shape: candidates only from band-signature equi-joins,
     pairwise work confined to within-bucket verification.
     """
-    prep(spark)
     base = (
         table(spark, sf_dir, "documents")
         .where(F.col("doc_id") < 200)
@@ -420,7 +417,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     implies equality on some band) — again an equi-join, never pairwise.
     Returns (doc_id, simhash, band0, band1).
     """
-    prep(spark)
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     tok = _fan_out(docs, "doc_id").select(
         "doc_id", F.explode(_tokens(F.col("text"))).alias("t")
@@ -484,7 +480,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs (here: consecutive doc_ids < 100 as the stand-in for
     an LSH candidate list). Set intersections via distinct-gram joins —
     exactly the verify stage dedup_minhash uses, made oracle-checkable."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents").where(F.col("doc_id") < 100)
     grams = docs.select(
         "doc_id",
@@ -568,7 +563,6 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra shuffle. (The DuckDB oracle keeps the window formulation;
     results are identical.)
     """
-    prep(spark)
     _SHIFT = 41
     _MASK = (1 << _SHIFT) - 1
     fp = table(spark, sf_dir, "documents").select(
@@ -654,7 +648,6 @@ def dedup_simhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same 100 TB shape: one groupBy(doc, token), one groupBy(doc) with
     32 conditional sums (partial/final combinable), zero joins.
     """
-    prep(spark)
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     tok = _fan_out(docs, "doc_id").select(
         "doc_id", F.explode(_tokens(F.col("text"))).alias("t")
@@ -766,7 +759,6 @@ def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     has few verbatim spans, so docs < {seed} seed extracted-span twins
     (chars 21-220 of the base text) at doc_id+2,000,000.
     """
-    prep(spark)
     basedocs = (
         table(spark, sf_dir, "documents")
         .where(F.col("doc_id") < _SSD_SEED_N)
@@ -828,7 +820,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     a shuffle-free bucket join — layout_zorder/X8 territory), and the
     batch side is typically small enough that AQE broadcasts it.
     """
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     corpus = (
         docs.where(F.col("doc_id") % 10 != 0)
@@ -914,7 +905,6 @@ def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     here — unlike wallet_components' corpus-scale graph, this edge set
     is tiny by construction).
     """
-    prep(spark)
     # checkpoint the verified pairs once: connected_components references
     # its edge input twice (both orientations), which would otherwise
     # re-execute the whole LSH+verify pipeline inside the
@@ -1029,7 +1019,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_substring; the 3-gram intersection join touches only
     candidate docs (semi-joined gram streams), map-side distinct
     inside the gram projection; final ratio over exact integers."""
-    prep(spark)
     basedocs = (
         table(spark, sf_dir, "documents")
         .where(F.col("doc_id") < _SSD_SEED_N)
@@ -1119,7 +1108,6 @@ def dedup_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: fingerprint groupBy (map-side partial count), then an
     O(#distinct sizes) re-aggregate — no payload ever shuffles, no
     join."""
-    prep(spark)
     sizes = (
         table(spark, sf_dir, "documents")
         .groupBy(F.md5(F.col("text").cast("binary")).alias("h"))
@@ -1190,7 +1178,6 @@ def similarity_join_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify joins full token sets for CANDIDATE pairs only. At 100 TB
     this is the published PPJoin recipe verbatim — the all-pairs form
     the oracle runs exists only at fixture scale."""
-    prep(spark)
     base = (
         table(spark, sf_dir, "documents")
         .where(F.col("doc_id") < 150)
@@ -1325,7 +1312,6 @@ def minhash_estimate_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: candidates only from band equi-joins; the signature
     comparison is a broadcast-able 16-column join probe; verification
     (array_intersect) confined to candidates; one O(10) aggregate."""
-    prep(spark)
     base = (
         table(spark, sf_dir, "documents")
         .where(F.col("doc_id") < 200)
@@ -1525,7 +1511,6 @@ def simhash_hamming_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: candidates only from band equi-joins; fingerprints
     are one groupBy with 32 conditional sums; verification confined to
     candidates; output ≤ 5×10 cells."""
-    prep(spark)
     base = (
         table(spark, sf_dir, "documents")
         .where(F.col("doc_id") < 200)

@@ -30,7 +30,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import prep
 from ..plans.iterate import local_checkpoint
 from ..registry import query
 from .graphops import _copurchase_pairs
@@ -111,7 +110,6 @@ def influence_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon 3. See module docstring for the derandomization and the
     scale shape; the oracle replays the identical cascade as unrolled
     MATERIALIZED CTEs (the wallet-CC linear-oracle pattern)."""
-    prep(spark)
     from ..catalog import parquet_num_rows
     from ..plans.confs import scoped_confs
     from ..plans.sizing import broadcast_hint

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import prep, table
+from ..catalog import table
 from ..exact import dec2
 from ..functions.ranking import bucketed_global_rank, bucketed_prefix_sums
 from ..registry import query
@@ -77,7 +77,6 @@ def ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality is unbounded — VERDICT r9 #2's de-weakening of the
     former global-window-over-aggregate shape. The n1/n2 totals ride a
     1-row broadcast crossJoin."""
-    prep(spark)
     pc = (dec2("o_totalprice") * 100).cast("long")
     s = (
         table(spark, sf_dir, "orders")
@@ -160,7 +159,6 @@ def ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     WindowGroupLimit — Spark keeps a map-side partial top-10 per
     partition per query, so no per-query full sort materializes; the
     final join is over O(#queries) rows, broadcast."""
-    prep(spark)
     rel = (
         F.when(F.col("o_orderstatus") == "F", 2)
         .when(F.col("o_orderstatus") == "P", 1)
@@ -247,7 +245,6 @@ def gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     minus the category's min pos (one O(#categories) broadcast) — no
     window partitioned by the 5-value category column ever sees raw
     rows."""
-    prep(spark)
     pc = (dec2("o_totalprice") * 100).cast("long")
     orders = table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("cat"),
@@ -319,7 +316,6 @@ def cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE map-side-combinable four-counter aggregate over a
     column-pruned scan — the minimal plan, same as
     confusion_threshold."""
-    prep(spark)
     a = F.col("o_totalprice") >= 150000
     b = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     cell = lambda c, n: F.count_if(c).cast("long").alias(n)  # noqa: E731
@@ -374,7 +370,6 @@ def calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: score, label, and bin are pure per-row expressions;
     ONE map-side-combinable aggregate over 10 bins — no shuffle of the
     data rows beyond the 10-key partial merge."""
-    prep(spark)
     p = (
         F.conv(
             F.substring(
@@ -461,7 +456,6 @@ def rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     WindowGroupLimit (map-side partial top-5 per partition). In a
     hybrid-search deployment the two input rankings arrive as top-k
     lists, making every partition k-bounded."""
-    prep(spark)
     p = table(spark, sf_dir, "part").select(
         "p_brand", "p_partkey", "p_retailprice", "p_size"
     )
@@ -528,7 +522,6 @@ def ab_test_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: assignment and metric are pure per-row expressions;
     one map-side-combinable aggregate produces the single-row readout
     — the cohens_kappa/confusion_threshold minimal plan."""
-    prep(spark)
     nib = F.conv(
         F.substring(
             F.md5(F.concat(F.lit("ab"), F.col("o_orderkey").cast("string")).cast("binary")),
@@ -610,7 +603,6 @@ def map_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort); the running hit count windows over the ≤10-row survivors;
     n_rel is one hash aggregate; the final join is O(#queries),
     broadcast."""
-    prep(spark)
     rel = F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)
     scored = table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("qry"),
@@ -681,7 +673,6 @@ def mrr_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     first_relevant_rank), 0 when no relevant result reaches the top 10;
     pure integer end to end. Same WindowGroupLimit top-10 shape as
     `map_at_k`; the per-query reduction is a MIN aggregate."""
-    prep(spark)
     rel = F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)
     scored = table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("qry"),
@@ -767,7 +758,6 @@ def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (~2x10^4 rows), all broadcast joins — the classic
     bounded-post-aggregate pattern (kaplan_meier's shape). B is the
     resolution/robustness knob, not a scale knob."""
-    prep(spark)
     p = (
         F.conv(
             F.substring(
@@ -885,7 +875,6 @@ def pr_curve_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     size), then cumulative windows OVER that aggregate (the declared
     sweep-exempt auc_exact shape) and pure per-row arithmetic. The
     whole curve costs one scan regardless of corpus size."""
-    prep(spark)
     p = (
         F.conv(
             F.substring(
@@ -973,7 +962,6 @@ def expected_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one map-side-combinable 10-bin aggregate, one 1-row
     reduction. Nothing scales with the data but the scan."""
-    prep(spark)
     p = (
         F.conv(
             F.substring(
@@ -1097,7 +1085,6 @@ def brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one 10-bin map-side-combinable aggregate over the
     scan, then constant-size algebra — the ECE plan."""
-    prep(spark)
     y = F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)
     o = table(spark, sf_dir, "orders").select(
         _pseudo_p().alias("p"), y.alias("y")
@@ -1189,7 +1176,6 @@ def matthews_mcc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE map-side-combinable conditional-count aggregate
     over the scan to a single row — nothing else."""
-    prep(spark)
     y = F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)
     o = table(spark, sf_dir, "orders").select(
         _pseudo_p().alias("p"), y.alias("y")
@@ -1272,7 +1258,6 @@ def pinball_loss_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the cut, then ONE map-side-combinable conditional-sum pass
     with the 1-row q broadcast — two scans total, no shuffle beyond
     the value histogram."""
-    prep(spark)
     o = table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"),
         (dec2("o_totalprice") * 100).cast("long").alias("pc"),

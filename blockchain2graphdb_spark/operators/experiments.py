@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import prep, table
+from ..catalog import table
 from ..exact import dec2
 from ..functions.ranking import bucketed_global_rank, bucketed_prefix_sums
 from ..registry import query
@@ -90,7 +90,6 @@ def cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     to O(#users); one map-side-combinable moment aggregate collapses
     that to a single row. The cutoff is a 1-row broadcast, not a
     collect. No windows, no pairwise joins."""
-    prep(spark)
     e = table(spark, sf_dir, "events").select(
         "user_id",
         F.unix_micros("ts").alias("us"),
@@ -186,7 +185,6 @@ def funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed_global_rank (per-bucket counts + broadcast offsets +
     in-bucket windows — never one WindowExec partition); the final
     summary is a single map-side-combinable aggregate."""
-    prep(spark)
     e = table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.unix_micros("ts").alias("us")
     )
@@ -289,7 +287,6 @@ def mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable moment aggregate yields the single-row readout.
     No pairwise anything - the naive U definition is the quadratic
     comparison count; the rank identity makes it linear."""
-    prep(spark)
     nib = F.conv(
         F.substring(
             F.md5(F.concat(F.lit("mw"), F.col("o_orderkey").cast("string")).cast("binary")),
@@ -422,7 +419,6 @@ def bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows before the 64-row shuffle); the rank pass runs over the 64-row
     aggregate (bounded - the declared sweep-exempt shape). Linear in
     the data, constant in replicates' shuffle width."""
-    prep(spark)
     o = table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
         (dec2("o_totalprice") * 100).cast("long").alias("cents"),
@@ -546,7 +542,6 @@ def diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one user-keyed conditional aggregate (log ->
     O(#users)), one 2-row arm aggregate, one 1x1 cross join. The
     cutoff is a 1-row broadcast."""
-    prep(spark)
     e = table(spark, sf_dir, "events").select(
         "user_id",
         F.unix_micros("ts").alias("us"),
@@ -687,7 +682,6 @@ def sprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     usually reached in the first band — the operator still scans once
     (batch semantics); the streaming twin would carry llr as
     applyInPandasWithState state."""
-    prep(spark)
     e = table(spark, sf_dir, "events").select(
         F.unix_micros("ts").alias("us"),
         "event_id",
@@ -785,7 +779,6 @@ def psm_att(spark: SparkSession, sf_dir: str) -> DataFrame:
     band equi-join (the record_linkage blocking discipline — never
     all treated x all controls); per-treated argmin is a
     WindowGroupLimit-shaped rank-1 cut partitioned by treated user."""
-    prep(spark)
     treat = (
         F.conv(
             F.substring(
@@ -900,7 +893,6 @@ def uplift_by_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one user-keyed aggregate (log -> O(#users)), one
     10-key map-side-combinable aggregate. Nothing else."""
-    prep(spark)
     treat = (
         F.conv(
             F.substring(
@@ -1018,7 +1010,6 @@ def srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one distinct (map-side combinable), one 1-row
     aggregate. O(#users) total, no windows, no joins."""
-    prep(spark)
     u = table(spark, sf_dir, "events").select("user_id").distinct()
     arm = (
         F.conv(
@@ -1102,7 +1093,6 @@ def mde_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one user-keyed aggregate (log -> O(#users)), one
     map-side-combinable moment aggregate -> 1 row. No windows."""
-    prep(spark)
     pu = (
         table(spark, sf_dir, "events")
         .select("user_id", (dec2("value") * 100).cast("long").alias("cents"))
@@ -1189,7 +1179,6 @@ def anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     single row — the whole test is one partial/final aggregate pass
     with no shuffle beyond the k-row exchange, the closed-form-moments
     plan ols_multi documents."""
-    prep(spark)
     o = table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"),
         F.expr(
@@ -1284,7 +1273,6 @@ def iv_2sls(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the scan reduces everything to a single row — the ols_multi
     closed-form plan; adding instruments grows the moment matrix, not
     the shuffle count."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").select(
         dec2("l_quantity").cast("long").alias("x"),
         (dec2("l_discount") * 100).cast("long").alias("z"),
@@ -1384,7 +1372,6 @@ def cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-bucket totals + broadcast offsets + in-bucket windows — never
     one WindowExec partition); one final map-side-combinable aggregate
     yields the single-row readout — mann_whitney_u's exact plan."""
-    prep(spark)
     nib = F.conv(
         F.substring(
             F.md5(F.concat(F.lit("cd"), F.col("o_orderkey").cast("string")).cast("binary")),
@@ -1475,7 +1462,6 @@ def sample_size_proportion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one customer-keyed LEFT join + aggregate reduces the
     base to O(#customers), one 1-row reduce — the mde_power_analysis
     plan."""
-    prep(spark)
     u = (
         table(spark, sf_dir, "customer")
         .select("c_custkey")

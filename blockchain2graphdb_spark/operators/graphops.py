@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import parquet_num_rows, prep, table
+from ..catalog import parquet_num_rows, table
 from ..plans.iterate import local_checkpoint
 from ..plans.memo import SessionMemo, release_checkpoints
 from ..plans.sizing import broadcast_hint
@@ -38,7 +38,6 @@ def chain_tip(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized the tip is a TakeOrdered top-1 — O(1) passes, no
     iteration at any scale.
     """
-    prep(spark)
     return (
         table(spark, sf_dir, "events")
         .orderBy(F.col("ts").desc(), F.col("event_id").desc())
@@ -65,7 +64,6 @@ def parent_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     A self-join on the sequence position — the set-oriented form of the
     reference's one-parent-at-a-time Gremlin walk.
     """
-    prep(spark)
     orders = table(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     seq = orders.select(
@@ -101,7 +99,6 @@ def chain_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J9/W1: chain-validity adjacent-pair check (B:428–435: each block's
     prevHash must equal its predecessor's hash) — LAG + predicate + count,
     replacing the sequential Java loop with one windowed pass."""
-    prep(spark)
     w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     seq = table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", F.lag("o_orderkey").over(w).alias("prev_key")
@@ -130,7 +127,6 @@ def topo_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection sort. The window below only *builds* the parent links (the
     reference gets prev_hash in its input); ranking never sees the order.
     """
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     links = ev.select(
@@ -161,7 +157,6 @@ def khop_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed set. Each hop is a semi-join + distinct — the frontier pattern
     that generalizes to any k without per-vertex iteration.
     """
-    prep(spark)
     orders = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
     cust_supp = orders.join(li, li.l_orderkey == orders.o_orderkey).select(
@@ -192,7 +187,6 @@ def khop_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G4: degree distribution (A1/A7 are in/out-degrees by another name)."""
-    prep(spark)
     deg = (
         table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
@@ -286,7 +280,6 @@ def wallet_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     member id, so results are deterministic and oracle-checkable via the
     unrolled hash-min+pointer-jumping CTE chain (_wallet_cc_oracle) —
     linear per round, so the oracle itself scales to sf0.1 and beyond."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     mins = li.groupBy("l_orderkey").agg(F.min("l_partkey").alias("src"))
     # no dedup: star edges are consistently oriented (src = group min <
@@ -314,7 +307,6 @@ def wallet_components_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     would otherwise route to the driver path; forcing the loop gives
     the distributed implementation a direct driver-gate correctness
     witness on nontrivial merge structure (VERDICT r6 lead item)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     mins = li.groupBy("l_orderkey").agg(F.min("l_partkey").alias("src"))
     edges = (
@@ -338,7 +330,6 @@ def wallet_ids_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-min chain (_wallet_cc_oracle), so a green row certifies
     batch-fold ≡ full recompute on real fixture data, not just the
     unit-test graphs (tests/test_chain.py)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     mins = li.groupBy("l_orderkey").agg(F.min("l_partkey").alias("src"))
     edges = (
@@ -430,6 +421,18 @@ def _sym_edges(pairs: DataFrame, src: str = "src", dst: str = "dst") -> DataFram
             )
         ).alias("e")
     ).select(f"e.{src}", f"e.{dst}")
+
+
+def _sym_union(pairs: DataFrame) -> DataFrame:
+    """Both orientations of the canonical (a<b) pair list as (src, dst),
+    in union form, NOT _sym_edges: for a sym consumed LAZILY and
+    re-referenced (per BFS level / per round / per sampled layer), the
+    explode's Generate re-executes per reference and measured 10-20%
+    slower than the two narrow union branches (see OPTIMIZATION_r17.md);
+    the one-pass form pays only when immediately checkpointed."""
+    return pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
+        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    )
 
 
 def _pair_nodes(pairs: DataFrame, name: str = "n", distinct: bool = True) -> DataFrame:
@@ -531,7 +534,6 @@ def triangle_count(
     hubs of forward-degree >~10^6 would want the wedge-stream form for
     those vertices — documented trade-off, not needed at fixture scale.
     """
-    prep(spark)
     pairs, n_edges = _copurchase_pairs(spark, sf_dir)
     adj = pairs.groupBy("a").agg(F.array_sort(F.collect_list("b")).alias("nb"))
     # total adjacency payload ≈ one array cell per edge, so gate the
@@ -549,8 +551,11 @@ def triangle_count(
         # side): 32 partitions hold ~190 MB each at 36M edges and the
         # sorter spills (measured sf3: 49.8s at 32 -> 35.3s at 128
         # action partitions). ~375k edges/partition targets ~64 MB;
-        # AQE coalesces any overshoot back down. Effectively
-        # query-scoped: every builder re-pins 32 via prep() on entry.
+        # AQE coalesces any overshoot back down. Session-level (not
+        # scoped_confs) because the partition count must hold when the
+        # caller's action runs, after this builder returns; effectively
+        # query-scoped because the registry wrapper re-pins it via
+        # prep() on every builder entry.
         n_part = max(32, min(2048, n_edges // 375_000))
         spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
     adj_a = adj.select(F.col("a").alias("ea"), F.col("nb").alias("nba"))
@@ -614,7 +619,6 @@ def clustering_coefficient(
     side is broadcast only under the same count-conditional gate as
     triangle_count; past it, keyed shuffles.
     """
-    prep(spark)
     pairs, n_edges = _copurchase_pairs(spark, sf_dir)
     pairs = pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
     sym = pairs.union(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -698,7 +702,6 @@ def bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the frontier joins degrade to keyed shuffles — the same fallback
     the Pregel path takes.
     """
-    prep(spark)
     # the co-purchase graph is the BIPARTITE part–order graph projected
     # onto parts, and a frontier BFS never needs the projection
     # materialized: one co-purchase hop = part-frontier → orders
@@ -773,18 +776,8 @@ def pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     advance — the property that makes the job plannable at 100 TB).
     Verified against a hand-computed graph in tests/test_graph_analytics.py.
     """
-    prep(spark)
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a = li.alias("a")
-    b = li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
+    pairs = _copurchase_pairs(spark, sf_dir)[0].select(
+        F.col("a").alias("src"), F.col("b").alias("dst")
     )
     ranks = pagerank_ranks(pairs)
     return ranks.select(
@@ -842,6 +835,56 @@ def _pagerank_exact_oracle(iters: int) -> str:
     return "".join(sql)
 
 
+def _pagerank_exact_top(
+    spark: SparkSession, sf_dir: str, seeds: DataFrame | None = None
+) -> DataFrame:
+    """Top-100 (part, score) of the integer fixed-point PageRank shared by
+    pagerank_exact and personalized_pagerank_exact. Reset r = SCALE on
+    each seed (`seeds`: one `id` column) and 0 elsewhere, or on every
+    vertex when `seeds` is None; the iteration starts from r and updates
+    (3·r) div 20 + (17·Σ score div deg) div 20. With r = SCALE everywhere
+    the reset term is exactly _PR_RESET, every score is at least
+    _PR_RESET, and the `score > 0` filter keeps every vertex."""
+    pairs, _ = _copurchase_pairs(spark, sf_dir)
+    sym = _sym_union(pairs).localCheckpoint(eager=True)
+    deg = sym.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
+    if seeds is None:
+        vertices, r = deg, F.lit(_PR_SCALE).cast("long")
+    else:
+        vertices = deg.join(seeds.withColumn("_s", F.lit(1)), "id", "left")
+        r = F.when(F.col("_s") == 1, F.lit(_PR_SCALE).cast("long")).otherwise(
+            F.lit(0).cast("long")
+        )
+    base, n_nodes = observed_checkpoint(
+        vertices.select("id", "deg", r.alias("r")), F.count(F.lit(1))
+    )
+    # the broadcast side is the (id, contribution) table, deg-shaped
+    hint = broadcast_hint(spark, n_nodes, deg.schema)
+
+    scores = base.select("id", F.col("r").alias("score"), "deg", "r")
+    for _ in range(_PR_ITERS):
+        contrib = scores.select("id", F.expr("score div deg").alias("c"))
+        inbox = (
+            sym.join(hint(contrib), sym["src"] == contrib["id"])
+            .groupBy("dst")
+            .agg(F.sum("c").alias("m"))
+        )
+        scores = base.join(inbox, base["id"] == inbox["dst"], "left").select(
+            "id",
+            F.expr(
+                "(3 * r) div 20 + (17 * coalesce(m, CAST(0 AS BIGINT))) div 20"
+            ).cast("long").alias("score"),
+            "deg",
+            "r",
+        )
+    return (
+        scores.where(F.col("score") > 0)
+        .orderBy(F.col("score").desc(), F.col("id"))
+        .limit(100)
+        .select(F.col("id").alias("part"), "score")
+    )
+
+
 @query("pagerank_exact", oracle=_pagerank_exact_oracle(_PR_ITERS))
 def pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G7 oracle-checked twin (VERDICT_r04 stretch): PageRank over the
@@ -857,43 +900,7 @@ def pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration (inbox groupBy dst), contributions broadcast under the
     node-count gate, edges localCheckpointed once.
     """
-    prep(spark)
-    pairs, n_edges = _copurchase_pairs(spark, sf_dir)
-    sym = pairs.union(
-        pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).select(F.col("a").alias("src"), F.col("b").alias("dst")).localCheckpoint(
-        eager=True
-    )
-    deg, n_nodes = observed_checkpoint(
-        sym.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg")),
-        F.count(F.lit(1)),
-    )
-    hint = broadcast_hint(spark, n_nodes, deg.schema)
-
-    scores = deg.select("id", F.lit(_PR_SCALE).cast("long").alias("score"), "deg")
-    for _ in range(_PR_ITERS):
-        contrib = scores.select("id", F.expr("score div deg").alias("c"))
-        inbox = (
-            sym.join(hint(contrib), sym["src"] == contrib["id"])
-            .groupBy("dst")
-            .agg(F.sum("c").alias("m"))
-        )
-        scores = (
-            deg.join(inbox, deg["id"] == inbox["dst"], "left")
-            .select(
-                "id",
-                (
-                    F.lit(_PR_RESET)
-                    + F.expr("(17 * coalesce(m, CAST(0 AS BIGINT))) div 20")
-                ).cast("long").alias("score"),
-                "deg",
-            )
-        )
-    return (
-        scores.orderBy(F.col("score").desc(), F.col("id"))
-        .limit(100)
-        .select(F.col("id").alias("part"), "score")
-    )
+    return _pagerank_exact_top(spark, sf_dir)
 
 
 def _ppr_exact_oracle(iters: int) -> str:
@@ -947,62 +954,13 @@ def personalized_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the seeds. WHERE score > 0 keeps the output to vertices actually
     reached within the 5 supersteps — deterministic under floor
     arithmetic, unlike a float threshold."""
-    prep(spark)
-    pairs, _ = _copurchase_pairs(spark, sf_dir)
-    sym = pairs.union(
-        pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).select(F.col("a").alias("src"), F.col("b").alias("dst")).localCheckpoint(
-        eager=True
-    )
-    deg = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
     seeds = (
         table(spark, sf_dir, "part")
         .where(F.col("p_size") == 50)
         .select(F.col("p_partkey").alias("id"))
         .distinct()
-        .withColumn("_s", F.lit(1))
     )
-    base, n_nodes = observed_checkpoint(
-        deg.join(seeds, "id", "left")
-        .select(
-            "id",
-            "deg",
-            F.when(F.col("_s") == 1, F.lit(_PR_SCALE).cast("long"))
-            .otherwise(F.lit(0).cast("long"))
-            .alias("r"),
-        ),
-        F.count(F.lit(1)),
-    )
-    # the broadcast side is the (id, contribution) table, deg-shaped
-    hint = broadcast_hint(spark, n_nodes, deg.schema)
-
-    scores = base.select("id", F.col("r").alias("score"), "deg", "r")
-    for _ in range(_PR_ITERS):
-        contrib = scores.select("id", F.expr("score div deg").alias("c"))
-        inbox = (
-            sym.join(hint(contrib), sym["src"] == contrib["id"])
-            .groupBy("dst")
-            .agg(F.sum("c").alias("m"))
-        )
-        scores = (
-            base.join(inbox, base["id"] == inbox["dst"], "left")
-            .select(
-                "id",
-                F.expr(
-                    "(3 * r) div 20 + (17 * coalesce(m, CAST(0 AS BIGINT))) div 20"
-                ).cast("long").alias("score"),
-                "deg",
-                "r",
-            )
-        )
-    return (
-        scores.where(F.col("score") > 0)
-        .orderBy(F.col("score").desc(), F.col("id"))
-        .limit(100)
-        .select(F.col("id").alias("part"), "score")
-    )
+    return _pagerank_exact_top(spark, sf_dir, seeds)
 
 
 @query("personalized_pagerank")  # rows-only: fixed-point float iteration
@@ -1011,18 +969,8 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the same source set bfs_distance uses) over the part co-purchase
     graph — proximity-to-seeds instead of global centrality. NumPy
     power-iteration parity pinned in tests/test_graph_analytics.py."""
-    prep(spark)
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a = li.alias("a")
-    b = li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
+    pairs = _copurchase_pairs(spark, sf_dir)[0].select(
+        F.col("a").alias("src"), F.col("b").alias("dst")
     )
     seeds = table(spark, sf_dir, "part").where(F.col("p_size") == 50).select(
         F.col("p_partkey")
@@ -1196,7 +1144,6 @@ def neighbor_jaccard(
     broadcast under the same count-conditional gate as triangle_count;
     past it, keyed shuffles with AQE skew splitting.
     """
-    prep(spark)
     pairs, n_edges = _copurchase_pairs(spark, sf_dir)
     sym = pairs.union(pairs.select(F.col("b").alias("a"), F.col("a").alias("b")))
     adj = sym.groupBy("a").agg(
@@ -1306,7 +1253,6 @@ def kcore(
     keyed shuffles with AQE. Exact parity with a pure-Python peel is
     pinned in tests/test_graph_cohesion.py.
     """
-    prep(spark)
     if min_support > 1:
         pairs, n_edges = _copurchase_pairs_support(spark, sf_dir, min_support)
     else:
@@ -1451,7 +1397,6 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     adjacency join here (unhinted: deg is an aggregate with stats, AQE
     decides).
     """
-    prep(spark)
     pairs, _ = _copurchase_pairs(spark, sf_dir)
     sym = pairs.union(pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))).select(
         F.col("a").alias("u"), F.col("b").alias("v")
@@ -1512,7 +1457,6 @@ def copurchase_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct — each order emits each pair once, so a plain count per
     pair is the distinct-order weight with no count-distinct state.
     """
-    prep(spark)
     per_order = (
         table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
@@ -1597,7 +1541,6 @@ def sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpointed once — every round re-reads the same
     materialized partitions.
     """
-    prep(spark)
     per_order = (
         table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
@@ -1709,7 +1652,6 @@ def hits_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges localCheckpointed once. Top-k is TakeOrdered, never a global
     sort.
     """
-    prep(spark)
     e = (
         table(spark, sf_dir, "lineitem")
         .select(F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p"))
@@ -1801,7 +1743,6 @@ def motif_find(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..graph.traversal import Edge, PropertyGraph
     from ..exact import money_sum
 
-    prep(spark)
     g = PropertyGraph(
         {
             "Customer": table(spark, sf_dir, "customer"),
@@ -1882,7 +1823,6 @@ def link_prediction_aa(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter is an anti-join on the canonical pair key; final cut is
     TakeOrderedAndProject. Reference parity: the co-purchase projection
     generalizes the reference's 2-hop counterparties walk (B:43–46)."""
-    prep(spark)
     pairs, _ = _copurchase_pairs_support(spark, sf_dir, 2)
     # union form (lazy double-reference wedge join; see OPTIMIZATION_r17.md)
     sym = pairs.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
@@ -2027,7 +1967,6 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats-reset checkpoint (plans/iterate.py) so driver-side plan
     analysis stays flat. The label pick maximizes the (cnt, -lbl)
     struct — max_by, no sort."""
-    prep(spark)
     _, _, labels, _ = _lpa_labels(spark, sf_dir)
     return labels.select(F.col("node").alias("part"), F.col("lbl").alias("community"))
 
@@ -2062,7 +2001,6 @@ def degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     string primitives with identical semantics in both engines, no
     float log boundary risk. Two aggregates, both map-side
     combinable; output is O(log maxdeg) rows."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     mins = li.groupBy("l_orderkey").agg(F.min("l_partkey").alias("src"))
     raw = (
@@ -2145,7 +2083,6 @@ def ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     count riding the checkpoint job as an observe() metric (zero probe
     jobs); convergence = count unchanged. Raises if _KTRUSS_ROUNDS is
     exceeded so the unrolled oracle can never silently disagree."""
-    prep(spark)
     # _copurchase_pairs_support already returns the (a, b)-projected,
     # eagerly checkpointed edge set AND its count — reuse both instead
     # of re-materializing (review r8)
@@ -2236,7 +2173,6 @@ def community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the broadcast-gated label table plus node-sized
     aggregates — one edge pass for L_c, one for D_c, then an
     O(#communities) reduction."""
-    prep(spark)
     raw_ck, sym, labels, hint = _lpa_labels(spark, sf_dir)
     m = raw_ck.count()
     la = labels.select(F.col("node").alias("src"), F.col("lbl").alias("la"))
@@ -2328,7 +2264,6 @@ def association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     are map-side-combinable aggregates, and the two unigram probes are
     broadcast-joined against the O(#parts) count table. The support
     floor prunes the rule set before the probes."""
-    prep(spark)
     # r17 (VERDICT r16 #6): below the gate, the grouped basket arrays
     # are eagerly materialized ONCE under _expand_scope and everything
     # (pair supports, item supports, order count) derives from that
@@ -2461,7 +2396,6 @@ def subtree_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense from 0, so every arithmetic ancestor >= 1 exists as a part
     and the two walks visit identical chains; node 0 is its own root
     -- 0 div 10 = 0 -- and contributes only its self row)."""
-    prep(spark)
     part = table(spark, sf_dir, "part").select(
         "p_partkey",
         (F.col("p_retailprice").cast("decimal(18,2)") * 100)
@@ -2508,7 +2442,6 @@ def recursive_cte_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (<= 13 for int64 keys), so at 100 TB the execution is a handful of
     frontier scans, never row-at-a-time. Cross-checks the arithmetic
     walk used by subtree_rollup's path enumeration."""
-    prep(spark)
     # Spark 4 guards runaway recursion with a 1M-ROW default limit
     # (spark.sql.cteRecursionRowLimit), which the sf1 decade exceeds
     # legitimately: the walk emits |part| x (depth+1) rows, ~1.4M at

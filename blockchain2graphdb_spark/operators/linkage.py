@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import prep, table
+from ..catalog import table
 from ..graph.components import connected_components
 from ..registry import query
 
@@ -61,7 +61,6 @@ def record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     entity_id = min custkey per cluster. Unmatched records become
     singleton entities via the left-join default. Deterministic
     end-to-end, so the recursive-CTE oracle replays it exactly."""
-    prep(spark)
     cust = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", F.substring("c_name", 1, 17).alias("blk")
     )
@@ -145,7 +144,6 @@ def linkage_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     are materialized, by a band equi-join. Ratios are exact-int64
     divisions quantized to nanos, so the row value-hashes identically
     on both engines."""
-    prep(spark)
     c = table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_nationkey",

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import prep, table
+from ..catalog import table
 from ..exact import dec2
 from ..registry import query
 
@@ -42,7 +42,6 @@ def upsert_insert_if_absent(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch against the existing keys, then an append — same dedup guarantee,
     one shuffle instead of N indexed probes.
     """
-    prep(spark)
     orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     existing = orders.where(F.col("o_orderkey") % 7 != 0)
     incoming = orders.where(F.col("o_totalprice") > 100000)
@@ -69,7 +68,6 @@ def upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute(all), which is exactly the invariant the reference's
     read-modify-write code tries to maintain by hand.
     """
-    prep(spark)
     orders = table(spark, sf_dir, "orders")
     cut = F.lit("1998-01-01").cast("timestamp")
 
@@ -116,7 +114,6 @@ def update_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     The incremental form joins a delta keyed by primary key and coalesces
     new over old; both are full-column-vector ops, no per-row seek.
     """
-    prep(spark)
     status = F.when(F.col("o_totalprice") > 400000, "X").otherwise(
         F.col("o_orderstatus")
     )
@@ -147,7 +144,6 @@ def cascade_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     of anti-joins against the deleted key set, and downstream stats are
     *recomputed* from survivors — no decrement logic to get wrong.
     """
-    prep(spark)
     cust = table(spark, sf_dir, "customer")
     orders = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
@@ -178,7 +174,6 @@ def reorg_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     affected partitions; nothing to decrement. Streaming-side this is a
     foreachBatch overwrite of the affected height range.
     """
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     fork = ev.agg(
         (F.max("ts") - F.expr("INTERVAL 3 DAY")).alias("fork_ts")
@@ -208,7 +203,6 @@ def resume_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch against already-processed keys. In streaming this is free via
     checkpointLocation; the batch form is shown here.
     """
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     done = ev.where(
         F.col("ts") <= F.lit("2024-01-20 00:00:00").cast("timestamp")
@@ -275,7 +269,6 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources.snapshots import SnapshotStore
 
-    prep(spark)
     root = _snapshot_root(sf_dir, "tt")
 
     def build(store: SnapshotStore) -> None:
@@ -322,7 +315,6 @@ def snapshot_reorg_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fork is 6 blocks deep."""
     from ..sources.snapshots import SnapshotStore
 
-    prep(spark)
     root = _snapshot_root(sf_dir, "reorg")
 
     def build(store: SnapshotStore) -> None:
@@ -382,7 +374,6 @@ def scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     |change points| rows — a compression of the log, bounded by it.
     As-of lookups against the result are the join_asof operator.
     """
-    prep(spark)
     from pyspark.sql import Window as W
 
     e = table(spark, sf_dir, "events").select(
@@ -444,7 +435,6 @@ def snapshot_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     the aggregate output is O(#priorities)."""
     from ..sources.snapshots import SnapshotStore
 
-    prep(spark)
     root = _snapshot_root(sf_dir, "cdc")
 
     def build(store: SnapshotStore) -> None:
@@ -502,7 +492,6 @@ def ivm_join_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full join from scratch, so what's checked is that the delta
     algebra reproduces the monolithic result bit-for-bit (money in
     exact DECIMAL until the final cast)."""
-    prep(spark)
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus"
     )
@@ -578,7 +567,6 @@ def cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction cost is O(feed), independent of table size, and the
     compacted batch then MERGEs like `upsert_merge`. Money stays
     integer cents end-to-end."""
-    prep(spark)
     o = table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
         (F.col("o_totalprice").cast("decimal(18,2)") * 100)
@@ -650,7 +638,6 @@ def ivm_agg_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(#groups) stored partials — never the base table; both aggregates
     are map-side combinable and the merge is a groupBy over
     2 x #groups partial rows."""
-    prep(spark)
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
@@ -724,7 +711,6 @@ def snapshot_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     from explicit file lists so pushdown/pruning are unchanged."""
     from ..sources.snapshots import SnapshotStore
 
-    prep(spark)
     src_root = _snapshot_root(sf_dir, "clone_src")
     dst_root = _snapshot_root(sf_dir, "clone_dst")
     cut = F.lit("1997-06-01").cast("timestamp")

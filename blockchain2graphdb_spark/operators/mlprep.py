@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import prep, table
+from ..catalog import table
 from ..exact import dec2
 from ..functions.ranking import (
     bucketed_global_rank,
@@ -64,7 +64,6 @@ def feature_scale_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-side-combinable min/max aggregate producing an
     O(#groups) table broadcast back into the scan — a second pass over
     the column, no shuffle of the data rows."""
-    prep(spark)
     cust = table(spark, sf_dir, "customer")
     stats = cust.groupBy("c_mktsegment").agg(
         F.min("c_acctbal").alias("lo"), F.max("c_acctbal").alias("hi")
@@ -121,7 +120,6 @@ def chi2_association(spark: SparkSession, sf_dir: str) -> DataFrame:
     two marginal re-aggregations of that tiny table, a broadcast
     scalar N — the contingency table is O(|seg| x |nat|), never the
     data."""
-    prep(spark)
     cust = table(spark, sf_dir, "customer")
     obs = cust.groupBy(
         F.col("c_mktsegment").alias("seg"), F.col("c_nationkey").alias("nat")
@@ -208,7 +206,6 @@ def split_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one (bin, split) count aggregate over a
     column-pruned scan + a 1-row total broadcast — the PSI table is
     O(#bins)."""
-    prep(spark)
     orders = table(spark, sf_dir, "orders")
     first_nibble = F.conv(
         F.substring(F.md5(F.col("o_orderkey").cast("string").cast("binary")), 1, 1),
@@ -291,7 +288,6 @@ def target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(38,0) gives the same EXACT rational with ~10^19 more
     headroom; scale-0 decimal->double stays correctly rounded in both
     engines for the micros readout."""
-    prep(spark)
     cents = (dec2("o_totalprice") * 100).cast("long")
     g = (
         table(spark, sf_dir, "orders")
@@ -376,7 +372,6 @@ def auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     is NO unpartitioned window even when score cardinality is unbounded
     — VERDICT r9 #2's de-weakening of the former
     global-window-over-aggregate shape."""
-    prep(spark)
     s = (
         table(spark, sf_dir, "orders")
         .groupBy(F.col("o_totalprice").alias("score"))
@@ -464,7 +459,6 @@ def lift_gain_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpartitioned window over the data, the sort_by_key discipline);
     totals and cumulatives are windows over the 10-row decile
     aggregate. Fully lazy — no driver count, no checkpoint."""
-    prep(spark)
     scored = table(spark, sf_dir, "orders").select(
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
         "o_totalprice",
@@ -544,7 +538,6 @@ def onehot_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     comes from a dictionary table compiled into the same CASE
     projection (codegen'd, one pass); never a runtime pivot over
     unbounded cardinality."""
-    prep(spark)
     cats = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
     cols = [
         (F.col("c_mktsegment") == c).cast("long").alias(f"seg_{c.lower()}")
@@ -588,7 +581,6 @@ def quantile_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_percentile seed a broadcast CASE instead — this exact form
     is also the oracle for that approximation's error bound. Fully
     lazy — no driver count, no checkpoint."""
-    prep(spark)
     cust = table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
     ranked = bucketed_global_rank(
         cust,
@@ -646,7 +638,6 @@ def confusion_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-side-combinable aggregate producing a single
     row — the minimal possible plan; no shuffle of data rows beyond
     the 4-counter partial merge."""
-    prep(spark)
     pred = F.col("o_totalprice") >= 150000
     y = F.col("o_orderstatus") == "F"
     cell = lambda c, n: F.count_if(c).cast("long").alias(n)  # noqa: E731
@@ -709,7 +700,6 @@ def woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one (segment) conditional-count aggregate, one 2-cell
     re-aggregate of that O(#segments) table broadcast back — never a
     shuffle of customer rows."""
-    prep(spark)
     seg = (
         table(spark, sf_dir, "customer")
         .groupBy("c_mktsegment")
@@ -773,7 +763,6 @@ def mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to chi2_association — one (seg, nat) count
     (map-side combinable), marginals re-aggregated from the tiny
     contingency table, broadcast scalar N."""
-    prep(spark)
     obs = (
         table(spark, sf_dir, "customer")
         .groupBy(F.col("c_mktsegment").alias("seg"), F.col("c_nationkey").alias("nat"))
@@ -843,7 +832,6 @@ def corr_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-side-combinable aggregate per group, output
     O(#groups) rows; decimal partial aggregation is codegen'd JVM-side
     (exact.py's discipline)."""
-    prep(spark)
     d38 = "decimal(38,0)"
     x = (dec2("l_quantity") * 100).cast("long")
     y = (dec2("l_extendedprice") * 100).cast("long")
@@ -923,7 +911,6 @@ def iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-pass form filtered to two target ranks (never a driver collect
     of the column); the fence table is one row broadcast back into a
     second scan — doc_length_band's percentile-trim discipline."""
-    prep(spark)
     pc = (dec2("o_totalprice") * 100).cast("long")
     orders = table(spark, sf_dir, "orders").select(
         pc.alias("pc"), "o_totalprice", "o_orderkey"
@@ -1020,7 +1007,6 @@ def feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(#buckets) census aggregate. At 100 TB the census runs on a
     sample; the bucket expression itself ships into the feature
     projection unchanged."""
-    prep(spark)
     cust = table(spark, sf_dir, "customer")
     feats = cust.select(
         F.concat(F.lit("seg="), F.col("c_mktsegment")).alias("feat")
@@ -1073,7 +1059,6 @@ def group_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the fold is a pure per-row expression (no join to a
     user table, no shuffle to co-locate groups); the census is one
     map-side-combinable aggregate over 5 keys."""
-    prep(spark)
     fold = (
         F.conv(
             F.substring(
@@ -1156,7 +1141,6 @@ def mad_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts into the deviation pass. Never a driver collect of the
     column, never an unpartitioned data window — the iqr_outliers
     discipline applied twice."""
-    prep(spark)
     pc = (dec2("o_totalprice") * 100).cast("long")
     v = table(spark, sf_dir, "orders").select(
         pc.alias("c"), "o_totalprice", "o_orderkey"
@@ -1259,7 +1243,6 @@ def percentile_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-row aggregate — never a percentile() over raw doubles,
     never a driver collect; at extreme scale the same plan serves
     as the exactness oracle for approx_percentile's error bound."""
-    prep(spark)
     pcc = (dec2("o_totalprice") * 100).cast("long")
     v = table(spark, sf_dir, "orders").select(
         pcc.alias("pc"), "o_totalprice", "o_orderkey"
@@ -1350,7 +1333,6 @@ def ols_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan — the entire regression is a single reduce to one row; adding
     regressors grows the moment count quadratically but never adds a
     shuffle (the classic 100 TB closed-form-regression plan)."""
-    prep(spark)
     d38 = "decimal(38,0)"
     c = table(spark, sf_dir, "lineitem").select(
         dec2("l_quantity").cast("long").alias("x1"),
@@ -1445,7 +1427,6 @@ def winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks, the 1-row fence table broadcast into a second scan, one
     map-side-combinable per-segment aggregate — the iqr_outliers /
     doc_length_band percentile-trim plan."""
-    prep(spark)
     pc = (dec2("c_acctbal") * 100).cast("long")
     c = table(spark, sf_dir, "customer").select(
         "c_mktsegment", "c_custkey", pc.alias("pc")
@@ -1532,7 +1513,6 @@ def impute_group_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed_global_rank within the group); the O(#groups) median
     table broadcasts back into the scan — no global window, no
     driver collect."""
-    prep(spark)
     nib = F.conv(
         F.substring(
             F.md5(F.concat(F.lit("imp"), F.col("event_id").cast("string")).cast("binary")),
@@ -1604,7 +1584,6 @@ def weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     by segment. Everything is int64 cents/quantities; the half-total
     comparison is the cleared-denominator form 2*cum >= tot, so no
     division ever happens."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     g = (
         li.groupBy(
@@ -1696,7 +1675,6 @@ def conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     WindowExec partition); qhat is a 1-row broadcast; the coverage
     pass is one map-side-combinable aggregate. Split membership is a
     per-row hash — no shuffle to assign."""
-    prep(spark)
     nib = F.conv(
         F.substring(
             F.md5(F.concat(F.lit("conf"), F.col("k").cast("string")).cast("binary")),
@@ -1806,7 +1784,6 @@ def benford_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (100 TB): a per-row substring, one map-side-combinable
     9-group aggregate, and a 1-row broadcast total — the minimal
     two-aggregate plan. Output is 9 rows regardless of input size."""
-    prep(spark)
     digit = F.substring(
         (dec2("o_totalprice") * 100).cast("long").cast("string"), 1, 1
     ).cast("long")
@@ -1885,7 +1862,6 @@ def wasserstein_1d_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     consecutive-value gap is a pos/pos+1 equi-join on the same
     aggregate (no lead() across bucket boundaries); one final
     map-side-combinable reduction."""
-    prep(spark)
     from ..functions.ranking import bucketed_prefix_sums
 
     nib = F.conv(
@@ -1993,7 +1969,6 @@ def quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join on rank position (both sides already shuffled by pos'
     parent keys; the join is the only row-sized shuffle beyond the
     ranks themselves)."""
-    prep(spark)
     orders = table(spark, sf_dir, "orders")
     a = orders.select(
         "o_orderkey",
@@ -2078,7 +2053,6 @@ def adversarial_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to auc_exact — per-score histogram (one
     map-side-combinable aggregate), bucketed prefix sums for the
     cumulative rank, one 1-row reduction. No unpartitioned window."""
-    prep(spark)
     is_test = (
         F.conv(
             F.substring(
@@ -2177,7 +2151,6 @@ def feature_pit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the merge-then-window form replaces the per-feature as-of join
     fan-out a naive feature store does (k features = k joins); here k
     features are k running columns in the same window pass."""
-    prep(spark)
     e = table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
@@ -2270,7 +2243,6 @@ def gini_split_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole per-feature scan costs one pass regardless of rows; a
     real trainer fans this out over features as independent columns
     of the same histogram pass."""
-    prep(spark)
     p = (
         F.conv(
             F.substring(
@@ -2381,7 +2353,6 @@ def temporal_edge_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct aggregates probed by broadcast-able left joins; the
     readout is one conditional aggregate. No windows, nothing
     pairwise."""
-    prep(spark)
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_custkey").alias("cust"),
@@ -2501,7 +2472,6 @@ def regression_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one train aggregate (O(#categories), broadcast), one
     test probe join, one moment aggregate → 1 row. No windows."""
-    prep(spark)
     o = table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("cat"),
         (dec2("o_totalprice") * 100).cast("long").alias("y"),
@@ -2629,7 +2599,6 @@ def group_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-pass rank exists to avoid; here the partition key makes each
     window partition a single type's value domain); one final
     aggregate per type."""
-    prep(spark)
     e = table(spark, sf_dir, "events").select(
         "event_type", (dec2("value") * 100).cast("long").alias("cents")
     )
@@ -2714,7 +2683,6 @@ def churn_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one 1-row cutoff broadcast, one user-keyed
     conditional aggregate (log → O(#users)), one distinct-key probe
     for the label. No windows."""
-    prep(spark)
     e = table(spark, sf_dir, "events").select(
         "user_id",
         F.unix_micros("ts").alias("us"),
@@ -2819,7 +2787,6 @@ def regression_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     window + TakeOrdered over that domain-sized table — never over
     data-sized rows. Adding candidate features adds aggregates, not
     shuffles (the gini_split_points plan)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").select(
         dec2("l_quantity").cast("long").alias("q"),
         F.expr(
@@ -2921,7 +2888,6 @@ def approx_quantile_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums (mann_whitney_u's plan) + a 3-row probe join — the exact
     rank pass you run ONCE to qualify the sketch before trusting it
     everywhere."""
-    prep(spark)
     o = table(spark, sf_dir, "orders").select(
         (dec2("o_totalprice") * 100).cast("long").alias("pc")
     )
@@ -3034,7 +3000,6 @@ def skew_kurtosis_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (k = 5 rows out of the scan), constant-size algebra after — the
     ols_multi closed-form plan; higher moments add sums, never
     shuffles."""
-    prep(spark)
     o = table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"),
         F.expr(
@@ -3132,7 +3097,6 @@ def grubbs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one three-sum aggregate, one broadcast of the 1-row
     moments, one TakeOrdered(1) over the scan — two passes, no
     shuffle beyond the 1-row exchanges."""
-    prep(spark)
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.expr(
@@ -3228,7 +3192,6 @@ def kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE map-side-combinable cell aggregate over the scan;
     everything after is constant-size algebra. Adding rows never grows
     the self-join."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").select(
         dec2("l_quantity").cast("long").alias("x"),
         (dec2("l_discount") * 100).cast("long").alias("y"),
@@ -3348,7 +3311,6 @@ def spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one cell aggregate over the scan; marginal rank
     tables are windows over <= domain-size rows; one constant-size
     moment join ends it."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").select(
         dec2("l_quantity").cast("long").alias("x"),
         (dec2("l_discount") * 100).cast("long").alias("y"),
@@ -3440,7 +3402,6 @@ def kfold_cv_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-size leave-out algebra join, one scan-side equi-join with
     a broadcast dim, one fold-keyed reduce — two scans total, k
     appears only in the tiny dimension."""
-    prep(spark)
     fold = (
         F.conv(
             F.substring(

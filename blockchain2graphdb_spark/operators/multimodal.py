@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import prep, table
+from ..catalog import table
 from ..functions.multimodal import (
     patchify_images,
     decode_and_featurize,
@@ -42,7 +42,6 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     first 8 hex chars of the seed digest reproduce in SQL; kind and size
     come out of the real pipeline.
     """
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     media = synthesize_media(docs)
     feats = decode_and_featurize(media)
@@ -79,7 +78,6 @@ def multimodal_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Python stage must emit. duration comes back through the
     pipeline's meta struct (lineage check), n_windows/last_start from
     the expanded rows themselves."""
-    prep(spark)
     media = synthesize_media(table(spark, sf_dir, "documents"))
     wins = window_audio(media, window_ms=500, hop_ms=250)
     return wins.groupBy("media_id").agg(
@@ -127,7 +125,6 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage's 1:1 row contract, kind routing, metadata rewrite, and
     payload re-encode all survived the mapInPandas round trip.
     """
-    prep(spark)
     media = synthesize_media(table(spark, sf_dir, "documents"))
     resized = resize_images(media, max_side=16)
     return resized.select(
@@ -161,7 +158,6 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicts the exact frame count ((dur-1)//5000 + 1 frames at 0,
     5000, …) and last frame timestamp the Python expansion must emit.
     """
-    prep(spark)
     media = synthesize_media(table(spark, sf_dir, "documents"))
     frames = sample_frames(media, every_ms=5000)
     return frames.groupBy("media_id").agg(
@@ -208,7 +204,6 @@ def multimodal_patchify(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: pure map-side 1->N (no shuffle); patches inherit the
     image rows' partitioning, exactly what a downstream patch-batch
     embedder wants."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     media = synthesize_media(docs)
     seeded = media.join(

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import SESSION_GAP_US as _SESSION_GAP_US
-from ..catalog import prep, table
+from ..catalog import table
 from ..exact import dec2
 from ..registry import query
 
@@ -64,7 +64,6 @@ def split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     the property training pipelines need for stable eval sets. Map-side
     only; the one shuffle is the 3-row summary aggregate.
     """
-    prep(spark)
     h3 = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 3)
     split = (
         F.when(h3 < "ccc", "train").when(h3 < "e66", "val").otherwise("test")
@@ -105,7 +104,6 @@ def sample_hash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushed below the shuffle, so the exchange carries ≤ k·|groups| rows,
     the same plan shape the W5 top-k family pins in tests/test_plans.py.
     """
-    prep(spark)
     w = W.partitionBy("lang").orderBy(
         F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
     )
@@ -165,7 +163,6 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the train-gram side is pre-deduped (distinct) before the
     join, so its size is the vocabulary of grams, not the corpus.
     """
-    prep(spark)
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", F.expr("filter(split(text, ' '), x -> x <> '')").alias("toks")
     )
@@ -244,7 +241,6 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates keyed by (doc_id, gram) then doc_id — both map-side
     combinable, no joins, no Python.
     """
-    prep(spark)
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", F.expr("filter(split(text, ' '), x -> x <> '')").alias("toks")
     )
@@ -310,7 +306,6 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     same stage by whole-stage codegen. This is the shape of a real
     pre-tokenization pass: content flows through exactly one shuffle.
     """
-    prep(spark)
     keep_w = W.partitionBy(F.md5("text"))
     d = table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -378,7 +373,6 @@ def sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed shuffle on user_id serves both window passes and the final
     aggregate — Catalyst reuses the partitioning across the three steps.
     """
-    prep(spark)
     ev = table(spark, sf_dir, "events").select(
         "user_id", "event_id", F.unix_micros("ts").alias("us")
     )
@@ -449,7 +443,6 @@ def corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     the key is exact, so the result value-hashes identically on both
     engines.
     """
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     rn_w = W.partitionBy("lang").orderBy(
         F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
@@ -532,7 +525,6 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     appending docs never reshuffles earlier bins. Integer cumsum over
     an identical ordering is exact on both engines.
     """
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     w = W.partitionBy("source").orderBy(
         F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
@@ -588,7 +580,6 @@ def dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-source duplicates are pinned in tests (the fixture itself has
     no duplicate texts, which the oracle equally confirms).
     """
-    prep(spark)
     fp = table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
@@ -648,7 +639,6 @@ def layout_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     property itself (each bucket spans one 32x32 rectangle), verified
     by the oracle and pinned in tests.
     """
-    prep(spark)
 
     def spread(c):
         c = c.bitwiseOR(F.shiftleft(c, 4)).bitwiseAND(F.lit(0x0F0F))
@@ -712,7 +702,6 @@ def doc_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides over-generate one stride past the end and share the start < n
     filter.
     """
-    prep(spark)
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "text", F.length("text").cast("long").alias("n")
     )
@@ -769,7 +758,6 @@ def profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch alternative when ±2% suffices. The per-column rows come out
     of `stack`, not |cols| separate scans.
     """
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     agg = li.agg(
         F.count(F.lit(1)).alias("_n"),
@@ -873,7 +861,6 @@ def chunk_embed_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
     `similarity_ivf`) provide the bucketed candidate generation and this
     plan runs within buckets.
     """
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     corpus = (
         docs.where(F.col("doc_id") % 10 != 0)
@@ -961,7 +948,6 @@ def doc_length_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     move). At 100 TB the declared scale path swaps the exact
     percentile for approx_percentile's mergeable sketch — the band
     bounds are thresholds, not reported values."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     band = docs.agg(
         F.expr("percentile(CAST(n_chars AS DOUBLE), 0.10)").alias("lo"),
@@ -1001,7 +987,6 @@ def join_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row broadcast total, and a TakeOrderedAndProject top-10 — no
     global sort, no collect. The shares are double divisions of
     identical exact ints, so the report itself is oracle-checkable."""
-    prep(spark)
     # materialize the key-cardinality count table once: the total
     # derives from it AND it is the report's left side — without the
     # checkpoint the biggest-table scan + aggregate runs twice
@@ -1069,7 +1054,6 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join (shuffles carry 32-byte digests, never text), and the
     per-doc ratio is exact integers with one micros-quantized
     division. The X2 dedup shuffle discipline end-to-end."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", F.expr("filter(split(text, ' '), x -> x <> '')").alias("toks")
     )
@@ -1149,7 +1133,6 @@ def entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     to O(#values) rows, a window over that tiny aggregate for the
     total, and a per-value projection — the union is across columns,
     not data. Every branch prunes to its single column at the scan."""
-    prep(spark)
     out = None
     for col, tbl in _ENTROPY_BRANCHES:
         counts = (
@@ -1213,7 +1196,6 @@ def weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the key is a pure per-row expression; the cut is
     TakeOrdered (per-partition top-100 then merge of 100-row heads) —
     the same never-a-global-sort discipline as sample_hash_topk."""
-    prep(spark)
     h = F.conv(
         F.substring(
             F.md5(F.concat(F.lit("ws"), F.col("o_orderkey").cast("string")).cast("binary")),
@@ -1285,7 +1267,6 @@ def dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates over column-pruned scans (2 shares 3's scan via
     Catalyst CTE reuse is not required — each is one pass); the union
     is across RULES, not data. The output is O(#rules) rows."""
-    prep(spark)
     orders = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
 
@@ -1391,7 +1372,6 @@ def compaction_bin_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently and in parallel, and the output is O(#bins) rows.
     Integer cumsum over a unique (size DESC, file_id) order is exact
     on both engines."""
-    prep(spark)
     files = (
         table(spark, sf_dir, "lineitem")
         .groupBy(
@@ -1462,7 +1442,6 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE map-side-combinable aggregate onto the QI tuple,
     one 1-row reduction over the O(#classes) table. At 100 TB the QI
     histogram IS the audit — no row-level data leaves the executors."""
-    prep(spark)
     g = (
         table(spark, sf_dir, "customer")
         .groupBy(
@@ -1540,7 +1519,6 @@ def neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one map-side-combinable moment aggregate (3 strata),
     then O(#strata) window arithmetic. The design costs one scan."""
-    prep(spark)
     cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
     m = (
         table(spark, sf_dir, "orders")
@@ -1629,7 +1607,6 @@ def l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one aggregate onto the QI tuple with a distinct-count
     (partial+final combinable), one 1-row reduction — the same
     histogram-is-the-audit shape as `k_anonymity_audit`."""
-    prep(spark)
     g = (
         table(spark, sf_dir, "customer")
         .groupBy(
@@ -1718,7 +1695,6 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two hash aggregates (global histogram O(#segments),
     per-class histogram O(#classes·#segments)), one broadcast probe,
     one 1-row reduction. No windows, nothing pairwise."""
-    prep(spark)
     qi = table(spark, sf_dir, "customer").select(
         "c_nationkey",
         F.expr(
@@ -1842,7 +1818,6 @@ def dataset_mixture_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     WindowGroupLimit once the quota probe is pushed (per-language
     top-N, map-side partial); quotas are an O(#langs) broadcast; two
     hash aggregates end it. Nothing global-sorted."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     # target size + quotas computed driver-side (one bounded count
     # action): the rank cut below needs a LITERAL bound to compile to
@@ -1948,7 +1923,6 @@ def sequence_packing_shelf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-bucket totals → broadcast offsets → in-bucket partitioned
     cumsum — never one WindowExec partition); the readout is a 1-row
     aggregate."""
-    prep(spark)
     from ..functions.ranking import bucketed_prefix_sum
 
     n = table(spark, sf_dir, "documents").select(
@@ -2028,7 +2002,6 @@ def dp_sensitivity_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     log to O(#users x #groups) rows, then one group-keyed aggregate —
     both map-side combinable; nothing is per-event after the first
     partial aggregate."""
-    prep(spark)
     u = (
         table(spark, sf_dir, "events")
         .select(
@@ -2130,7 +2103,6 @@ def bloom_fpr_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key counting aggregate — no bit-array state, no driver
     anything; at 100 TB the same plan emits the real bitmap via a
     bit-packing aggregate."""
-    prep(spark)
     keys = table(spark, sf_dir, "orders").select("o_orderkey")
 
     def bits(df: DataFrame) -> DataFrame:

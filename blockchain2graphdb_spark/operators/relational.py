@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import prep, table
+from ..catalog import table
 from ..exact import dec2, money_avg, money_sum
 from ..plans.iterate import local_checkpoint
 from ..registry import query
@@ -39,7 +39,6 @@ def scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     ReadSchema in `.explain`), replacing the reference's whole-object
     decode of every block.
     """
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     return li.select("l_orderkey", "l_linenumber", "l_quantity").where(
         F.col("l_shipdate") < F.lit("1995-06-01").cast("timestamp")
@@ -67,7 +66,6 @@ def export_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     projections — written out with df.write.parquet/csv by the sink layer
     (tests cover the write path).
     """
-    prep(spark)
     orders = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
     placed = orders.select(
@@ -98,7 +96,6 @@ def filter_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate + min/max row-group skipping; at scale a batch of N lookups
     is one semi-join, not N seeks.
     """
-    prep(spark)
     return (
         table(spark, sf_dir, "orders")
         .where(F.col("o_orderkey") == 7)
@@ -116,7 +113,6 @@ def filter_point(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def filter_conjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2: label+property conjunctive filter (B:40 has("Block","BlockHeight",0))."""
-    prep(spark)
     return (
         table(spark, sf_dir, "orders")
         .where(
@@ -141,7 +137,6 @@ def semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference's dedup/upsert branching does one indexed probe per row;
     the set-oriented form is one shuffle (or broadcast) semi-join.
     """
-    prep(spark)
     cust = table(spark, sf_dir, "customer")
     orders = table(spark, sf_dir, "orders")
     return cust.join(
@@ -158,7 +153,6 @@ def semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F5: negated existence (B:449 `!g.V().has(...).hasNext()`) as LEFT ANTI JOIN."""
-    prep(spark)
     cust = table(spark, sf_dir, "customer")
     orders = table(spark, sf_dir, "orders")
     return cust.join(
@@ -186,7 +180,6 @@ def join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     has size stats, Catalyst broadcasts it while it fits and AQE/SMJ
     takes over beyond the threshold.
     """
-    prep(spark)
     orders = table(spark, sf_dir, "orders").where(F.col("o_totalprice") > 300000)
     cust = table(spark, sf_dir, "customer")
     return orders.join(cust, orders.o_custkey == cust.c_custkey).select(
@@ -204,7 +197,6 @@ def join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer join — absent from the reference, declared surface (§2.3 checklist)."""
-    prep(spark)
     cust = table(spark, sf_dir, "customer")
     orders = table(spark, sf_dir, "orders")
     cond = (cust.c_custkey == orders.o_custkey) & (orders.o_orderstatus == "F")
@@ -220,7 +212,6 @@ def join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi on a filtered probe side (F3/J3 shape)."""
-    prep(spark)
     part = table(spark, sf_dir, "part")
     li = table(spark, sf_dir, "lineitem").where(F.col("l_quantity") >= 49)
     return part.join(li, part.p_partkey == li.l_partkey, "left_semi").select(
@@ -237,7 +228,6 @@ def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti (resume/skip semantics M6, B:444–457)."""
-    prep(spark)
     part = table(spark, sf_dir, "part")
     li = table(spark, sf_dir, "lineitem")
     return part.join(li, part.p_partkey == li.l_partkey, "left_anti").select(
@@ -255,7 +245,6 @@ def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def one_hop_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4: output→address owner lookup (B:578 out("locked")) — a 1-hop FK join."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").where(F.col("l_quantity") >= 48)
     part = table(spark, sf_dir, "part")
     return li.join(part, li.l_partkey == part.p_partkey).select(
@@ -274,7 +263,6 @@ def one_hop_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def expand_children(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5/J6: block→transactions 1:N expansion (B:763 out("has"))."""
-    prep(spark)
     orders = table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-03-01").cast("timestamp"))
@@ -303,7 +291,6 @@ def two_hop_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     address←output←tx becomes customer→orders→lineitem; the per-vertex
     loop collapses into two equi-joins + one hash aggregate.
     """
-    prep(spark)
     cust = table(spark, sf_dir, "customer")
     orders = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
@@ -335,7 +322,6 @@ def counterparties(spark: SparkSession, sf_dir: str) -> DataFrame:
     and at 100 TB the HLL variant (agg_approx_count_distinct) avoids the
     exact-distinct shuffle.
     """
-    prep(spark)
     cust = table(spark, sf_dir, "customer")
     orders = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
@@ -366,7 +352,6 @@ def self_transfer_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Both sides of the transfer are the same party" — here: lineitems whose
     customer and supplier share a nation, counted per nation.
     """
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     orders = table(spark, sf_dir, "orders")
     cust = table(spark, sf_dir, "customer")
@@ -403,7 +388,6 @@ def join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the range as a post-filter, so it scales as a keyed join, not a
     cartesian product.
     """
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     a = ev.alias("a")
     b = ev.alias("b")
@@ -436,7 +420,6 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     Expressed as a window `last(..., ignorenulls)` instead of a per-row
     backward scan: one sort per partition key, no N² probing.
     """
-    prep(spark)
     from pyspark.sql import Window as W
 
     ev = table(spark, sf_dir, "events")
@@ -463,7 +446,6 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer join — declared surface (§2.3 checklist); also the core
     of the M2 MERGE fold (maintenance.upsert_merge)."""
-    prep(spark)
     c = (
         table(spark, sf_dir, "customer")
         .groupBy(F.col("c_nationkey").alias("nationkey"))
@@ -505,7 +487,6 @@ def join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-salted partitioning is reused by the partial agg. R replicates
     only the SMALL side (R×|dim| rows), never the fact side.
     """
-    prep(spark)
     R = 8
     li = table(spark, sf_dir, "lineitem").withColumn(
         "salt", F.pmod(F.xxhash64("l_orderkey", "l_linenumber"), F.lit(R))
@@ -572,7 +553,6 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     by tests/test_round11_ops.py::test_join_skew_salted_plan_shape
     (shuffle join on the composite key, Generate for the dim replicas,
     no broadcast on the fact join)."""
-    prep(spark)
     R = 8
     hot_f = F.when(F.col("l_partkey") % 10 < 7, F.lit(0)).otherwise(
         F.col("l_partkey")
@@ -629,7 +609,6 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1/A2: BlockTransactionCount (B:538–540) as a hash-aggregate count."""
-    prep(spark)
     return (
         table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
@@ -648,7 +627,6 @@ def agg_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3: TransactionBalance/BlockBalance sums (B:784, B:1011, B:1037)."""
-    prep(spark)
     return (
         table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
@@ -666,7 +644,6 @@ def agg_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_sum_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4: null-coalesced fee sum (B:788–793 tx.getFee() may be null)."""
-    prep(spark)
     tax = F.coalesce(F.nullif(dec2("l_tax"), F.lit(0).cast("decimal(18,2)")), F.lit(0).cast("decimal(18,2)"))
     return (
         table(spark, sf_dir, "lineitem")
@@ -691,7 +668,6 @@ def agg_signed_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference mutates one row per spend/receive; this is one signed
     aggregation over the event log.
     """
-    prep(spark)
     signed = F.when(F.col("event_type") == "purchase", dec2("value")).otherwise(-dec2("value"))
     return (
         table(spark, sf_dir, "events")
@@ -716,7 +692,6 @@ def agg_min_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     nanosecond precision, which Spark truncates to micros on read, so the
     comparable representation on both engines is floor(ns/1000).
     """
-    prep(spark)
     return (
         table(spark, sf_dir, "events")
         .groupBy("user_id")
@@ -739,7 +714,6 @@ def agg_min_max(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_conditional_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7: direction-split counts (B:863–867 AddressInput/OutputTransactionCount)."""
-    prep(spark)
     return (
         table(spark, sf_dir, "events")
         .groupBy("user_id")
@@ -757,7 +731,6 @@ def agg_conditional_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8 exact form: distinct counterparties (B:950–983 HashSet dedup)."""
-    prep(spark)
     return (
         table(spark, sf_dir, "lineitem")
         .groupBy("l_suppkey")
@@ -771,7 +744,6 @@ def agg_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces the exact-distinct shuffle. Rows-only check (sketch estimates
     are engine-specific); the exact twin is `agg_count_distinct`.
     """
-    prep(spark)
     return (
         table(spark, sf_dir, "lineitem")
         .groupBy("l_suppkey")
@@ -794,7 +766,6 @@ def agg_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_first_seen_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9: TransactionNewAddressCount (B:1077–1080) — count of first-ever
     appearances per period, via a window instead of per-row existence probes."""
-    prep(spark)
     from pyspark.sql import Window as W
 
     ev = table(spark, sf_dir, "events")
@@ -824,7 +795,6 @@ def agg_self_transfer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10: AddressBetweenAddressTransactionCount (B:876–877) — per party,
     how many of its transactions have it on both sides (here: an order with
     at least one same-nation supplier), via semi-join then count."""
-    prep(spark)
     orders = table(spark, sf_dir, "orders")
     cust = table(spark, sf_dir, "customer")
     li = table(spark, sf_dir, "lineitem")
@@ -851,7 +821,6 @@ def agg_self_transfer(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def distinct_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A11: HashSet-union dedup (B:722–733) as dropDuplicates."""
-    prep(spark)
     return table(spark, sf_dir, "lineitem").select("l_returnflag", "l_linestatus").distinct()
 
 
@@ -865,7 +834,6 @@ def distinct_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouping sets / CUBE — declared surface (§2.4 'absent in reference')."""
-    prep(spark)
     return (
         table(spark, sf_dir, "lineitem")
         .cube("l_returnflag", "l_linestatus")
@@ -885,7 +853,6 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP over the region→nation dimension hierarchy."""
-    prep(spark)
     region = table(spark, sf_dir, "region")
     nation = table(spark, sf_dir, "nation")
     cust = table(spark, sf_dir, "customer")
@@ -911,7 +878,6 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Summary statistics — declared surface (§2.4)."""
-    prep(spark)
     return (
         table(spark, sf_dir, "events")
         .groupBy("event_type")
@@ -936,7 +902,6 @@ def agg_collect_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     """collect_set (declared surface §2.4) — sorted for determinism and
     joined to a scalar string: the driver's canonicalizer sorts rows via
     pandas, which cannot hash list-valued cells (round-1 red row)."""
-    prep(spark)
     return (
         table(spark, sf_dir, "customer")
         .groupBy("c_nationkey")
@@ -960,7 +925,6 @@ def agg_collect_set(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pivot_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot (declared surface): one shuffle with conditional aggregation,
     pivot values enumerated so no extra distinct-values pass runs."""
-    prep(spark)
     return (
         table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
@@ -981,7 +945,6 @@ def agg_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     algebraic aggregates Spark's partial aggregation already does this;
     the explicit form is for non-algebraic pipelines and demos the
     technique the 100 TB path uses on skewed address keys.)"""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     salted = ev.withColumn("_salt", F.pmod(F.col("event_id"), F.lit(16)))
     partial = salted.groupBy("event_type", "_salt").agg(
@@ -1030,7 +993,6 @@ def sort_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     day -> hour keeps per-bucket rows bounded); same trick as the
     partition-offset rank used by distributed zipWithIndex.
     """
-    prep(spark)
     from pyspark.sql import Window as W
 
     o = table(spark, sf_dir, "orders").select(
@@ -1060,7 +1022,6 @@ def sort_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def limit_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O3: take-first `.next()` (B:44 etc.) generalized to ORDER BY ... LIMIT n."""
-    prep(spark)
     return table(spark, sf_dir, "orders").orderBy("o_orderkey").select("o_orderkey", "o_orderdate").limit(5)
 
 
@@ -1073,7 +1034,6 @@ def limit_n(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-k → TakeOrderedAndProject (no full sort, no full shuffle)."""
-    prep(spark)
     return (
         table(spark, sf_dir, "orders")
         .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
@@ -1092,7 +1052,6 @@ def topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HashSet union across sides (B:722–733) as UNION DISTINCT."""
-    prep(spark)
     c = table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.union(s).distinct()
@@ -1104,7 +1063,6 @@ def set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT — declared surface (§2.7, absent from the reference)."""
-    prep(spark)
     c = table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.intersect(s)
@@ -1116,7 +1074,6 @@ def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT — declared surface (§2.7)."""
-    prep(spark)
     c = table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.subtract(s)  # EXCEPT DISTINCT (exceptAll is the bag variant)
@@ -1144,7 +1101,6 @@ def join_asof_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     (allow_exact_matches=False), ties on equal right-side ts broken to
     the max event_id by the (ts, event_id) sort + backward take-last.
     """
-    prep(spark)
     import pandas as pd
 
     ev = table(spark, sf_dir, "events").where(
@@ -1182,7 +1138,6 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     in one scan — no shuffle, no collect; the seed pins the sample
     across runs. Proportion/determinism properties pinned in
     tests/test_sampling.py."""
-    prep(spark)
     cust = table(spark, sf_dir, "customer")
     segs = [r["c_mktsegment"] for r in cust.select("c_mktsegment").distinct().collect()]
     fractions = {s: (0.2 if s == "BUILDING" else 0.05) for s in segs}
@@ -1218,7 +1173,6 @@ def sample_hash_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     required."""
     from pyspark.sql import Window as W
 
-    prep(spark)
     cust = table(spark, sf_dir, "customer")
     w = W.partitionBy("c_mktsegment").orderBy(
         F.md5(F.col("c_custkey").cast("string")), F.col("c_custkey")
@@ -1248,7 +1202,6 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS — the general form behind cube/rollup (§2.4): three
     aggregation granularities in ONE shuffle (Expand + single hash
     aggregate), vs three separate scans+shuffles if issued naively."""
-    prep(spark)
     from .sqlsuite import register_views
 
     register_views(spark, sf_dir)
@@ -1281,7 +1234,6 @@ def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolation-order float noise. At 100 TB the declared scale path
     is `approx_percentile` (mergeable t-digest-style sketch, constant
     memory per group); the exact form is the correctness anchor."""
-    prep(spark)
     return (
         table(spark, sf_dir, "events")
         .groupBy("event_type")
@@ -1308,7 +1260,6 @@ def histogram_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-width histogram via width_bucket + one hash aggregate — the
     single-pass binning primitive (data profiling / quality dashboards).
     Bin ids are exact integers; only min/max per bin touch floats."""
-    prep(spark)
     return (
         table(spark, sf_dir, "orders")
         .groupBy(
@@ -1344,7 +1295,6 @@ def tpch_q12_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape (fixtures lack l_shipmode/l_commitdate, so
     l_linestatus stands in for shipmode): priority-split conditional
     counts over a fact-fact join."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -1366,7 +1316,6 @@ def agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The declared scale path of agg_percentile: approx_percentile's
     mergeable sketch — constant memory per group at any cardinality.
     Accuracy vs the exact form is pinned in tests/test_sketches.py."""
-    prep(spark)
     return (
         table(spark, sf_dir, "events")
         .groupBy("event_type")
@@ -1385,7 +1334,6 @@ def agg_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     state is a few KB per shard regardless of row count, and shards
     can be computed on different clusters/days and merged later.
     Merge-vs-direct equality is pinned in tests/test_sketches.py."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     shards = o.groupBy(F.year("o_orderdate").alias("yr")).agg(
         F.hll_sketch_agg("o_custkey").alias("sk")
@@ -1413,7 +1361,6 @@ def agg_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate behind "which order was the customer's largest" — one
     hash aggregate, no window, no self-join. Tie-broken by
     (totalprice, orderkey) so both engines pick the same row."""
-    prep(spark)
     return (
         table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
@@ -1452,7 +1399,6 @@ def agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (count, -value). No window, no sort; both shuffles carry tiny
     grouped keys, and the first agg is map-side combinable — the 100 TB
     shape for any "most common value" profile question."""
-    prep(spark)
     counted = (
         table(spark, sf_dir, "lineitem")
         .groupBy(
@@ -1502,7 +1448,6 @@ def sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate at 100 TB). Point estimates (min over depths) dominate
     true counts — the CMS guarantee — pinned in tests.
     """
-    prep(spark)
     ev = table(spark, sf_dir, "events").select("user_id")
     rows_d = ev.select(
         "user_id", F.explode(F.array(*[F.lit(i) for i in range(4)])).alias("d")
@@ -1626,7 +1571,6 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     results are format-independent. At 100 TB: explicit schema (no
     inference pass), and the rollup pushes column pruning into the text
     reader."""
-    prep(spark)
     d = _text_source_dir(sf_dir, "csv")
     df = spark.read.schema(_TEXT_SRC_SCHEMA).option("header", "true").csv(d)
     return df.groupBy("n_regionkey").agg(
@@ -1641,7 +1585,6 @@ def scan_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S-family: JSON-lines source with an explicit schema — same
     contract as `scan_csv`; line-delimited JSON is the splittable form
     (a single JSON array is one unsplittable record at any size)."""
-    prep(spark)
     d = _text_source_dir(sf_dir, "jsonl")
     df = spark.read.schema(_TEXT_SRC_SCHEMA).json(d)
     return df.groupBy("n_regionkey").agg(
@@ -1683,7 +1626,6 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tolerance is a post-window predicate on the matched timestamp,
     so it costs nothing and pushes nothing extra through the shuffle.
     All math on unix-micro bigints — cross-engine exact."""
-    prep(spark)
     from pyspark.sql import Window as W
 
     ev = table(spark, sf_dir, "events").select(
@@ -1769,7 +1711,6 @@ def scan_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: partition pruning composes with column pruning (only
     user_id/value reach the reader) and the aggregate is map-side
     combinable; exact-decimal value sums per the exact.py contract."""
-    prep(spark)
     d = _partitioned_events_dir(sf_dir)
     df = spark.read.parquet(d).where(F.col("event_type") == "click")
     return df.groupBy("user_id").agg(
@@ -1848,7 +1789,6 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL fill is the same executor-side mechanism. Column pruning
     still reaches the reader; the aggregate is map-side combinable
     with exact-decimal sums."""
-    prep(spark)
     d = _schema_evolution_dir(sf_dir)
     df = spark.read.option("mergeSchema", "true").parquet(d)
     return (
@@ -1901,7 +1841,6 @@ def skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     skyline(all) because dominance is transitive)."""
     from pyspark.sql import Window as W
 
-    prep(spark)
     parts = table(spark, sf_dir, "part").select(
         "p_brand", "p_partkey", "p_retailprice", F.col("p_size").cast("long").alias("p_size")
     )
@@ -2011,7 +1950,6 @@ def scan_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(#statuses + 1)-row aggregate. At 100 TB the same plan writes the
     corrupt bucket to a badRecordsPath-style side sink instead of
     counting it."""
-    prep(spark)
     d = _corrupt_jsonl_dir(sf_dir)
     schema = (
         "o_orderkey bigint, o_orderstatus string, o_totalprice double,"
@@ -2142,7 +2080,6 @@ def scan_zonemap_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, no Spark job); the data scan then reads ~1/8 of the files,
     with predicate pushdown active inside each (tests assert files
     were actually skipped and the plan carries the pushed filter)."""
-    prep(spark)
     _, kept, lo, hi = _zonemap_plan(sf_dir)
     df = spark.read.parquet(*kept).where(F.col("o_custkey").between(lo, hi))
     return df.agg(
@@ -2183,7 +2120,6 @@ def join_partition_prune_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lake and all of it, decided at RUNTIME from the dim data.
     Plan-asserted in tests (dynamicpruning present; results identical
     to the unpartitioned oracle join)."""
-    prep(spark)
     d = _partitioned_events_dir(sf_dir)
     fact = spark.read.parquet(d)
     dim = (
@@ -2244,7 +2180,6 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (datediff from the epoch; the NTZ fixture timestamps never meet a
     timezone); pair identity is the
     strict lexicographic row-key order, identical on both engines."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     day = F.datediff(
         F.col("l_shipdate").cast("date"), F.lit("1970-01-01").cast("date")
@@ -2329,7 +2264,6 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    prep(spark)
     d = _orc_orders_dir(sf_dir)
     sf_tag = _sf_cache_tag(sf_dir)
     if not os.path.isdir(d):
@@ -2429,7 +2363,6 @@ def scan_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row JVM substring/cast expressions inside whole-stage codegen
     (no regex, no UDF), then ONE map-side-combinable aggregate. An
     explicit layout means no inference pass over the data."""
-    prep(spark)
     d = _fixed_width_dir(sf_dir)
     raw = spark.read.text(d)
     parsed = raw.select(
@@ -2498,7 +2431,6 @@ def countmin_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     (≤4·1024 cells, map-side combinable); probes are one distinct
     (key, depth, bucket) projection equi-joined against the broadcast
     cell table; two hash aggregates end it."""
-    prep(spark)
     ev = table(spark, sf_dir, "events").select("user_id")
     rows_d = ev.select(
         "user_id", F.explode(F.array(*[F.lit(i) for i in range(4)])).alias("d")
@@ -2616,7 +2548,6 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     around an eager materialization and restored, so no other key's
     plan ever sees them; the plan pin lives in test_plans.py.
     Results are conf-independent — the oracle is the plain join."""
-    prep(spark)
     return _with_bloom_confs(
         spark, lambda: local_checkpoint(_bloom_join(spark, sf_dir))
     )
@@ -2751,7 +2682,6 @@ def join_skew_aqe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     by tests/test_plans.py::test_skew_aqe_split_plan_and_restore; a
     green oracle row proves the split changes the schedule, never the
     result (the oracle is the plain unsalted, unsplit join)."""
-    prep(spark)
     return _with_skew_aqe_confs(
         spark, lambda: local_checkpoint(_skew_aqe_join(spark, sf_dir))
     )

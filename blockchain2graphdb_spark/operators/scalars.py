@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import prep, table
+from ..catalog import table
 from ..registry import query
 
 
@@ -23,7 +23,6 @@ from ..registry import query
 )
 def str_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C1: composite key `txHash + ":" + outputIndex` (B:988, B:1081)."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     return li.select(
         F.concat_ws(":", F.col("l_orderkey"), F.col("l_linenumber")).alias("item_id"),
@@ -40,7 +39,6 @@ def str_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def str_regexp_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C2: log-line pattern extraction (B:143–156, `UpdateTip: new best=`)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     return ev.select(
         "event_id", F.regexp_extract("props", r'"k": (\d+)', 1).alias("k_str")
@@ -56,7 +54,6 @@ def str_regexp_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def str_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C3: Integer.parseInt of an extracted substring (B:145–146)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     return ev.select(
         "event_id",
@@ -70,7 +67,6 @@ def str_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def str_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4: zero-padded block-file name `blk%05d.dat` (B:82, B:1100)."""
-    prep(spark)
     return table(spark, sf_dir, "nation").select(
         "n_nationkey", F.format_string("blk%05d.dat", F.col("n_nationkey")).alias("fname")
     )
@@ -82,7 +78,6 @@ def str_format(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def str_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C5: key=value split (B:1156–1165) — split + element access."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     return docs.select("doc_id", F.split("text", " ").getItem(0).alias("first_token"))
 
@@ -98,7 +93,6 @@ def str_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def date_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C6: Date before/after comparisons (B:72, B:586) + datediff arithmetic."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     return ev.groupBy("user_id").agg(
         F.count(
@@ -117,7 +111,6 @@ def date_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def null_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C9: null-coalesced fee (B:788–793)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     return ev.select(
         "event_id",
@@ -137,7 +130,6 @@ def null_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def conditional_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C10: boolean flag derivation (B:786 isCoinBase, B:247 OutputIsUsed)."""
-    prep(spark)
     bucket = F.when(F.col("o_totalprice") > 200000, "big").otherwise("small")
     return (
         table(spark, sf_dir, "orders")
@@ -160,7 +152,6 @@ def math_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Math built-ins (declared surface §2.8). abs/sqrt/pow/integer-round
     are IEEE-deterministic across engines (unlike log/exp, which depend on
     libm and are kept off the oracle path)."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     return c.select(
         "c_custkey",
@@ -179,7 +170,6 @@ def math_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def date_trunc_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """date_trunc + calendar grouping (declared surface §2.8)."""
-    prep(spark)
     return (
         table(spark, sf_dir, "orders")
         .groupBy(F.date_trunc("month", "o_orderdate").alias("month"))
@@ -199,7 +189,6 @@ def date_trunc_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def array_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array functions: split → explode → aggregate (declared surface §2.8)."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     return (
         docs.select(F.explode(F.split("text", " ")).alias("token"))
@@ -225,7 +214,6 @@ def array_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date arithmetic built-ins (declared surface §2.8): year/month/day
     extraction + date_add."""
-    prep(spark)
     o = table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
@@ -251,7 +239,6 @@ def date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array higher-order functions (declared surface §2.8): size,
     array_contains, transform + array_sort — all JVM-side, no explode."""
-    prep(spark)
     toks = F.split("text", " ")
     return table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -272,7 +259,6 @@ def array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON extraction (declared surface §2.8; events.props is a JSON string)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     return (
         ev.select(F.get_json_object("props", "$.k").cast("int").alias("k"))
@@ -297,7 +283,6 @@ def map_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     map_contains_key. The oracle pins the *results* of the probes (maps
     themselves never cross the engine boundary — MapType comparison
     semantics are engine-specific, scalars are not)."""
-    prep(spark)
     o = table(spark, sf_dir, "orders").where(F.col("o_orderkey") % 50 == 0)
     m = F.map_from_arrays(
         F.array(F.lit("priority"), F.lit("status"), F.lit("total")),
@@ -336,7 +321,6 @@ def unpivot_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow scan emitting k rows per input row via stack(). No shuffle at
     all — it's a generator projection, which is why melt-then-aggregate
     beats per-column loops at 100 TB."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") % 100 == 0)
     return li.select(
         "l_orderkey",
@@ -368,7 +352,6 @@ def str_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     never be distance-against-everything — block first (phonetic key,
     q-gram bucket, the dedup_substring anchor idiom) and verify with
     this scalar inside buckets only."""
-    prep(spark)
     c = table(spark, sf_dir, "customer")
     return c.select(
         "c_custkey",
@@ -411,7 +394,6 @@ def variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     paths with DuckDB's JSON accessors, so path semantics — nested
     object, typed long, string leaf — are what's checked, not just the
     aggregate."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
     js = F.concat(

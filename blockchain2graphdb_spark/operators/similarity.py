@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import prep, table
+from ..catalog import table
 from ..functions.vectors import float_cosine, quantize
 from ..plans.iterate import local_checkpoint
 from ..registry import query
@@ -72,7 +72,6 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vec_id < 5) over all candidates. Integer-quantized for cross-engine
     exactness; the query side is broadcast so candidates need no shuffle.
     """
-    prep(spark)
     qdf = _quantized(spark, sf_dir)
     queries = qdf.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),
@@ -105,7 +104,6 @@ def similarity_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-3 per query (vec_id < 3). One JVM-side row per pair — at scale
     this is a broadcast of the query batch and a single scan of the
     candidate set."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
@@ -203,7 +201,6 @@ def lsh_topk(
 ) -> DataFrame:
     """LSH candidate pairs (see lsh_candidate_pairs) reranked to the
     exact-cosine top-k per query vector."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     pairs = lsh_candidate_pairs(emb, n_bits=n_bits, n_tables=n_tables)
     w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
@@ -251,7 +248,6 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2-adjacent: embedding-cosine near-duplicate pairs (same label
     blocking, quantized cosine > 0.3). Blocking on `label` is the
     partition-pruning stand-in for LSH buckets at scale."""
-    prep(spark)
     qdf = _quantized(spark, sf_dir)
     a = qdf.alias("a")
     b = qdf.alias("b")
@@ -288,7 +284,6 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables (lsh_candidate_pairs), exact cosine filter > 0.3 inside.
     Pair recall vs the exact all-pairs ground truth is pinned in
     tests/test_ann_recall.py."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     return (
         lsh_candidate_pairs(emb, n_tables=4)
@@ -325,7 +320,6 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines. At 100 TB this is the canonical mergeable-state pattern —
     (sum, count) per cell, never raw vectors, shuffle carries
     n_labels × n_dims rows."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     q = emb.select(
         "label", F.posexplode(quantize("embedding")).alias("dim", "qx")
@@ -378,7 +372,6 @@ def similarity_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the LSH-bucketed variant (lsh_candidate_pairs) generates the
     candidates and this predicate reranks them.
     """
-    prep(spark)
     qdf = _quantized(spark, sf_dir)
     queries = qdf.where(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"),
@@ -463,7 +456,6 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle replays the same integer math via UNNEST(range())
     (this DuckDB lacks WITH ORDINALITY).
     """
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     df = (
         # zero-length vectors are excluded on BOTH sides: the oracle's
@@ -536,7 +528,6 @@ def dedup_embedding_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads never move, exactly the dedup_exact contract. keep_id =
     min vec_id per fingerprint via a partitioned window (no
     self-join)."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     corpus = emb.unionByName(
         emb.where(F.col("vec_id") % 10 == 0).select(
@@ -648,7 +639,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     real corpus sizes the plane count grows (16-24 planes / banded
     signatures) to keep buckets O(1), exactly the dedup_minhash band
     geometry."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     as_d = lambda c: c.cast("double")  # noqa: E731
     corpus = (
@@ -782,7 +772,6 @@ def embedding_outlier_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     structs), the distance is a zip_with/aggregate higher-order fold —
     no per-dim join amplification on the data side; top-5 per label
     compiles to WindowGroupLimit."""
-    prep(spark)
     q = table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", quantize("embedding").alias("qv")
     )
@@ -875,7 +864,6 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(n x d^2) rows; the per-dim sums (d rows) and the count broadcast
     back onto the 2080-row table. Nothing in the plan scales with n
     except the single scan."""
-    prep(spark)
     q = table(spark, sf_dir, "embeddings").select(quantize("embedding").alias("qv"))
     n_df = q.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n"))
     e1 = q.select("qv", F.posexplode("qv").alias("i0", "xi"))
@@ -959,7 +947,6 @@ def hard_negative_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set streams map-side — one scan, no shuffle; the LSH/IVF
     candidate generators (same file) slot in front unchanged when the
     candidate set outgrows a scan."""
-    prep(spark)
     qdf = _quantized(spark, sf_dir)
     queries = qdf.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"),
@@ -1125,7 +1112,6 @@ def label_noise_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — never all-pairs (plan-asserted: no
     BroadcastNestedLoopJoin / CartesianProduct); top-5 compiles to a
     partitioned window; votes/majority are O(5 * #queries)."""
-    prep(spark)
     qdf = _quantized(spark, sf_dir)
 
     def proj(band: int, p: int) -> F.Column:
@@ -1230,7 +1216,6 @@ def _label_noise_knn_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     but never the plan to run at scale. tests/test_round16_ops.py
     compares the LSH candidate sets against this scorer's true top-5
     and pins the measured recall floor."""
-    prep(spark)
     qdf = _quantized(spark, sf_dir)
     queries = qdf.where(F.col("vec_id") % 4 == 0).select(
         F.col("vec_id").alias("query_id"),
@@ -1331,7 +1316,6 @@ def embedding_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups, map-side combinable) plus one per-row self-dot aggregate —
     the quadratic pair sum is computed in CLOSED FORM, never joined.
     O(n*d) work, O(d) shuffle rows, constant output."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     q = emb.select("vec_id", quantize("embedding").alias("q"))
     selfsq = q.select(
@@ -1454,7 +1438,6 @@ def embedding_mmd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     onto 2 x 2080 moment keys, a 2080-row self-join for the cross
     term, two O(n) row-local folds for ||x||^4. Nothing pairwise,
     nothing scales with n except the scan."""
-    prep(spark)
     grp = F.when(
         F.conv(
             F.substring(
@@ -1631,7 +1614,6 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors — iteration cost is independent of
     corpus size. Rounds is an accuracy knob (eigengap-dependent),
     not a scale knob."""
-    prep(spark)
     q = table(spark, sf_dir, "embeddings").select(quantize("embedding").alias("qv"))
     n_df = q.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("nn"))
     e1 = q.select("qv", F.posexplode("qv").alias("i0", "xi"))
@@ -1766,7 +1748,6 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(d·{_RP_DIMS}) broadcast sign table (built FROM the data's own
     distinct dimension indices — no hardcoded width), one hash
     aggregate back to (vec_id, j). Nothing pairwise, no windows."""
-    prep(spark)
     emb = table(spark, sf_dir, "embeddings")
     pos = (
         emb.where(F.size("embedding") > 0)

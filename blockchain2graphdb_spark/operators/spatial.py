@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import prep, table
+from ..catalog import table
 from ..registry import query
 
 _GRID = 10_000  # coordinate space [0, _GRID)
@@ -117,7 +117,6 @@ def spatial_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join — never a cross join (plan-asserted). Exact integer
     squared-distance filter; a < b orientation makes each pair unique
     without a dedup shuffle (a probes b's single home cell once)."""
-    prep(spark)
     probe, home, d2 = _probe_home(_points(spark, sf_dir))
     return (
         probe.join(home, ["cx", "cy"])
@@ -154,7 +153,6 @@ def spatial_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound is what keeps kNN scale-sane: unbounded exact kNN degenerates
     to all-pairs for isolated points, while bounded kNN is the form
     real pipelines use (match-within-x-meters)."""
-    prep(spark)
     probe, home, d2 = _probe_home(_points(spark, sf_dir))
     cand = (
         probe.join(home, ["cx", "cy"])
@@ -209,7 +207,6 @@ def dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     distances), one map-side-combinable count per point, one keyed
     left join back to the cloud. Never a cross join; skewed cells are
     AQE skew-join territory on the cell key."""
-    prep(spark)
     pts = _points(spark, sf_dir).localCheckpoint(eager=True)
     probe, home, d2 = _probe_home(pts)
     neigh = (

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..catalog import TABLES, prep, table
+from ..catalog import TABLES, table
 from ..plans.memo import SessionMemo
 from ..registry import query
 
@@ -46,7 +46,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 
 
 def _sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
-    prep(spark)
     register_views(spark, sf_dir)
     return spark.sql(text)
 

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import prep, table
+from ..catalog import table
 from ..functions.ranking import bucketed_global_rank
 from ..plans.iterate import observed_checkpoint
 from ..plans.sizing import broadcast_hint
@@ -33,7 +33,6 @@ from ..registry import query
 )
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4: per-document token statistics (count, vocabulary, TTR)."""
-    prep(spark)
     toks = (
         table(spark, sf_dir, "documents")
         .select("doc_id", F.explode(F.split("text", " ")).alias("t"))
@@ -81,7 +80,6 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     its `lang` labels, so classes here are register profiles; on real
     multilingual data the marker sets are per-language stopword lists.)
     """
-    prep(spark)
     toks = table(spark, sf_dir, "documents").select(
         "doc_id", F.explode(F.split("text", " ")).alias("t")
     )
@@ -126,7 +124,6 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     length saturation (the usual pre-training heuristic filter trio).
     Pure double arithmetic on integer counts: deterministic cross-engine.
     """
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("t")).where(
         F.col("t") != ""
@@ -157,7 +154,6 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4: BPE-ish regex token counting (word/number pieces)."""
-    prep(spark)
     return table(spark, sf_dir, "documents").select(
         "doc_id",
         F.regexp_count(F.col("text"), F.lit("[a-z]+|[0-9]+")).cast("long").alias(
@@ -176,7 +172,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4: normalized content fingerprint (md5 over lowercased text) —
     the join key for exact dedup across shards; md5 agrees across engines
     so it is oracle-checkable, unlike xxhash64."""
-    prep(spark)
     return table(spark, sf_dir, "documents").select(
         "doc_id", F.md5(F.lower(F.col("text")).cast("binary")).alias("fingerprint")
     )
@@ -220,7 +215,6 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured size (it broadcasts here at test scale; past the threshold
     it stays a co-partitioned shuffle join on `term`).
     """
-    prep(spark)
     from ..catalog import parquet_num_rows
     from .dedup import _fan_out
 
@@ -288,7 +282,6 @@ def text_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen'd projection, no shuffle); the regex subset is chosen to
     mean the same thing in Java regex and RE2 so the oracle matches
     byte-for-byte."""
-    prep(spark)
     docs = table(spark, sf_dir, "documents")
     cleaned = F.trim(
         F.regexp_replace(
@@ -341,7 +334,6 @@ def text_ngram_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ties at the cut break by bigram text — deterministic on both
     engines.
     """
-    prep(spark)
     toks = F.filter(
         F.split(F.lower(F.col("text")), "[^a-z]+"), lambda x: x != F.lit("")
     )
@@ -402,7 +394,6 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     in as a broadcast 1-row cross join, never a collect. Integer
     counts divide once into a double, ROUND(6) on both engines.
     """
-    prep(spark)
     toks = (
         table(spark, sf_dir, "documents")
         .select(
@@ -480,7 +471,6 @@ def text_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the posting lists touched, never with the corpus. No window,
     no regex over the corpus; asserted in tests/test_plans.py.
     """
-    prep(spark)
     terms = ("query", "join", "table")
     toks = (
         table(spark, sf_dir, "documents")
@@ -529,7 +519,6 @@ def text_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     are keyed (doc_id, pos) — co-partitioned, broadcastable when one
     term is rare (AQE decides from the post-filter sizes).
     """
-    prep(spark)
     toks = table(spark, sf_dir, "documents").select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("p", "term")
     )
@@ -602,7 +591,6 @@ def text_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     with postings on doc_id), stats is one broadcast row. Query cost
     tracks posting-list sizes, never corpus size.
     """
-    prep(spark)
     terms = ("query", "join", "table")
     docs = table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
@@ -687,7 +675,6 @@ def text_pii_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-only stage: no shuffle, no UDF — regexp_replace and
     regexp_extract_all are JVM-side codegen'd expressions.
     """
-    prep(spark)
     email_re = "[a-z0-9._]+@[a-z0-9.]+"
     phone_re = "555-[0-9]{4}"
     seeded = (
@@ -770,7 +757,6 @@ def bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup is a second keyed agg over 2-char keys and the top-k is
     TakeOrderedAndProject, never a global sort.
     """
-    prep(spark)
     freq = (
         table(spark, sf_dir, "documents")
         .select(F.explode(F.split(F.lower(F.col("text")), " ")).alias("w"))
@@ -839,7 +825,6 @@ def text_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-joined in (broadcast by construction). Nothing is ever
     pairwise and the raw corpus is scanned exactly twice (count pass,
     score pass)."""
-    prep(spark)
     toks = (
         table(spark, sf_dir, "documents")
         .select("doc_id", F.explode(F.split("text", " ")).alias("t"))
@@ -916,7 +901,6 @@ def tokenize_to_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     key); positions come from posexplode (original array positions on
     BOTH engines, so empty-token filtering cannot desync them); one
     shuffle to the per-doc aggregate."""
-    prep(spark)
     # materialize the tokenization once: the vocab aggregate AND the
     # encoding join both consume it (the rolling_dau / hypertable
     # single-scan discipline)
@@ -1003,7 +987,6 @@ def skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioned equi-join, never a per-document cross join; pair
     and unigram aggregates are map-side combinable; the two unigram
     probes join against the O(vocab) count table."""
-    prep(spark)
     from .dedup import _fan_out
 
     # r16: fan the single-split fixture scan across the cluster before
@@ -1111,7 +1094,6 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: pure map-side projection — three regexp counts per
     row, no shuffle at all; pushdown keeps only (doc_id, text) in the
     scan."""
-    prep(spark)
     words = F.greatest(
         F.size(
             F.filter(
@@ -1219,7 +1201,6 @@ def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the scan; ranking the O(vocab) frequency table is the
     two-pass bucketed rank (no unpartitioned window); the regression
     is one single-row reduce over <= 1000 rows."""
-    prep(spark)
     d38 = "decimal(38,0)"
     toks = (
         table(spark, sf_dir, "documents")
@@ -1309,7 +1290,6 @@ def doc_length_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     — per-partition top-k then a k-row driver merge, no global sort,
     no shuffle of the corpus. Everything downstream is over k+1 rows
     (bounded below the Limit — the declared sweep-exempt shape)."""
-    prep(spark)
     top = (
         table(spark, sf_dir, "documents")
         .select("doc_id", "n_chars")
@@ -1385,7 +1365,6 @@ def vocab_chao1_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side combinable) -> one 4-counter reduction to a single row.
     The frequency table is the same shape text_tfidf already shuffles;
     nothing is per-document or pairwise."""
-    prep(spark)
     c = (
         table(spark, sf_dir, "documents")
         .select(F.explode(F.split("text", " ")).alias("tok"))
@@ -1475,7 +1454,6 @@ def corpus_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     text_tfidf join shape, AQE-broadcast at small scale, sort-merge at
     web scale; per-source reduction is map-side combinable onto
     O(#sources) keys."""
-    prep(spark)
     t = table(spark, sf_dir, "documents").select(
         "source", F.explode(F.split("text", " ")).alias("tok")
     )
@@ -1556,7 +1534,6 @@ def text_hashing_vectorizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     sparse-vector rows never wider than min(#tokens, 32) per doc.
     Portable md5 bucketing makes the vector engine-independent (the
     split_assign discipline), unlike JVM-hash featurizers."""
-    prep(spark)
     toks = (
         table(spark, sf_dir, "documents")
         .select(
@@ -1659,7 +1636,6 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     matcher); word stats are two hash aggregates; the phrase fold is
     one (doc, phrase-id)-keyed aggregate; the final cut a TakeOrdered.
     Nothing pairwise, no unpartitioned windows."""
-    prep(spark)
     toks = (
         table(spark, sf_dir, "documents")
         .select(
@@ -1792,7 +1768,6 @@ def bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     random_walk_sample no-fanout argument); model tables are two hash
     aggregates probed by equi-joins (broadcastable, Catalyst-decided);
     one doc-keyed aggregate ends it. No windows, nothing pairwise."""
-    prep(spark)
     toks = (
         table(spark, sf_dir, "documents")
         .select("doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok"))
@@ -1889,7 +1864,6 @@ def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one map-side pass (two regex counts per row), one
     language-keyed aggregate. O(#langs) output."""
-    prep(spark)
     d = table(spark, sf_dir, "documents").select(
         "lang",
         F.regexp_count(F.col("text"), F.lit("[a-z]+|[0-9]+"))
@@ -1991,7 +1965,6 @@ def kneser_ney_prob(spark: SparkSession, sf_dir: str) -> DataFrame:
     match, no fan-out), three hash-aggregate model tables probed by
     equi-joins (broadcastable, Catalyst-decided), the type total is a
     1-row crossJoin broadcast, one doc-keyed aggregate ends it."""
-    prep(spark)
     toks = (
         table(spark, sf_dir, "documents")
         .select("doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok"))
@@ -2145,7 +2118,6 @@ def naive_bayes_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     test tokens x k langs (k = 5, a domain constant); argmax is a
     per-doc WindowGroupLimit; the confusion matrix is a k x k
     aggregate."""
-    prep(spark)
     toks = (
         table(spark, sf_dir, "documents")
         .select(

@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import prep, table
+from ..catalog import table
 from ..exact import dec2
 from ..functions.ranking import bucketed_global_rank
 from ..registry import query
@@ -97,7 +97,6 @@ def hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact.py) so the double surfaced at the end is bit-identical
     across engines; min/max of doubles are input values, hash-safe
     as-is."""
-    prep(spark)
     e = table(spark, sf_dir, "events").select(
         "event_type", F.unix_micros("ts").alias("us"), "value"
     )
@@ -184,7 +183,6 @@ def gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     of every span is observed by construction, so the fill is total.
     Values pass through unaggregated (exact 2-decimal doubles) —
     nothing reorders float arithmetic on either engine."""
-    prep(spark)
     e = table(spark, sf_dir, "events").select(
         "user_id", "event_id", F.unix_micros("ts").alias("us"), "value"
     )
@@ -242,7 +240,6 @@ def rolling_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     to raw events — against zero repeated scans; at 100 TB the
     expansion shuffles once on day. Days outside the observed set are
     dropped by the final join (dau's day set)."""
-    prep(spark)
     du = (
         table(spark, sf_dir, "events")
         .select(F.unix_micros("ts").alias("us"), "user_id")
@@ -322,7 +319,6 @@ def seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two stacked map-side-combinable aggregates (daily,
     then weekday-slot) + an O(#types) totals join — the daily table is
     |types| x |days| rows, everything downstream is tiny."""
-    prep(spark)
     daily = _daily_counts(spark, sf_dir)
     dow = daily.groupBy("event_type", (F.col("day") % 7).alias("dow")).agg(
         F.sum("n").alias("n_events"), F.count(F.lit(1)).alias("n_days")
@@ -385,7 +381,6 @@ def cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(#types) totals broadcast, and a PARTITIONED running-sum window
     over the tiny |types| × |days| table — never an unpartitioned
     window over raw events."""
-    prep(spark)
     daily = _daily_counts(spark, sf_dir)
     tot = daily.groupBy("event_type").agg(
         F.sum("n").alias("total"), F.count(F.lit(1)).alias("n_days")
@@ -443,7 +438,6 @@ def week_over_week(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-side-combinable weekly aggregate, then a lag
     window over the tiny |types| × |weeks| table — partitioned, never
     over raw events."""
-    prep(spark)
     w = (
         table(spark, sf_dir, "events")
         .select("event_type", F.expr(f"unix_micros(ts) div {_WEEK_US}").alias("wk"))
@@ -502,7 +496,6 @@ def resample_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     count — no second reverse-ordered window), then one
     map-side-combinable aggregate per bucket. One shuffle keyed by the
     bucket, reused by both stages; never a global sort."""
-    prep(spark)
     e = table(spark, sf_dir, "events").select(
         "event_type", "event_id", F.unix_micros("ts").alias("us"), "value"
     )
@@ -587,7 +580,6 @@ def ewma_trailing(spark: SparkSession, sf_dir: str) -> DataFrame:
     taps — partition-local, never a global sort; the K=8 taps are a
     fixed column-count cost, not a self-join. Overflow headroom: cv <
     2^26 here, num < 2^34, num*10000 < 2^48."""
-    prep(spark)
     e = table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
@@ -662,7 +654,6 @@ def acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(#days) rows; everything after (stats, deviations, the 7-lag
     self-join) is broadcast arithmetic over that tiny table — no
     window over data, no shuffle beyond the day aggregate."""
-    prep(spark)
     # re-aggregate the checkpointed (event_type, day, n) table — the
     # raw scan happens once even though four consumers read `daily`
     daily = (
@@ -745,7 +736,6 @@ def trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable count (the shared _daily_counts checkpoint);
     the moment aggregate and the arithmetic run over that tiny
     table."""
-    prep(spark)
     daily = _daily_counts(spark, sf_dir)
     s = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("cnt"),
@@ -813,7 +803,6 @@ def time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     window and the aggregate (partition-local window, map-side
     combinable sums); output is O(users x days). The
     gap_fill_locf partitioning discipline."""
-    prep(spark)
     e = table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
@@ -998,7 +987,6 @@ def inventory_clamped_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB both windows are partitioned by part (no global ordering),
     and the amplification-free pre-aggregation bounds the window input
     by #(part, day), not by raw lineitem volume."""
-    prep(spark)
     li = table(spark, sf_dir, "lineitem")
     day = F.datediff(
         F.col("l_shipdate").cast("date"), F.lit("1970-01-01").cast("date")
@@ -1089,7 +1077,6 @@ def theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     in data size; the kaplan_meier bounded-post-aggregate exemption),
     and the rank pass is the bucketed two-pass form, so even the pair
     table never funnels through one WindowExec partition."""
-    prep(spark)
     d = (
         table(spark, sf_dir, "orders")
         .select(
@@ -1199,7 +1186,6 @@ def bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     window runs OVER that bounded per-day table (the sweep-exempt
     auc_exact shape). Hash-partition by series key when charting many
     series."""
-    prep(spark)
     rev = (
         table(spark, sf_dir, "events")
         .where(F.col("event_type") == "purchase")
@@ -1265,7 +1251,6 @@ def forecast_baseline_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-side-combinable daily aggregate, lag windows
     partitioned by series key over the bounded per-day table, one
     O(#types) reduction."""
-    prep(spark)
     daily = _daily_counts(spark, sf_dir)
     wl = W.partitionBy("event_type").orderBy("day")
     lagged = daily.select(
@@ -1360,7 +1345,6 @@ def page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     log to the |types| × |days| table; every window is PARTITIONED by
     event_type over that bounded table; the argmax is an O(#types)
     join, never a global sort."""
-    prep(spark)
     daily = _daily_counts(spark, sf_dir)
     wday = W.partitionBy("event_type").orderBy("day")
     wrun = wday.rowsBetween(W.unboundedPreceding, 0)
@@ -1468,7 +1452,6 @@ def holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     series — the attribution_markov bounded-state convention — while
     the oracle replays it as a recursive CTE. One daily aggregate is
     the only data-sized work."""
-    prep(spark)
     daily = _daily_counts(spark, sf_dir)
     rows = sorted(
         ((r["event_type"], r["day"], r["n"]) for r in daily.collect()),
@@ -1558,7 +1541,6 @@ def watermark_lateness_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(#buckets) table → in-bucket running max PARTITIONED by bucket —
     never one WindowExec partition over the log; then one O(5)
     aggregate."""
-    prep(spark)
     e = table(spark, sf_dir, "events").select(
         "event_id",
         F.md5(F.col("event_id").cast("string")).alias("arr"),
@@ -1659,7 +1641,6 @@ def rsi_cutler(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame run over that bounded table (the bollinger_bands
     sweep-exempt shape). Partition by instrument key when scoring many
     series."""
-    prep(spark)
     rev = (
         table(spark, sf_dir, "events")
         .where(F.col("event_type") == "purchase")
@@ -1743,7 +1724,6 @@ def ljung_box_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses the log to O(#days); deviations, the m-lag calendar
     self-join, and the term algebra are broadcast arithmetic over that
     bounded table."""
-    prep(spark)
     daily = (
         _daily_counts(spark, sf_dir)
         .groupBy("day")
@@ -1841,7 +1821,6 @@ def rolling_origin_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded (type, day) table; the row-index, lag, and prefix-sum
     windows are partitioned by event_type over that bounded table; one
     O(#types) reduction ends it."""
-    prep(spark)
     daily = _daily_counts(spark, sf_dir).select("event_type", "day", F.col("n").alias("x"))
     wl = W.partitionBy("event_type").orderBy("day")
     wp = wl.rowsBetween(W.unboundedPreceding, -1)
@@ -1951,7 +1930,6 @@ def segmented_trend_break(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded calendar table; the candidate sweep is prefix-sum windows
     over that bounded table plus a TakeOrdered(1) — the classic
     O(#days) offline-changepoint plan, never a per-candidate rescan."""
-    prep(spark)
     daily = (
         _daily_counts(spark, sf_dir)
         .groupBy("day")
@@ -2069,7 +2047,6 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (the theil_sen argument — pairs are constant in data
     size), after one map-side daily count collapses the log; ties come
     from a value-grouped aggregate of the same bounded table."""
-    prep(spark)
     daily = (
         _daily_counts(spark, sf_dir)
         .groupBy("day")
@@ -2218,7 +2195,6 @@ def hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     window is partitioned by block over the CALENDAR-BOUNDED day
     table; per-size reductions are O(#blocks). Scoring many series
     adds a partition key, not a plan change."""
-    prep(spark)
     rev = (
         table(spark, sf_dir, "events")
         .where(F.col("event_type") == "purchase")

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..catalog import prep, table
+from ..catalog import table
 from ..registry import query
 
 
@@ -33,7 +33,6 @@ def udf_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar pandas UDF (Arrow-batched). In production the built-in
     `F.upper(F.trim(...))` wins (JVM codegen, no Python hop); the UDF form
     exists to demonstrate the Arrow path for logic SQL can't express."""
-    prep(spark)
     return table(spark, sf_dir, "customer").select(
         "c_custkey", _norm_name("c_name").alias("norm_name")
     )
@@ -64,7 +63,6 @@ def _decode_source(s: pd.Series) -> pd.Series:
 )
 def udf_with_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C11: error-fallback decode (try/catch → sentinel, B:1067–1074)."""
-    prep(spark)
     return table(spark, sf_dir, "documents").select(
         "doc_id", _decode_source("source").alias("source_num")
     )
@@ -84,7 +82,6 @@ def udaf_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom UDAF via applyInPandas (grouped map, one output row per
     group). Integer (centi-unit) accumulation keeps the result exact
     regardless of pandas' row order within the group."""
-    prep(spark)
 
     def agg(pdf: pd.DataFrame) -> pd.DataFrame:
         qty_centi = (pdf["l_quantity"] * 100).round().astype("int64").sum()
@@ -118,7 +115,6 @@ def udtf_flatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UDTF-ish 1→N expansion via mapInPandas (the S1 block-decoder shape:
     one input row → many output rows, B:361 BlockFileLoader). Tokenizes
     documents and counts long tokens per doc."""
-    prep(spark)
 
     def explode_tokens(batches):
         for pdf in batches:
@@ -160,7 +156,6 @@ def udtf_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     useArrow=True — so rows cross the Python boundary in batches, the
     same policy every other Python seam follows); state lives per
     task, never on the driver."""
-    prep(spark)
     from pyspark.sql.functions import udtf
 
     @udtf(returnType="token string, tf bigint", useArrow=True)

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import prep, table
+from ..catalog import table
 from ..registry import query
 
 _SEED_MOD = 50  # every 50th order key seeds a walk
@@ -111,7 +111,6 @@ def random_walk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     join key — no hub fan-out); the walk count is |seeds|, constant
     per step. Walk length is a literal, so the plan is linear —
     no driver iteration."""
-    prep(spark)
     e = (
         table(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
@@ -221,15 +220,10 @@ def gnn_neighbor_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     hub nodes never materialize their full neighbor list; each layer is
     one semi-join (frontier) + one windowed scan of the adjacency; depth
     is a compile-time constant, one linear DAG, no driver loop."""
-    prep(spark)
-    from .graphops import _copurchase_pairs, _pair_nodes, _sym_edges
+    from .graphops import _copurchase_pairs, _pair_nodes, _sym_union
 
     pairs, _n = _copurchase_pairs(spark, sf_dir)
-    # union form, NOT _sym_edges: sampled per layer (lazy re-reference;
-    # see OPTIMIZATION_r17.md — explode pays only when checkpointed)
-    sym = pairs.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).unionByName(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+    sym = _sym_union(pairs)
     nodes = _pair_nodes(pairs)
     seeds = nodes.orderBy(F.md5(F.col("n").cast("string")), "n").limit(32)
 
@@ -339,7 +333,6 @@ def node2vec_walk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     symmetric edge list (one partitioned window + one aggregate); per
     step O(#walks) shuffle rows; walk length is a literal — one linear
     DAG, no driver loop."""
-    prep(spark)
     from .graphops import _copurchase_pairs, _pair_nodes, _sym_edges
 
     pairs, _n = _copurchase_pairs(spark, sf_dir)
@@ -518,7 +511,6 @@ def node2vec_walk_sample_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference's graph layer stops at stored
     traversals (B:1100–1180); this extends the X17 training-data
     sampling surface."""
-    prep(spark)
     from .graphops import _copurchase_pairs, _pair_nodes, _sym_edges
 
     pairs, _n = _copurchase_pairs(spark, sf_dir)
@@ -688,7 +680,6 @@ def negative_edge_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE left-anti join against the canonical edge list; the
     first-trial cut is a per-positive window over ≤{_NEG_TRIALS}
     rows. Nothing is pairwise, nothing is data-sized-windowed."""
-    prep(spark)
     from ..functions.ranking import bucketed_global_rank
     from .graphops import _copurchase_pairs, _pair_nodes, _sym_edges
 

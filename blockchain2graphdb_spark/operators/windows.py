@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import prep, table
+from ..catalog import table
 from ..exact import dec2
 from ..registry import query
 
@@ -30,7 +30,6 @@ def window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference compares each block to its predecessor in a Java loop;
     LAG over a sorted window does it in one pass per partition.
     """
-    prep(spark)
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     ev = table(spark, sf_dir, "events")
     return ev.select("event_id", (F.col("value") - F.lag("value").over(w)).alias("delta"))
@@ -46,7 +45,6 @@ def window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_row_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2: monotone height assignment (B:364, B:458 blockHeight++) as ROW_NUMBER."""
-    prep(spark)
     w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return table(spark, sf_dir, "orders").select(
         "o_orderkey", F.row_number().over(w).cast("long").alias("seq")
@@ -64,7 +62,6 @@ def window_row_number(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W3: first-appearance detection (B:1077–1080 new-address probe)."""
-    prep(spark)
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     return table(spark, sf_dir, "events").select(
         "event_id", (F.row_number().over(w) == 1).alias("is_first")
@@ -89,7 +86,6 @@ def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     order carries extra keys; remaining ties are equal in both sort keys
     and summed value, making the output multiset deterministic.
     """
-    prep(spark)
     w = (
         W.partitionBy("l_orderkey")
         .orderBy("l_linenumber", "l_quantity", "l_partkey", "l_suppkey")
@@ -115,7 +111,6 @@ def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANK / DENSE_RANK (declared surface §2.5). Rank functions are
     tie-stable by definition (equal inputs get equal ranks), so no
     tie-breaker is needed."""
-    prep(spark)
     w = W.partitionBy("l_returnflag").orderBy(F.col("l_quantity").desc())
     li = table(spark, sf_dir, "lineitem")
     return li.select(
@@ -143,7 +138,6 @@ def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst plans this with a rank-limit pushdown (WindowGroupLimit) so
     each partition keeps only k rows before the final window sort.
     """
-    prep(spark)
     w = W.partitionBy("l_orderkey").orderBy(
         F.col("l_extendedprice").desc(), F.col("l_linenumber")
     )
@@ -172,7 +166,6 @@ def window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact small rationals ((rank-1)/(n-1), rank/n) computed from the
     same integer operands on both engines, so the double hash matches
     without quantization. Unique tie-breaker (o_orderkey) as always."""
-    prep(spark)
     w = W.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
     return table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -200,7 +193,6 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     unix_micros, not a seconds cast: ts carries sub-second precision,
     and a seconds truncation shifts boundary rows relative to the
     oracle's microsecond-exact INTERVAL arithmetic (caught at sf0.1)."""
-    prep(spark)
     w = (
         W.partitionBy("user_id")
         .orderBy(F.unix_micros("ts"))
@@ -230,7 +222,6 @@ def window_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, rounded to 6dp on both sides only to normalize double
     formatting. One partitioned window (one keyed shuffle + in-partition
     sort), the 100 TB shape for any percentile-standing feature."""
-    prep(spark)
     w = W.partitionBy("o_orderpriority").orderBy("o_totalprice")
     return table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -261,7 +252,6 @@ def window_lead_nth(spark: SparkSession, sf_dir: str) -> DataFrame:
     PRECEDING..CURRENT ROW explicitly on both engines so the default-
     frame semantics can never diverge. One keyed shuffle + one
     in-partition sort serves both functions — the 100 TB shape."""
-    prep(spark)
     w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     wf = w.rowsBetween(W.unboundedPreceding, W.currentRow)
     return table(spark, sf_dir, "orders").select(
@@ -300,7 +290,6 @@ def window_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE map-side-combinable histogram aggregate, then
     windows partitioned by flag over the bounded histogram."""
-    prep(spark)
     h = (
         table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag", F.col("l_quantity").alias("qty"))

@@ -17,11 +17,14 @@ value-hash gate pass bit-for-bit):
 
 from __future__ import annotations
 
+import functools
 import importlib
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from . import catalog
 
 Builder = Callable[[SparkSession, str], DataFrame]
 
@@ -519,21 +522,31 @@ class QuerySpec:
     name: str
     builder: Builder
     oracle: str | None  # ANSI SQL for DuckDB; None => rows-only check
-    tags: tuple[str, ...] = field(default_factory=tuple)
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
 _LOADED = False
 
 
-def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
-    """Decorator registering a query builder under `name`."""
+def query(name: str, oracle: str | None = None):
+    """Decorator registering a query builder under `name`.
+
+    The registered (and returned) callable pins the session confs with
+    `catalog.prep` before the builder body runs, so builders never call
+    `prep` themselves and direct module calls get the same contract as
+    the registry."""
 
     def deco(fn: Builder) -> Builder:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query key {name!r}")
-        _REGISTRY[name] = QuerySpec(name=name, builder=fn, oracle=oracle, tags=tuple(tags))
-        return fn
+
+        @functools.wraps(fn)
+        def builder(spark: SparkSession, *args, **kwargs) -> DataFrame:
+            catalog.prep(spark)
+            return fn(spark, *args, **kwargs)
+
+        _REGISTRY[name] = QuerySpec(name=name, builder=builder, oracle=oracle)
+        return builder
 
     return deco
 

@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import events_raw_schema, normalize_events_ts, prep, table
+from ..catalog import events_raw_schema, normalize_events_ts, table
 from ..registry import query
 
 
@@ -98,7 +98,6 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter emits each input row exactly once regardless of trigger
     boundaries, so the materialized result equals the batch query.
     """
-    prep(spark)
     s = _events_stream(spark, sf_dir)
     out = s.where(F.col("event_type") == "purchase").select("event_id", "user_id", "value")
     return _run(spark, out)
@@ -115,7 +114,6 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C2 streaming: regexp event extraction (B:143–156 `UpdateTip: new
     best=`). Oracle-checked — stateless projection, trigger-invariant."""
-    prep(spark)
     s = _events_stream(spark, sf_dir)
     out = s.select(
         "event_id",
@@ -138,7 +136,6 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle-checked: complete-mode output is the full aggregate over all
     input regardless of batching; Spark's epoch-aligned 6h windows are
     integer floor-division in SQL."""
-    prep(spark)
     s = _events_stream(spark, sf_dir)
     out = (
         s.groupBy(F.window("ts", "6 hours"), F.col("event_type"))
@@ -170,7 +167,6 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     event lands in exactly two epoch-aligned 12h/6h windows (its 6h
     bucket's window and the previous one), so SQL reproduces the
     expansion with a two-branch union."""
-    prep(spark)
     s = _events_stream(spark, sf_dir)
     out = (
         s.groupBy(F.window("ts", "12 hours", "6 hours"))
@@ -183,7 +179,6 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("stream_session")
 def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (30-minute gap) per user."""
-    prep(spark)
     s = _events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     out = (
         s.groupBy(F.session_window("ts", "30 minutes"), F.col("user_id"))
@@ -234,7 +229,6 @@ def stream_session_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle, which defines its own key). Session start = min event ts,
     emitted as unix micros so no timestamp-encoding skew can enter the
     hash."""
-    prep(spark)
     s = _events_stream(spark, sf_dir)
     out = (
         s.groupBy(F.session_window("ts", "30 minutes"), F.col("user_id"))
@@ -253,7 +247,6 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Out-of-order tolerance via watermark (replaces the reference's
     1126-block reorder buffer, B:34–35/B:387–425): 1-hour lateness bound
     on a tumbling count."""
-    prep(spark)
     s = _events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     out = (
         s.groupBy(F.window("ts", "6 hours"))
@@ -268,7 +261,6 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X1 under streaming: watermark-bounded dropDuplicates — exactly the
     reference's insert-if-absent guard (M1) with state expiry instead of
     an ever-growing seen-set."""
-    prep(spark)
     s = _events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     out = s.dropDuplicates(["user_id", "event_type"]).select(
         "event_id", "user_id", "event_type"
@@ -301,7 +293,6 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark passes its event time + delay — genuinely bounded state
     (ADVICE r6).
     """
-    prep(spark)
     s = _events_stream(spark, sf_dir)
     cloned = s.select(
         F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("copy"), "*"
@@ -320,7 +311,6 @@ def stream_stateful_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M2 streaming form: arbitrary stateful fold per key via
     applyInPandasWithState — the running address-stats maintenance
     (B:837–947 read-modify-write) as managed state."""
-    prep(spark)
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     s = _events_stream(spark, sf_dir).select("user_id", "value")
@@ -361,7 +351,6 @@ def stream_file_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     hand-rolls with currentFileCount. Oracle-checked: the complete-mode
     per-day count after the final batch equals the batch aggregate, so
     the two-batch pickup must lose and duplicate nothing."""
-    prep(spark)
     d = _two_file_replay(spark, sf_dir)
     s = _events_stream(spark, sf_dir, path=d, maxFilesPerTrigger="1")
     out = s.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
@@ -382,7 +371,6 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark by one batch in Spark's microbatch model; rows later than
     a window's emission are discarded. Invariants pinned in
     tests/test_streaming_semantics.py.)"""
-    prep(spark)
     d = _late_replay(spark, sf_dir)
     s = _events_stream(spark, sf_dir, path=d, maxFilesPerTrigger="1").withWatermark(
         "ts", "1 hour"
@@ -489,7 +477,6 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats, so Catalyst broadcasts it while it fits and a huge static
     side falls back to a shuffle (or gets pre-bucketed on the join
     key) instead of OOMing a forced broadcast."""
-    prep(spark)
     s = _events_stream(spark, sf_dir)
     dim = (
         table(spark, sf_dir, "customer")
@@ -524,7 +511,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark can expire buffered state — the property that keeps the join's
     state finite on an unbounded stream (vs the reference's full-graph
     lookups per event)."""
-    prep(spark)
     errors = (
         _events_stream(spark, sf_dir)
         .where(F.col("event_type") == "error")
@@ -578,7 +564,6 @@ def stream_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow trigger batched the two replay files. Floor-of-centi
     keeps the money math in exact integers on both engines.
     """
-    prep(spark)
     import os
     import shutil
 
@@ -642,7 +627,6 @@ def stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import time
 
-    prep(spark)
     sdf = (
         spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", 50)
@@ -703,7 +687,6 @@ def stream_stateful_agg_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle side — exact integers, matching the fold's rounded
     int64 accumulation (fixture values are 2-decimal, so no rounding
     boundary exists)."""
-    prep(spark)
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     d = _two_file_replay(spark, sf_dir)
@@ -763,7 +746,6 @@ def stream_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain checks it: the incremental fold must lose and double-count
     nothing across batch boundaries. Decimal sums / min / max are all
     mergeable, which is WHY the incremental maintenance is exact."""
-    prep(spark)
     d = _two_file_replay(spark, sf_dir)
     s = _events_stream(spark, sf_dir, path=d, maxFilesPerTrigger="1")
     out = (
@@ -890,7 +872,6 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrival-order-independent (max seq commutes), so however
     availableNow batches the three files, the final state is
     identical. Money stays integer cents end-to-end."""
-    prep(spark)
     import glob as _glob
     import os
     import shutil
@@ -1035,7 +1016,6 @@ def stream_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative), so throughput is bounded by per-arm event rate —
     the honest contract of ANY sequential monitor; the batch twin is
     the backfill/audit path."""
-    prep(spark)
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     d = _time_replay(spark, sf_dir)
@@ -1232,7 +1212,6 @@ def stream_multi_table_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergeable state (sum/count), so the per-batch aggregate is one
     keyed shuffle of batch-sized input, never a re-aggregation of
     the table."""
-    prep(spark)
     import os
 
     from ..sources.snapshots import TableGroup
@@ -1369,7 +1348,6 @@ def stream_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumption is inherent (the running mean makes the fold
     non-associative) — the honest contract of any online detector;
     the batch twin is the backfill/audit path."""
-    prep(spark)
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     d = _time_replay(spark, sf_dir)
@@ -1486,7 +1464,6 @@ def stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: dim build = one user-partitioned window; per batch
     ONE join against the (broadcastable, Catalyst-decided) interval
     table; final aggregate O(#statuses)."""
-    prep(spark)
     ev = table(spark, sf_dir, "events")
     st = ev.where(F.col("event_type") != "purchase").select(
         "user_id",
@@ -1611,7 +1588,6 @@ def stream_mixture_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: state O(#langs × 3 ints); the quota table is a
     broadcast join onto the stream; per-language sequential admission
     is the honest contract of any online gate."""
-    prep(spark)
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     docs = table(spark, sf_dir, "documents")
@@ -1714,7 +1690,6 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     state-store-sized result (windows x domain-constant key set), so
     the leaderboard never touches the log. Watermarking bounds state
     in production; the replay fixture is bounded by construction."""
-    prep(spark)
     s = _events_stream(spark, sf_dir)
     agg = (
         s.groupBy(F.window("ts", "6 hours"), F.col("event_type"))
@@ -1764,7 +1739,6 @@ def stream_dq_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     themselves would fork off the same scan via foreachBatch
     (stream_merge_sink's discipline) — the census here is the part
     whose exactness can be gate-checked."""
-    prep(spark)
     s = _events_stream(spark, sf_dir)
     known = ("click", "error", "purchase", "signup", "view")
     out = s.agg(
@@ -1827,7 +1801,6 @@ def stream_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partials; the scoring pass touches only
     #windows rows. In production the baseline window set is a
     bounded retention horizon (watermark + state TTL)."""
-    prep(spark)
     s = _events_stream(spark, sf_dir)
     agg = (
         s.groupBy(F.window("ts", "6 hours"))
@@ -1969,7 +1942,6 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the centroid table stays a k-row broadcast/literal and
     arrivals absorb at O(|batch| x k) — the same freshness contract
     as the batch key, now with no re-scan of the base."""
-    prep(spark)
     from ..functions.vectors import quantize
 
     emb = table(spark, sf_dir, "embeddings").where(F.size("embedding") > 0)
@@ -2086,7 +2058,6 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the inner key — state bounded by the
     6h + 1h event-time horizon on both sides, keyed by user."""
-    prep(spark)
     errors = (
         _events_stream(spark, sf_dir)
         .where(F.col("event_type") == "error")
@@ -2178,7 +2149,6 @@ def stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to the inner key — state bounded by the
     6h + 1h event-time horizon on both sides, keyed by user; the outer
     modes add no state, only eviction-time null emission."""
-    prep(spark)
     errors = (
         _events_stream(spark, sf_dir)
         .where(F.col("event_type") == "error")
@@ -2244,7 +2214,6 @@ def stream_watermark_idle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one windowed aggregate (watermark-bounded state) plus
     a broadcast-sized join of window starts against the batch census —
     the audit output is O(#windows), grain-bounded, not O(rows)."""
-    prep(spark)
     s = _events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     emitted = _run(
         spark,
