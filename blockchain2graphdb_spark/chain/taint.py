@@ -26,7 +26,8 @@ threshold.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..graph.pregel import pregel
@@ -91,13 +92,25 @@ def taint_flow(
         "value",
         F.coalesce(F.col("_seed"), F.lit(0.0)).alias("seed"),
     )
-    edges = spend_edges(tables).localCheckpoint(eager=True)
+    # the gate count rides the checkpoint job (observe); a plain
+    # localCheckpoint keeps the preserved stats the Pregel path plans with
+    n_edges = Observation()
+    edges = (
+        spend_edges(tables)
+        .observe(n_edges, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
 
-    if edges.count() <= driver_threshold:
-        spark = edges.sparkSession
-        rows = outs.collect()
-        floor = {r["id"]: r["seed"] for r in rows}
-        elist = [(r["src"], r["dst"], r["w"]) for r in edges.collect()]
+    if n_edges.get["n"] <= driver_threshold:
+        # two Arrow fetches, not pickled Row collects; row and edge order
+        # are the collect order, so the float sums are the same
+        vert = outs.toArrow()
+        ids = vert.column("id").to_pylist()
+        floor = dict(zip(ids, vert.column("seed").to_pylist()))
+        el = edges.toArrow()
+        elist = list(
+            zip(*(el.column(c).to_pylist() for c in ("src", "dst", "w")))
+        )
         taint = dict(floor)
         for _ in range(n_iter):
             msgs: dict = {}
@@ -109,13 +122,13 @@ def taint_flow(
             if new == taint:
                 break
             taint = new
-        out_rows = [
-            (r["id"], r["address"], r["value"], float(taint[r["id"]])) for r in rows
-        ]
-        from ..plans.localrel import local_rows_df
-
-        return local_rows_df(
-            spark, out_rows, "output_id string, address string, value long, taint double"
+        out = (
+            vert.select(["id", "address", "value"])
+            .append_column("taint", pa.array([taint[i] for i in ids], pa.float64()))
+            .rename_columns(["output_id", "address", "value", "taint"])
+        )
+        return edges.sparkSession.createDataFrame(
+            out, "output_id string, address string, value long, taint double"
         )
 
     vertices = outs.select(

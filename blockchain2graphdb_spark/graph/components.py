@@ -29,6 +29,8 @@ computed — BlockchainToGraph.java:29/58/896 leave the counter at 0).
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -81,39 +83,14 @@ def connected_components(
     # an observe() metric — no separate count job
     sym, n_edges = observed_checkpoint(sym, F.count(F.lit(1)))
 
-    # tiny graphs short-circuit to driver-side union-find: the
+    # tiny graphs short-circuit to a driver-side labeling: the
     # distributed loop costs a handful of jobs per round, which
     # dominates below ~10^5 edges (e.g. the verified-pair graphs of
     # near-dup dedup). Same labels (component = min member) either way;
     # driver_threshold=0 forces the distributed loop (two-path
     # equivalence is pinned in tests, mirroring chain/taint.py).
     if n_edges <= driver_threshold:
-        spark = sym.sparkSession
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:
-                parent[x], x = r, parent[x]
-            return r
-
-        for a, b in sym.collect():
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by min so the final relabel is the min member
-                lo, hi = min(ra, rb), max(ra, rb)
-                parent[hi] = lo
-        rows = [(n, find(n)) for n in parent]
-        # Arrow local relation, not a pickled RDD (plans/localrel.py):
-        # this short-circuit runs on every near-dup dedup key, and the
-        # pickled path paid a 32-task Python-worker job per action
-        from ..plans.localrel import local_rows_df
-
-        return local_rows_df(spark, rows, sym.schema).toDF("node", "comp")
+        return _driver_components(sym)
 
     # initial labels = least(node, min neighbor), one groupBy over the
     # symmetrized edges — this FOLDS the first outer round's hash-min
@@ -207,6 +184,45 @@ def connected_components(
             " rounds — partial labels would be silently wrong"
         )
     return comp
+
+
+def _driver_components(sym: DataFrame) -> DataFrame:
+    """(node, comp) of a small symmetrized edge list (a, b), labeled on
+    the driver with NumPy; comp = min member, as on the distributed path.
+
+    The edges arrive as one Arrow fetch (a pickled-Row collect costs ~8x
+    more), ids become dense ranks via `np.unique` (sorted, so the min
+    rank is the min id for any sortable id type), and the loop is the
+    distributed one in array form: hash-min over neighbours plus hooking
+    of each label's root, then pointer jumping to closure, until no
+    label moves. Labels only ever decrease and stay inside the
+    component, so the fixpoint labels every component with its min
+    member. The result is an Arrow local relation: a LocalTableScan,
+    with no pickled RDD and no Python workers at action time.
+    """
+    edges = sym.toArrow()
+    a, b = (edges.column(i).to_numpy() for i in (0, 1))
+    nodes, dense = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ia, ib = dense[: len(a)], dense[len(a) :]
+    comp = np.arange(len(nodes))
+    while True:
+        new = comp.copy()
+        np.minimum.at(new, ia, comp[ib])  # hash-min
+        np.minimum.at(new, comp[ia], comp[ib])  # hooking
+        while True:
+            jumped = new[new]
+            if np.array_equal(jumped, new):
+                break
+            new = jumped
+        if np.array_equal(new, comp):
+            break
+        comp = new
+    id_type = edges.schema.field(0).type
+    labels = pa.table(
+        [pa.array(nodes, type=id_type), pa.array(nodes[comp], type=id_type)],
+        names=sym.columns,
+    )
+    return sym.sparkSession.createDataFrame(labels, sym.schema).toDF("node", "comp")
 
 
 def list_rank(

@@ -5,9 +5,10 @@
 Python workers on the executors (measured: ~0.36 s warm and ~4.3 s on
 the session's first Python-worker cold start, for a 4-row result; 32
 tasks × worker startup). Several operators return small driver-computed
-result tables (diffusion round counts, the driver union-find labels,
-Markov removal effects), so that tax was paid once per bench/gate
-invocation per key.
+result tables (diffusion round counts, Markov removal effects), so that
+tax was paid once per bench/gate invocation per key. Driver paths that
+already hold an Arrow table (`graph/components`, `chain/taint`) pass it
+to `spark.createDataFrame` directly, which plans the same way.
 
 `local_rows_df` routes the same rows through the Arrow/pandas
 conversion instead, which plans as a pure-JVM `LocalTableScan` —

@@ -6,6 +6,14 @@ AQE on (runtime join-strategy switch / skew split / partition coalesce),
 Arrow on (vectorized Python interchange), shuffle partitions sized to the
 core count instead of the 200 default, UTC session time zone so timestamp
 semantics are deterministic.
+
+PySpark's DataFrame call-site capture is off. With it on, every Column
+and DataFrame method call records its Python call site on the JVM
+(about five py4j round trips plus a failed `import IPython` per call);
+the iterative loops build thousands of such calls per key. The price is
+that analysis errors lose their "== DataFrame ==" Python call-site
+section. A caller who needs it builds its own session with
+`spark.python.sql.dataFrameDebugging.enabled=true`.
 """
 
 from __future__ import annotations
@@ -36,6 +44,9 @@ def get_spark(app_name: str = "blockchain2graphdb-spark") -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # read once per process by pyspark.errors.utils, so a session
+        # conf (catalog.prep) would come too late
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")

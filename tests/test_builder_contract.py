@@ -51,3 +51,12 @@ def test_every_registered_builder_pins_before_its_body(monkeypatch):
         with pytest.raises(Pinned):
             spec.builder(object(), "/nonexistent-sf-dir")
         assert spec.builder.__name__ == spec.builder.__wrapped__.__name__, name
+
+
+def test_engine_sessions_run_without_call_site_capture(spark):
+    """`get_spark` turns PySpark's per-call DataFrame call-site capture
+    off: with it on, every Column/DataFrame call pays py4j round trips
+    only to record its Python call site."""
+    from blockchain2graphdb_spark.session import get_spark
+
+    assert get_spark().conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"

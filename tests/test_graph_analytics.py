@@ -166,6 +166,103 @@ def test_connected_components_driver_and_distributed_paths_agree(spark):
     assert labels[5_003] == 5_000 and labels[9_001] == 9_000
 
 
+# shape -> (schema, edges, canonical, expected (node, comp) rows)
+_CC_SHAPES = {
+    # co-spend wallet edges: string ids, canonical src < dst
+    "string_ids": (
+        "src string, dst string",
+        [("addr_b", "addr_c"), ("addr_a", "addr_c"), ("addr_d", "addr_e"),
+         ("addr_e", "addr_f"), ("x1", "x2")],
+        True,
+        [("addr_a", "addr_a"), ("addr_b", "addr_a"), ("addr_c", "addr_a"),
+         ("addr_d", "addr_d"), ("addr_e", "addr_d"), ("addr_f", "addr_d"),
+         ("x1", "x1"), ("x2", "x1")],
+    ),
+    "duplicates": (
+        "src long, dst long",
+        [(3, 1), (1, 3), (3, 1), (7, 8), (7, 8), (8, 9), (1, 3)],
+        False,
+        [(1, 1), (3, 1), (7, 7), (8, 7), (9, 7)],
+    ),
+    "canonical_duplicates": (
+        "src long, dst long",
+        [(1, 3), (1, 3), (2, 3), (2, 3), (7, 8)],
+        True,
+        [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)],
+    ),
+    # a node with only a self-loop (6) gets no label on either path
+    "self_loops": (
+        "src long, dst long",
+        [(4, 4), (4, 5), (5, 5), (6, 6), (9, 2), (2, 2)],
+        False,
+        [(2, 2), (4, 4), (5, 4), (9, 2)],
+    ),
+    "empty": ("src long, dst long", [], False, []),
+    "empty_strings": ("src string, dst string", [], True, []),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_CC_SHAPES))
+def test_connected_components_paths_agree_on_edge_shapes(spark, shape):
+    """Both paths give the same rows and the same schema on string ids,
+    duplicate rows, self-loops and an empty edge list."""
+    from blockchain2graphdb_spark.graph.components import connected_components
+
+    ddl, edges, canonical, expected = _CC_SHAPES[shape]
+    df = spark.createDataFrame(edges, ddl)
+    by_path = {
+        thr: connected_components(df, canonical=canonical, driver_threshold=thr)
+        for thr in (100_000, 0)
+    }
+    assert by_path[100_000].schema == by_path[0].schema
+    for out in by_path.values():
+        assert sorted(map(tuple, out.collect())) == expected
+
+
+def test_connected_components_driver_path_matches_union_find(spark):
+    """The NumPy driver labeling against a plain Python union-find (the
+    form it replaced) on random graphs: random-id paths, where labels
+    must cross many hops, and sparse random graphs, long and string ids."""
+    import random
+
+    from blockchain2graphdb_spark.graph.components import connected_components
+
+    def union_find(edges):
+        parent = {}
+
+        def find(x):
+            while parent[x] != x:
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            if a == b:
+                continue
+            parent.setdefault(a, a)
+            parent.setdefault(b, b)
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        return sorted((n, find(n)) for n in parent)
+
+    rng = random.Random(5)
+    path = list(range(3_000))
+    rng.shuffle(path)
+    graphs = {
+        "src long, dst long": [
+            list(zip(path, path[1:])),
+            [(rng.randrange(2_000), rng.randrange(2_000)) for _ in range(1_500)],
+        ],
+        "src string, dst string": [
+            [(f"w{rng.randrange(800)}", f"w{rng.randrange(800)}") for _ in range(600)],
+        ],
+    }
+    for ddl, edge_lists in graphs.items():
+        for edges in edge_lists:
+            comp = connected_components(spark.createDataFrame(edges, ddl))
+            assert sorted(map(tuple, comp.collect())) == union_find(edges), ddl
+
+
 @pytest.mark.slow  # >9s measured r14; full lane still runs it
 def test_incremental_components_equals_full(spark):
     """Folding edge batches incrementally must equal one full CC over
