@@ -14,6 +14,18 @@ the iterative loops build thousands of such calls per key. The price is
 that analysis errors lose their "== DataFrame ==" Python call-site
 section. A caller who needs it builds its own session with
 `spark.python.sql.dataFrameDebugging.enabled=true`.
+
+The codegen cache holds 4000 compiled classes instead of Spark's 100. It
+is least-recently-used, keyed by generated source; the five
+graph_iterative keys alone generate ~200 classes per pass, so at 100
+entries they evicted each other and every warm call recompiled its code
+with Janino and ran the fresh classes JIT-cold. 4000 holds the
+`bench.py` 59-key set (1.5k classes) with room to spare; the sf0.01
+sweep's 6.1k classes cycle through it. Spark sizes the cache once per
+JVM, at the first compile, from the session conf of that moment, so
+`catalog.prep` is too late: a session that exists before `get_spark` is
+called (such as the one a driver hands to `__spark_entry__`) keeps its
+own size.
 """
 
 from __future__ import annotations
@@ -48,6 +60,8 @@ def get_spark(app_name: str = "blockchain2graphdb-spark") -> SparkSession:
         # conf (catalog.prep) would come too late
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        # codegen classes kept: bench.py's 59 keys make 1.5k, the sf0.01 sweep 6.1k
+        .config("spark.sql.codegen.cache.maxEntries", "4000")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
     )
@@ -72,3 +86,17 @@ def get_spark(app_name: str = "blockchain2graphdb-spark") -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_stats(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, compile ms) by Spark codegen in this JVM so far.
+
+    Read from JVM-wide counters (`CodegenMetrics` for the count, the
+    `CodeGenerator` compile-time accumulator for the time), so it runs
+    no Spark job. Deltas between two reads attribute compiles to the
+    work in between.
+    """
+    jvm = spark._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(n), ns / 1e6

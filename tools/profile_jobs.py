@@ -2,7 +2,9 @@
 run the key once at the given sf_dir and print every Spark job that ran
 — duration, stage count, task count, shuffle read/write — so the
 per-round cost structure of iterative operators is visible without the
-UI (spark.ui.enabled=false).
+UI (spark.ui.enabled=false). Each key's header also gives the codegen
+classes it compiled and their compile time: 0 for a key already run in
+this session, so pass a key twice to see its warm cost.
 
 Usage: python tools/profile_jobs.py <sf_dir> <key> [key ...]
 """
@@ -16,7 +18,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from blockchain2graphdb_spark import registry
-from blockchain2graphdb_spark.session import get_spark
+from blockchain2graphdb_spark.session import codegen_stats, get_spark
 
 
 def main() -> None:
@@ -24,8 +26,6 @@ def main() -> None:
     keys = sys.argv[2:]
     specs = registry.load_all()
     spark = get_spark("profile-jobs")
-    # warm codegen paths on the tiny fixture
-    specs["agg_count"].builder(spark, "/root/testdata/sf0.001").collect()
     sc = spark.sparkContext
     jsc = sc._jsc.sc()
     store = jsc.statusStore()
@@ -58,17 +58,20 @@ def main() -> None:
     for key in keys:
         drain()
         seen = {j.jobId() for j in jobs()}
+        c0, ms0 = codegen_stats(spark)
         t0 = time.time()
         sc.setJobDescription(f"profile:{key}")
         df = specs[key].builder(spark, sf_dir)
         n = df.count()
         wall = time.time() - t0
         sc.setJobDescription(None)
+        c1, ms1 = codegen_stats(spark)
         drain()
         smap = stage_map()
         new = sorted((j for j in jobs() if j.jobId() not in seen),
                      key=lambda j: j.jobId())
-        print(f"\n=== {key}: wall {wall:.3f}s, rows {n}, jobs {len(new)} ===")
+        print(f"\n=== {key}: wall {wall:.3f}s, rows {n}, jobs {len(new)}, "
+              f"codegen {c1 - c0} classes {ms1 - ms0:.0f} ms ===")
         tot = 0.0
         for j in new:
             st = j.submissionTime()

@@ -22,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from blockchain2graphdb_spark import registry
 from blockchain2graphdb_spark.catalog import TABLES
-from blockchain2graphdb_spark.session import get_spark
+from blockchain2graphdb_spark.session import codegen_stats, get_spark
 
 
 def duck_con(sf_dir: str):
@@ -218,6 +218,8 @@ def main() -> int:
     print(f"\n== {n_pass} pass, {n_fail} fail, {n_rows_only} rows-only ==")
     if failed:
         print("failed:", " ".join(failed))
+    compiles, compile_ms = codegen_stats(spark)
+    print(f"codegen: {compiles} classes compiled, {compile_ms:.0f} ms", file=sys.stderr)
     return 1 if n_fail else 0
 
 
