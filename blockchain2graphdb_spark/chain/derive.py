@@ -12,8 +12,15 @@ affected partitions instead of decrementing counters.
 Scale notes: every aggregate below is a keyed groupBy (partial+final
 hash agg); joins are FK equi-joins on tx_hash/output_id/address —
 partitionable by key with no row-at-a-time access. At 100 TB the input
-tables are partitioned by height range, and all per-address stats
-shuffle once on `address`.
+tables are partitioned by height range.
+
+`address_stats` is one tx fold followed by one address fold: the
+payee, funder and tx rows are exchanged once on `tx_hash` into one
+partial per (tx, address), and one `groupBy("address")` computes all
+12 statistics. It keeps the semantics of a chain of inner FK joins: an
+input whose spent output is not held is dropped, and the values and
+dates need the tx row while `transaction_count` and the counterparty
+counts do not (details in its docstring).
 
 Known reference bugs NOT replicated (SURVEY §7 watch-list): the
 misspelled insert key `TransactionIsBetweenAddress` (B:226 vs T:147) —
@@ -24,6 +31,8 @@ twice in one tx — we count distinct incident transactions.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator, Mapping
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
@@ -209,8 +218,7 @@ def address_stats(
     transactions: DataFrame, outputs: DataFrame, inputs: DataFrame
 ) -> DataFrame:
     """The 12 per-address statistics (T:126–137, maintained imperatively
-    at B:837–947 and B:950–983; here: one signed aggregation + two
-    counterparty joins, all shuffling once on `address`):
+    at B:837–947 and B:950–983):
 
     received / spent / balance        — A5 (B:856–862, B:912–919)
     first_appear / last_appear        — A6 (B:858–859, B:886–887, B:583–589)
@@ -220,124 +228,185 @@ def address_stats(
         counterparty count-distinct with self excluded (B:950–983)
     between_address_transaction_count — A10 (B:876–877)
     (wallet_id lives in wallets.py — the reference stubbed it, T:137)
+
+    Plan: one tx fold, then one address fold.
+    1. Payee rows (outputs), funder rows (`spent_inputs`) and tx rows
+       (`transactions`, for tx_date) are unioned and exchanged once on
+       `tx_hash`. A window on `tx_hash` gives every row its tx's date,
+       whether the tx row is held, and the tx's funder and payee lists;
+       a `groupBy(tx_hash, address)` on the same partitioning folds them
+       into one partial per (tx, address).
+    2. One `groupBy("address")` computes all 12 columns. A8 is a
+       count-distinct over each partial's counterparty list exploded, so
+       a row is bounded by its tx's size, not by how many counterparties
+       the address has; sums take the first exploded row only.
+    Each branch reaches the tx exchange once, and no joined sub-plan is
+    read by two branches: one read twice with different column pruning
+    would be computed twice.
+    A traced chain_sync stats read runs 7 Spark jobs.
+
+    Inner-join semantics, as a chain of FK joins would give them:
+    - an input whose spent output is not held contributes nothing;
+    - received, spent, first_appear, last_appear and the two directional
+      tx counts count only txs whose transaction row is held, and an
+      address appears only if it has such a tx;
+    - transaction_count and the counterparty counts count every tx
+      whose outputs or held inputs touch the address.
+    Addresses are non-null (schema.OUTPUTS).
     """
     si = spent_inputs(inputs, outputs)
-    tx_dates = transactions.select("tx_hash", "tx_date")
-
-    recv = (
-        outputs.join(tx_dates, "tx_hash")
-        .groupBy("address")
-        .agg(
-            F.sum("value").alias("received"),
-            F.countDistinct("tx_hash").alias("input_transaction_count"),
-            F.min("tx_date").alias("first_appear"),
-            F.max("tx_date").alias("last_recv"),
+    no_date = F.lit(None).cast("timestamp")
+    # kind: 0 = the tx row, 1 = payee (an output), 2 = funder (a held input)
+    rows = (
+        outputs.select(
+            "tx_hash", "address", "value", F.lit(1).alias("kind"), no_date.alias("tx_date")
+        )
+        .unionByName(
+            si.select(
+                F.col("spending_tx_hash").alias("tx_hash"),
+                "address",
+                "value",
+                F.lit(2).alias("kind"),
+                no_date.alias("tx_date"),
+            )
+        )
+        .unionByName(
+            transactions.select(
+                "tx_hash",
+                F.lit(None).cast("string").alias("address"),
+                F.lit(None).cast("long").alias("value"),
+                F.lit(0).alias("kind"),
+                "tx_date",
+            )
         )
     )
-    spend = (
-        si.join(tx_dates, si.spending_tx_hash == tx_dates.tx_hash)
-        .groupBy("address")
+    tx_row, payee, funder = (F.col("kind") == k for k in (0, 1, 2))
+    by_tx = W.partitionBy("tx_hash")
+    per_tx = rows.select(
+        "tx_hash",
+        "address",
+        "value",
+        "kind",
+        F.max("tx_date").over(by_tx).alias("tx_date"),
+        F.max(tx_row).over(by_tx).alias("held"),
+        F.max(funder).over(by_tx).alias("has_input"),
+        F.collect_set(F.when(funder, F.col("address"))).over(by_tx).alias("funders"),
+        F.collect_set(F.when(payee, F.col("address"))).over(by_tx).alias("payees"),
+    ).where(~tx_row)
+    partials = per_tx.groupBy("tx_hash", "address").agg(
+        F.sum(F.when(payee, F.col("value"))).alias("received"),
+        F.sum(F.when(funder, F.col("value"))).alias("spent"),
+        F.max(payee).alias("is_payee"),
+        F.max(funder).alias("is_funder"),
+        *[
+            F.any_value(c).alias(c)
+            for c in ("tx_date", "held", "has_input", "funders", "payees")
+        ],
+    )
+
+    # counterparties: funders if the address was paid, then payees if it
+    # paid; positions below n_funders are the inbound ones
+    none = F.array().cast("array<string>")
+    funders = F.when(F.col("is_payee"), F.col("funders")).otherwise(none)
+    payees = F.when(F.col("is_funder"), F.col("payees")).otherwise(none)
+    exploded = partials.select(
+        "*",
+        F.size(funders).alias("n_funders"),
+        F.posexplode_outer(F.concat(funders, payees)).alias("pos", "cp"),
+    )
+    first = F.coalesce(F.col("pos"), F.lit(0)) == 0
+    held = F.col("held")
+    other = F.col("cp") != F.col("address")
+    inbound = F.col("pos") < F.col("n_funders")
+    # A10: the tx has inputs and exactly one distinct address on both sides
+    self_transfer = F.col("has_input") & (F.size(F.array_union("funders", "payees")) == 1)
+    one = F.lit(1)
+    folded = (
+        exploded.groupBy("address")
         .agg(
-            F.sum("value").alias("spent"),
-            F.countDistinct("spending_tx_hash").alias("output_transaction_count"),
-            F.max("tx_date").alias("last_spend"),
+            F.max(held).alias("_held"),
+            F.sum(F.when(first & held, F.col("received"))).alias("received"),
+            F.sum(F.when(first & held, F.col("spent"))).alias("spent"),
+            F.min(F.when(F.col("is_payee") & held, F.col("tx_date"))).alias("first_appear"),
+            F.max(F.when(held, F.col("tx_date"))).alias("last_appear"),
+            F.count(F.when(first, one)).alias("transaction_count"),
+            F.count(F.when(first & F.col("is_payee") & held, one)).alias(
+                "input_transaction_count"
+            ),
+            F.count(F.when(first & F.col("is_funder") & held, one)).alias(
+                "output_transaction_count"
+            ),
+            F.countDistinct(F.when(inbound & other, F.col("cp"))).alias(
+                "input_address_count"
+            ),
+            F.countDistinct(F.when(~inbound & other, F.col("cp"))).alias(
+                "output_address_count"
+            ),
+            F.count(F.when(first & self_transfer, one)).alias(
+                "between_address_transaction_count"
+            ),
         )
-    )
-    n_tx = (
-        outputs.select("address", "tx_hash")
-        .union(si.select("address", F.col("spending_tx_hash")))
-        .groupBy("address")
-        .agg(F.countDistinct("tx_hash").alias("transaction_count"))
-    )
-
-    # A8: 3-hop counterparties. Funders of this address: source addresses
-    # of the txs that paid it; payees: destination addresses of the txs it
-    # funded. Self excluded on both sides (B:964, B:974).
-    paid_by_tx = outputs.select("tx_hash", "address")  # tx -> payee
-    funded_by = si.select(F.col("spending_tx_hash").alias("tx_hash"), F.col("address").alias("funder"))
-    in_cp = (
-        paid_by_tx.join(funded_by, "tx_hash")
-        .where(F.col("address") != F.col("funder"))
-        .groupBy("address")
-        .agg(F.countDistinct("funder").alias("input_address_count"))
-    )
-    out_cp = (
-        funded_by.withColumnRenamed("funder", "address_")
-        .join(paid_by_tx.withColumnRenamed("address", "payee"), "tx_hash")
-        .where(F.col("address_") != F.col("payee"))
-        .groupBy(F.col("address_").alias("address"))
-        .agg(F.countDistinct("payee").alias("output_address_count"))
-    )
-
-    # A10: txs where exactly one distinct address spans both sides
-    tx_addr = (
-        si.select(F.col("spending_tx_hash").alias("tx_hash"), "address")
-        .union(outputs.select("tx_hash", "address"))
-    )
-    one_addr_tx = (
-        tx_addr.groupBy("tx_hash")
-        .agg(F.countDistinct("address").alias("n"), F.min("address").alias("addr"))
-        .where(F.col("n") == 1)
-    )
-    # only count it when the address is on both sides (a real self-transfer)
-    has_input = si.select(F.col("spending_tx_hash").alias("tx_hash")).distinct()
-    self_tx = (
-        one_addr_tx.join(has_input, "tx_hash", "left_semi")
-        .groupBy(F.col("addr").alias("address"))
-        .agg(F.count(F.lit(1)).alias("between_address_transaction_count"))
+        .where(F.col("_held"))
     )
 
     zero = F.lit(0).cast("long")
-    return (
-        recv.join(spend, "address", "full_outer")
-        .join(n_tx, "address", "left")
-        .join(in_cp, "address", "left")
-        .join(out_cp, "address", "left")
-        .join(self_tx, "address", "left")
-        .select(
-            "address",
-            (F.coalesce("received", zero) - F.coalesce("spent", zero)).alias("balance"),
-            F.coalesce("received", zero).alias("received"),
-            F.coalesce("spent", zero).alias("spent"),
-            F.col("first_appear"),
-            F.greatest(
-                F.coalesce("last_recv", F.col("first_appear")),
-                F.coalesce("last_spend", F.col("first_appear")),
-            ).alias("last_appear"),
-            F.coalesce("transaction_count", F.lit(0)).cast("int").alias(
-                "transaction_count"
-            ),
-            F.coalesce("input_transaction_count", F.lit(0)).cast("int").alias(
-                "input_transaction_count"
-            ),
-            F.coalesce("output_transaction_count", F.lit(0)).cast("int").alias(
-                "output_transaction_count"
-            ),
-            F.coalesce("input_address_count", F.lit(0)).cast("int").alias(
-                "input_address_count"
-            ),
-            F.coalesce("output_address_count", F.lit(0)).cast("int").alias(
-                "output_address_count"
-            ),
-            F.coalesce("between_address_transaction_count", F.lit(0))
-            .cast("int")
-            .alias("between_address_transaction_count"),
-        )
+    return folded.select(
+        "address",
+        (F.coalesce("received", zero) - F.coalesce("spent", zero)).alias("balance"),
+        F.coalesce("received", zero).alias("received"),
+        F.coalesce("spent", zero).alias("spent"),
+        "first_appear",
+        "last_appear",
+        *[
+            F.col(c).cast("int").alias(c)
+            for c in (
+                "transaction_count",
+                "input_transaction_count",
+                "output_transaction_count",
+                "input_address_count",
+                "output_address_count",
+                "between_address_transaction_count",
+            )
+        ],
     )
 
 
-def derive_all(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    """One pass over the four normalized tables → every §1.4 derived table
-    (the declarative replacement for parseBlock, B:1007–1094)."""
-    return {
-        "block_stats": block_stats(
-            tables["blocks"], tables["transactions"], tables["outputs"], tables["inputs"]
-        ),
-        "transaction_stats": transaction_stats(
-            tables["transactions"], tables["outputs"], tables["inputs"]
-        ),
-        "output_state": output_state(tables["outputs"], tables["inputs"]),
-        "address_stats": address_stats(
-            tables["transactions"], tables["outputs"], tables["inputs"]
-        ),
-    }
+_BUILDERS = {
+    "block_stats": lambda t: block_stats(
+        t["blocks"], t["transactions"], t["outputs"], t["inputs"]
+    ),
+    "transaction_stats": lambda t: transaction_stats(
+        t["transactions"], t["outputs"], t["inputs"]
+    ),
+    "output_state": lambda t: output_state(t["outputs"], t["inputs"]),
+    "address_stats": lambda t: address_stats(
+        t["transactions"], t["outputs"], t["inputs"]
+    ),
+}
+
+
+class _Derived(Mapping):
+    """Read-only view of the derived tables; each is built on first
+    access, so a caller that reads one table pays for one."""
+
+    def __init__(self, tables: Mapping[str, DataFrame]) -> None:
+        self._tables = tables
+        self._built: dict[str, DataFrame] = {}
+
+    def __getitem__(self, name: str) -> DataFrame:
+        if name not in self._built:
+            self._built[name] = _BUILDERS[name](self._tables)
+        return self._built[name]
+
+    def __iter__(self) -> Iterator[str]:
+        return iter(_BUILDERS)
+
+    def __len__(self) -> int:
+        return len(_BUILDERS)
+
+
+def derive_all(tables: Mapping[str, DataFrame]) -> Mapping[str, DataFrame]:
+    """The four normalized tables → every §1.4 derived table (the
+    declarative replacement for parseBlock, B:1007–1094), as a read-only
+    mapping that builds each table on first access."""
+    return _Derived(tables)

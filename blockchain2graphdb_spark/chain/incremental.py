@@ -5,7 +5,7 @@ per output (B:837–947). The scalable inversion: keep a *mergeable
 partial-aggregate state* per address and fold each micro-batch into it —
 the foreachBatch MERGE pattern. Every maintained column is algebraic
 (sum/count/min/max), so merge(state, delta) ≡ recompute(all) exactly
-(tested in tests/test_incremental.py).
+(tested in tests/test_pregel_incremental.py).
 
 Non-algebraic statistics (distinct counterparties A8) are NOT maintained
 incrementally — they are either recomputed over the affected partition

@@ -17,9 +17,10 @@ changes. Script→address decoding errors map to the reference's fallback
 sentinel (C11, B:1067–1074).
 
 Scale: each blk file is one input split; decode is batch-at-a-time in
-Arrow; the explode to tables is columnar. 300 GB of blk files = ~2300
-files → parallel decode across executors instead of the reference's
-single-threaded loader.
+Arrow and runs once per `read_blocks` call (the decoded rows are
+checkpointed); the explode to tables is columnar. 300 GB of blk files =
+~2300 files → parallel decode across executors instead of the
+reference's single-threaded loader.
 """
 
 from __future__ import annotations
@@ -31,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..plans.iterate import local_checkpoint
 
 MAGIC = b"BLK1"
 UNDECODABLE = "<undecodable>"  # C11 sentinel (B:1067-1074)
@@ -207,7 +210,17 @@ def _decode_address(script: str) -> str:
 
 
 def read_blocks(spark: SparkSession, glob: str) -> DataFrame:
-    """S1: binaryFile scan + Arrow-batched decode → nested block rows."""
+    """S1: binaryFile scan + Arrow-batched decode → nested block rows.
+
+    The decoded rows are materialized before return (one eager local
+    checkpoint), so the Python decoder runs once per call: every job over
+    the returned frame or its `normalize` tables reads the checkpointed
+    blocks instead of re-scanning and re-decoding the files. The blocks
+    live in executor memory until the frame is dropped; Spark's context
+    cleaner frees them once the frame is garbage-collected. The original
+    plan's size estimate is kept, so joins against the decoded tables
+    still broadcast where they did before.
+    """
     raw = spark.read.format("binaryFile").load(glob)
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -223,7 +236,10 @@ def read_blocks(spark: SparkSession, glob: str) -> DataFrame:
                     pos += 8 + length
             yield pd.DataFrame(rows, columns=[f.name for f in DECODED_SCHEMA.fields])
 
-    return raw.select("content").mapInPandas(decode, schema=DECODED_SCHEMA)
+    return local_checkpoint(
+        raw.select("content").mapInPandas(decode, schema=DECODED_SCHEMA),
+        reset_stats=False,
+    )
 
 
 def normalize(decoded: DataFrame) -> dict[str, DataFrame]:

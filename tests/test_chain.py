@@ -9,11 +9,7 @@ running the reference itself: same semantics, independent mechanism.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

@@ -6,12 +6,8 @@ Spark parity tests stand on valid input.
 
 from __future__ import annotations
 
-import sys
-
 from hypothesis import given, settings
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from blockchain2graphdb_spark.chain import fixtures
 

@@ -7,9 +7,6 @@ from __future__ import annotations
 
 import json
 import os
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entry_mod
 

@@ -3,10 +3,6 @@ export as columnar file sinks."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from blockchain2graphdb_spark import registry
 from conftest import SF_DIR
 import pytest

@@ -6,11 +6,7 @@ fixture, and late-data handling must actually drop the late branch.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

@@ -7,12 +7,9 @@ from __future__ import annotations
 
 import os
 import shutil
-import sys
 import time
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
