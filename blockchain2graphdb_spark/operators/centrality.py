@@ -14,7 +14,7 @@ deterministic sample of sources and scale. Both operators here:
     adding seeds widens rows, not the plan (the plan-assert in
     tests/test_round11_ops.py pins this);
   * bounded horizon (depth 3 on this short-diameter graph) unrolled
-    into a linear plan, the `bfs_distance` strategy (graphops.py) plus
+    into a linear plan, the frontier BFS `graphops._bfs_levels` plus
     per-level shortest-path COUNTS (sigma) — level h's sigma is the sum
     of the parents' sigmas over the distinct edge set, the forward half
     of Brandes;
@@ -50,7 +50,13 @@ from ..plans.iterate import local_checkpoint
 from ..plans.memo import SessionMemo, release_checkpoints
 from ..plans.sizing import broadcast_hint
 from ..registry import query
-from .graphops import _copurchase_pairs, _pair_nodes, _sym_union
+from .graphops import (
+    _bfs_levels,
+    _copurchase_pairs,
+    _pair_nodes,
+    _sym_edges,
+    _with_dist,
+)
 
 _DEPTH = 3
 _BTW_SEEDS = 16  # 8 source/target pairs
@@ -99,13 +105,12 @@ def _seed_bfs_build(
     one frontier DataFrame for ALL seeds, `depth` unrolled join
     rounds; the handles let the memo release blocks on eviction."""
     pairs, _n_edges = _copurchase_pairs(spark, sf_dir)
-    sym = _sym_union(pairs)
+    sym = _sym_edges(pairs)
     nodes = _pair_nodes(pairs)
     hkey = F.md5(F.col("n").cast("string"))
     # TakeOrdered top-k by content hash, then indices 0..k-1 via a
     # window over the k-row result (bounded by the Limit — the declared
     # sweep-exempt shape)
-    cks: list = []
     seeds = local_checkpoint(
         nodes.orderBy(hkey, "n")
         .limit(n_seeds)
@@ -116,7 +121,6 @@ def _seed_bfs_build(
             ),
         )
     )
-    cks.append(seeds)
     frontier = seeds.select(
         F.col("n").alias("root"),
         F.col("n").alias("node"),
@@ -126,28 +130,21 @@ def _seed_bfs_build(
     # under the memory-adaptive gate (sized from the actual frontier
     # schema), keyed shuffles above it
     hint = broadcast_hint(spark, n_seeds * parquet_num_rows(sf_dir, "part"), frontier.schema)
-    levels = [frontier.withColumn("dist", F.lit(0))]
-    seen = frontier.select("root", "node")
-    for h in range(1, depth + 1):
-        expanded = (
-            sym.join(hint(frontier), sym["src"] == frontier["node"])
+
+    def expand(level: DataFrame) -> DataFrame:
+        return (
+            sym.join(hint(level), sym["src"] == level["node"])
             .select("root", F.col("dst").alias("node"), "sigma")
             .groupBy("root", "node")
             .agg(F.sum("sigma").cast("long").alias("sigma"))
         )
-        frontier = local_checkpoint(
-            expanded.join(hint(seen), ["root", "node"], "left_anti")
-        )
-        cks.append(frontier)
-        levels.append(frontier.withColumn("dist", F.lit(h)))
-        seen = seen.unionByName(frontier.select("root", "node"))
-    bfs = levels[0]
-    for lv in levels[1:]:
-        bfs = bfs.unionByName(lv)
+
+    levels = _bfs_levels(frontier, expand, ["root", "node"], depth, hint)
+    bfs = _with_dist(levels)
     return (
         bfs.select("root", "node", F.col("dist").cast("int").alias("dist"), "sigma"),
         seeds,
-        cks,
+        [seeds, *levels[1:]],
     )
 
 
@@ -358,7 +355,7 @@ def edge_betweenness_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     level, never pairwise."""
     bfs, seeds = _seed_bfs(spark, sf_dir, _BTW_SEEDS)
     pairs, _n = _copurchase_pairs(spark, sf_dir)
-    sym = _sym_union(pairs)
+    sym = _sym_edges(pairs)
     half = _BTW_SEEDS // 2
     a, b = seeds.alias("sa"), seeds.alias("sb")
     p = (
@@ -500,7 +497,7 @@ def graph_diameter_lb(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-purchase graph, same md5 seed discipline).
 
     Both sweeps unroll 4 levels with the frontier anti-joined
-    against the seen set (the `bfs_distance` strategy) — depth covers
+    against the seen set (`graphops._bfs_levels`) — depth covers
     the fixture graph's true eccentricities (probed 2–3 at
     sf0.001–0.01), and `n_reached` vs `n_nodes` makes any truncation
     or disconnection visible in the result itself rather than
@@ -515,28 +512,20 @@ def graph_diameter_lb(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge list is built once and checkpointed (`_copurchase_pairs`).
     """
     pairs, _ = _copurchase_pairs(spark, sf_dir)
-    sym = _sym_union(pairs)
+    sym = _sym_edges(pairs)
     nodes = _pair_nodes(pairs)
     hint = broadcast_hint(spark, parquet_num_rows(sf_dir, "part"), nodes.schema)
 
+    def expand(level: DataFrame) -> DataFrame:
+        return (
+            sym.join(hint(level), sym["src"] == level["node"])
+            .select(F.col("dst").alias("node"))
+            .distinct()
+        )
+
     def sweep(seed_df: DataFrame) -> DataFrame:
-        frontier = local_checkpoint(seed_df.select(F.col("n").alias("node")))
-        seen = frontier
-        levels = [frontier.withColumn("dist", F.lit(0).cast("long"))]
-        for h in range(1, _DIAM_DEPTH + 1):
-            nxt = (
-                sym.join(hint(frontier), sym["src"] == frontier["node"])
-                .select(F.col("dst").alias("node"))
-                .distinct()
-                .join(hint(seen), "node", "left_anti")
-            )
-            frontier = local_checkpoint(nxt)
-            levels.append(frontier.withColumn("dist", F.lit(h).cast("long")))
-            seen = seen.unionByName(frontier)
-        out = levels[0]
-        for lv in levels[1:]:
-            out = out.unionByName(lv)
-        return out
+        seed = local_checkpoint(seed_df.select(F.col("n").alias("node")))
+        return _with_dist(_bfs_levels(seed, expand, ["node"], _DIAM_DEPTH, hint))
 
     hkey = F.md5(F.col("n").cast("string"))
     seed1 = nodes.orderBy(hkey, "n").limit(1)
@@ -647,10 +636,15 @@ def eigenvector_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   * shuffle partitions sized to the edge list (~75k edges per
     #     partition, floor 4, ceiling the session default) — at sf0.1
     #     the graph is 1.2M edges / ~30 MB, and 32-partition stages
-    #     were pure task-scheduling overhead;
+    #     were pure task-scheduling overhead. On a 4-core session the
+    #     default is 4, so this resolves to max(4, min(4, ...)) = 4: a
+    #     no-op there;
     #   * AQE off — the chain's sizes are static and known, and AQE's
     #     per-stage re-planning latency dominates tiny iterative
-    #     stages (measured 3.9s -> 2.7s at sf0.1 from this alone).
+    #     stages. Re-measured with a warm codegen cache (sf0.01, 1g
+    #     driver, 4 cores, warm median of 5 calls, 4 alternating
+    #     rounds): dropping both scoped confs takes this key from 7 to
+    #     22 Spark jobs and 2.55 s to 3.23 s (slower in 3 of 4 rounds).
     # sym is hash-partitioned ONCE on dst; each round's v arrives
     # already hash-partitioned on node by the previous round's
     # aggregate (same key space, same partition count), so the
@@ -670,17 +664,7 @@ def eigenvector_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             "spark.sql.adaptive.enabled": "false",
         },
     ):
-        # one pass over the pair checkpoint (the union form scanned it
-        # once per orientation before the repartition)
-        sym = pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-                    F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
-                )
-            ).alias("e")
-        ).select("e.src", "e.dst")
-        sym = local_checkpoint(sym.repartition(nparts, "dst"))
+        sym = local_checkpoint(_sym_edges(pairs).repartition(nparts, "dst"))
         v = (
             sym.select(F.col("src").alias("node"))
             .distinct()
@@ -797,7 +781,7 @@ def katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast, x is node-sized and broadcast under the adaptive gate.
     Edge list memoized per session (`_copurchase_pairs`)."""
     pairs, _ = _copurchase_pairs(spark, sf_dir)
-    sym = _sym_union(pairs)
+    sym = _sym_edges(pairs)
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     att = deg.agg((F.max("d") + 1).cast("decimal(38,0)").alias("att"))
     v = (

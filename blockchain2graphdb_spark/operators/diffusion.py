@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..plans.iterate import local_checkpoint
 from ..registry import query
-from .graphops import _copurchase_pairs
+from .graphops import _bfs_levels, _copurchase_pairs, _pair_nodes, _sym_edges
 
 _IC_SEEDS = 4
 _IC_ROUNDS = 3
@@ -115,14 +115,18 @@ def influence_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.sizing import broadcast_hint
 
     pairs, n_edges = _copurchase_pairs(spark, sf_dir)
-    # r13 perf pass (the eigenvector_centrality lesson, ARCHITECTURE
-    # §10): the 3-round frontier loop over a ~30 MB graph is dominated
-    # by per-stage scheduling, not compute — scope AQE off (its
-    # per-stage replan latency buys nothing on static bounded rounds)
-    # and size the shuffle to the edge list (measured 3.4s -> 2.4s at
-    # sf0.1, counts identical). Frontier/seen broadcasts stay behind
-    # the adaptive gate: they are node-sized, so at 100 TB the joins
-    # degrade to keyed shuffles exactly as before.
+    # The eigenvector_centrality lesson (ARCHITECTURE §10): the 3-round
+    # frontier loop over a ~30 MB graph is dominated by per-stage
+    # scheduling, not compute — scope AQE off (its per-stage replan
+    # latency buys nothing on static bounded rounds) and size the
+    # shuffle to the edge list. Re-measured with a warm codegen cache
+    # (sf0.01, 1g driver, 4 cores, warm median of 5 calls, 4
+    # alternating rounds): dropping both scoped confs takes this key
+    # from 15 to 22 Spark jobs and 1.47 s to 1.59 s (slower in 3 of 4
+    # rounds). On a 4-core session the partition count resolves to
+    # max(4, min(4, ...)) = 4, the session default: a no-op there.
+    # Frontier/seen broadcasts stay behind the adaptive gate: they are
+    # node-sized, so at 100 TB the joins degrade to keyed shuffles.
     default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     nparts = max(4, min(default_parts, (2 * (n_edges or 0)) // 75_000 or 4))
     with scoped_confs(
@@ -132,49 +136,30 @@ def influence_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
             "spark.sql.adaptive.enabled": "false",
         },
     ):
-        # one pass over the pair checkpoint (the union form scanned it
-        # once per orientation — 2x the read feeding the md5 coin flip)
-        sym = pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-                    F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
-                )
-            ).alias("e")
-        ).select("e.src", "e.dst")
         # r16: checkpoint the live subgraph ONCE — all 3 rounds probe
         # it, and without the checkpoint each round re-evaluated the
         # per-edge md5 coin flip over the full 2|E| symmetric list
         # (profiled: three 5-8s executor-runtime stages re-reading the
         # pair blocks; one md5 pass + two cheap checkpoint reads after)
-        live = local_checkpoint(sym.where(_live_filter_spark("src", "dst")))
-        # one pass over the pair checkpoint instead of two (the union
-        # form scanned it once per branch — profiled: a 21 s
-        # executor-runtime stage at sf0.1 just to pick 4 seeds)
-        nodes = (
-            pairs.select(F.explode(F.array("a", "b")).alias("n"))
-            .distinct()
-        )
-        frontier = local_checkpoint(
-            nodes.orderBy(F.md5(F.col("n").cast("string")), "n")
+        live = local_checkpoint(_sym_edges(pairs).where(_live_filter_spark("src", "dst")))
+        seeds = local_checkpoint(
+            _pair_nodes(pairs)
+            .orderBy(F.md5(F.col("n").cast("string")), "n")
             .limit(_IC_SEEDS)
             .select(F.col("n").alias("node"))
         )
         # frontier and seen hold at most one row per part
-        hint = broadcast_hint(spark, parquet_num_rows(sf_dir, "part"), frontier.schema)
-        seen = frontier
-        counts = [(0, frontier.count())]
-        for h in range(1, _IC_ROUNDS + 1):
-            expanded = (
+        hint = broadcast_hint(spark, parquet_num_rows(sf_dir, "part"), seeds.schema)
+
+        def expand(frontier: DataFrame) -> DataFrame:
+            return (
                 live.join(hint(frontier), live["src"] == frontier["node"])
                 .select(F.col("dst").alias("node"))
                 .distinct()
             )
-            frontier = local_checkpoint(
-                expanded.join(hint(seen), "node", "left_anti")
-            )
-            counts.append((h, frontier.count()))
-            seen = local_checkpoint(seen.unionByName(frontier))
+
+        levels = _bfs_levels(seeds, expand, ["node"], _IC_ROUNDS, hint)
+        counts = [(h, lv.count()) for h, lv in enumerate(levels)]
     # Arrow local relation, not a pickled RDD: the 4-row result used to
     # cost a 32-task Python-worker job PER ACTION (plans/localrel.py)
     from ..plans.localrel import local_rows_df

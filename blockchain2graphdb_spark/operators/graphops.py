@@ -8,6 +8,9 @@ implemented (T:137, B:896).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -408,11 +411,13 @@ def _expand_scope(spark: SparkSession, sf_dir: str | None = None):
 
 def _sym_edges(pairs: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Both orientations of the canonical (a<b) pair list in ONE pass:
-    each pair row explodes to its two directed edges. The previous
-    union-of-two-projections form scanned the checkpointed pair blocks
-    once per orientation — at scale that is a second full pass over the
-    largest table every consumer touches (r17; measured 15-18% off
-    eigenvector_centrality/influence_cascade at sf0.1)."""
+    each pair row explodes to its two directed edges. The one
+    symmetrization of the co-purchase pair list: every consumer, lazy
+    or checkpointed, reads it. A union of two projections scans the
+    pair blocks once per orientation (r17: 15-18% slower on
+    eigenvector_centrality/influence_cascade at sf0.1), and with a
+    codegen cache sized to the registry it was no faster for the lazy,
+    re-referenced consumers either (ARCHITECTURE §4)."""
     return pairs.select(
         F.explode(
             F.array(
@@ -423,15 +428,35 @@ def _sym_edges(pairs: DataFrame, src: str = "src", dst: str = "dst") -> DataFram
     ).select(f"e.{src}", f"e.{dst}")
 
 
-def _sym_union(pairs: DataFrame) -> DataFrame:
-    """Both orientations of the canonical (a<b) pair list as (src, dst),
-    in union form, NOT _sym_edges: for a sym consumed LAZILY and
-    re-referenced (per BFS level / per round / per sampled layer), the
-    explode's Generate re-executes per reference and measured 10-20%
-    slower than the two narrow union branches (see OPTIMIZATION_r17.md);
-    the one-pass form pays only when immediately checkpointed."""
-    return pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
-        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+def _bfs_levels(
+    seeds: DataFrame,
+    expand: Callable[[DataFrame], DataFrame],
+    keys: list[str],
+    depth: int,
+    hint: Callable[[DataFrame], DataFrame],
+) -> list[DataFrame]:
+    """The one level-synchronous frontier BFS: `levels[0]` is `seeds`,
+    and `levels[h]` holds the rows first reached at hop h —
+    `expand(levels[h-1])` anti-joined on `keys` against every earlier
+    level, checkpointed once (it is read as the next frontier, as part
+    of the seen set, and by the caller). Each key lands in exactly one
+    level, so a union of the levels needs no MIN aggregate. `hint`
+    gates the broadcast of the seen set."""
+    levels = [seeds]
+    seen = seeds.select(*keys)
+    for _ in range(depth):
+        levels.append(
+            local_checkpoint(expand(levels[-1]).join(hint(seen), keys, "left_anti"))
+        )
+        seen = seen.unionByName(levels[-1].select(*keys))
+    return levels
+
+
+def _with_dist(levels: list[DataFrame]) -> DataFrame:
+    """Union of `_bfs_levels` output with each row's hop count as `dist`."""
+    return reduce(
+        DataFrame.unionByName,
+        [lv.withColumn("dist", F.lit(h)) for h, lv in enumerate(levels)],
     )
 
 
@@ -620,8 +645,8 @@ def clustering_coefficient(
     triangle_count; past it, keyed shuffles.
     """
     pairs, n_edges = _copurchase_pairs(spark, sf_dir)
+    sym = _sym_edges(pairs, "u", "v")
     pairs = pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
-    sym = pairs.union(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
     seeds = (
         table(spark, sf_dir, "part")
         .where(F.col("p_size") == 50)
@@ -732,36 +757,19 @@ def bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     hint = broadcast_hint(spark, n_orders, seeds.schema)
-    # textbook frontier BFS: each level expands ONLY the nodes first
-    # discovered at the previous level (anti-join against everything
-    # seen), so each lineitem row is emitted O(1) times across the run;
-    # every node lands in exactly one level, so the result is a plain
-    # union — no final MIN aggregate. Every level (seeds included,
-    # above) is referenced 3-5× (next frontier, the seen set, the
-    # final union) — each is checkpointed EAGERLY once (accumulator-
-    # lifecycle rule, STATUS r8) and re-read from blocks thereafter.
-    levels = [seeds.withColumn("dist", F.lit(0))]
-    seen = seeds
-    for h in (1, 2, 3):
-        frontier = levels[-1].select("id")
+
+    def expand(frontier: DataFrame) -> DataFrame:
         orders = (
             li.join(hint(frontier), li["p"] == frontier["id"])
             .select("o")
             .distinct()
         )
-        nxt = (
-            li.join(hint(orders), "o")
-            .select(F.col("p").alias("id"))
-            .distinct()
-            .join(hint(seen), "id", "left_anti")
-            .withColumn("dist", F.lit(h))
-            .localCheckpoint(eager=True)
-        )
-        levels.append(nxt)
-        seen = seen.unionByName(nxt.select("id"))
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
+        return li.join(hint(orders), "o").select(F.col("p").alias("id")).distinct()
+
+    # textbook frontier BFS (_bfs_levels): each level expands ONLY the
+    # nodes first discovered at the previous level, so each lineitem row
+    # is emitted O(1) times across the run
+    out = _with_dist(_bfs_levels(seeds, expand, ["id"], 3, hint))
     return out.select(
         F.col("id").alias("node"), F.col("dist").cast("int").alias("dist")
     )
@@ -776,10 +784,7 @@ def pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     advance — the property that makes the job plannable at 100 TB).
     Verified against a hand-computed graph in tests/test_graph_analytics.py.
     """
-    pairs = _copurchase_pairs(spark, sf_dir)[0].select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    )
-    ranks = pagerank_ranks(pairs)
+    ranks = pagerank_ranks(_copurchase_pairs(spark, sf_dir)[0])
     return ranks.select(
         F.col("id").alias("part"),
         F.round(F.col("rank"), 6).alias("rank"),
@@ -846,7 +851,7 @@ def _pagerank_exact_top(
     the reset term is exactly _PR_RESET, every score is at least
     _PR_RESET, and the `score > 0` filter keeps every vertex."""
     pairs, _ = _copurchase_pairs(spark, sf_dir)
-    sym = _sym_union(pairs).localCheckpoint(eager=True)
+    sym = _sym_edges(pairs).localCheckpoint(eager=True)
     deg = sym.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
     if seeds is None:
         vertices, r = deg, F.lit(_PR_SCALE).cast("long")
@@ -969,13 +974,10 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the same source set bfs_distance uses) over the part co-purchase
     graph — proximity-to-seeds instead of global centrality. NumPy
     power-iteration parity pinned in tests/test_graph_analytics.py."""
-    pairs = _copurchase_pairs(spark, sf_dir)[0].select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    )
     seeds = table(spark, sf_dir, "part").where(F.col("p_size") == 50).select(
         F.col("p_partkey")
     )
-    ranks = personalized_pagerank_ranks(pairs, seeds)
+    ranks = pagerank_ranks(_copurchase_pairs(spark, sf_dir)[0], seeds=seeds)
     return (
         ranks.select(
             F.col("id").alias("part"), F.round(F.col("rank"), 9).alias("rank")
@@ -990,90 +992,54 @@ def pagerank_ranks(
     n_iter: int = 10,
     damping: float = 0.85,
     init_ranks: DataFrame | None = None,
+    seeds: DataFrame | None = None,
 ) -> DataFrame:
-    """(id, rank) over the symmetrized edge list of canonical pairs.
+    """(id, rank) over the symmetrized edge list of canonical pairs (two
+    columns, read by position): rank_v = (1-d)·reset_v + d·Σ_u rank_u/deg_u.
+
+    Global PageRank (`seeds` None) resets to 1.0 everywhere, so the
+    update is exactly 0.15 + 0.85·Σ ((1-d)·1.0 == (1-d) in floating
+    point). Personalized PageRank (`seeds`: a one-column DataFrame of
+    vertex ids) teleports the random surfer to the seed set instead:
+    reset_v = 1/|S| on seeds and 0 elsewhere — rank becomes proximity
+    to the seeds (the similar-wallets / related-documents primitive).
+    The iteration starts from the reset vector.
 
     `init_ranks` (id, rank) warm-starts the power iteration — the
     incremental-maintenance path: after an edge batch lands, restart
-    from the previous fixpoint instead of the uniform vector and far
-    fewer supersteps recover convergence (each superstep is the full
-    O(E) shuffle either way, so fewer rounds IS the saving; pinned in
-    tests/test_graph_analytics.py). Vertices new to the graph fall back
-    to the uniform 1.0 start."""
+    from the previous fixpoint and far fewer supersteps recover
+    convergence (each superstep is the full O(E) shuffle either way, so
+    fewer rounds IS the saving; pinned in tests/test_graph_analytics.py).
+    Vertices new to the graph start from their reset value.
+
+    Pregel shape (100 TB): one keyed shuffle per superstep, fixed
+    superstep count, sum combiner, the reset value riding in the vertex
+    attr so there is no per-round seed join."""
     from ..graph.pregel import pregel
 
-    sym = pairs.union(pairs.select(F.col("dst"), F.col("src"))).localCheckpoint(
-        eager=True
-    )
+    sym = local_checkpoint(_sym_edges(pairs.toDF("a", "b")), reset_stats=False)
     deg = sym.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("deg")
     )
+    if seeds is None:
+        reset = F.lit(1.0)
+    else:
+        seed_ids = seeds.select(F.col(seeds.columns[0]).alias("id")).distinct()
+        n_seeds = seed_ids.count()
+        if n_seeds == 0:
+            raise ValueError("personalized pagerank needs a non-empty seed set")
+        deg = deg.join(seed_ids.withColumn("_s", F.lit(1.0)), "id", "left")
+        reset = F.coalesce(F.col("_s"), F.lit(0.0)) / F.lit(float(n_seeds))
+    rank0 = reset
     if init_ranks is not None:
         init = init_ranks.select("id", F.col("rank").alias("_r0"))
         deg = deg.join(init, "id", "left")
-        rank0 = F.coalesce(F.col("_r0"), F.lit(1.0))
-    else:
-        rank0 = F.lit(1.0)
+        rank0 = F.coalesce(F.col("_r0"), reset)
     vertices = deg.select(
-        "id", F.struct(rank0.alias("rank"), F.col("deg").alias("deg")).alias("attr")
-    )
-    out = pregel(
-        vertices,
-        sym,
-        initial_msg=None,
-        send_msg=lambda s, d: s["rank"] / s["deg"],
-        agg_msg=F.sum,
-        vprog=lambda attr, msg: F.struct(
-            (F.lit(1 - damping) + F.lit(damping) * msg).alias("rank"),
-            attr["deg"].alias("deg"),
-        ),
-        max_iter=n_iter,
-        needs_dst_attr=False,
-        check_convergence=False,
-    )
-    return out.select("id", F.col("attr")["rank"].alias("rank"))
-
-
-def personalized_pagerank_ranks(
-    pairs: DataFrame,
-    seeds: DataFrame,
-    n_iter: int = 10,
-    damping: float = 0.85,
-) -> DataFrame:
-    """Personalized PageRank: the random surfer teleports to the SEED
-    set (uniformly) instead of to any vertex — rank becomes proximity to
-    the seeds (the similar-wallets / related-documents primitive).
-
-    rank_v = (1-d)·reset_v + d·Σ_u rank_u/deg_u with reset_v = 1/|S| on
-    seeds, 0 elsewhere; iteration starts from the reset vector. Same
-    Pregel shape (and 100 TB properties) as pagerank_ranks: one keyed
-    shuffle per superstep, fixed superstep count, sum combiner, the
-    reset vector riding in the vertex attr so no per-round seed join.
-    `seeds` is a one-column DataFrame of vertex ids.
-    """
-    from ..graph.pregel import pregel
-
-    sym = pairs.union(pairs.select(F.col("dst"), F.col("src"))).localCheckpoint(
-        eager=True
-    )
-    deg = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    seed_ids = seeds.select(F.col(seeds.columns[0]).alias("id")).distinct()
-    n_seeds = seed_ids.count()
-    if n_seeds == 0:
-        raise ValueError("personalized pagerank needs a non-empty seed set")
-    reset = F.coalesce(F.col("_s"), F.lit(0.0)) / F.lit(float(n_seeds))
-    vertices = (
-        deg.join(seed_ids.withColumn("_s", F.lit(1.0)), "id", "left")
-        .select(
-            "id",
-            F.struct(
-                reset.alias("rank"),  # power iteration starts at reset
-                F.col("deg").alias("deg"),
-                reset.alias("reset"),
-            ).alias("attr"),
-        )
+        "id",
+        F.struct(
+            rank0.alias("rank"), F.col("deg").alias("deg"), reset.alias("reset")
+        ).alias("attr"),
     )
     out = pregel(
         vertices,
@@ -1145,7 +1111,7 @@ def neighbor_jaccard(
     past it, keyed shuffles with AQE skew splitting.
     """
     pairs, n_edges = _copurchase_pairs(spark, sf_dir)
-    sym = pairs.union(pairs.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    sym = _sym_edges(pairs, "a", "b")
     adj = sym.groupBy("a").agg(
         F.array_sort(F.collect_list("b")).alias("nb"),
         F.count(F.lit(1)).alias("d"),
@@ -1257,9 +1223,7 @@ def kcore(
         pairs, n_edges = _copurchase_pairs_support(spark, sf_dir, min_support)
     else:
         pairs, n_edges = _copurchase_pairs(spark, sf_dir)
-    sym = pairs.union(
-        pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint(eager=True)
+    sym = _sym_edges(pairs, "a", "b").localCheckpoint(eager=True)
     # the broadcast side is a node set no larger than |sym| = 2·|pairs|
     # by construction — gate the hint without a job
     hint = broadcast_hint(spark, 2 * n_edges, sym.select("a").schema)
@@ -1398,9 +1362,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     decides).
     """
     pairs, _ = _copurchase_pairs(spark, sf_dir)
-    sym = pairs.union(pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))).select(
-        F.col("a").alias("u"), F.col("b").alias("v")
-    )
+    sym = _sym_edges(pairs, "u", "v")
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("d"))
     ends = (
         sym.join(deg.select(F.col("u").alias("ju"), F.col("d").alias("x")), F.col("u") == F.col("ju"))
@@ -1824,10 +1786,7 @@ def link_prediction_aa(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject. Reference parity: the co-purchase projection
     generalizes the reference's 2-hop counterparties walk (B:43–46)."""
     pairs, _ = _copurchase_pairs_support(spark, sf_dir, 2)
-    # union form (lazy double-reference wedge join; see OPTIMIZATION_r17.md)
-    sym = pairs.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        pairs.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
+    sym = _sym_edges(pairs, "u", "v")
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     s1 = sym.select(F.col("u").alias("z"), F.col("v").alias("a"))
     s2 = sym.select(F.col("u").alias("z"), F.col("v").alias("b"))
@@ -1908,17 +1867,8 @@ def _lpa_labels(spark: SparkSession, sf_dir: str):
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # one pass over the edge checkpoint per consumer (the union form
-    # scanned it once per orientation, twice per LPA round — the
-    # _sym_edges rationale applied to the star-edge checkpoint)
-    sym = raw_ck.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("src"), F.col("dst")),
-                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
+    # star edges are canonical (src is the order's smallest part)
+    sym = _sym_edges(raw_ck.toDF("a", "b"))
     # Round 1 folds into a single min-aggregate: with l0(node) = node,
     # every (src, dst-label) vote over the DISTINCT edge set has cnt=1,
     # so the (cnt DESC, lbl ASC) winner is just min(neighbor) — the
@@ -2008,9 +1958,8 @@ def degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("src", F.col("l_partkey").alias("dst"))
         .where(F.col("src") != F.col("dst"))
     )
-    sym = raw.unionByName(
-        raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
+    # canonical (src is the order's smallest part) but not distinct
+    sym = _sym_edges(raw.toDF("a", "b")).distinct()
     deg = sym.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
     bucket = (F.length(F.bin("deg")) - 1).cast("long").alias("bucket")
     return deg.groupBy(bucket).agg(
@@ -2089,7 +2038,7 @@ def ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     e, n_prev = _copurchase_pairs_support(spark, sf_dir, 2)
     supp = None
     for _ in range(_KTRUSS_ROUNDS):
-        sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        sym = _sym_edges(e, "a", "b")
         x = sym.select(F.col("a").alias("ea"), F.col("b").alias("z"))
         y = sym.select(F.col("a").alias("eb"), F.col("b").alias("z2"))
         supp = (

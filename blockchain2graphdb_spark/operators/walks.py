@@ -220,10 +220,10 @@ def gnn_neighbor_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     hub nodes never materialize their full neighbor list; each layer is
     one semi-join (frontier) + one windowed scan of the adjacency; depth
     is a compile-time constant, one linear DAG, no driver loop."""
-    from .graphops import _copurchase_pairs, _pair_nodes, _sym_union
+    from .graphops import _copurchase_pairs, _pair_nodes, _sym_edges
 
     pairs, _n = _copurchase_pairs(spark, sf_dir)
-    sym = _sym_union(pairs)
+    sym = _sym_edges(pairs)
     nodes = _pair_nodes(pairs)
     seeds = nodes.orderBy(F.md5(F.col("n").cast("string")), "n").limit(32)
 

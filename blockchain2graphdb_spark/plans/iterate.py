@@ -54,17 +54,15 @@ def observed_checkpoint(df: DataFrame, metric):
     return ck, obs.get["m"]
 
 
-def local_checkpoint(
-    df: DataFrame, eager: bool = True, reset_stats: bool = True
-) -> DataFrame:
-    """`df.localCheckpoint(eager)` with the origin-statistics chain cut.
+def local_checkpoint(df: DataFrame, reset_stats: bool = True) -> DataFrame:
+    """Eager `df.localCheckpoint()` with the origin-statistics chain cut.
 
     Use inside iteration loops (one call per round on the loop-carried
     table). One-shot checkpoints outside loops can keep Spark's default
     behavior — preserved stats are harmless (and occasionally useful to
     Catalyst) when they are never squared.
     """
-    ck = df.localCheckpoint(eager=eager)
+    ck = df.localCheckpoint(eager=True)
     if not reset_stats:
         return ck
     try:
@@ -91,11 +89,11 @@ def local_checkpoint(
         # lifetime. The internal RDD's task closures update the origin
         # plan's SQL-metric accumulators (registered via weak refs);
         # without this pin the origin is garbage the moment we return,
-        # and a lazy (eager=False) materialization later floods the
-        # driver log with "attempted to access non-existent
-        # accumulator" errors from every task (observed: 1.6k log lines
-        # in one bench run). Results were never affected — only metrics
-        # and log noise — but the pin removes the race entirely.
+        # and any task that runs the RDD after that floods the driver
+        # log with "attempted to access non-existent accumulator"
+        # errors (observed with lazy checkpoints: 1.6k log lines in one
+        # bench run). Results were never affected — only metrics and
+        # log noise — but the pin removes the race entirely.
         out._b2g_ckpt_origin = ck
         return out
     except Exception:

@@ -25,6 +25,7 @@ reference's single-threaded loader.
 
 from __future__ import annotations
 
+import os
 import struct
 from collections.abc import Iterator
 
@@ -212,6 +213,9 @@ def _decode_address(script: str) -> str:
 def read_blocks(spark: SparkSession, glob: str) -> DataFrame:
     """S1: binaryFile scan + Arrow-batched decode → nested block rows.
 
+    `glob` is `<directory>/<file-name pattern>`, e.g. `.../blk*.dat`;
+    only the file name may hold wildcards.
+
     The decoded rows are materialized before return (one eager local
     checkpoint), so the Python decoder runs once per call: every job over
     the returned frame or its `normalize` tables reads the checkpointed
@@ -221,7 +225,14 @@ def read_blocks(spark: SparkSession, glob: str) -> DataFrame:
     plan's size estimate is kept, so joins against the decoded tables
     still broadcast where they did before.
     """
-    raw = spark.read.format("binaryFile").load(glob)
+    # the glob's directory plus a file-name filter: a glob handed to
+    # `load` is probed as a streaming-sink metadata directory first,
+    # which logs a FileNotFoundException stack trace on every call
+    raw = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", os.path.basename(glob))
+        .load(os.path.dirname(glob))
+    )
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

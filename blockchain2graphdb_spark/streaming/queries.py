@@ -61,14 +61,10 @@ def _run(spark: SparkSession, sdf: DataFrame, output_mode: str = "append") -> Da
     # join: 4-wide beats 32-wide at EVERY fixture scale — sf0.001
     # 7.4s vs 11.3s, sf0.1 (~100k events) 4.2s vs 5.7s — because the
     # per-batch store overhead dominates far beyond the largest
-    # fixture. SPARK_GRAFT_STREAM_SHUFFLE overrides for bigger local
-    # replays. Scoped-and-restored around query start (the streaming
+    # fixture. Scoped-and-restored around query start (the streaming
     # plan binds the conf at start; each run uses a fresh in-memory
     # sink + checkpoint, so no cross-run state layout is pinned).
-    import os as _os
-
-    n_part = _os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "4")
-    with scoped_confs(spark, {"spark.sql.shuffle.partitions": n_part}):
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": "4"}):
         q = (
             sdf.writeStream.format("memory")
             .queryName(name)

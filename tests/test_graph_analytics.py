@@ -83,16 +83,12 @@ def test_pagerank_warm_start_accelerates_convergence(spark):
 def test_personalized_pagerank_matches_power_iteration(spark):
     """PPR seeded at {0} vs an independent NumPy power iteration with
     the reset vector concentrated on the seed."""
-    from blockchain2graphdb_spark.operators.graphops import (
-        personalized_pagerank_ranks,
-    )
-
     edges = [(0, 1), (0, 2), (1, 2), (2, 3), (3, 4)]
     seeds = spark.createDataFrame([(0,)], "id long")
     got = {
         r["id"]: r["rank"]
-        for r in personalized_pagerank_ranks(
-            _pairs(spark, edges), seeds, n_iter=10
+        for r in pagerank_ranks(
+            _pairs(spark, edges), n_iter=10, seeds=seeds
         ).collect()
     }
 
@@ -115,6 +111,58 @@ def test_personalized_pagerank_matches_power_iteration(spark):
     # and the global-PageRank hub ordering does NOT dominate: rank mass
     # concentrates near the seed
     assert got[0] == max(got.values())
+
+
+def _python_bfs_levels(edges, seed, depth):
+    adj = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    levels, seen = [{seed}], {seed}
+    for _ in range(depth):
+        nxt = {v for u in levels[-1] for v in adj.get(u, ())} - seen
+        levels.append(nxt)
+        seen |= nxt
+    return levels
+
+
+def test_bfs_levels_matches_python_bfs(spark):
+    """`_bfs_levels` against a plain-Python BFS: a 4-cycle with a tail,
+    a separate edge, an isolated seed with no edges at all, a depth past
+    every eccentricity (the trailing levels are empty), and both a
+    single-column and a (root, node) key."""
+    from blockchain2graphdb_spark.operators.graphops import _bfs_levels, _sym_edges
+
+    edges = [(0, 1), (1, 2), (2, 3), (0, 3), (3, 4), (7, 8)]
+    depth = 5
+    sym = _sym_edges(spark.createDataFrame(edges, "a long, b long"))
+
+    def expand(level):
+        return (
+            sym.join(level, sym["src"] == level["node"])
+            .select(*[c for c in level.columns if c != "node"], F.col("dst").alias("node"))
+            .distinct()
+        )
+
+    def no_hint(df):
+        return df
+
+    levels = _bfs_levels(
+        spark.createDataFrame([(0,)], "node long"), expand, ["node"], depth, no_hint
+    )
+    got = [{r["node"] for r in lv.collect()} for lv in levels]
+    assert got == _python_bfs_levels(edges, 0, depth)
+    assert got[-1] == got[-2] == set()
+
+    roots = [0, 4, 7, 9]
+    seeds = spark.createDataFrame([(r, r) for r in roots], "root long, node long")
+    levels = _bfs_levels(seeds, expand, ["root", "node"], depth, no_hint)
+    got = [{(r["root"], r["node"]) for r in lv.collect()} for lv in levels]
+    want = [set() for _ in range(depth + 1)]
+    for root in roots:
+        for h, lv in enumerate(_python_bfs_levels(edges, root, depth)):
+            want[h] |= {(root, n) for n in lv}
+    assert got == want
 
 
 def test_bfs_distance_levels(spark, sf_dir):

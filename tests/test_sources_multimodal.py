@@ -45,6 +45,14 @@ def test_blockfile_parallel_decode(spark, blk_dir):
     assert decoded.rdd.getNumPartitions() >= 2
 
 
+def test_read_blocks_reads_only_matching_files(spark, tmp_path):
+    """Only files whose name matches the pattern are decoded: a foreign
+    file beside the blk files (it would fail the magic check) is skipped."""
+    blockfile.write_blk_files(fixtures.generate(n_blocks=6, seed=3), str(tmp_path), blocks_per_file=3)
+    (tmp_path / "rev00000.dat").write_bytes(b"not a block file")
+    assert blockfile.read_blocks(spark, f"{tmp_path}/blk*.dat").count() == 6
+
+
 def test_decode_address_fallback():
     """C11: undecodable script -> sentinel, never an exception (B:1067-1074)."""
     assert blockfile._decode_address("addr001") == "addr001"
