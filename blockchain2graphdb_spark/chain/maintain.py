@@ -17,12 +17,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .schema import KEYS
+
 Tables = dict[str, DataFrame]
 
 
-def insert_if_absent(existing: DataFrame, incoming: DataFrame, key: str) -> DataFrame:
+def insert_if_absent(existing: DataFrame, incoming: DataFrame, keys: list[str]) -> DataFrame:
     """M1 (B:170–202): idempotent keyed insert as anti-join + append."""
-    fresh = incoming.join(existing.select(key), key, "left_anti")
+    fresh = incoming.join(existing.select(*keys), keys, "left_anti")
     return existing.unionByName(fresh)
 
 
@@ -86,18 +88,6 @@ def resume(tables: Tables, incoming: Tables) -> Tables:
     if fork is not None:
         tables = reorg_rollback(tables, fork)
     return {
-        "blocks": insert_if_absent(tables["blocks"], incoming["blocks"], "hash"),
-        "transactions": insert_if_absent(
-            tables["transactions"], incoming["transactions"], "tx_hash"
-        ),
-        "outputs": insert_if_absent(tables["outputs"], incoming["outputs"], "output_id"),
-        "inputs": insert_if_absent(
-            tables["inputs"].withColumn(
-                "_k", F.concat_ws("|", "spending_tx_hash", "spent_output_id")
-            ),
-            incoming["inputs"].withColumn(
-                "_k", F.concat_ws("|", "spending_tx_hash", "spent_output_id")
-            ),
-            "_k",
-        ).drop("_k"),
+        name: insert_if_absent(tables[name], incoming[name], keys)
+        for name, keys in KEYS.items()
     }

@@ -51,3 +51,12 @@ INPUTS = T.StructType(
         T.StructField("spent_output_id", T.StringType(), False),  # input edge T:109
     ]
 )
+
+# Each table's row identity (all columns non-null): what a sync
+# anti-joins incoming rows on so that replays append nothing.
+KEYS = {
+    "blocks": ["hash"],
+    "transactions": ["tx_hash"],
+    "outputs": ["output_id"],
+    "inputs": ["spending_tx_hash", "spent_output_id"],
+}

@@ -140,7 +140,6 @@ def taint_flow(
     ranks = pregel(
         vertices,
         edges,
-        initial_msg=None,
         # the lambda closes over the triplet's edge column `w` — pregel
         # evaluates send_msg in triplet context, so edge attributes are
         # addressable by name

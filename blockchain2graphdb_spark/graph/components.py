@@ -37,12 +37,15 @@ from pyspark.sql import functions as F
 from ..plans.iterate import local_checkpoint, observed_checkpoint
 from ..plans.sizing import broadcast_hint
 
+# divergence backstops: connected_components converges in O(log n)
+# outer rounds, list_rank resolves chains up to 4^64 long
+_CC_MAX_ROUNDS = 50
+_RANK_MAX_ROUNDS = 64
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 50,
     broadcast_nodes: int | None = None,
     canonical: bool = False,
     driver_threshold: int = 100_000,
@@ -119,7 +122,7 @@ def connected_components(
     #       root never learns the neighboring region's min and the min
     #       crawls one hop per round — the r6 formulation had exactly
     #       that flaw and silently returned partial labels on a
-    #       150-node chain when max_iter ran out; caught by this
+    #       150-node chain when its round bound ran out; caught by this
     #       round's two-path equivalence test);
     #   (3) full path compression — comp := comp[comp] to closure over
     #       the node-sized label table (pointer jumping, depth halves
@@ -128,10 +131,10 @@ def connected_components(
     # 1 round on monotone 10k paths, 9 on a random-id 10k path, 3 on
     # sparse random graphs). Edge joins — the 100 TB cost — happen once
     # per outer round; hooking and compression touch only node-sized
-    # tables. If max_iter is ever exhausted the loop RAISES rather than
+    # tables. If _CC_MAX_ROUNDS is ever exhausted the loop RAISES rather than
     # return partial labels.
     converged = False
-    for _ in range(max_iter):
+    for _ in range(_CC_MAX_ROUNDS):
         nbr_min = (
             sym.join(hint(comp), sym.b == comp.node)
             .select(F.col("a").alias("node"), "comp")
@@ -165,7 +168,7 @@ def connected_components(
         if changed == 0:
             converged = True
             break
-        for _j in range(max_iter):
+        for _j in range(_CC_MAX_ROUNDS):
             lut = comp.select(F.col("node").alias("lk"), F.col("comp").alias("lv"))
             jumped, still_moving = observed_checkpoint(
                 comp.join(hint(lut), comp.comp == lut.lk, "left").select(
@@ -180,7 +183,7 @@ def connected_components(
                 break
     if not converged:
         raise RuntimeError(
-            f"connected_components did not converge within {max_iter}"
+            f"connected_components did not converge within {_CC_MAX_ROUNDS}"
             " rounds — partial labels would be silently wrong"
         )
     return comp
@@ -229,8 +232,6 @@ def list_rank(
     links: DataFrame,
     id_col: str = "id",
     parent_col: str = "parent",
-    broadcast_nodes: int | None = None,
-    max_iter: int = 64,
 ) -> DataFrame:
     """Position of each node in its chain (1-based), from (id, parent)
     links alone, parent NULL at the head. Pointer jumping with THREE
@@ -240,13 +241,12 @@ def list_rank(
 
     Same checkpoint-loses-stats story as connected_components: the
     lookup side of each self-join is hinted broadcast while the node
-    count (known after the first materialization) stays under
-    broadcast_nodes; above it, shuffled self-joins.
+    count (known after the first materialization) fits the session's
+    broadcast budget; above it, shuffled self-joins.
 
     The liveness probe rides the per-round checkpoint job as an
     `observe()` metric (zero extra jobs), so the loop exits exactly at
-    resolution. max_iter (chains up to 2^64) is a divergence
-    backstop only.
+    resolution. _RANK_MAX_ROUNDS is a divergence backstop only.
     """
     # eager checkpoint with the hint-sizing count riding the job
     cur, n_nodes = observed_checkpoint(
@@ -259,7 +259,7 @@ def list_rank(
         ),
         F.count(F.lit(1)),
     )
-    hint = broadcast_hint(links.sparkSession, n_nodes, cur.schema, broadcast_nodes)
+    hint = broadcast_hint(links.sparkSession, n_nodes, cur.schema)
 
     def jump(base: DataFrame, lk: DataFrame) -> DataFrame:
         # one pointer-jump composition against lk: ptr := lk[ptr].ptr,
@@ -277,7 +277,7 @@ def list_rank(
             ).alias("dist"),
         )
 
-    for i in range(max_iter):
+    for _ in range(_RANK_MAX_ROUNDS):
         # THREE chained jumps per checkpointed round (r9): if cur's
         # pointers cover stride d, each jump against cur adds d more,
         # so one round takes the stride from d to 4d — chains of
@@ -312,11 +312,9 @@ def list_rank(
     return cur.select("id", (F.col("dist") + 1).alias("pos"))
 
 
-def incremental_components(
-    labels: DataFrame, new_edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def incremental_components(labels: DataFrame, new_edges: DataFrame) -> DataFrame:
     """Incremental maintenance for connected components: fold a batch of
-    new edges into an existing (node, comp) labeling WITHOUT touching
+    new (src, dst) edges into an existing (node, comp) labeling WITHOUT touching
     unaffected components.
 
     The reference's incremental story is per-row read-modify-write
@@ -332,7 +330,7 @@ def incremental_components(
 
     Equivalence to full recomputation is pinned in tests.
     """
-    edges = new_edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    edges = new_edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     endpoints = (
         edges.select(F.col("a").alias("node"))
         .union(edges.select(F.col("b").alias("node")))

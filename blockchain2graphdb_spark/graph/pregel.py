@@ -30,7 +30,6 @@ from ..plans.sizing import broadcast_hint
 def pregel(
     vertices: DataFrame,  # (id, attr)
     edges: DataFrame,  # (src, dst)
-    initial_msg: Column | None,
     send_msg: Callable[[Column, Column], Column],
     # send_msg(src_attr, dst_attr) -> message to dst (null = no message)
     agg_msg: Callable[[Column], Column],  # e.g. F.min / F.max / F.sum
@@ -57,8 +56,6 @@ def pregel(
     the fixpoint.
     """
     v = vertices.select("id", "attr")
-    if initial_msg is not None:
-        v = v.select("id", vprog(F.col("attr"), initial_msg).alias("attr"))
     # eager checkpoint (accumulator-lifecycle rule) with the hint-sizing
     # count riding the materialization job as an observe() metric
     v, n_vertices = observed_checkpoint(v, F.count(F.lit(1)))
@@ -110,7 +107,7 @@ def pregel(
     return v
 
 
-def chain_heights(blocks: DataFrame, max_iter: int = 64) -> DataFrame:
+def chain_heights(blocks: DataFrame) -> DataFrame:
     """W2/O2 via Pregel: (hash, height) from (hash, prev_hash) linkage
     alone. Genesis starts at 0, every superstep extends the known
     frontier one hop (height = parent height + 1), propagating max.
@@ -131,12 +128,11 @@ def chain_heights(blocks: DataFrame, max_iter: int = 64) -> DataFrame:
     out = pregel(
         vertices,
         edges,
-        initial_msg=None,
         send_msg=lambda src_attr, dst_attr: F.when(
             src_attr.isNotNull() & dst_attr.isNull(), src_attr + 1
         ),
         agg_msg=F.max,
         vprog=lambda attr, msg: F.coalesce(attr, msg),
-        max_iter=max_iter,
+        max_iter=64,
     )
     return out.select(F.col("id").alias("hash"), F.col("attr").alias("height"))

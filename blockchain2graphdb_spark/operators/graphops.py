@@ -283,18 +283,11 @@ def wallet_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     member id, so results are deterministic and oracle-checkable via the
     unrolled hash-min+pointer-jumping CTE chain (_wallet_cc_oracle) —
     linear per round, so the oracle itself scales to sf0.1 and beyond."""
-    li = table(spark, sf_dir, "lineitem")
-    mins = li.groupBy("l_orderkey").agg(F.min("l_partkey").alias("src"))
     # no dedup: star edges are consistently oriented (src = group min <
     # dst), so canonical=True holds, and the min-label aggregation
     # absorbs duplicate rows — skipping the distinct saves a full
     # shuffle of the edge list (~15% off the whole query at sf0.1)
-    edges = (
-        li.join(mins, "l_orderkey")
-        .select("src", F.col("l_partkey").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-    )
-    comp = connected_components(edges, canonical=True)
+    comp = connected_components(_star_edges(spark, sf_dir), canonical=True)
     return comp.select(F.col("node").alias("part"), F.col("comp").alias("component"))
 
 
@@ -310,14 +303,9 @@ def wallet_components_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     would otherwise route to the driver path; forcing the loop gives
     the distributed implementation a direct driver-gate correctness
     witness on nontrivial merge structure (VERDICT r6 lead item)."""
-    li = table(spark, sf_dir, "lineitem")
-    mins = li.groupBy("l_orderkey").agg(F.min("l_partkey").alias("src"))
-    edges = (
-        li.join(mins, "l_orderkey")
-        .select("src", F.col("l_partkey").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
+    comp = connected_components(
+        _star_edges(spark, sf_dir), canonical=True, driver_threshold=0
     )
-    comp = connected_components(edges, canonical=True, driver_threshold=0)
     return comp.select(F.col("node").alias("part"), F.col("comp").alias("component"))
 
 
@@ -333,13 +321,7 @@ def wallet_ids_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-min chain (_wallet_cc_oracle), so a green row certifies
     batch-fold ≡ full recompute on real fixture data, not just the
     unit-test graphs (tests/test_chain.py)."""
-    li = table(spark, sf_dir, "lineitem")
-    mins = li.groupBy("l_orderkey").agg(F.min("l_partkey").alias("src"))
-    edges = (
-        li.join(mins, "l_orderkey")
-        .select("l_orderkey", "src", F.col("l_partkey").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-    )
+    edges = _star_edges(spark, sf_dir)
     labels: DataFrame | None = None
     for k in range(3):
         batch = edges.where(
@@ -366,46 +348,49 @@ def wallet_ids_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PAIRS = SessionMemo(8, release=lambda v: release_checkpoints([v[0]]))
 
 
-def _expand_scope(spark: SparkSession, sf_dir: str | None = None):
-    """Scoped conf for EAGERLY materializing a per-order pair
-    expansion (r16 optimization round). AQE's byte-based partition
-    coalescing sees only the small grouped exchange feeding the
-    explode (~one array row per order, 5 MB at sf0.1) and packs the
-    CPU-quadratic pair expansion onto ~4 tasks with the rest of the
-    cluster idle (profiled: 3.2-4.2s single-digit-task stages on
-    triangle_count/ktruss/association shapes). Lowering the coalesce
-    floor from the 1 MB default spreads that stage across the
-    parallelism AQE already respects (`parallelismFirst` is on).
+def _order_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(l_orderkey, ps): each order's distinct parts, sorted — the one
+    basket build behind every co-purchase pair list. One shuffle keyed
+    on l_orderkey with map-side set dedup."""
+    return (
+        table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .groupBy("l_orderkey")
+        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
+    )
 
-    r17 (VERDICT r16 #3): the floor is DERIVED from the input size —
-    estimated grouped-exchange bytes (parquet footer rows x ~16 B/key)
-    divided by the session parallelism, clamped to [64 KB, 1 MB]. The
-    r16 constant 64 KB could over-spread a small shuffle into sub-ms
-    tasks at 32 cores (the driver measured triangle_count 0.57->0.74 s
-    while the 8-core run improved); the derived floor targets ~one
-    coalesced partition per core and degrades to the AQE DEFAULT
-    (1 MB) as the input grows — at scale the conf is literally the
-    default, a provable no-op. Interleaved 3x3 A/B at 32 cores
-    (OPTIMIZATION_r17.md): 64k / derived / off are within the noise
-    band at sf0.1; the derived form is kept for the scale-adaptive
-    shape, not a local win."""
-    from pyarrow import ArrowInvalid
 
-    from ..plans.confs import scoped_confs
-    from ..plans.fallback import warn_once
+def _basket_pairs(baskets: DataFrame) -> DataFrame:
+    """(a, b) with a < b, one row per (basket, pair of its parts): the
+    one co-purchase pair expansion. Each sorted basket emits its C(k,2)
+    pairs inside a vectorized higher-order function, not as a join
+    probe, so a pair's row count is its number of orders (the support
+    the weighted consumers count) and `.distinct()` gives the pair
+    list."""
+    return baskets.select(
+        F.explode(
+            F.expr(
+                "flatten(transform(ps, (x, i) ->"
+                " transform(slice(ps, i + 2, size(ps) - i - 1),"
+                " y -> struct(x as a, y as b))))"
+            )
+        ).alias("p")
+    ).select("p.a", "p.b")
 
-    floor = 64 * 1024
-    if sf_dir is not None:
-        try:
-            est_bytes = parquet_num_rows(sf_dir, "lineitem") * 16
-            par = max(1, spark.sparkContext.defaultParallelism)
-            floor = max(64 * 1024, min(1024 * 1024, est_bytes // par))
-        except (OSError, ArrowInvalid) as e:
-            # advisory only: an unreadable footer keeps the 64 KB floor
-            warn_once("_expand_scope", f"lineitem footer unreadable ({e}); floor 64 KB")
-    return scoped_confs(
-        spark,
-        {"spark.sql.adaptive.coalescePartitions.minPartitionSize": str(floor)},
+
+def _star_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(l_orderkey, src, dst): the one star contraction of the
+    co-purchase graph — every part of an order links to the order's MIN
+    part (src < dst), one groupBy + one equi-join instead of the k²
+    pairs, with the same connectivity. Not deduplicated: a part listed
+    twice in an order yields two rows. Consumers that select only
+    src/dst get the plan without l_orderkey (Catalyst prunes it)."""
+    li = table(spark, sf_dir, "lineitem")
+    mins = li.groupBy("l_orderkey").agg(F.min("l_partkey").alias("src"))
+    return (
+        li.join(mins, "l_orderkey")
+        .select("l_orderkey", "src", F.col("l_partkey").alias("dst"))
+        .where(F.col("src") != F.col("dst"))
     )
 
 
@@ -460,11 +445,11 @@ def _with_dist(levels: list[DataFrame]) -> DataFrame:
     )
 
 
-def _pair_nodes(pairs: DataFrame, name: str = "n", distinct: bool = True) -> DataFrame:
-    """Node mentions (optionally distinct) of the pair list in ONE pass
-    (same rationale as _sym_edges; the per-node mention count is the
-    symmetric degree)."""
-    out = pairs.select(F.explode(F.array("a", "b")).alias(name))
+def _pair_nodes(pairs: DataFrame, distinct: bool = True) -> DataFrame:
+    """Node mentions `n` (optionally distinct) of the pair list in ONE
+    pass (same rationale as _sym_edges; the per-node mention count is
+    the symmetric degree)."""
+    out = pairs.select(F.explode(F.array("a", "b")).alias("n"))
     return out.distinct() if distinct else out
 
 
@@ -473,48 +458,24 @@ def _copurchase_pairs(
 ) -> "tuple[DataFrame, int | None]":
     """Canonical (a<b) distinct co-purchase edges, checkpointed.
 
-    Built by per-order combination expansion — groupBy(order) →
-    collect_set → explode ordered pairs — instead of the lineitem
-    self-join: one shuffle keyed on l_orderkey with map-side set dedup,
-    and the quadratic per-order pair expansion happens inside a
-    vectorized higher-order function, not as a join probe (measured
-    1.5× faster end-to-end at sf0.1 than the self-join form; same
-    edges). Orders bound the per-group fanout (max ~7 parts/order in
-    TPC-H-shaped data), so no single task inflates.
+    Built by per-order combination expansion (_order_baskets →
+    _basket_pairs → distinct) instead of the lineitem self-join
+    (measured 1.5× faster end-to-end at sf0.1; same edges). Orders
+    bound the per-group fanout (max ~7 parts/order in TPC-H-shaped
+    data), so no single task inflates.
 
     Returns (pairs, edge_count); edge_count is None when
-    checkpoint=False. The checkpoint is lazy and the count action
-    materializes it, so callers get the broadcast-gate count and the
-    materialization in ONE driver-visible job."""
-    per_order = (
-        table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-    )
-    pairs = (
-        per_order.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) ->"
-                    " transform(slice(ps, i + 2, size(ps) - i - 1),"
-                    " y -> struct(x as a, y as b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.a", "p.b")
-        .distinct()
-    )
+    checkpoint=False. The checkpoint is eager and the edge count is a
+    separate job over its blocks: an observe() count would drop the
+    preserved statistics that unhinted consumers plan with."""
+    pairs = _basket_pairs(_order_baskets(spark, sf_dir)).distinct()
     if checkpoint:
         key = _PAIRS.key(spark, sf_dir, ("lineitem",))
         hit = _PAIRS.get(key)
         if hit is not None:
             return hit
-        # reused by adjacency + both probes in the callers; the eager
-        # materialization runs under _expand_scope so the quadratic
-        # explode is not packed onto a handful of tasks (see its doc)
-        with _expand_scope(spark, sf_dir):
-            pairs = pairs.localCheckpoint(eager=True)
+        # reused by adjacency + both probes in the callers
+        pairs = pairs.localCheckpoint(eager=True)
         return _PAIRS.put(key, (pairs, pairs.count()))
     return pairs, None
 
@@ -622,9 +583,7 @@ def triangle_count(
     FROM deg d LEFT JOIN closed c ON c.u = d.u
     """,
 )
-def clustering_coefficient(
-    spark: SparkSession, sf_dir: str, broadcast_edges_max: int | None = None
-) -> DataFrame:
+def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G8 companion: local clustering coefficient for a seed set (the
     p_size=50 parts, same seeds as bfs_distance) on the part
     co-purchase graph — closed-wedge fraction per node, the standard
@@ -658,7 +617,7 @@ def clustering_coefficient(
         F.count(F.lit(1)).alias("degree"),
     )
     fwd = pairs.groupBy("u").agg(F.array_sort(F.collect_list("v")).alias("fwd"))
-    hint = broadcast_hint(spark, n_edges, pairs.schema, broadcast_edges_max)
+    hint = broadcast_hint(spark, n_edges, pairs.schema)
     closed = (
         nb_edges.join(nb_arr.select("u", "nbu"), "u")
         .join(
@@ -1044,7 +1003,6 @@ def pagerank_ranks(
     out = pregel(
         vertices,
         sym,
-        initial_msg=None,
         send_msg=lambda s, d: s["rank"] / s["deg"],
         agg_msg=F.sum,
         vprog=lambda attr, msg: F.struct(
@@ -1088,9 +1046,7 @@ def pagerank_ranks(
     LEFT JOIN inter i ON i.a = p.a AND i.b = p.b
     """,
 )
-def neighbor_jaccard(
-    spark: SparkSession, sf_dir: str, broadcast_edges_max: int | None = None
-) -> DataFrame:
+def neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G8 companion: per-edge neighborhood Jaccard similarity on the
     part co-purchase graph — |N(a) ∩ N(b)| / |N(a) ∪ N(b)| for every
     canonical edge (a, b), the standard link-strength / link-prediction
@@ -1117,7 +1073,7 @@ def neighbor_jaccard(
         F.count(F.lit(1)).alias("d"),
     )
     # the full adjacency holds both orientations: 2·|pairs| cells
-    hint = broadcast_hint(spark, 2 * n_edges, pairs.schema, broadcast_edges_max)
+    hint = broadcast_hint(spark, 2 * n_edges, pairs.schema)
     if hint is not F.broadcast:
         adj = adj.localCheckpoint(eager=True)
     adj_a = adj.select(F.col("a").alias("ja"), F.col("nb").alias("nba"), F.col("d").alias("da"))
@@ -1268,31 +1224,14 @@ def _copurchase_pairs_support(
     high-confidence projection (same thresholding the copurchase_weights
     key exposes as a weight column). Same combination-expansion build as
     _copurchase_pairs; the support count replaces the distinct()."""
-    per_order = (
-        table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-    )
     pairs = (
-        per_order.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) ->"
-                    " transform(slice(ps, i + 2, size(ps) - i - 1),"
-                    " y -> struct(x as a, y as b))))"
-                )
-            ).alias("p")
-        )
-        .groupBy("p.a", "p.b")
+        _basket_pairs(_order_baskets(spark, sf_dir))
+        .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("support"))
         .where(F.col("support") >= min_support)
         .select("a", "b")
     )
-    # eager materialization under _expand_scope: spread the quadratic
-    # pair explode across the parallelism (see _expand_scope)
-    with _expand_scope(spark, sf_dir):
-        pairs = pairs.localCheckpoint(eager=True)
+    pairs = pairs.localCheckpoint(eager=True)
     return pairs, pairs.count()
 
 
@@ -1419,21 +1358,7 @@ def copurchase_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct — each order emits each pair once, so a plain count per
     pair is the distinct-order weight with no count-distinct state.
     """
-    per_order = (
-        table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-    )
-    pairs = per_order.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ps, (x, i) ->"
-                " transform(slice(ps, i + 2, size(ps) - i - 1),"
-                " y -> struct(x as a, y as b))))"
-            )
-        ).alias("p")
-    ).select("p.a", "p.b")
+    pairs = _basket_pairs(_order_baskets(spark, sf_dir))
     return pairs.groupBy("a", "b").agg(F.count(F.lit(1)).cast("long").alias("w"))
 
 
@@ -1503,23 +1428,8 @@ def sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpointed once — every round re-reads the same
     materialized partitions.
     """
-    per_order = (
-        table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-    )
     weighted = (
-        per_order.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) ->"
-                    " transform(slice(ps, i + 2, size(ps) - i - 1),"
-                    " y -> struct(x as a, y as b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.a", "p.b")
+        _basket_pairs(_order_baskets(spark, sf_dir))
         .groupBy("a", "b")
         .agg(F.when(F.count(F.lit(1)) >= 2, F.lit(1)).otherwise(F.lit(3)).alias("cost"))
     )
@@ -1530,10 +1440,7 @@ def sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b").alias("src"), F.col("a").alias("dst"), "cost"
         )
     )
-    # eager materialization under _expand_scope: the quadratic pair
-    # explode otherwise lands on ~4 AQE-coalesced tasks (see its doc)
-    with _expand_scope(spark, sf_dir):
-        sym = sym.localCheckpoint(eager=True)
+    sym = sym.localCheckpoint(eager=True)
     # the broadcast side is the node-sized frontier table, so gate on
     # the actual node count (sym is symmetric: src spans every node) —
     # one count on the checkpointed edge partitions
@@ -1858,12 +1765,9 @@ def _lpa_labels(spark: SparkSession, sf_dir: str):
     symmetrization (derived from the checkpoint — no second lineitem
     scan), the converged _LPA_ROUNDS label table, and the count-gated
     broadcast hint."""
-    li = table(spark, sf_dir, "lineitem")
-    mins = li.groupBy("l_orderkey").agg(F.min("l_partkey").alias("src"))
     raw_ck = (
-        li.join(mins, "l_orderkey")
-        .select("src", F.col("l_partkey").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
+        _star_edges(spark, sf_dir)
+        .select("src", "dst")
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -1951,15 +1855,9 @@ def degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     string primitives with identical semantics in both engines, no
     float log boundary risk. Two aggregates, both map-side
     combinable; output is O(log maxdeg) rows."""
-    li = table(spark, sf_dir, "lineitem")
-    mins = li.groupBy("l_orderkey").agg(F.min("l_partkey").alias("src"))
-    raw = (
-        li.join(mins, "l_orderkey")
-        .select("src", F.col("l_partkey").alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-    )
+    raw = _star_edges(spark, sf_dir).select(F.col("src").alias("a"), F.col("dst").alias("b"))
     # canonical (src is the order's smallest part) but not distinct
-    sym = _sym_edges(raw.toDF("a", "b")).distinct()
+    sym = _sym_edges(raw).distinct()
     deg = sym.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
     bucket = (F.length(F.bin("deg")) - 1).cast("long").alias("bucket")
     return deg.groupBy(bucket).agg(
@@ -2208,33 +2106,26 @@ def association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: pair candidates come from the per-order combination
     expansion (each order's distinct sorted part set emits its C(k,2)
-    pairs map-side — the _copurchase_pairs build; hub orders are
+    pairs map-side — _basket_pairs; hub orders are
     bounded by basket size, not catalog size), pair and item supports
     are map-side-combinable aggregates, and the two unigram probes are
     broadcast-joined against the O(#parts) count table. The support
     floor prunes the rule set before the probes."""
     # r17 (VERDICT r16 #6): below the gate, the grouped basket arrays
-    # are eagerly materialized ONCE under _expand_scope and everything
-    # (pair supports, item supports, order count) derives from that
-    # checkpoint — the previous form scanned lineitem THREE times (the
-    # distinct, ci, per_order subtrees; profiled: 3 scan stages at
-    # sf0.1) and let AQE pack the quadratic pair explode onto ~4 tasks
-    # (1 grouped exchange ≈ 5 MB). collect_set dedups within the order,
+    # are eagerly materialized ONCE and everything (pair supports, item
+    # supports, order count) derives from that checkpoint — the
+    # previous form scanned lineitem THREE times (the distinct, ci,
+    # per_order subtrees; profiled: 3 scan stages at sf0.1).
+    # collect_set dedups within the order,
     # so the separate distinct pass is redundant; ci(p) = #orders whose
     # basket contains p = explode of the distinct arrays; n_orders =
     # basket count. Above the gate the original streaming form runs
     # unchanged — at 100 TB an O(E) localCheckpoint is a memory-budget
     # call the operator should not make implicitly.
     n_li = parquet_num_rows(sf_dir, "lineitem")
-    per_order = (
-        table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-    )
+    per_order = _order_baskets(spark, sf_dir)
     if n_li <= 50_000_000:
-        with _expand_scope(spark, sf_dir):
-            per_order = per_order.localCheckpoint(eager=True)
+        per_order = per_order.localCheckpoint(eager=True)
         n = per_order.agg(F.count(F.lit(1)).cast("long").alias("n_orders"))
         ci = (
             per_order.select(F.explode("ps").alias("l_partkey"))
@@ -2252,16 +2143,8 @@ def association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("c")
         )
     pairs = (
-        per_order.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) ->"
-                    " transform(slice(ps, i + 2, size(ps) - i - 1),"
-                    " y -> struct(x as a, y as b))))"
-                )
-            ).alias("p")
-        )
-        .groupBy("p.a", "p.b")
+        _basket_pairs(per_order)
+        .groupBy("a", "b")
         .agg(F.count(F.lit(1)).cast("long").alias("c_ab"))
         .where(F.col("c_ab") >= 2)
     )

@@ -60,14 +60,6 @@ def ingest_stream(
     return holder["tables"]
 
 
-_MERGE_KEYS = {
-    "blocks": ["hash"],
-    "transactions": ["tx_hash"],
-    "outputs": ["output_id"],
-    "inputs": ["spending_tx_hash", "spent_output_id"],
-}
-
-
 def _with_height(tables: Tables) -> Tables:
     """Attach the owning block's height to every child row so all four
     tables share the reorg partition key."""
@@ -147,7 +139,7 @@ def apply_versioned_batch(spark: SparkSession, stores: dict, batch_df: DataFrame
             inc = inc.where(F.col("_height") < fork)
         if f"{tag}/append" not in applied:
             cur = store.read(spark)
-            fresh = inc.join(cur.select(_MERGE_KEYS[name]), _MERGE_KEYS[name], "left_anti")
+            fresh = inc.join(cur.select(schema.KEYS[name]), schema.KEYS[name], "left_anti")
             if fresh.limit(1).count() > 0:
                 store.append(fresh, tag=f"{tag}/append")
 
@@ -178,7 +170,7 @@ def ingest_stream_versioned(
     """
     from ..sources.snapshots import SnapshotStore
 
-    stores = {name: SnapshotStore(f"{root}/{name}") for name in _MERGE_KEYS}
+    stores = {name: SnapshotStore(f"{root}/{name}") for name in schema.KEYS}
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         apply_versioned_batch(spark, stores, batch_df, f"batch-{batch_id}")

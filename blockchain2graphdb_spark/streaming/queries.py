@@ -584,7 +584,8 @@ def stream_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
     return (
-        spark.read.option("basePath", out).parquet(f"{out}/batch=*")
+        # the batch=<id> dirs are partitions of `out`
+        spark.read.parquet(out)
         .groupBy("user_id")
         .agg(
             F.sum("n_events").cast("long").alias("n_events"),

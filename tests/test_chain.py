@@ -252,9 +252,13 @@ def test_reorg_rollback_equals_truncation(spark):
 
 
 def test_insert_if_absent_idempotent(tables):
-    blocks = tables["blocks"]
-    once = insert_if_absent(blocks, blocks, "hash")
-    assert once.count() == blocks.count()
+    for name, keys in [
+        ("blocks", ["hash"]),
+        ("inputs", ["spending_tx_hash", "spent_output_id"]),
+    ]:
+        rows = tables[name]
+        once = insert_if_absent(rows, rows, keys)
+        assert once.count() == rows.count()
 
 
 def test_resume_applies_reorg(spark):

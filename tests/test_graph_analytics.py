@@ -165,6 +165,58 @@ def test_bfs_levels_matches_python_bfs(spark):
     assert got == want
 
 
+def _order_parts(spark, sf_dir):
+    """Each order's part list (duplicates kept), read as plain rows."""
+    from collections import defaultdict
+
+    from blockchain2graphdb_spark.catalog import table
+
+    parts = defaultdict(list)
+    for r in table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").collect():
+        parts[r["l_orderkey"]].append(r["l_partkey"])
+    return parts
+
+
+def test_basket_pairs_match_per_order_combinations(spark, sf_dir):
+    """`_basket_pairs(_order_baskets(...))` is, as a multiset, the
+    2-combinations of each order's sorted distinct part set."""
+    from collections import Counter
+    from itertools import combinations
+
+    from blockchain2graphdb_spark.operators.graphops import _basket_pairs, _order_baskets
+
+    want = Counter(
+        pair
+        for ps in _order_parts(spark, sf_dir).values()
+        for pair in combinations(sorted(set(ps)), 2)
+    )
+    got = Counter(
+        (r["a"], r["b"]) for r in _basket_pairs(_order_baskets(spark, sf_dir)).collect()
+    )
+    assert sum(want.values()) > 0
+    assert got == want
+
+
+def test_star_edges_match_per_order_min_part(spark, sf_dir):
+    """`_star_edges` links every part of an order to the order's min
+    part, one row per lineitem (duplicates included), no self-links."""
+    from collections import Counter
+
+    from blockchain2graphdb_spark.operators.graphops import _star_edges
+
+    want = Counter(
+        (order, min(ps), p)
+        for order, ps in _order_parts(spark, sf_dir).items()
+        for p in ps
+        if p != min(ps)
+    )
+    got = Counter(
+        (r["l_orderkey"], r["src"], r["dst"]) for r in _star_edges(spark, sf_dir).collect()
+    )
+    assert sum(want.values()) > 0
+    assert got == want
+
+
 def test_bfs_distance_levels(spark, sf_dir):
     from blockchain2graphdb_spark import registry
 

@@ -44,7 +44,6 @@ def test_pregel_generic_reachability(spark):
     out = pregel(
         vertices,
         edges,
-        initial_msg=None,
         send_msg=lambda s, d: F.when(s & ~d, F.lit(True)),
         agg_msg=F.max,
         vprog=lambda attr, msg: attr | msg,

@@ -166,7 +166,6 @@ def test_pregel_broadcast_switch_equivalence(spark):
         out = pregel(
             vertices,
             edges,
-            initial_msg=None,
             send_msg=lambda s, d: F.when(s.isNotNull() & d.isNull(), s + 1),
             agg_msg=F.max,
             vprog=lambda attr, msg: F.coalesce(attr, msg),

@@ -185,49 +185,3 @@ def test_register_views_heals_dropped_view(spark):
     spark.catalog.dropTempView(TABLES[0])
     register_views(spark, SF_DIR)  # must repair, not skip
     assert spark.catalog.tableExists(TABLES[0])
-
-
-# --------------------------------------------------- expansion floor gate
-
-
-def test_expand_scope_floor_derivation(spark):
-    """The coalesce floor must track input bytes / parallelism and hit
-    the AQE default (no-op) as the input grows."""
-    from blockchain2graphdb_spark.operators.graphops import _expand_scope
-
-    par = spark.sparkContext.defaultParallelism
-    with _expand_scope(spark, SF_DIR):
-        v = spark.conf.get(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-        )
-    from blockchain2graphdb_spark.catalog import parquet_num_rows
-
-    expect = max(64 * 1024, min(1024 * 1024, parquet_num_rows(SF_DIR, "lineitem") * 16 // par))
-    assert int(v) == expect
-    # a 6M-row (sf1-sized) input must derive exactly the AQE default —
-    # the provable-no-op-at-scale property the round rules require
-    assert max(64 * 1024, min(1024 * 1024, 6_000_000 * 16 // par)) == 1024 * 1024
-
-
-def test_expand_scope_truncated_footer_keeps_floor(spark, tmp_path, monkeypatch):
-    """The floor is advisory: an unreadable lineitem footer keeps the
-    64 KB floor and warns once instead of failing the query."""
-    import os
-    import warnings
-
-    from blockchain2graphdb_spark.operators.graphops import _expand_scope
-    from blockchain2graphdb_spark.plans import fallback
-
-    with open(os.path.join(SF_DIR, "lineitem.parquet"), "rb") as f:
-        body = f.read()
-    (tmp_path / "lineitem.parquet").write_bytes(body[: len(body) - 100])
-    monkeypatch.setattr(fallback, "_WARNED", set())
-    with warnings.catch_warnings(record=True) as seen:
-        warnings.simplefilter("always")
-        for _ in range(2):
-            with _expand_scope(spark, str(tmp_path)):
-                v = spark.conf.get(
-                    "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-                )
-            assert int(v) == 64 * 1024
-    assert len([w for w in seen if str(w.message).startswith("_expand_scope:")]) == 1

@@ -274,11 +274,9 @@ def test_versioned_ingest_reorg_crash_window_recovers(spark, tmp_path):
     complete the batch — per-commit idempotence tags, with the fork
     height recorded in the reorg tag so the replay can't recompute a
     different fork from the half-mutated state."""
+    from blockchain2graphdb_spark.chain.schema import KEYS
     from blockchain2graphdb_spark.sources.snapshots import SnapshotStore
-    from blockchain2graphdb_spark.streaming.ingest import (
-        _MERGE_KEYS,
-        apply_versioned_batch,
-    )
+    from blockchain2graphdb_spark.streaming.ingest import apply_versioned_batch
 
     original = fixtures.generate(n_blocks=12, seed=9)
     variant = fixtures.reorg_variant(n_blocks=12, seed=9, k=3)
@@ -286,7 +284,7 @@ def test_versioned_ingest_reorg_crash_window_recovers(spark, tmp_path):
     rows1 = _decoded_rows(variant)
 
     root = str(tmp_path / "stores")
-    stores = {n: SnapshotStore(f"{root}/{n}") for n in _MERGE_KEYS}
+    stores = {n: SnapshotStore(f"{root}/{n}") for n in KEYS}
     apply_versioned_batch(
         spark, stores, spark.createDataFrame(rows0, schema=DECODED_SCHEMA), "batch-0"
     )

@@ -11,11 +11,16 @@ With no keys, captures the full bench set (HEADLINE + SECONDARY).
 Plans are captured at sf0.001 (plan shape is scale-independent; the
 iterative operators execute their loop eagerly while building, so the
 captured plan is the final round's — the per-round shape).
+
+Expression ids (`#123`, `#123L`) and `plan_id=N` are stripped: they
+depend on how many plans the session built before, so only with them
+gone do `before` and `after` files of the same plan diff clean.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -25,6 +30,7 @@ from blockchain2graphdb_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 PLANS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans")
+_SESSION_IDS = re.compile(r"#\d+L?|plan_id=\d+")
 
 
 def main() -> None:
@@ -40,9 +46,9 @@ def main() -> None:
     spark = get_spark(f"plans-{rnd}")
     for k in keys:
         df = specs[k].builder(spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
+        plan = _SESSION_IDS.sub("", df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
-        )
+        ))
         with open(os.path.join(out, f"{k}_{tag}.txt"), "w") as f:
             f.write(plan)
         print(f"wrote {k}_{tag}.txt ({plan.count('Exchange')} Exchange lines)")
