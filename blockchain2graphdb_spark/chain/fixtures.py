@@ -45,11 +45,14 @@ class Chain:
     utxo: dict = field(default_factory=dict)  # output_id -> (value, address)
 
     def to_spark(self, spark: SparkSession) -> dict[str, DataFrame]:
+        """The four tables; each child row gains its block's height."""
+        block_h = {b[0]: b[2] for b in self.blocks}
+        tx_h = {t[0]: block_h[t[1]] for t in self.transactions}
         frames = {
             "blocks": (self.blocks, schema.BLOCKS),
-            "transactions": (self.transactions, schema.TRANSACTIONS),
-            "outputs": (self.outputs, schema.OUTPUTS),
-            "inputs": (self.inputs, schema.INPUTS),
+            "transactions": ([(*t, tx_h[t[0]]) for t in self.transactions], schema.TRANSACTIONS),
+            "outputs": ([(*o, tx_h[o[0]]) for o in self.outputs], schema.OUTPUTS),
+            "inputs": ([(*i, tx_h[i[0]]) for i in self.inputs], schema.INPUTS),
         }
         out = {}
         for name, (rows, sch) in frames.items():

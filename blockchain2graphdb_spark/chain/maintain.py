@@ -1,15 +1,21 @@
 """Maintenance semantics over the normalized chain tables (SURVEY.md
-§2.9 M1–M6, §3.3): insert-if-absent, cascading delete, reorg rollback,
-resume/divergence detection — each a set operation over immutable
-snapshots, replacing the reference's per-vertex Gremlin mutations with
-idempotent, partition-scoped recomputation.
+§2.9 M1–M6, §3.3): insert-if-absent, reorg rollback, resume/divergence
+detection — each a set operation over immutable snapshots, replacing the
+reference's per-vertex Gremlin mutations with idempotent,
+partition-scoped recomputation.
 
 The load-bearing property (tested in tests/test_chain_invariants.py):
     ingest(chain) then rollback(k)  ≡  ingest(chain[:-k])
 The reference needs 150 lines of hand-written decrement logic for this
-(deleteBlock→deleteTransaction→deleteOutput, B:632–777); here dependent
-rows are filtered by anti-join and every derived statistic is re-derived
-from survivors, so the invariant holds by construction.
+(deleteBlock→deleteTransaction→deleteOutput, B:632–777). Here every row
+carries its block's height from the moment it is decoded, so a rollback
+drops the rows at or above the fork height in each table with no join,
+and every derived statistic is re-derived from survivors.
+
+Why the filter drops exactly a block and its dependents: the held state
+is one chain, so a height names one held block, and `insert_if_absent`
+keeps the first-inserted row of a key — a tx re-sent in a later block
+keeps the height (and `block_hash`) of its first block.
 """
 
 from __future__ import annotations
@@ -28,41 +34,17 @@ def insert_if_absent(existing: DataFrame, incoming: DataFrame, keys: list[str]) 
     return existing.unionByName(fresh)
 
 
-def cascade_delete(tables: Tables, block_hashes: DataFrame) -> Tables:
-    """M4 (B:759–777 → B:713–756 → B:632–710): drop blocks and all
-    dependents. block_hashes: single-column 'hash' DataFrame.
-
-    Un-spending the deleted branch's inputs (B:568–629 updateOutput) is
-    implicit: OutputIsUsed is derived from the inputs table, so removing
-    the spending rows rolls the flag back with zero code.
-    """
-    blocks = tables["blocks"].join(block_hashes, "hash", "left_anti").select(
-        tables["blocks"].columns
-    )
-    txs = tables["transactions"].join(
-        block_hashes.withColumnRenamed("hash", "block_hash"), "block_hash", "left_anti"
-    ).select(tables["transactions"].columns)  # USING joins front the key; restore order
-    surviving_tx = txs.select("tx_hash")
-    outputs = tables["outputs"].join(surviving_tx, "tx_hash", "left_semi").select(
-        tables["outputs"].columns
-    )
-    inputs = tables["inputs"].join(
-        surviving_tx.withColumnRenamed("tx_hash", "spending_tx_hash"),
-        "spending_tx_hash",
-        "left_semi",
-    ).select(tables["inputs"].columns)
-    return {"blocks": blocks, "transactions": txs, "outputs": outputs, "inputs": inputs}
-
-
 def reorg_rollback(tables: Tables, fork_height: int) -> Tables:
-    """M5 (B:91–102, B:523–530): pop every block with height >= fork.
+    """M5 (B:91–102, B:523–530): pop every block with height >= fork,
+    with its transactions, outputs and inputs.
 
-    At scale this is partition pruning — blocks are partitioned by height
-    range, so the rollback touches only the affected partitions and the
-    derived tables recompute from the survivors.
+    Every row carries its block's height, so this is one `height < fork`
+    filter per table — partition pruning at scale, where the tables are
+    partitioned by height range. Un-spending the popped inputs (B:568–629
+    updateOutput) is implicit: OutputIsUsed is derived from the inputs
+    table, so removing the spending rows rolls the flag back.
     """
-    doomed = tables["blocks"].where(F.col("height") >= fork_height).select("hash")
-    return cascade_delete(tables, doomed)
+    return {name: df.where(F.col("height") < fork_height) for name, df in tables.items()}
 
 
 def find_fork_height(stored_blocks: DataFrame, incoming_blocks: DataFrame) -> int | None:

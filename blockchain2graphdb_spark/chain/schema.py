@@ -9,6 +9,11 @@ Edge tables of the reference collapse into FK columns (§1.6):
 `chain` = blocks.prev_hash, `has` = transactions.block_hash,
 `output` = outputs.tx_hash, `locked` = outputs.address,
 `input` = inputs(spending_tx_hash, spent_output_id).
+
+Every table carries its block's `height`, set once where the row is born
+(`sources/blockfile.normalize`, `chain/fixtures.Chain.to_spark`), so a
+reorg rollback is a `height < fork` filter on each table and no consumer
+joins back to `blocks` for a height.
 """
 
 from __future__ import annotations
@@ -32,6 +37,7 @@ TRANSACTIONS = T.StructType(
         T.StructField("tx_index", T.IntegerType(), False),  # position within block
         T.StructField("tx_date", T.TimestampType(), False),  # inherits block date B:1010
         T.StructField("is_coinbase", T.BooleanType(), False),  # B:786
+        T.StructField("height", T.IntegerType(), False),  # its block's height
     ]
 )
 
@@ -42,6 +48,7 @@ OUTPUTS = T.StructType(
         T.StructField("output_id", T.StringType(), False),  # tx_hash:index (B:988)
         T.StructField("value", T.LongType(), False),  # satoshis, OutputBalance T:151
         T.StructField("address", T.StringType(), False),  # locked edge T:111
+        T.StructField("height", T.IntegerType(), False),  # its tx's block height
     ]
 )
 
@@ -49,6 +56,7 @@ INPUTS = T.StructType(
     [
         T.StructField("spending_tx_hash", T.StringType(), False),
         T.StructField("spent_output_id", T.StringType(), False),  # input edge T:109
+        T.StructField("height", T.IntegerType(), False),  # spending tx's block height
     ]
 )
 

@@ -976,7 +976,7 @@ def pagerank_ranks(
     attr so there is no per-round seed join."""
     from ..graph.pregel import pregel
 
-    sym = local_checkpoint(_sym_edges(pairs.toDF("a", "b")), reset_stats=False)
+    sym = _sym_edges(pairs.toDF("a", "b")).localCheckpoint(eager=True)
     deg = sym.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("deg")
     )

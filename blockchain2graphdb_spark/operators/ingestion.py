@@ -155,24 +155,13 @@ def utxo_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle carries only (output_id) keys."""
     root = _build_blk_files_once()
     t = normalize(read_blocks(spark, f"{root}/blk*.dat"))
-    heights = t["blocks"].select(F.col("hash").alias("block_hash"), "height")
-    tx_h = (
-        t["transactions"]
-        .join(heights, "block_hash")
-        .select("tx_hash", "height")
-    )
     created = (
         t["outputs"]
-        .join(tx_h, "tx_hash")
         .where(F.col("height") <= _UTXO_HEIGHT)
         .select("output_id", "value", "address")
     )
     spent = (
         t["inputs"]
-        .join(
-            tx_h.withColumnRenamed("tx_hash", "spending_tx_hash"),
-            "spending_tx_hash",
-        )
         .where(F.col("height") <= _UTXO_HEIGHT)
         .select(F.col("spent_output_id").alias("output_id"))
     )
@@ -474,7 +463,7 @@ def utxo_age_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric every chain-analytics stack derives next to balances
     (B:784's balance family): live outputs at height H bucketed by
     coin age H − creation_height, per band count + value. Uses the
-    same decode → height join → anti-join UTXO set as
+    same decode → height filter → anti-join UTXO set as
     `utxo_balances`; the extra work is ONE map-side CASE band and one
     O(#bands) aggregate, so the expensive part is shared and the
     derivation stays set algebra (the reference would hand-maintain
@@ -486,22 +475,13 @@ def utxo_age_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join; the band rollup is map-side combinable."""
     root = _build_blk_files_once()
     t = normalize(read_blocks(spark, f"{root}/blk*.dat"))
-    heights = t["blocks"].select(F.col("hash").alias("block_hash"), "height")
-    tx_h = (
-        t["transactions"].join(heights, "block_hash").select("tx_hash", "height")
-    )
     created = (
         t["outputs"]
-        .join(tx_h, "tx_hash")
         .where(F.col("height") <= _UTXO_HEIGHT)
         .select("output_id", "value", "height")
     )
     spent = (
         t["inputs"]
-        .join(
-            tx_h.withColumnRenamed("tx_hash", "spending_tx_hash"),
-            "spending_tx_hash",
-        )
         .where(F.col("height") <= _UTXO_HEIGHT)
         .select(F.col("spent_output_id").alias("output_id"))
     )

@@ -34,8 +34,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..plans.iterate import local_checkpoint
-
 MAGIC = b"BLK1"
 UNDECODABLE = "<undecodable>"  # C11 sentinel (B:1067-1074)
 
@@ -247,21 +245,22 @@ def read_blocks(spark: SparkSession, glob: str) -> DataFrame:
                     pos += 8 + length
             yield pd.DataFrame(rows, columns=[f.name for f in DECODED_SCHEMA.fields])
 
-    return local_checkpoint(
-        raw.select("content").mapInPandas(decode, schema=DECODED_SCHEMA),
-        reset_stats=False,
+    return raw.select("content").mapInPandas(decode, schema=DECODED_SCHEMA).localCheckpoint(
+        eager=True
     )
 
 
 def normalize(decoded: DataFrame) -> dict[str, DataFrame]:
     """Nested block rows → the four normalized tables (§1.6), columnar
-    explodes only."""
+    explodes only. Each tx, output and input row carries its block's
+    `height` from the block row it is exploded out of."""
     blocks = decoded.select(
         "hash", "prev_hash", "height", "block_date", "coinbase_balance"
     )
     tx = decoded.select(
         F.col("hash").alias("block_hash"),
         F.col("block_date").alias("tx_date"),
+        "height",
         F.explode("txs").alias("t"),
     )
     transactions = tx.select(
@@ -270,19 +269,22 @@ def normalize(decoded: DataFrame) -> dict[str, DataFrame]:
         F.col("t.tx_index").alias("tx_index"),
         "tx_date",
         F.col("t.is_coinbase").alias("is_coinbase"),
+        "height",
     )
     outputs = tx.select(
-        F.col("t.tx_hash").alias("tx_hash"), F.explode("t.outputs").alias("o")
+        F.col("t.tx_hash").alias("tx_hash"), "height", F.explode("t.outputs").alias("o")
     ).select(
         "tx_hash",
         F.col("o.output_index").alias("output_index"),
         F.concat_ws(":", "tx_hash", "o.output_index").alias("output_id"),
         F.col("o.value").alias("value"),
         F.col("o.address").alias("address"),
+        "height",
     )
     inputs = tx.select(
         F.col("t.tx_hash").alias("spending_tx_hash"),
         F.explode("t.spent_output_ids").alias("spent_output_id"),
+        "height",
     )
     return {
         "blocks": blocks,

@@ -9,6 +9,9 @@ rolls back reorged heights before appending (M5+M6). Every batch's
 result is materialized (localCheckpoint) because batch DataFrames are
 only valid inside their micro-batch.
 
+Every normalized row carries its block's `height` (schema.py), so the
+versioned stores partition each table on that column directly.
+
 At scale the state lives in a Delta/Iceberg-style table and `resume`
 becomes a MERGE + replaceWhere partition overwrite of `height >= fork`;
 the control flow here is exactly that, minus the table format.
@@ -60,27 +63,6 @@ def ingest_stream(
     return holder["tables"]
 
 
-def _with_height(tables: Tables) -> Tables:
-    """Attach the owning block's height to every child row so all four
-    tables share the reorg partition key."""
-    from pyspark.sql import functions as F
-
-    h = tables["blocks"].select(
-        F.col("hash").alias("block_hash"), F.col("height").alias("_height")
-    )
-    tx_h = tables["transactions"].join(h, "block_hash")
-    tx_key = tx_h.select("tx_hash", "_height")
-    return {
-        "blocks": tables["blocks"].withColumn("_height", F.col("height")),
-        "transactions": tx_h,
-        "outputs": tables["outputs"].join(tx_key, "tx_hash"),
-        "inputs": tables["inputs"].join(
-            tx_key.withColumnRenamed("tx_hash", "spending_tx_hash"),
-            "spending_tx_hash",
-        ),
-    }
-
-
 def apply_versioned_batch(spark: SparkSession, stores: dict, batch_df: DataFrame, tag: str) -> None:
     """Fold one micro-batch of decoded blocks into the SnapshotStores.
 
@@ -95,7 +77,7 @@ def apply_versioned_batch(spark: SparkSession, stores: dict, batch_df: DataFrame
 
     from ..chain.maintain import find_fork_height
 
-    incoming = _with_height(normalize(batch_df))
+    incoming = normalize(batch_df)
     # a replayed batch may find the reorg half-applied across stores;
     # recomputing the fork from mutated state would then diverge, so the
     # fork height chosen on first delivery is recorded inside the reorg
@@ -118,25 +100,25 @@ def apply_versioned_batch(spark: SparkSession, stores: dict, batch_df: DataFrame
             # has no inputs): the manifest records the schema, so the
             # next batch's read() returns an empty frame
             if f"{tag}/init" not in applied:
-                store.write(inc, partition_col="_height", tag=f"{tag}/init")
+                store.write(inc, partition_col="height", tag=f"{tag}/init")
             continue
         if fork is not None:
             if f"{tag}/reorg:{fork}" not in applied:
                 # heights >= fork: stored partitions die, incoming replaces
                 doomed = [
-                    r["_height"]
+                    r["height"]
                     for r in store.read(spark)
-                    .where(F.col("_height") >= fork)
-                    .select("_height")
+                    .where(F.col("height") >= fork)
+                    .select("height")
                     .distinct()
                     .collect()
                 ]
                 store.overwrite_partitions(
-                    inc.where(F.col("_height") >= fork),
+                    inc.where(F.col("height") >= fork),
                     values=doomed,
                     tag=f"{tag}/reorg:{fork}",
                 )
-            inc = inc.where(F.col("_height") < fork)
+            inc = inc.where(F.col("height") < fork)
         if f"{tag}/append" not in applied:
             cur = store.read(spark)
             fresh = inc.join(cur.select(schema.KEYS[name]), schema.KEYS[name], "left_anti")

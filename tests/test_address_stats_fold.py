@@ -212,33 +212,33 @@ def test_fold_matches_reference_on_edge_rows(spark):
     - `orphan`: its only input spends an output that is not held, and it
       pays F alone: not a self-transfer."""
     txs = [
-        ("cb1", "b1", 0, _day(1), True),
-        ("cb2", "b1", 1, _day(1), True),
-        ("self", "b2", 0, _day(2), False),
-        ("mix", "b3", 0, _day(3), False),
-        ("spendghost", "b4", 0, _day(4), False),
-        ("orphan", "b4", 1, _day(4), False),
+        ("cb1", "b1", 0, _day(1), True, 1),
+        ("cb2", "b1", 1, _day(1), True, 1),
+        ("self", "b2", 0, _day(2), False, 2),
+        ("mix", "b3", 0, _day(3), False, 3),
+        ("spendghost", "b4", 0, _day(4), False, 4),
+        ("orphan", "b4", 1, _day(4), False, 4),
     ]
     outs = [
-        ("cb1", 0, "cb1:0", 100, "A"),
-        ("cb1", 1, "cb1:1", 50, "B"),
-        ("cb2", 0, "cb2:0", 70, "C"),
-        ("self", 0, "self:0", 60, "A"),
-        ("self", 1, "self:1", 40, "A"),
-        ("mix", 0, "mix:0", 30, "A"),
-        ("mix", 1, "mix:1", 80, "D"),
-        ("ghost", 0, "ghost:0", 5, "E"),
-        ("ghost", 1, "ghost:1", 7, "A"),
-        ("spendghost", 0, "spendghost:0", 5, "C"),
-        ("orphan", 0, "orphan:0", 1, "F"),
+        ("cb1", 0, "cb1:0", 100, "A", 1),
+        ("cb1", 1, "cb1:1", 50, "B", 1),
+        ("cb2", 0, "cb2:0", 70, "C", 1),
+        ("self", 0, "self:0", 60, "A", 2),
+        ("self", 1, "self:1", 40, "A", 2),
+        ("mix", 0, "mix:0", 30, "A", 3),
+        ("mix", 1, "mix:1", 80, "D", 3),
+        ("ghost", 0, "ghost:0", 5, "E", 3),
+        ("ghost", 1, "ghost:1", 7, "A", 3),
+        ("spendghost", 0, "spendghost:0", 5, "C", 4),
+        ("orphan", 0, "orphan:0", 1, "F", 4),
     ]
     ins = [
-        ("self", "cb1:0"),
-        ("mix", "cb1:1"),
-        ("mix", "self:0"),
-        ("mix", "missing:0"),
-        ("spendghost", "ghost:0"),
-        ("orphan", "missing:1"),
+        ("self", "cb1:0", 2),
+        ("mix", "cb1:1", 3),
+        ("mix", "self:0", 3),
+        ("mix", "missing:0", 3),
+        ("spendghost", "ghost:0", 4),
+        ("orphan", "missing:1", 4),
     ]
     tables = {
         "transactions": spark.createDataFrame(txs, schema.TRANSACTIONS),

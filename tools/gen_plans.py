@@ -2,7 +2,8 @@
 queries — scan pushdown, join strategies, aggregate/window/codegen
 structure — so plan quality is reviewable without rerunning .explain.
 
-Usage: python tools/gen_plans.py   (writes /root/repo/PLANS.md)
+Usage: python tools/gen_plans.py   (writes PLANS.md at the root of the
+checkout that holds this script)
 """
 
 from __future__ import annotations
@@ -11,7 +12,8 @@ import re
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from blockchain2graphdb_spark import registry
 from blockchain2graphdb_spark.session import get_spark
@@ -116,7 +118,7 @@ def main() -> None:
         # zero-padded r01–r99 scheme would put BENCH_r100.json before
         # BENCH_r99.json and silently pin a stale round (ADVICE r14).
         latest = max(
-            glob.glob("/root/repo/BENCH_r*.json"),
+            glob.glob(os.path.join(REPO, "BENCH_r*.json")),
             key=lambda p: int(_re.search(r"BENCH_r(\d+)\.json$", p).group(1)),
         )
         sec = json.load(open(latest)).get("secondary", {})
@@ -154,7 +156,7 @@ def main() -> None:
         )
         lines.append(f"- shuffles in plan: {n_exchange}")
         lines.append("")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote PLANS.md: {len(bench.HEADLINE)} queries")
 
