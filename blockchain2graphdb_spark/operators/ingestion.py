@@ -12,32 +12,25 @@ decode → normalize pipeline (counts, value sums, and a per-row crc32
 fingerprint for each of the four normalized tables).
 
 The blk files are built once per scale-factor-independent fixture under
-`.tmp/` with the same atomic stage+rename used by the snapshot queries.
+`.tmp/` by `paths.derived_dir`, like every derived fixture.
 """
 
 from __future__ import annotations
 
-import os
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..chain import fixtures
-from ..paths import tmp_root as _tmp_root
+from ..paths import derived_dir
 from ..plans.iterate import observed_checkpoint
 from ..plans.sizing import broadcast_hint
 from ..registry import query
-from ..sources.blockfile import read_blocks, normalize
+from ..sources.blockfile import normalize, read_blocks, write_blk_files
 
 _N_BLOCKS = 64
 _SEED = 11
-
-
-def _root() -> str:
-    import os
-
-    return os.path.join(_tmp_root(), "blkfix_v1")
 
 
 def _chain():
@@ -46,21 +39,13 @@ def _chain():
 
 def _build_blk_files_once() -> str:
     """Serialize the fixture chain into blk files (pure Python, no
-    Spark), atomically: stage, then rename into place."""
-    _ROOT = _root()
-    if os.path.isdir(_ROOT) and any(
-        n.endswith(".dat") for n in os.listdir(_ROOT)
-    ):
-        return _ROOT
-    from ..sources.blockfile import write_blk_files
-    import shutil
-
-    stage = f"{_ROOT}.staging"
-    shutil.rmtree(stage, ignore_errors=True)
-    write_blk_files(_chain(), stage, blocks_per_file=8)
-    shutil.rmtree(_ROOT, ignore_errors=True)
-    os.rename(stage, _ROOT)
-    return _ROOT
+    Spark), once per (_N_BLOCKS, _SEED)."""
+    return derived_dir(
+        f"blkfix_n{_N_BLOCKS}_s{_SEED}",
+        None,
+        (),
+        lambda stage: write_blk_files(_chain(), stage, blocks_per_file=8),
+    )
 
 
 def _crc(s: str) -> int:

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..exact import dec2
+from ..paths import derived_dir
 from ..registry import query
 
 
@@ -216,35 +217,16 @@ def resume_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- snapshot-store-backed maintenance (sources/snapshots.py) -----------
 
 
-def _snapshot_root(sf_dir: str, name: str) -> str:
-    import os
-
-    from ..paths import tmp_root
-
-    return os.path.join(
-        tmp_root(), f"snap_{name}_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
-
-
-def _build_once(root: str, build) -> None:
-    """Build a snapshot store atomically (stage + rename), reuse after."""
-    import os
-    import shutil
-
-    # presence of any committed manifest marks the store as built
-    # (the store keeps no _latest pointer; manifests are the truth)
-    mdir = f"{root}/_manifests"
-    if os.path.isdir(mdir) and any(
-        n.startswith("v") and n.endswith(".json") for n in os.listdir(mdir)
-    ):
-        return
-    stage = f"{root}.staging"
-    shutil.rmtree(stage, ignore_errors=True)
-    shutil.rmtree(root, ignore_errors=True)
+def _snapshot_store(sf_dir: str, name: str, build):
+    """The snapshot store `build(store)` commits from orders, one
+    `derived_dir` per orders identity (`snap_<name>_...`)."""
     from ..sources.snapshots import SnapshotStore
 
-    build(SnapshotStore(stage))
-    os.rename(stage, root)
+    return SnapshotStore(
+        derived_dir(
+            f"snap_{name}", sf_dir, ("orders",), lambda stage: build(SnapshotStore(stage))
+        )
+    )
 
 
 @query(
@@ -269,8 +251,6 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources.snapshots import SnapshotStore
 
-    root = _snapshot_root(sf_dir, "tt")
-
     def build(store: SnapshotStore) -> None:
         orders = table(spark, sf_dir, "orders")
         early = orders.where(
@@ -280,8 +260,7 @@ def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         store.append(orders.subtract(early))
         store.restore(1)
 
-    _build_once(root, build)
-    store = SnapshotStore(root)
+    store = _snapshot_store(sf_dir, "tt", build)
     pinned = store.read(spark, version=1)
     latest = store.read(spark)  # v3 == restore(v1)
     # intersect-of-aggregates: if restore diverged from time travel the
@@ -315,8 +294,6 @@ def snapshot_reorg_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fork is 6 blocks deep."""
     from ..sources.snapshots import SnapshotStore
 
-    root = _snapshot_root(sf_dir, "reorg")
-
     def build(store: SnapshotStore) -> None:
         orders = table(spark, sf_dir, "orders").withColumn(
             "bucket", (F.col("o_orderkey") % 4).cast("int")
@@ -327,9 +304,8 @@ def snapshot_reorg_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         store.overwrite_partitions(branch, values=[2, 3])
 
-    _build_once(root, build)
     return (
-        SnapshotStore(root)
+        _snapshot_store(sf_dir, "reorg", build)
         .read(spark)
         .groupBy("bucket")
         .agg(
@@ -435,8 +411,6 @@ def snapshot_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     the aggregate output is O(#priorities)."""
     from ..sources.snapshots import SnapshotStore
 
-    root = _snapshot_root(sf_dir, "cdc")
-
     def build(store: SnapshotStore) -> None:
         orders = table(spark, sf_dir, "orders").withColumn(
             "bucket", (F.col("o_orderkey") % 4).cast("int")
@@ -451,8 +425,7 @@ def snapshot_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         store.overwrite_partitions(retagged, values=[1])
 
-    _build_once(root, build)
-    cdf = SnapshotStore(root).diff(spark, 1, 2)
+    cdf = _snapshot_store(sf_dir, "cdc", build).diff(spark, 1, 2)
     return (
         cdf.groupBy(
             F.col("_change").alias("change_kind"), "o_orderpriority"
@@ -711,23 +684,20 @@ def snapshot_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     from explicit file lists so pushdown/pruning are unchanged."""
     from ..sources.snapshots import SnapshotStore
 
-    src_root = _snapshot_root(sf_dir, "clone_src")
-    dst_root = _snapshot_root(sf_dir, "clone_dst")
     cut = F.lit("1997-06-01").cast("timestamp")
 
     def build_src(store: SnapshotStore) -> None:
         store.write(table(spark, sf_dir, "orders"))
 
-    _build_once(src_root, build_src)
+    src_store = _snapshot_store(sf_dir, "clone_src", build_src)
 
     def build_dst(store: SnapshotStore) -> None:
-        store.clone_from(SnapshotStore(src_root))
+        store.clone_from(src_store)
         extra = table(spark, sf_dir, "orders").where(F.col("o_orderdate") >= cut)
         store.append(extra)
 
-    _build_once(dst_root, build_dst)
-    src = SnapshotStore(src_root).read(spark)
-    clone = SnapshotStore(dst_root).read(spark)
+    src = src_store.read(spark)
+    clone = _snapshot_store(sf_dir, "clone_dst", build_dst).read(spark)
     a = src.groupBy("o_orderstatus").agg(F.count(F.lit(1)).cast("long").alias("n_src"))
     b = clone.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("long").alias("n_clone")

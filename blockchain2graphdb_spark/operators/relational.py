@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..exact import dec2, money_avg, money_sum
+from ..paths import derived_dir
 from ..plans.iterate import local_checkpoint
 from ..registry import query
 
@@ -1472,25 +1473,10 @@ def sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- multi-format sources (S-family): the same logical table served
 # from CSV and JSON-lines files, proving the source abstraction is
 # format-independent. The text files are derived ONCE from the nation
-# fixture (pure pyarrow, deterministic bytes, stage+rename — the
-# blockfile/replay idiom, keyed on the fixture's identity) and scanned
-# back with an EXPLICIT schema: schema inference is a whole-extra pass
-# over 100 TB and type-drift roulette, so production text scans always
-# pin the schema.
-
-
-def _sf_cache_tag(sf_dir: str) -> str:
-    """Tag a derived-cache dir with the fixture ROOT's identity, not just
-    its basename: two roots sharing a basename (/a/sf0.1 and /b/sf0.1)
-    must never share a tag, or a cold-cache cleanup for one can
-    delete-and-race the other's live cache (ADVICE r10). The abs-path
-    hash scopes the stale-glob to this exact root; size+mtime (appended
-    by each caller) scope it to this exact fixture generation."""
-    import hashlib
-    import os
-
-    p = os.path.abspath(sf_dir.rstrip("/"))
-    return f"{os.path.basename(p)}-{hashlib.md5(p.encode()).hexdigest()[:8]}"
+# fixture (pure pyarrow, deterministic bytes, one `derived_dir` per
+# fixture identity) and scanned back with an EXPLICIT schema: schema
+# inference is a whole-extra pass over 100 TB and type-drift roulette,
+# so production text scans always pin the schema.
 
 
 def _text_source_dir(sf_dir: str, fmt: str) -> str:
@@ -1498,60 +1484,39 @@ def _text_source_dir(sf_dir: str, fmt: str) -> str:
 
     import pyarrow.parquet as pq
 
-    from ..paths import tmp_root
+    def build(stage: str) -> None:
+        rows = pq.read_table(os.path.join(sf_dir, "nation.parquet")).to_pylist()
+        rows.sort(key=lambda r: r["n_nationkey"])
+        with open(os.path.join(stage, "part-000.txt"), "w", newline="") as f:
+            if fmt == "csv":
+                # csv.writer (QUOTE_MINIMAL) keeps the derivation correct
+                # even if a name ever contains a comma/quote/newline — naive
+                # f-string concatenation would silently corrupt such rows
+                import csv
 
-    src = os.path.join(sf_dir, "nation.parquet")
-    st = os.stat(src)
-    sf_tag = _sf_cache_tag(sf_dir)
-    d = os.path.join(
-        tmp_root(), f"textsrc_{fmt}_{sf_tag}_{st.st_size}_{st.st_mtime_ns}"
-    )
-    if os.path.isdir(d):
-        return d
-    # fixture regenerated since the last derivation: drop stale dirs for
-    # this (format, scale factor) ONLY — an unscoped glob would delete
-    # another scale factor's live derivation out from under its lazy
-    # DataFrames (same scoping as the streaming replay dirs)
-    import glob as _glob
-    import shutil
+                # lineterminator='\n': csv.writer defaults to CRLF with
+                # newline='' files; keep the fixture's LF byte format
+                w = csv.writer(f, lineterminator="\n")
+                w.writerow(["n_nationkey", "n_name", "n_regionkey"])
+                for r in rows:
+                    w.writerow([r["n_nationkey"], r["n_name"], r["n_regionkey"]])
+            else:  # jsonl
+                import json
 
-    for stale in _glob.glob(os.path.join(tmp_root(), f"textsrc_{fmt}_{sf_tag}_*")):
-        shutil.rmtree(stale, ignore_errors=True)
-    rows = pq.read_table(src).to_pylist()
-    rows.sort(key=lambda r: r["n_nationkey"])
-    stage = d + ".staging"
-    os.makedirs(stage, exist_ok=True)
-    with open(os.path.join(stage, "part-000.txt"), "w", newline="") as f:
-        if fmt == "csv":
-            # csv.writer (QUOTE_MINIMAL) keeps the derivation correct
-            # even if a name ever contains a comma/quote/newline — naive
-            # f-string concatenation would silently corrupt such rows
-            import csv
-
-            # lineterminator='\n': csv.writer defaults to CRLF with
-            # newline='' files; keep the fixture's LF byte format
-            w = csv.writer(f, lineterminator="\n")
-            w.writerow(["n_nationkey", "n_name", "n_regionkey"])
-            for r in rows:
-                w.writerow([r["n_nationkey"], r["n_name"], r["n_regionkey"]])
-        else:  # jsonl
-            import json
-
-            for r in rows:
-                f.write(
-                    json.dumps(
-                        {
-                            "n_nationkey": r["n_nationkey"],
-                            "n_name": r["n_name"],
-                            "n_regionkey": r["n_regionkey"],
-                        },
-                        sort_keys=True,
+                for r in rows:
+                    f.write(
+                        json.dumps(
+                            {
+                                "n_nationkey": r["n_nationkey"],
+                                "n_name": r["n_name"],
+                                "n_regionkey": r["n_regionkey"],
+                            },
+                            sort_keys=True,
+                        )
+                        + "\n"
                     )
-                    + "\n"
-                )
-    shutil.rmtree(d, ignore_errors=True)
-    os.rename(stage, d)
-    return d
+
+    return derived_dir(f"textsrc_{fmt}", sf_dir, ("nation",), build)
 
 
 _TEXT_SRC_ORACLE = """
@@ -1653,36 +1618,24 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _partitioned_events_dir(sf_dir: str) -> str:
     """Hive-layout derivation of events partitioned by event_type
-    (event_type=<v>/part.parquet), content-keyed to the fixture like
-    _text_source_dir so regeneration invalidates it."""
-    import glob as _glob
+    (event_type=<v>/part.parquet)."""
     import os
-    import shutil
 
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from ..paths import tmp_root
+    def build(stage: str) -> None:
+        t = pq.read_table(
+            os.path.join(sf_dir, "events.parquet"),
+            columns=["event_id", "user_id", "value", "event_type"],
+        )
+        for v in sorted(set(t.column("event_type").to_pylist())):
+            sub = t.filter(pc.equal(t.column("event_type"), v)).drop(["event_type"])
+            pdir = os.path.join(stage, f"event_type={v}")
+            os.makedirs(pdir, exist_ok=True)
+            pq.write_table(sub, os.path.join(pdir, "part-000.parquet"))
 
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    sf_tag = _sf_cache_tag(sf_dir)
-    d = os.path.join(
-        tmp_root(), f"evpart_{sf_tag}_{st.st_size}_{st.st_mtime_ns}"
-    )
-    if os.path.isdir(d):
-        return d
-    for stale in _glob.glob(os.path.join(tmp_root(), f"evpart_{sf_tag}_*")):
-        shutil.rmtree(stale, ignore_errors=True)
-    t = pq.read_table(src, columns=["event_id", "user_id", "value", "event_type"])
-    stage = d + ".staging"
-    for v in sorted(set(t.column("event_type").to_pylist())):
-        sub = t.filter(pc.equal(t.column("event_type"), v)).drop(["event_type"])
-        pdir = os.path.join(stage, f"event_type={v}")
-        os.makedirs(pdir, exist_ok=True)
-        pq.write_table(sub, os.path.join(pdir, "part-000.parquet"))
-    os.replace(stage, d)
-    return d
+    return derived_dir("evpart", sf_dir, ("events",), build)
 
 
 @query(
@@ -1723,37 +1676,24 @@ def _schema_evolution_dir(sf_dir: str) -> str:
     """Two-generation parquet directory derived from orders: gen-1
     files lack o_orderpriority (the pre-migration schema), gen-2 files
     carry it — the layout a long-lived lake accumulates as producers
-    upgrade. Content-keyed to the fixture like _partitioned_events_dir
-    so regeneration invalidates it."""
-    import glob as _glob
+    upgrade."""
     import os
-    import shutil
 
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    sf_tag = _sf_cache_tag(sf_dir)
-    from ..paths import tmp_root
+    def build(stage: str) -> None:
+        t = pq.read_table(
+            os.path.join(sf_dir, "orders.parquet"),
+            columns=["o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"],
+        )
+        parity = pc.bit_wise_and(t.column("o_orderkey"), 1)
+        old = t.filter(pc.equal(parity, 0)).drop(["o_orderpriority"])
+        new = t.filter(pc.equal(parity, 1))
+        pq.write_table(old, os.path.join(stage, "part-gen1.parquet"))
+        pq.write_table(new, os.path.join(stage, "part-gen2.parquet"))
 
-    d = os.path.join(tmp_root(), f"schemaevo_{sf_tag}_{st.st_size}_{st.st_mtime_ns}")
-    if os.path.isdir(d):
-        return d
-    for stale in _glob.glob(os.path.join(tmp_root(), f"schemaevo_{sf_tag}_*")):
-        shutil.rmtree(stale, ignore_errors=True)
-    t = pq.read_table(
-        src, columns=["o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"]
-    )
-    parity = pc.bit_wise_and(t.column("o_orderkey"), 1)
-    stage = d + ".staging"
-    os.makedirs(stage, exist_ok=True)
-    old = t.filter(pc.equal(parity, 0)).drop(["o_orderpriority"])
-    new = t.filter(pc.equal(parity, 1))
-    pq.write_table(old, os.path.join(stage, "part-gen1.parquet"))
-    pq.write_table(new, os.path.join(stage, "part-gen2.parquet"))
-    os.replace(stage, d)
-    return d
+    return derived_dir("schemaevo", sf_dir, ("orders",), build)
 
 
 @query(
@@ -1873,48 +1813,33 @@ def skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _corrupt_jsonl_dir(sf_dir: str) -> str:
     """JSONL derivation of orders with SEEDED corruption: every line
-    whose o_orderkey % 97 == 0 is truncated mid-record (unparseable).
-    Content-keyed to the fixture like _text_source_dir."""
-    import glob as _glob
+    whose o_orderkey % 97 == 0 is truncated mid-record (unparseable)."""
     import json
     import os
-    import shutil
 
     import pyarrow.parquet as pq
 
-    from ..paths import tmp_root
+    def build(stage: str) -> None:
+        rows = pq.read_table(
+            os.path.join(sf_dir, "orders.parquet"),
+            columns=["o_orderkey", "o_orderstatus", "o_totalprice"],
+        ).to_pylist()
+        rows.sort(key=lambda r: r["o_orderkey"])
+        with open(os.path.join(stage, "part-000.jsonl"), "w") as f:
+            for r in rows:
+                line = json.dumps(
+                    {
+                        "o_orderkey": r["o_orderkey"],
+                        "o_orderstatus": r["o_orderstatus"],
+                        "o_totalprice": r["o_totalprice"],
+                    },
+                    sort_keys=True,
+                )
+                if r["o_orderkey"] % 97 == 0:
+                    line = line[: len(line) // 2]  # truncated mid-record
+                f.write(line + "\n")
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    sf_tag = _sf_cache_tag(sf_dir)
-    d = os.path.join(
-        tmp_root(), f"corruptsrc_{sf_tag}_{st.st_size}_{st.st_mtime_ns}"
-    )
-    if os.path.isdir(d):
-        return d
-    for stale in _glob.glob(os.path.join(tmp_root(), f"corruptsrc_{sf_tag}_*")):
-        shutil.rmtree(stale, ignore_errors=True)
-    rows = pq.read_table(
-        src, columns=["o_orderkey", "o_orderstatus", "o_totalprice"]
-    ).to_pylist()
-    rows.sort(key=lambda r: r["o_orderkey"])
-    stage = d + ".staging"
-    os.makedirs(stage, exist_ok=True)
-    with open(os.path.join(stage, "part-000.jsonl"), "w") as f:
-        for r in rows:
-            line = json.dumps(
-                {
-                    "o_orderkey": r["o_orderkey"],
-                    "o_orderstatus": r["o_orderstatus"],
-                    "o_totalprice": r["o_totalprice"],
-                },
-                sort_keys=True,
-            )
-            if r["o_orderkey"] % 97 == 0:
-                line = line[: len(line) // 2]  # truncated mid-record
-            f.write(line + "\n")
-    os.replace(stage, d)
-    return d
+    return derived_dir("corruptsrc", sf_dir, ("orders",), build)
 
 
 @query(
@@ -1981,38 +1906,27 @@ def _zonemap_orders_dir(sf_dir: str) -> str:
     """Derivation of orders as 16 RANGE-CLUSTERED parquet files
     (sorted by o_custkey, sliced contiguously — the layout a clustered
     / Z-ordered lake table maintains so file-level min/max stats are
-    tight). Content-keyed to the fixture like _partitioned_events_dir
-    so regeneration invalidates it."""
-    import glob as _glob
+    tight)."""
     import os
-    import shutil
 
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from ..paths import tmp_root
+    def build(stage: str) -> None:
+        t = pq.read_table(
+            os.path.join(sf_dir, "orders.parquet"),
+            columns=["o_orderkey", "o_custkey", "o_totalprice"],
+        )
+        t = t.take(pc.sort_indices(t, sort_keys=[("o_custkey", "ascending"),
+                                                 ("o_orderkey", "ascending")]))
+        n_files = 16
+        step = -(-t.num_rows // n_files)
+        for i in range(n_files):
+            sl = t.slice(i * step, step)
+            if sl.num_rows:
+                pq.write_table(sl, os.path.join(stage, f"part-{i:03d}.parquet"))
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    sf_tag = _sf_cache_tag(sf_dir)
-    d = os.path.join(tmp_root(), f"zonemap_{sf_tag}_{st.st_size}_{st.st_mtime_ns}")
-    if os.path.isdir(d):
-        return d
-    for stale in _glob.glob(os.path.join(tmp_root(), f"zonemap_{sf_tag}_*")):
-        shutil.rmtree(stale, ignore_errors=True)
-    t = pq.read_table(src, columns=["o_orderkey", "o_custkey", "o_totalprice"])
-    t = t.take(pc.sort_indices(t, sort_keys=[("o_custkey", "ascending"),
-                                             ("o_orderkey", "ascending")]))
-    stage = d + ".staging"
-    os.makedirs(stage, exist_ok=True)
-    n_files = 16
-    step = -(-t.num_rows // n_files)
-    for i in range(n_files):
-        sl = t.slice(i * step, step)
-        if sl.num_rows:
-            pq.write_table(sl, os.path.join(stage, f"part-{i:03d}.parquet"))
-    os.replace(stage, d)
-    return d
+    return derived_dir("zonemap", sf_dir, ("orders",), build)
 
 
 def _zonemap_plan(sf_dir: str) -> tuple[list[str], list[str], int, int]:
@@ -2220,25 +2134,6 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _orc_orders_dir(sf_dir: str) -> str:
-    """Derivation of orders as an ORC dataset (written once by Spark
-    itself on first use, content-keyed to the fixture like
-    _zonemap_orders_dir so regeneration invalidates it). ORC is the
-    second columnar format the engine reads natively; the content is
-    byte-identical to orders.parquet so the parquet oracle checks the
-    ORC reader."""
-    import os
-
-    from ..paths import tmp_root
-
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    sf_tag = _sf_cache_tag(sf_dir)
-    return os.path.join(
-        tmp_root(), f"orcorders_{sf_tag}_{st.st_size}_{st.st_mtime_ns}"
-    )
-
-
 @query(
     "scan_orc",
     oracle="""
@@ -2260,23 +2155,12 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trip, and predicate pushdown (the key-mod residue filter and
     column pruning reach the ORC scan exactly like parquet —
     `PushedFilters` appears in the plan for both formats)."""
-    import glob as _glob
-    import os
-    import shutil
-
-    d = _orc_orders_dir(sf_dir)
-    sf_tag = _sf_cache_tag(sf_dir)
-    if not os.path.isdir(d):
-        # stale-cache cleanup scoped to THIS sf (like the evpart_/
-        # schemaevo_/zonemap_ siblings): an unscoped glob would delete —
-        # and could race — other scale factors' live ORC caches.
-        for stale in _glob.glob(
-            os.path.join(os.path.dirname(d), f"orcorders_{sf_tag}_*")
-        ):
-            shutil.rmtree(stale, ignore_errors=True)
-        stage = d + ".staging"
-        table(spark, sf_dir, "orders").write.mode("overwrite").orc(stage)
-        os.replace(stage, d)
+    d = derived_dir(
+        "orcorders",
+        sf_dir,
+        ("orders",),
+        lambda stage: table(spark, sf_dir, "orders").write.mode("overwrite").orc(stage),
+    )
     df = spark.read.orc(d)
     return (
         df.where(F.col("o_orderkey") % 4 == 1)
@@ -2291,49 +2175,36 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fixed_width_dir(sf_dir: str) -> str:
-    """Derive a fixed-width text rendering of `orders` under .tmp
-    (same identity-keyed caching as `_text_source_dir`). Layout:
+    """Derive a fixed-width text rendering of `orders`. Layout:
     orderkey 12 (zero-padded) | status 1 | total cents 14 (zero-
     padded) | orderdate 10 (yyyy-mm-dd) — 37 chars per record, the
     mainframe/COBOL copybook shape."""
-    import glob as _glob
     import os
-    import shutil
     from decimal import Decimal
 
     import pyarrow.parquet as pq
 
-    from ..paths import tmp_root
+    def build(stage: str) -> None:
+        rows = pq.read_table(
+            os.path.join(sf_dir, "orders.parquet"),
+            columns=["o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"],
+        ).to_pylist()
+        rows.sort(key=lambda r: r["o_orderkey"])
+        with open(os.path.join(stage, "part-000.txt"), "w", newline="\n") as f:
+            for r in rows:
+                cents = int(
+                    (
+                        Decimal(str(r["o_totalprice"])).quantize(Decimal("0.01")) * 100
+                    ).to_integral_value()
+                )
+                f.write(
+                    f"{r['o_orderkey']:012d}"
+                    f"{r['o_orderstatus']:.1s}"
+                    f"{cents:014d}"
+                    f"{r['o_orderdate'].date().isoformat():.10s}\n"
+                )
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    sf_tag = _sf_cache_tag(sf_dir)
-    d = os.path.join(tmp_root(), f"fixedw_{sf_tag}_{st.st_size}_{st.st_mtime_ns}")
-    if os.path.isdir(d):
-        return d
-    for stale in _glob.glob(os.path.join(tmp_root(), f"fixedw_{sf_tag}_*")):
-        shutil.rmtree(stale, ignore_errors=True)
-    rows = pq.read_table(
-        src, columns=["o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"]
-    ).to_pylist()
-    rows.sort(key=lambda r: r["o_orderkey"])
-    stage = d + ".staging"
-    os.makedirs(stage, exist_ok=True)
-    with open(os.path.join(stage, "part-000.txt"), "w", newline="\n") as f:
-        for r in rows:
-            cents = int(
-                (
-                    Decimal(str(r["o_totalprice"])).quantize(Decimal("0.01")) * 100
-                ).to_integral_value()
-            )
-            f.write(
-                f"{r['o_orderkey']:012d}"
-                f"{r['o_orderstatus']:.1s}"
-                f"{cents:014d}"
-                f"{r['o_orderdate'].date().isoformat():.10s}\n"
-            )
-    os.rename(stage, d)
-    return d
+    return derived_dir("fixedw", sf_dir, ("orders",), build)
 
 
 @query(

@@ -37,7 +37,7 @@ def _events_stream(
     for k, v in options.items():
         reader = reader.option(k, v)
     # the file source needs a directory, not a single parquet file
-    s = reader.parquet(path or _single_replay(spark, sf_dir))
+    s = reader.parquet(path or _single_replay(sf_dir))
     # same encoding-robust ts normalization as the batch catalog reader —
     # one shared helper so a fixture re-encode can't break only one side
     return normalize_events_ts(s)
@@ -57,13 +57,15 @@ def _run(spark: SparkSession, sdf: DataFrame, output_mode: str = "append") -> Da
     # Stateful micro-batches pay a per-partition state-store
     # instantiation cost EVERY batch, so the partition count should be
     # sized to the stream's data like any other shuffle (at 100 TB you
-    # size it to the cluster). Measured on the stream-stream interval
-    # join: 4-wide beats 32-wide at EVERY fixture scale — sf0.001
-    # 7.4s vs 11.3s, sf0.1 (~100k events) 4.2s vs 5.7s — because the
-    # per-batch store overhead dominates far beyond the largest
-    # fixture. Scoped-and-restored around query start (the streaming
-    # plan binds the conf at start; each run uses a fresh in-memory
-    # sink + checkpoint, so no cross-run state layout is pinned).
+    # size it to the cluster). Re-measured on a 4-core host, where
+    # `prep` already sets 4, so the pin does not change the count:
+    # without it the 31 stream keys still read slower at sf0.01 (sum of
+    # warm medians 45.7 s -> 49.2 s, 27 of 31 keys slower; two
+    # sessions per side) and flat at sf0.1 (49.8 s -> 48.9 s), so it
+    # stays until a many-core host re-measures it. Scoped-and-restored
+    # around query start (the streaming plan binds the conf at start;
+    # each run uses a fresh in-memory sink + checkpoint, so no cross-run
+    # state layout is pinned).
     with scoped_confs(spark, {"spark.sql.shuffle.partitions": "4"}):
         q = (
             sdf.writeStream.format("memory")
@@ -347,7 +349,7 @@ def stream_file_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     hand-rolls with currentFileCount. Oracle-checked: the complete-mode
     per-day count after the final batch equals the batch aggregate, so
     the two-batch pickup must lose and duplicate nothing."""
-    d = _two_file_replay(spark, sf_dir)
+    d = _two_file_replay(sf_dir)
     s = _events_stream(spark, sf_dir, path=d, maxFilesPerTrigger="1")
     out = s.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
         F.count(F.lit(1)).alias("n")
@@ -367,7 +369,7 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark by one batch in Spark's microbatch model; rows later than
     a window's emission are discarded. Invariants pinned in
     tests/test_streaming_semantics.py.)"""
-    d = _late_replay(spark, sf_dir)
+    d = _late_replay(sf_dir)
     s = _events_stream(spark, sf_dir, path=d, maxFilesPerTrigger="1").withWatermark(
         "ts", "1 hour"
     )
@@ -381,56 +383,37 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- replay-directory builders (deterministic, derived from the fixture) ---
 
-from ..paths import tmp_root as _tmp_root_fn
+from ..paths import derived_dir, tmp_root as _tmp_root_fn
 
 
-def _write_replay(spark: SparkSession, sf_dir: str, name: str, splitter) -> str:
-    """Materialize events into ordered files under .tmp (gitignored).
+def _write_replay(
+    sf_dir: str, name: str, splitter, source: str = "events", columns=None
+) -> str:
+    """Materialize fixture table `source` (its `columns`) as the ordered
+    replay files `splitter` cuts it into, one derived dir per fixture
+    identity.
 
     Uses pyarrow directly so file names/ordering are deterministic
     (file-source processes by modification time, ties by path).
     """
-    import os
-    import shutil
     import time
 
     import pyarrow.parquet as pq
 
-    src = f"{sf_dir}/events.parquet"
-    # key the replay dir on the fixture's identity (size + mtime_ns), not
-    # on an mtime comparison: the driver regenerates fixtures between
-    # rounds and a rewrite that PRESERVES timestamps would keep an
-    # mtime-compared cache serving stale rows under the fresh schema.
-    # A different fixture -> a different directory name -> a rebuild.
-    st = os.stat(src)
-    tag = f"{os.path.basename(sf_dir.rstrip('/'))}_{st.st_size}_{st.st_mtime_ns}"
-    d = f"{_tmp_root_fn()}/{name}_{tag}"
-    # drop replays of the same family keyed to older fixture identities
-    import glob as _glob
-
-    for stale in _glob.glob(f"{_tmp_root_fn()}/{name}_{os.path.basename(sf_dir.rstrip('/'))}*"):
-        if stale != d:
-            shutil.rmtree(stale, ignore_errors=True)
-    if not os.path.exists(d):
-        # stage + atomic rename so a crashed writer never leaves a
-        # half-built dir that later runs would trust
-        stage = f"{d}.staging"
-        shutil.rmtree(stage, ignore_errors=True)
-        os.makedirs(stage, exist_ok=True)
-        tbl = pq.read_table(f"{sf_dir}/events.parquet")
-        parts = splitter(tbl)
-        for i, part in enumerate(parts):
+    def build(stage: str) -> None:
+        tbl = pq.read_table(f"{sf_dir}/{source}.parquet", columns=columns)
+        for i, part in enumerate(splitter(tbl)):
             pq.write_table(part, f"{stage}/part-{i:02d}.parquet")
             time.sleep(0.05)  # distinct mtimes => deterministic pickup order
-        os.rename(stage, d)
-    return d
+
+    return derived_dir(name, sf_dir, (source,), build)
 
 
-def _single_replay(spark: SparkSession, sf_dir: str) -> str:
-    return _write_replay(spark, sf_dir, "single", lambda tbl: [tbl])
+def _single_replay(sf_dir: str) -> str:
+    return _write_replay(sf_dir, "single", lambda tbl: [tbl])
 
 
-def _two_file_replay(spark: SparkSession, sf_dir: str) -> str:
+def _two_file_replay(sf_dir: str) -> str:
     def split(tbl):
         import pyarrow.compute as pc
 
@@ -439,10 +422,10 @@ def _two_file_replay(spark: SparkSession, sf_dir: str) -> str:
         mid = tbl.num_rows // 2
         return [tbl.slice(0, mid), tbl.slice(mid)]
 
-    return _write_replay(spark, sf_dir, "tail", split)
+    return _write_replay(sf_dir, "tail", split)
 
 
-def _late_replay(spark: SparkSession, sf_dir: str) -> str:
+def _late_replay(sf_dir: str) -> str:
     def split(tbl):
         import pyarrow.compute as pc
 
@@ -452,7 +435,7 @@ def _late_replay(spark: SparkSession, sf_dir: str) -> str:
         old, new = tbl.slice(0, cut), tbl.slice(cut)
         return [new, old]  # newest first; the old 20% arrives late
 
-    return _write_replay(spark, sf_dir, "late", split)
+    return _write_replay(sf_dir, "late", split)
 
 
 @query(
@@ -563,7 +546,7 @@ def stream_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    d = _two_file_replay(spark, sf_dir)
+    d = _two_file_replay(sf_dir)
     out = f"{_tmp_root_fn()}/mergesink_{os.path.basename(sf_dir.rstrip('/'))}"
     shutil.rmtree(out, ignore_errors=True)
     shutil.rmtree(f"{out}.ckpt", ignore_errors=True)
@@ -686,7 +669,7 @@ def stream_stateful_agg_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary exists)."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    d = _two_file_replay(spark, sf_dir)
+    d = _two_file_replay(sf_dir)
     s = _events_stream(spark, sf_dir, path=d, maxFilesPerTrigger="1").select(
         "user_id", "value"
     )
@@ -743,7 +726,7 @@ def stream_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain checks it: the incremental fold must lose and double-count
     nothing across batch boundaries. Decimal sums / min / max are all
     mergeable, which is WHY the incremental maintenance is exact."""
-    d = _two_file_replay(spark, sf_dir)
+    d = _two_file_replay(sf_dir)
     s = _events_stream(spark, sf_dir, path=d, maxFilesPerTrigger="1")
     out = (
         s.groupBy(
@@ -770,30 +753,11 @@ def stream_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cdc_feed_replay(sf_dir: str) -> str:
     """Three-file CDC feed derived from orders (the cdc_apply feed,
-    one file per seq wave: inserts, updates, deletes), content-keyed
-    to the fixture like _write_replay."""
-    import glob as _glob
-    import os
-    import shutil
-
+    one file per seq wave: inserts, updates, deletes)."""
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    src = f"{sf_dir}/orders.parquet"
-    st = os.stat(src)
-    tag = f"{os.path.basename(sf_dir.rstrip('/'))}_{st.st_size}_{st.st_mtime_ns}"
-    d = f"{_tmp_root_fn()}/cdcfeed_{tag}"
-    for stale in _glob.glob(
-        f"{_tmp_root_fn()}/cdcfeed_{os.path.basename(sf_dir.rstrip('/'))}*"
-    ):
-        if stale != d:
-            shutil.rmtree(stale, ignore_errors=True)
-    if not os.path.exists(d):
-        stage = f"{d}.staging"
-        shutil.rmtree(stage, ignore_errors=True)
-        os.makedirs(stage, exist_ok=True)
-        t = pq.read_table(src, columns=["o_orderkey", "o_totalprice"])
+    def waves(t):
         k = pc.cast(t.column("o_orderkey"), pa.int64())
         cents = pc.cast(
             pc.round(pc.multiply(pc.cast(t.column("o_totalprice"), pa.float64()), 100.0)),
@@ -811,23 +775,19 @@ def _cdc_feed_replay(sf_dir: str) -> str:
                     "cents": cc if cc is not None else pa.nulls(n, pa.int64()),
                 }
             )
-        import numpy as np
 
         kn = k.to_numpy(zero_copy_only=False)
         m_u = pa.array(kn % 3 == 0)
         m_d = pa.array(kn % 5 == 0)
-        waves = [
+        return [
             wave(None, 1, "I", cents),
             wave(m_u, 2, "U", pc.add(cents, 500)),
             wave(m_d, 3, "D", None),
         ]
-        import time
 
-        for i, w in enumerate(waves):
-            pq.write_table(w, f"{stage}/part-{i:02d}.parquet")
-            time.sleep(0.05)
-        os.rename(stage, d)
-    return d
+    return _write_replay(
+        sf_dir, "cdcfeed", waves, "orders", ["o_orderkey", "o_totalprice"]
+    )
 
 
 @query(
@@ -925,7 +885,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _time_replay(spark: SparkSession, sf_dir: str) -> str:
+def _time_replay(sf_dir: str) -> str:
     """Two-file replay in TIME order ((ts, event_id) ascending, split at
     the midpoint) — for stateful operators whose fold is order-
     sensitive (SPRT's first crossing), unlike `_two_file_replay`'s
@@ -941,7 +901,7 @@ def _time_replay(spark: SparkSession, sf_dir: str) -> str:
         mid = tbl.num_rows // 2
         return [tbl.slice(0, mid), tbl.slice(mid)]
 
-    return _write_replay(spark, sf_dir, "timeorder", split)
+    return _write_replay(sf_dir, "timeorder", split)
 
 
 from ..operators.experiments import (  # noqa: E402  (shared constants)
@@ -1015,7 +975,7 @@ def stream_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
     the backfill/audit path."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    d = _time_replay(spark, sf_dir)
+    d = _time_replay(sf_dir)
     arm = (
         F.conv(
             F.substring(
@@ -1096,33 +1056,12 @@ def stream_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _orders_wave_replay(sf_dir: str) -> str:
     """Three-file orders ingest feed (k, cust, cents), one wave per
-    o_orderkey % 3 residue, content-keyed to the fixture like
-    _write_replay. Exact DECIMAL(18,2) cents (never float money)."""
-    import glob as _glob
-    import os
-    import shutil
-    import time
-
+    o_orderkey % 3 residue. Exact DECIMAL(18,2) cents (never float
+    money)."""
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    src = f"{sf_dir}/orders.parquet"
-    st = os.stat(src)
-    tag = f"{os.path.basename(sf_dir.rstrip('/'))}_{st.st_size}_{st.st_mtime_ns}"
-    d = f"{_tmp_root_fn()}/mtfeed_{tag}"
-    for stale in _glob.glob(
-        f"{_tmp_root_fn()}/mtfeed_{os.path.basename(sf_dir.rstrip('/'))}*"
-    ):
-        if stale != d:
-            shutil.rmtree(stale, ignore_errors=True)
-    if not os.path.exists(d):
-        stage = f"{d}.staging"
-        shutil.rmtree(stage, ignore_errors=True)
-        os.makedirs(stage, exist_ok=True)
-        t = pq.read_table(
-            src, columns=["o_orderkey", "o_custkey", "o_totalprice"]
-        )
+    def waves(t):
         k = pc.cast(t.column("o_orderkey"), pa.int64())
         cust = pc.cast(t.column("o_custkey"), pa.int64())
         cents = pc.cast(
@@ -1133,16 +1072,20 @@ def _orders_wave_replay(sf_dir: str) -> str:
             pa.int64(),
         )
         tbl = pa.table({"k": k, "cust": cust, "cents": cents})
-        import numpy as np
-
         kn = k.to_numpy(zero_copy_only=False)
-        for i in range(3):
-            pq.write_table(
-                tbl.filter(pa.array(kn % 3 == i)), f"{stage}/part-{i:02d}.parquet"
-            )
-            time.sleep(0.05)
-        os.rename(stage, d)
-    return d
+        return [tbl.filter(pa.array(kn % 3 == i)) for i in range(3)]
+
+    return _write_replay(
+        sf_dir, "mtfeed", waves, "orders", ["o_orderkey", "o_custkey", "o_totalprice"]
+    )
+
+
+def _multi_table_group_root(sf_dir: str) -> str:
+    """TableGroup root of stream_multi_table_ingest, keyed to the same
+    orders identity as its feed: re-runs against the same fixture find
+    every op tag applied and no-op (idempotent); a new fixture gets a
+    fresh, empty root. The stream checkpoint is its `.ckpt` sibling."""
+    return derived_dir("mtgroup", sf_dir, ("orders",), lambda stage: None)
 
 
 def _group_applied_ops(groot: str) -> set:
@@ -1209,15 +1152,10 @@ def stream_multi_table_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergeable state (sum/count), so the per-batch aggregate is one
     keyed shuffle of batch-sized input, never a re-aggregation of
     the table."""
-    import os
-
     from ..sources.snapshots import TableGroup
 
     d = _orders_wave_replay(sf_dir)
-    # group root content-keyed to the feed: re-runs against the same
-    # fixture find all op tags applied and no-op (idempotent); a new
-    # fixture gets a fresh root
-    groot = f"{_tmp_root_fn()}/mtgroup_{os.path.basename(d)[len('mtfeed_'):]}"
+    groot = _multi_table_group_root(sf_dir)
     ckpt = f"{groot}.ckpt"
     group = TableGroup(groot)
 
@@ -1347,7 +1285,7 @@ def stream_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch twin is the backfill/audit path."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    d = _time_replay(spark, sf_dir)
+    d = _time_replay(sf_dir)
     s = _events_stream(spark, sf_dir, path=d, maxFilesPerTrigger="1").select(
         "event_type",
         F.unix_micros("ts").alias("us"),
@@ -1503,37 +1441,15 @@ def stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _docs_wave_replay(sf_dir: str) -> str:
     """Three-file documents feed (doc_id ASCENDING thirds — a TIME-like
-    total order for order-sensitive folds), content-keyed to the
-    fixture like _write_replay."""
-    import glob as _glob
-    import os
-    import shutil
-    import time
-
+    total order for order-sensitive folds)."""
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    src = f"{sf_dir}/documents.parquet"
-    st = os.stat(src)
-    tag = f"{os.path.basename(sf_dir.rstrip('/'))}_{st.st_size}_{st.st_mtime_ns}"
-    d = f"{_tmp_root_fn()}/docfeed_{tag}"
-    for stale in _glob.glob(
-        f"{_tmp_root_fn()}/docfeed_{os.path.basename(sf_dir.rstrip('/'))}*"
-    ):
-        if stale != d:
-            shutil.rmtree(stale, ignore_errors=True)
-    if not os.path.exists(d):
-        stage = f"{d}.staging"
-        shutil.rmtree(stage, ignore_errors=True)
-        os.makedirs(stage, exist_ok=True)
-        t = pq.read_table(src, columns=["doc_id", "lang"])
+    def thirds(t):
         t = t.take(pc.sort_indices(t, sort_keys=[("doc_id", "ascending")]))
         third = (t.num_rows + 2) // 3
-        for i in range(3):
-            pq.write_table(t.slice(i * third, third), f"{stage}/part-{i:02d}.parquet")
-            time.sleep(0.05)
-        os.rename(stage, d)
-    return d
+        return [t.slice(i * third, third) for i in range(3)]
+
+    return _write_replay(sf_dir, "docfeed", thirds, "documents", ["doc_id", "lang"])
 
 
 @query(
@@ -1833,30 +1749,10 @@ def stream_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _emb_wave_replay(sf_dir: str) -> str:
     """Three-file embeddings feed: the NEW-vector batch of
     `ivf_index_incremental` (vec_id % 10 == 0, non-empty) in vec_id
-    thirds — arrivals to a live vector store, content-keyed to the
-    fixture like _write_replay."""
-    import glob as _glob
-    import os
-    import shutil
-    import time
-
+    thirds — arrivals to a live vector store."""
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    src = f"{sf_dir}/embeddings.parquet"
-    st = os.stat(src)
-    tag = f"{os.path.basename(sf_dir.rstrip('/'))}_{st.st_size}_{st.st_mtime_ns}"
-    d = f"{_tmp_root_fn()}/embfeed_{tag}"
-    for stale in _glob.glob(
-        f"{_tmp_root_fn()}/embfeed_{os.path.basename(sf_dir.rstrip('/'))}*"
-    ):
-        if stale != d:
-            shutil.rmtree(stale, ignore_errors=True)
-    if not os.path.exists(d):
-        stage = f"{d}.staging"
-        shutil.rmtree(stage, ignore_errors=True)
-        os.makedirs(stage, exist_ok=True)
-        t = pq.read_table(src, columns=["vec_id", "embedding"])
+    def thirds(t):
         # vec_id % 10 == 0 via truncating integer divide (ids are
         # non-negative; pyarrow.compute has no modulo kernel)
         keep = pc.and_(
@@ -1872,11 +1768,11 @@ def _emb_wave_replay(sf_dir: str) -> str:
         t = t.filter(keep)
         t = t.take(pc.sort_indices(t, sort_keys=[("vec_id", "ascending")]))
         third = (t.num_rows + 2) // 3
-        for i in range(3):
-            pq.write_table(t.slice(i * third, third), f"{stage}/part-{i:02d}.parquet")
-            time.sleep(0.05)
-        os.rename(stage, d)
-    return d
+        return [t.slice(i * third, third) for i in range(3)]
+
+    return _write_replay(
+        sf_dir, "embfeed", thirds, "embeddings", ["vec_id", "embedding"]
+    )
 
 
 @query(

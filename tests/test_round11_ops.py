@@ -78,29 +78,6 @@ def test_bucketed_prefix_sums_still_exact_on_nonnull(spark):
         assert r["cum"] == run, (r, run)
 
 
-def test_orc_cache_tag_distinguishes_same_basename_roots(tmp_path):
-    """Two fixture roots sharing a basename (e.g. /a/sf0.1 and /b/sf0.1)
-    must not share a derived-cache tag, or one root's cold-cache cleanup
-    can delete-and-race the other's live cache (ADVICE r10 low)."""
-    import os
-
-    from blockchain2graphdb_spark.operators.relational import _orc_orders_dir
-
-    a = tmp_path / "a" / "sf0.1"
-    b = tmp_path / "b" / "sf0.1"
-    for root in (a, b):
-        root.mkdir(parents=True)
-        (root / "orders.parquet").write_bytes(b"x" * 10)
-    da = _orc_orders_dir(str(a))
-    db = _orc_orders_dir(str(b))
-    assert da != db
-    # and the stale-glob prefix (everything before the size/mtime
-    # suffix) differs too, so cleanup for one never globs the other
-    pa = os.path.basename(da).rsplit("_", 2)[0]
-    pb = os.path.basename(db).rsplit("_", 2)[0]
-    assert pa != pb
-
-
 # --- adaptive broadcast threshold (VERDICT r10 #5 / SURVEY §8 limit) ---
 
 

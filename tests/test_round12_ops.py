@@ -219,20 +219,17 @@ def test_stream_multi_table_ingest_replay_is_idempotent(spark):
     micro-batch re-fires against the retained group log) must be a
     no-op: the op-tag dedupe skips replayed batches — same readout,
     no doubled rows, no extra group commits."""
-    import os
     import shutil
 
     import pyarrow.parquet as pq
 
-    from blockchain2graphdb_spark.paths import tmp_root
     from blockchain2graphdb_spark.sources.snapshots import TableGroup
-    from blockchain2graphdb_spark.streaming.queries import _orders_wave_replay
+    from blockchain2graphdb_spark.streaming.queries import _multi_table_group_root
 
     builder = SPECS["stream_multi_table_ingest"].builder
     first = sorted(map(tuple, builder(spark, SF_DIR).collect()))
 
-    d = _orders_wave_replay(SF_DIR)
-    groot = f"{tmp_root()}/mtgroup_{os.path.basename(d)[len('mtfeed_'):]}"
+    groot = _multi_table_group_root(SF_DIR)
     shutil.rmtree(f"{groot}.ckpt", ignore_errors=True)  # force full replay
     second = sorted(map(tuple, builder(spark, SF_DIR).collect()))
     assert first == second

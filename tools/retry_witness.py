@@ -190,8 +190,9 @@ def main() -> None:
             for p in glob.glob(os.path.join(tmp_root(), "mtgroup_*")):
                 shutil.rmtree(p, ignore_errors=True)
         if key == "snapshot_cdc_diff":
-            # clear the content-keyed store root so BOTH legs rebuild
-            # (the chaos leg's retries must hit the stage/commit path)
+            # clear the content-keyed store root (paths.derived_dir keys
+            # it on the orders identity) so BOTH legs rebuild (the chaos
+            # leg's retries must hit the stage/commit path)
             import glob
             import shutil
 

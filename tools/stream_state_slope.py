@@ -89,8 +89,8 @@ def _k_chunk_patch(K: int):
         step = max(1, n // K)
         return [tbl.slice(i, step) for i in range(0, n, step)]
 
-    def k_replay(spark, sf_dir):
-        return SQ._write_replay(spark, sf_dir, f"slope{K}", split)
+    def k_replay(sf_dir):
+        return SQ._write_replay(sf_dir, f"slope{K}", split)
 
     orig = (
         SQ._single_replay,
@@ -101,7 +101,7 @@ def _k_chunk_patch(K: int):
 
     def events_stream(spark, sf_dir, path=None, **options):
         options["maxFilesPerTrigger"] = "1"
-        return orig[3](spark, sf_dir, path=path or k_replay(spark, sf_dir), **options)
+        return orig[3](spark, sf_dir, path=path or k_replay(sf_dir), **options)
 
     SQ._single_replay = k_replay
     SQ._two_file_replay = k_replay
@@ -142,8 +142,7 @@ def run_key(spark, key: str, sf_dir: str) -> dict:
     row: dict = {"rows_out": n_out, "wall_sec": wall}
     if key == "stream_multi_table_ingest":
         # stateless foreachBatch: report the commit log length instead
-        d = SQ._orders_wave_replay(sf_dir)
-        groot = f"{SQ._tmp_root_fn()}/mtgroup_{os.path.basename(d)[len('mtfeed_'):]}"
+        groot = SQ._multi_table_group_root(sf_dir)
         row["applied_ops"] = len(SQ._group_applied_ops(groot))
         row["state_rows"] = []
         row["state_bytes"] = []
