@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..exact import hex_int, md5_int
 from ..graph.components import connected_components
 from ..registry import query
 
@@ -600,7 +601,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Portable md5→int: Spark conv(hex,16,10) and DuckDB '0x…'::BIGINT parse
+# Portable md5→int (exact.md5_int ≡ DuckDB '0x…'::BIGINT): both engines parse
 # the same 8-hex-digit prefix to the same 32-bit value, making SimHash's
 # per-bit votes engine-exact.
 _SHD_BITS = 32
@@ -639,7 +640,7 @@ FROM votes
 def dedup_simhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2 oracle-checked twin of dedup_simhash: identical 32-bit
     SimHash pipeline, but the per-token base hash is the first 8 hex
-    digits of md5 parsed to an int — Spark's conv(hex,16,10) and ANSI
+    digits of md5 parsed to an int — exact.md5_int and DuckDB's
     '0x…' casts agree digit-for-digit, so bit votes, fingerprints, and
     the 16-bit hamming bands are engine-exact. The xxhash64
     `dedup_simhash` stays the production path (no hex round-trip);
@@ -653,9 +654,7 @@ def dedup_simhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(_tokens(F.col("text"))).alias("t")
     ).where(F.col("t") != "")
     counted = tok.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("cnt"))
-    h = counted.withColumn(
-        "th", F.conv(F.substring(F.md5(F.col("t").cast("binary")), 1, 8), 16, 10).cast("long")
-    )
+    h = counted.withColumn("th", md5_int(F.col("t")))
     votes = h.groupBy("doc_id").agg(
         *[
             F.sum(
@@ -687,8 +686,8 @@ def dedup_simhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # any shared span long enough to contain an anchor position yields the
 # SAME anchor hash in both documents, regardless of where the span
 # starts. md5-string hashes keep the anchor choice and the join keys
-# byte-identical across engines (portable hex->int via conv/'0x' cast,
-# the dedup_simhash_exact idiom).
+# byte-identical across engines (portable hex->int via exact.hex_int and
+# the '0x' cast, the dedup_simhash_exact idiom).
 _SSD_K = 32       # gram width (chars)
 _SSD_MOD = 8      # keep ~1/8 of positions as anchors
 _SSD_SEED_N = 200  # docs seeding extracted-span twins (corpus has few)
@@ -711,9 +710,7 @@ def substring_anchors(docs: DataFrame) -> DataFrame:
                         f"  i -> md5(cast(substring(text, i, {_SSD_K}) as binary)))"
                         f" ELSE array() END"
                     ),
-                    lambda h: F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-                    % _SSD_MOD
-                    == 0,
+                    lambda h: hex_int(h) % _SSD_MOD == 0,
                 )
             )
         ).alias("h"),
@@ -1529,12 +1526,7 @@ def simhash_hamming_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("t") != "")
     )
     counted = tok.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("cnt"))
-    h = counted.withColumn(
-        "th",
-        F.conv(F.substring(F.md5(F.col("t").cast("binary")), 1, 8), 16, 10).cast(
-            "long"
-        ),
-    )
+    h = counted.withColumn("th", md5_int(F.col("t")))
     votes = h.groupBy("doc_id").agg(
         *[
             F.sum(

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..exact import md5_int
 from ..plans.iterate import local_checkpoint
 from ..registry import query
 from .graphops import _bfs_levels, _copurchase_pairs, _pair_nodes, _sym_edges
@@ -39,25 +40,7 @@ _IC_ROUNDS = 3
 
 
 def _live_filter_spark(src: str, dst: str):
-    return (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("ic"),
-                        F.col(src).cast("string"),
-                        F.lit(":"),
-                        F.col(dst).cast("string"),
-                    ).cast("binary")
-                ),
-                1,
-                1,
-            ),
-            16,
-            10,
-        ).cast("long")
-        < 8
-    )
+    return md5_int("ic", F.col(src), ":", F.col(dst), digits=1) < 8
 
 
 def _ic_oracle() -> str:

@@ -28,9 +28,15 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..exact import dec2
+from ..exact import dec2, md5_int
 from ..functions.ranking import bucketed_global_rank, bucketed_prefix_sums
 from ..registry import query
+
+
+def _pseudo_p():
+    """The calibration keys' pseudo-probability: md5('p' || orderkey)
+    first 8 hex digits mod 1000 (permille)."""
+    return md5_int("p", F.col("o_orderkey")) % 1000
 
 _D38 = "decimal(38,0)"
 
@@ -370,22 +376,7 @@ def calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: score, label, and bin are pure per-row expressions;
     ONE map-side-combinable aggregate over 10 bins — no shuffle of the
     data rows beyond the 10-key partial merge."""
-    p = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("p"), F.col("o_orderkey").cast("string")).cast(
-                        "binary"
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000
-    )
+    p = _pseudo_p()
     y = F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)
     scored = table(spark, sf_dir, "orders").select(
         p.alias("p_permille"), y.alias("y")
@@ -522,15 +513,7 @@ def ab_test_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: assignment and metric are pure per-row expressions;
     one map-side-combinable aggregate produces the single-row readout
     — the cohens_kappa/confusion_threshold minimal plan."""
-    nib = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("ab"), F.col("o_orderkey").cast("string")).cast("binary")),
-            1,
-            1,
-        ),
-        16,
-        10,
-    ).cast("long")
+    nib = md5_int("ab", F.col("o_orderkey"), digits=1)
     grp_a = nib < 8
     y = F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)
     m = table(spark, sf_dir, "orders").select(grp_a.alias("a"), y.alias("y")).agg(
@@ -758,22 +741,7 @@ def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (~2x10^4 rows), all broadcast joins — the classic
     bounded-post-aggregate pattern (kaplan_meier's shape). B is the
     resolution/robustness knob, not a scale knob."""
-    p = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("p"), F.col("o_orderkey").cast("string")).cast(
-                        "binary"
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000
-    )
+    p = _pseudo_p()
     y = F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)
     bins = (
         table(spark, sf_dir, "orders")
@@ -875,22 +843,7 @@ def pr_curve_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     size), then cumulative windows OVER that aggregate (the declared
     sweep-exempt auc_exact shape) and pure per-row arithmetic. The
     whole curve costs one scan regardless of corpus size."""
-    p = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("p"), F.col("o_orderkey").cast("string")).cast(
-                        "binary"
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000
-    )
+    p = _pseudo_p()
     y = F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)
     h = (
         table(spark, sf_dir, "orders")
@@ -962,22 +915,7 @@ def expected_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one map-side-combinable 10-bin aggregate, one 1-row
     reduction. Nothing scales with the data but the scan."""
-    p = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("p"), F.col("o_orderkey").cast("string")).cast(
-                        "binary"
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000
-    )
+    p = _pseudo_p()
     y = F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)
     b = (
         table(spark, sf_dir, "orders")
@@ -998,27 +936,6 @@ def expected_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").cast("long").alias("n_total"),
         F.expr("SUM(gap) div SUM(n)").cast("long").alias("ece_nanos"),
         F.max(F.expr("gap div n")).cast("long").alias("mce_nanos"),
-    )
-
-
-def _pseudo_p():
-    """The ECE/calibration_bins pseudo-probability: md5('p' || orderkey)
-    first 8 hex digits mod 1000 (permille)."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("p"), F.col("o_orderkey").cast("string")).cast(
-                        "binary"
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000
     )
 
 

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..exact import dec2
+from ..exact import dec2, md5_int
 from ..functions.ranking import bucketed_global_rank, bucketed_prefix_sums
 from ..registry import query
 
@@ -287,15 +287,7 @@ def mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable moment aggregate yields the single-row readout.
     No pairwise anything - the naive U definition is the quadratic
     comparison count; the rank identity makes it linear."""
-    nib = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("mw"), F.col("o_orderkey").cast("string")).cast("binary")),
-            1,
-            1,
-        ),
-        16,
-        10,
-    ).cast("long")
+    nib = md5_int("mw", F.col("o_orderkey"), digits=1)
     o = table(spark, sf_dir, "orders").select(
         F.when(nib < 8, 1).otherwise(0).alias("a"),
         (dec2("o_totalprice") * 100).cast("long").alias("cents"),
@@ -423,22 +415,7 @@ def bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("k"),
         (dec2("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    u60 = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("boot"),
-                    F.col("k").cast("string"),
-                    F.lit(":"),
-                    F.col("b").cast("string"),
-                ).cast("binary")
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    u60 = md5_int("boot", F.col("k"), ":", F.col("b"), digits=15)
     wt = F.lit(0)
     for t in _POISSON1_T60:
         wt = wt + F.when(F.col("u") >= t, 1).otherwise(0)
@@ -552,18 +529,7 @@ def diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents"),
     )
     cut = e.agg(F.expr("(min(us) + max(us)) div 2").cast("long").alias("cutoff"))
-    treat = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("dd"), F.col("user_id").cast("string")).cast("binary")),
-                1,
-                1,
-            ),
-            16,
-            10,
-        ).cast("long")
-        < 8
-    )
+    treat = md5_int("dd", F.col("user_id"), digits=1) < 8
     u = (
         e.crossJoin(F.broadcast(cut))
         .groupBy("user_id")
@@ -779,22 +745,7 @@ def psm_att(spark: SparkSession, sf_dir: str) -> DataFrame:
     band equi-join (the record_linkage blocking discipline — never
     all treated x all controls); per-treated argmin is a
     WindowGroupLimit-shaped rank-1 cut partitioned by treated user."""
-    treat = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("ps"), F.col("user_id").cast("string")).cast(
-                        "binary"
-                    )
-                ),
-                1,
-                1,
-            ),
-            16,
-            10,
-        ).cast("long")
-        < 8
-    )
+    treat = md5_int("ps", F.col("user_id"), digits=1) < 8
     u = (
         table(spark, sf_dir, "events")
         .groupBy("user_id")
@@ -893,38 +844,8 @@ def uplift_by_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one user-keyed aggregate (log -> O(#users)), one
     10-key map-side-combinable aggregate. Nothing else."""
-    treat = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("up"), F.col("user_id").cast("string")).cast(
-                        "binary"
-                    )
-                ),
-                1,
-                1,
-            ),
-            16,
-            10,
-        ).cast("long")
-        < 8
-    )
-    score = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("us"), F.col("user_id").cast("string")).cast(
-                        "binary"
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000
-    )
+    treat = md5_int("up", F.col("user_id"), digits=1) < 8
+    score = md5_int("us", F.col("user_id")) % 1000
     u = (
         table(spark, sf_dir, "events")
         .groupBy("user_id")
@@ -1011,22 +932,7 @@ def srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one distinct (map-side combinable), one 1-row
     aggregate. O(#users) total, no windows, no joins."""
     u = table(spark, sf_dir, "events").select("user_id").distinct()
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("srm"), F.col("user_id").cast("string")).cast(
-                        "binary"
-                    )
-                ),
-                1,
-                1,
-            ),
-            16,
-            10,
-        ).cast("long")
-        < 8
-    )
+    arm = md5_int("srm", F.col("user_id"), digits=1) < 8
     m = u.select(F.when(arm, 1).otherwise(0).alias("a")).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("a").cast("long").alias("n_a"),
@@ -1372,15 +1278,7 @@ def cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-bucket totals + broadcast offsets + in-bucket windows — never
     one WindowExec partition); one final map-side-combinable aggregate
     yields the single-row readout — mann_whitney_u's exact plan."""
-    nib = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("cd"), F.col("o_orderkey").cast("string")).cast("binary")),
-            1,
-            1,
-        ),
-        16,
-        10,
-    ).cast("long")
+    nib = md5_int("cd", F.col("o_orderkey"), digits=1)
     o = table(spark, sf_dir, "orders").select(
         F.when(nib < 8, 1).otherwise(0).alias("a"),
         (dec2("o_totalprice") * 100).cast("long").alias("cents"),

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..exact import dec2
+from ..exact import dec2, md5_int
 from ..functions.ranking import (
     bucketed_global_rank,
     bucketed_prefix_sum,
@@ -207,11 +207,7 @@ def split_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     column-pruned scan + a 1-row total broadcast — the PSI table is
     O(#bins)."""
     orders = table(spark, sf_dir, "orders")
-    first_nibble = F.conv(
-        F.substring(F.md5(F.col("o_orderkey").cast("string").cast("binary")), 1, 1),
-        16,
-        10,
-    ).cast("long")
+    first_nibble = md5_int(F.col("o_orderkey"), digits=1)
     labeled = orders.select(
         F.when(first_nibble < 13, "train").otherwise("val").alias("split"),
         F.least(
@@ -1015,11 +1011,7 @@ def feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("nat="), F.col("c_nationkey").cast("string")).alias("feat")
         )
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("feat").cast("binary")), 1, 8), 16, 10)
-        .cast("long")
-        % 32
-    )
+    bucket = md5_int(F.col("feat")) % 32
     return (
         feats.select(bucket.alias("bucket"), "feat")
         .groupBy("bucket")
@@ -1059,18 +1051,7 @@ def group_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the fold is a pure per-row expression (no join to a
     user table, no shuffle to co-locate groups); the census is one
     map-side-combinable aggregate over 5 keys."""
-    fold = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("u"), F.col("user_id").cast("string")).cast("binary")),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 5
-    )
+    fold = md5_int("u", F.col("user_id")) % 5
     return (
         table(spark, sf_dir, "events")
         .select(fold.alias("fold"), "user_id")
@@ -1513,15 +1494,7 @@ def impute_group_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed_global_rank within the group); the O(#groups) median
     table broadcasts back into the scan — no global window, no
     driver collect."""
-    nib = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("imp"), F.col("event_id").cast("string")).cast("binary")),
-            1,
-            1,
-        ),
-        16,
-        10,
-    ).cast("long")
+    nib = md5_int("imp", F.col("event_id"), digits=1)
     e = table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -1675,15 +1648,7 @@ def conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     WindowExec partition); qhat is a 1-row broadcast; the coverage
     pass is one map-side-combinable aggregate. Split membership is a
     per-row hash — no shuffle to assign."""
-    nib = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("conf"), F.col("k").cast("string")).cast("binary")),
-            1,
-            1,
-        ),
-        16,
-        10,
-    ).cast("long")
+    nib = md5_int("conf", F.col("k"), digits=1)
     orders = table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
         "o_custkey",
@@ -1864,15 +1829,7 @@ def wasserstein_1d_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable reduction."""
     from ..functions.ranking import bucketed_prefix_sums
 
-    nib = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("w1"), F.col("o_orderkey").cast("string")).cast("binary")),
-            1,
-            1,
-        ),
-        16,
-        10,
-    ).cast("long")
+    nib = md5_int("w1", F.col("o_orderkey"), digits=1)
     o = table(spark, sf_dir, "orders").select(
         F.when(nib < 8, 1).otherwise(0).alias("a"),
         (dec2("o_totalprice") * 100).cast("long").alias("cents"),
@@ -2053,22 +2010,7 @@ def adversarial_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to auc_exact — per-score histogram (one
     map-side-combinable aggregate), bucketed prefix sums for the
     cumulative rank, one 1-row reduction. No unpartitioned window."""
-    is_test = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("av"), F.col("o_orderkey").cast("string")).cast(
-                        "binary"
-                    )
-                ),
-                1,
-                1,
-            ),
-            16,
-            10,
-        ).cast("long")
-        >= 12
-    )
+    is_test = md5_int("av", F.col("o_orderkey"), digits=1) >= 12
     s = (
         table(spark, sf_dir, "orders")
         .groupBy(F.col("o_totalprice").alias("score"))
@@ -2243,22 +2185,9 @@ def gini_split_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole per-feature scan costs one pass regardless of rows; a
     real trainer fans this out over features as independent columns
     of the same histogram pass."""
-    p = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("p"), F.col("o_orderkey").cast("string")).cast(
-                        "binary"
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000
-    )
+    from .evalrank import _pseudo_p
+
+    p = _pseudo_p()
     y = F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)
     h = (
         table(spark, sf_dir, "orders")
@@ -2475,22 +2404,7 @@ def regression_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("cat"),
         (dec2("o_totalprice") * 100).cast("long").alias("y"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("rm"), F.col("o_orderkey").cast("string")
-                        ).cast("binary")
-                    ),
-                    1,
-                    1,
-                ),
-                16,
-                10,
-            ).cast("long")
-            >= 12
-        ).alias("is_test"),
+        (md5_int("rm", F.col("o_orderkey"), digits=1) >= 12).alias("is_test"),
     )
     tr = (
         o.where(~F.col("is_test"))
@@ -3402,22 +3316,7 @@ def kfold_cv_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-size leave-out algebra join, one scan-side equi-join with
     a broadcast dim, one fold-keyed reduce — two scans total, k
     appears only in the tiny dimension."""
-    fold = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("kf"), F.col("o_orderkey").cast("string")).cast(
-                        "binary"
-                    )
-                ),
-                1,
-                1,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 5
-    )
+    fold = md5_int("kf", F.col("o_orderkey"), digits=1) % 5
     o = table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("cat"),
         (dec2("o_totalprice") * 100).cast("long").alias("y"),

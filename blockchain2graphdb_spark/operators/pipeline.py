@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import SESSION_GAP_US as _SESSION_GAP_US
 from ..catalog import table
-from ..exact import dec2
+from ..exact import dec2, md5_int
 from ..registry import query
 
 _D38 = "decimal(38,0)"
@@ -1196,15 +1196,7 @@ def weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the key is a pure per-row expression; the cut is
     TakeOrdered (per-partition top-100 then merge of 100-row heads) —
     the same never-a-global-sort discipline as sample_hash_topk."""
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("ws"), F.col("o_orderkey").cast("string")).cast("binary")),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_int("ws", F.col("o_orderkey"))
     u = (h + 1).cast("double") / F.lit(4294967296.0)
     es = F.round(F.log(u) / F.col("o_totalprice") * 1e9).cast("long")
     return (
@@ -2110,23 +2102,7 @@ def bloom_fpr_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(_BLOOM_K):
             b = df.select(
                 F.col("o_orderkey").alias("key"),
-                (
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    F.lit(f"b{i}:"),
-                                    F.col("o_orderkey").cast("string"),
-                                ).cast("binary")
-                            ),
-                            1,
-                            8,
-                        ),
-                        16,
-                        10,
-                    ).cast("long")
-                    % _BLOOM_M
-                ).alias("bit"),
+                (md5_int(f"b{i}:", F.col("o_orderkey")) % _BLOOM_M).alias("bit"),
             )
             out = b if out is None else out.unionByName(b)
         return out

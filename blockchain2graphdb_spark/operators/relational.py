@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..exact import dec2, money_avg, money_sum
+from ..exact import dec2, md5_int, money_avg, money_sum
 from ..paths import derived_dir
 from ..plans.iterate import local_checkpoint
 from ..registry import query
@@ -1453,16 +1453,7 @@ def sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows_d = ev.select(
         "user_id", F.explode(F.array(*[F.lit(i) for i in range(4)])).alias("d")
     )
-    hex4 = F.substring(
-        F.md5(
-            F.concat(
-                F.col("d").cast("string"), F.lit(":"), F.col("user_id").cast("string")
-            ).cast("binary")
-        ),
-        1,
-        4,
-    )
-    bucket = F.conv(hex4, 16, 10).cast("long") % 1024
+    bucket = md5_int(F.col("d"), ":", F.col("user_id"), digits=4) % 1024
     return (
         rows_d.select(F.col("d").cast("long").alias("depth"), bucket.alias("bucket"))
         .groupBy("depth", "bucket")
@@ -2040,10 +2031,7 @@ def join_partition_prune_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "events")
         .select("event_type")
         .distinct()
-        .where(
-            F.conv(F.substring(F.md5("event_type"), 1, 1), 16, 10).cast("long") % 2
-            == 0
-        )
+        .where(md5_int(F.col("event_type"), digits=1) % 2 == 0)
     )
     return (
         fact.join(F.broadcast(dim), "event_type")
@@ -2306,19 +2294,10 @@ def countmin_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows_d = ev.select(
         "user_id", F.explode(F.array(*[F.lit(i) for i in range(4)])).alias("d")
     )
-    hex4 = F.substring(
-        F.md5(
-            F.concat(
-                F.col("d").cast("string"), F.lit(":"), F.col("user_id").cast("string")
-            ).cast("binary")
-        ),
-        1,
-        4,
-    )
     b = rows_d.select(
         "user_id",
         F.col("d").cast("long").alias("d"),
-        (F.conv(hex4, 16, 10).cast("long") % 1024).alias("bucket"),
+        (md5_int(F.col("d"), ":", F.col("user_id"), digits=4) % 1024).alias("bucket"),
     )
     cells = b.groupBy("d", "bucket").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     probes = b.distinct()

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..exact import md5_int
 from ..functions.vectors import float_cosine, quantize
 from ..plans.iterate import local_checkpoint
 from ..registry import query
@@ -1439,17 +1440,7 @@ def embedding_mmd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     term, two O(n) row-local folds for ||x||^4. Nothing pairwise,
     nothing scales with n except the scan."""
     grp = F.when(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("mmd"), F.col("vec_id").cast("string")).cast("binary")),
-                1,
-                1,
-            ),
-            16,
-            10,
-        ).cast("long")
-        < 8,
-        F.lit("a"),
+        md5_int("mmd", F.col("vec_id"), digits=1) < 8, F.lit("a")
     ).otherwise(F.lit("b"))
     q = table(spark, sf_dir, "embeddings").select(
         "vec_id", grp.alias("grp"), quantize("embedding").alias("qv")
@@ -1760,23 +1751,7 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         "i",
         "j",
         F.when(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("rp:"),
-                            F.col("j").cast("string"),
-                            F.lit(":"),
-                            F.col("i").cast("string"),
-                        ).cast("binary")
-                    ),
-                    1,
-                    1,
-                ),
-                16,
-                10,
-            ).cast("long")
-            < 8,
+            md5_int("rp:", F.col("j"), ":", F.col("i"), digits=1) < 8,
             1,
         )
         .otherwise(-1)

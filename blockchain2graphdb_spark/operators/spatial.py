@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..exact import hex_int
 from ..registry import query
 
 _GRID = 10_000  # coordinate space [0, _GRID)
@@ -44,15 +45,15 @@ _POINTS_SQL = f"""
 
 def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic integer point cloud from part keys: two md5 hex
-    slices (Spark conv(hex,16,10) ≡ DuckDB '0x…'::BIGINT, the pinned
-    portable hex→int equivalence) modulo the grid extent. Positive
+    slices of one digest (exact.hex_int ≡ DuckDB '0x…'::BIGINT, the
+    pinned portable hex→int equivalence) modulo the grid extent. Positive
     inputs, so % agrees across engines."""
     p = table(spark, sf_dir, "part")
     h = F.md5(F.col("p_partkey").cast("string").cast("binary"))
     return p.select(
         F.col("p_partkey").alias("id"),
-        (F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % _GRID).alias("x"),
-        (F.conv(F.substring(h, 9, 8), 16, 10).cast("long") % _GRID).alias("y"),
+        (hex_int(h) % _GRID).alias("x"),
+        (hex_int(h, start=9) % _GRID).alias("y"),
     )
 
 

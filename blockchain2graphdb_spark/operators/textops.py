@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..exact import md5_int
 from ..functions.ranking import bucketed_global_rank
 from ..plans.iterate import observed_checkpoint
 from ..plans.sizing import broadcast_hint
@@ -1542,11 +1543,7 @@ def text_hashing_vectorizer(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("term") != "")
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("term").cast("binary")), 1, 8), 16, 10)
-        .cast("long")
-        % 32
-    )
+    bucket = md5_int(F.col("term")) % 32
     return toks.groupBy("doc_id", bucket.alias("bucket")).agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens"),
         F.count_distinct("term").cast("long").alias("n_terms"),

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..exact import dec2
+from ..exact import dec2, hex_int
 from ..functions.ranking import bucketed_global_rank
 from ..registry import query
 
@@ -1548,9 +1548,7 @@ def watermark_lateness_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # bucket = first 2 hex chars of the arrival key: ascends with the
     # (arr, event_id) sort order, 256 buckets
-    d = e.withColumn(
-        "_b", F.conv(F.substring("arr", 1, 2), 16, 10).cast("long")
-    )
+    d = e.withColumn("_b", hex_int("arr", digits=2))
     bmax = d.groupBy("_b").agg(F.max("us").alias("_m"))
     earlier = bmax.select(F.col("_b").alias("_b2"), F.col("_m").alias("_m2"))
     prefix = (

@@ -30,18 +30,11 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..exact import md5_int
 from ..registry import query
 
 _SEED_MOD = 50  # every 50th order key seeds a walk
 _STEPS = 3  # order -> part -> order -> part
-
-
-def _hash_pick(seed_col: F.Column, step: int) -> F.Column:
-    """First 8 md5 hex digits of "<seed>:<step>" as a non-negative
-    bigint (< 2^32). Spark conv(hex,16,10) ≡ DuckDB '0x…'::BIGINT —
-    the pinned portable hex→int equivalence (spatial.py)."""
-    key = F.concat(seed_col.cast("string"), F.lit(f":{step}"))
-    return F.conv(F.substring(F.md5(key.cast("binary")), 1, 8), 16, 10).cast("long")
 
 
 def _oracle() -> str:
@@ -138,7 +131,7 @@ def random_walk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             (deg_op, adj_op, "o", "p") if t % 2 == 1 else (deg_po, adj_po, "p", "o")
         )
         tgt = cur.join(deg, cur["node"] == deg[src]).select(
-            "seed", "node", (_hash_pick(F.col("seed"), t) % F.col("deg")).alias("idx")
+            "seed", "node", (md5_int(F.col("seed"), f":{t}") % F.col("deg")).alias("idx")
         )
         return tgt.join(adj, (tgt["node"] == adj[src]) & (tgt["idx"] == adj["idx"])).select(
             "seed", F.col(dst).alias("node")
@@ -248,7 +241,6 @@ def gnn_neighbor_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _N2V_SEEDS = 64
-_N2V_STEPS = 3
 
 
 def _n2v_pick(step: int) -> str:
@@ -313,6 +305,87 @@ def _n2v_oracle() -> str:
     """
 
 
+def _n2v_walk(spark: SparkSession, sf_dir: str, tag: str, biased_step) -> DataFrame:
+    """The walk body both node2vec keys share: the checkpointed
+    adjacency (src, dst, idx) and degree table, the _N2V_SEEDS
+    smallest-md5 seeds, the uniform first step and the step 0-3 union.
+    `biased_step(cur, adj, deg, h)` takes the (seed, node, prev)
+    frontier and the step's md5(tag, seed, step) pick `h` and returns
+    the next frontier."""
+    from .graphops import _copurchase_pairs, _sym_edges
+
+    pairs, _n = _copurchase_pairs(spark, sf_dir)
+    adj = _sym_edges(pairs).select(
+        "src",
+        "dst",
+        (F.row_number().over(W.partitionBy("src").orderBy("dst")) - 1).alias("idx"),
+    ).localCheckpoint(eager=True)
+    deg = adj.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    seeds = (
+        adj.select(F.col("src").alias("seed"))
+        .distinct()
+        .orderBy(F.md5(F.col("seed").cast("string")), "seed")
+        .limit(_N2V_SEEDS)
+    )
+
+    def pick(step: int) -> F.Column:
+        return md5_int(tag, F.col("seed"), f":{step}")
+
+    # step 1: uniform over deg(seed)
+    s1 = (
+        seeds.join(deg, seeds["seed"] == deg["src"])
+        .select("seed", (pick(1) % F.col("deg")).alias("i"))
+        .join(adj, (F.col("seed") == adj["src"]) & (F.col("i") == adj["idx"]))
+        .select("seed", F.col("dst").alias("node"), F.col("seed").alias("prev"))
+    )
+    s2 = biased_step(s1, adj, deg, pick(2))
+    s3 = biased_step(s2, adj, deg, pick(3))
+
+    def out(df: DataFrame, t: int) -> DataFrame:
+        return df.select(
+            "seed",
+            F.lit(t).cast("long").alias("step"),
+            F.col("node").cast("long").alias("node"),
+        )
+
+    return (
+        seeds.select(
+            "seed",
+            F.lit(0).cast("long").alias("step"),
+            F.col("seed").cast("long").alias("node"),
+        )
+        .unionAll(out(s1, 1))
+        .unionAll(out(s2, 2))
+        .unionAll(out(s3, 3))
+    )
+
+
+def _n2v_return_step(
+    cur: DataFrame, adj: DataFrame, deg: DataFrame, h: F.Column
+) -> DataFrame:
+    """p = 2, q = 1: the return edge gets 1 slot and every other
+    neighbor 2 slots of a T = 2*deg - 1 wheel; h mod T picks the slot."""
+    pa = adj.select(
+        F.col("src").alias("c"), F.col("dst").alias("p"), F.col("idx").alias("pidx")
+    )
+    d = cur.join(deg, cur["node"] == deg["src"]).select(
+        "seed", "node", "prev", "deg"
+    )
+    d = d.join(
+        pa, (d["node"] == pa["c"]) & (d["prev"] == pa["p"])
+    ).select("seed", "node", "deg", "pidx")
+    r = h % (2 * F.col("deg") - 1)
+    half = F.expr("r div 2")
+    chosen = (
+        F.when(F.col("r") == 2 * F.col("deg") - 2, F.col("pidx"))
+        .otherwise(F.when(half < F.col("pidx"), half).otherwise(half + 1))
+    )
+    d = d.withColumn("r", r).withColumn("i", chosen)
+    return d.join(adj, (d["node"] == adj["src"]) & (d["i"] == adj["idx"])).select(
+        "seed", F.col("dst").alias("node"), d["node"].alias("prev")
+    )
+
+
 @query("node2vec_walk_sample", oracle=_n2v_oracle())
 def node2vec_walk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Return-biased (node2vec p = 2, q = 1) deterministic walks over
@@ -333,78 +406,7 @@ def node2vec_walk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     symmetric edge list (one partitioned window + one aggregate); per
     step O(#walks) shuffle rows; walk length is a literal — one linear
     DAG, no driver loop."""
-    from .graphops import _copurchase_pairs, _pair_nodes, _sym_edges
-
-    pairs, _n = _copurchase_pairs(spark, sf_dir)
-    sym = _sym_edges(pairs)
-    adj = sym.select(
-        "src",
-        "dst",
-        (F.row_number().over(W.partitionBy("src").orderBy("dst")) - 1).alias("idx"),
-    ).localCheckpoint(eager=True)
-    deg = adj.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    seeds = (
-        adj.select(F.col("src").alias("seed"))
-        .distinct()
-        .orderBy(F.md5(F.col("seed").cast("string")), "seed")
-        .limit(_N2V_SEEDS)
-    )
-
-    def pick(step: int) -> F.Column:
-        key = F.concat(
-            F.lit("n2v"), F.col("seed").cast("string"), F.lit(f":{step}")
-        )
-        return F.conv(F.substring(F.md5(key.cast("binary")), 1, 8), 16, 10).cast(
-            "long"
-        )
-
-    # step 1: uniform over deg(seed)
-    s1 = (
-        seeds.join(deg, seeds["seed"] == deg["src"])
-        .select("seed", (pick(1) % F.col("deg")).alias("i"))
-        .join(adj, (F.col("seed") == adj["src"]) & (F.col("i") == adj["idx"]))
-        .select("seed", F.col("dst").alias("node"), F.col("seed").alias("prev"))
-    )
-
-    def biased_step(cur: DataFrame, step: int) -> DataFrame:
-        pa = adj.select(
-            F.col("src").alias("c"), F.col("dst").alias("p"), F.col("idx").alias("pidx")
-        )
-        d = cur.join(deg, cur["node"] == deg["src"]).select(
-            "seed", "node", "prev", "deg"
-        )
-        d = d.join(
-            pa, (d["node"] == pa["c"]) & (d["prev"] == pa["p"])
-        ).select("seed", "node", "deg", "pidx")
-        r = pick(step) % (2 * F.col("deg") - 1)
-        half = F.expr("r div 2")
-        chosen = (
-            F.when(F.col("r") == 2 * F.col("deg") - 2, F.col("pidx"))
-            .otherwise(F.when(half < F.col("pidx"), half).otherwise(half + 1))
-        )
-        d = d.withColumn("r", r).withColumn("i", chosen)
-        return d.join(adj, (d["node"] == adj["src"]) & (d["i"] == adj["idx"])).select(
-            "seed", F.col("dst").alias("node"), d["node"].alias("prev")
-        )
-
-    s2 = biased_step(s1, 2)
-    s3 = biased_step(s2, 3)
-
-    def out(df: DataFrame, t: int) -> DataFrame:
-        return df.select(
-            "seed",
-            F.lit(t).cast("long").alias("step"),
-            F.col("node").cast("long").alias("node"),
-        )
-
-    return (
-        seeds.select(
-            "seed", F.lit(0).cast("long").alias("step"), F.col("seed").cast("long").alias("node")
-        )
-        .unionAll(out(s1, 1))
-        .unionAll(out(s2, 2))
-        .unionAll(out(s3, 3))
-    )
+    return _n2v_walk(spark, sf_dir, "n2v", _n2v_return_step)
 
 
 def _n2v_pq_pick(step: int) -> str:
@@ -481,6 +483,50 @@ def _n2v_pq_oracle() -> str:
     """
 
 
+def _n2v_pq_step(
+    cur: DataFrame, adj: DataFrame, deg: DataFrame, h: F.Column
+) -> DataFrame:
+    """p = 2, q = 2: per-walk prefix sums of the candidate slots (1 for
+    prev, 2 for a neighbor of prev, 1 otherwise); h mod the total picks
+    the span it lands in. `deg` is unused: the total is the slot sum."""
+    cand = cur.join(adj, cur["node"] == adj["src"]).select(
+        "seed",
+        cur["node"].alias("cu"),
+        "prev",
+        F.col("dst").alias("cand"),
+        "idx",
+    )
+    tri = adj.select(
+        F.col("src").alias("tp"), F.col("dst").alias("tc")
+    ).withColumn("is_tri", F.lit(1))
+    cand = cand.join(
+        tri, (cand["prev"] == tri["tp"]) & (cand["cand"] == tri["tc"]), "left"
+    ).select(
+        "seed",
+        "cu",
+        "prev",
+        "cand",
+        "idx",
+        F.when(F.col("cand") == F.col("prev"), F.lit(1))
+        .when(F.col("is_tri").isNotNull(), F.lit(2))
+        .otherwise(F.lit(1))
+        .cast("long")
+        .alias("slots"),
+    )
+    wseed = W.partitionBy("seed")
+    cand = cand.withColumn(
+        "st",
+        F.sum("slots").over(
+            wseed.orderBy("idx").rowsBetween(W.unboundedPreceding, 0)
+        )
+        - F.col("slots"),
+    ).withColumn("tot", F.sum("slots").over(wseed))
+    r = h % F.col("tot")
+    return cand.where((r >= F.col("st")) & (r < F.col("st") + F.col("slots"))).select(
+        "seed", F.col("cand").alias("node"), F.col("cu").alias("prev")
+    )
+
+
 @query("node2vec_walk_sample_pq", oracle=_n2v_pq_oracle())
 def node2vec_walk_sample_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL node2vec biased walks (p = 2, q = 2) over the co-purchase
@@ -511,97 +557,7 @@ def node2vec_walk_sample_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: the reference's graph layer stops at stored
     traversals (B:1100–1180); this extends the X17 training-data
     sampling surface."""
-    from .graphops import _copurchase_pairs, _pair_nodes, _sym_edges
-
-    pairs, _n = _copurchase_pairs(spark, sf_dir)
-    sym = _sym_edges(pairs)
-    adj = sym.select(
-        "src",
-        "dst",
-        (F.row_number().over(W.partitionBy("src").orderBy("dst")) - 1).alias("idx"),
-    ).localCheckpoint(eager=True)
-    deg = adj.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    seeds = (
-        adj.select(F.col("src").alias("seed"))
-        .distinct()
-        .orderBy(F.md5(F.col("seed").cast("string")), "seed")
-        .limit(_N2V_SEEDS)
-    )
-
-    def pick(step: int) -> F.Column:
-        key = F.concat(
-            F.lit("n2vpq"), F.col("seed").cast("string"), F.lit(f":{step}")
-        )
-        return F.conv(F.substring(F.md5(key.cast("binary")), 1, 8), 16, 10).cast(
-            "long"
-        )
-
-    # step 1: uniform over deg(seed) — identical shape to the p-only walk
-    s1 = (
-        seeds.join(deg, seeds["seed"] == deg["src"])
-        .select("seed", (pick(1) % F.col("deg")).alias("i"))
-        .join(adj, (F.col("seed") == adj["src"]) & (F.col("i") == adj["idx"]))
-        .select("seed", F.col("dst").alias("node"), F.col("seed").alias("prev"))
-    )
-
-    def biased_pq_step(cur: DataFrame, step: int) -> DataFrame:
-        cand = cur.join(adj, cur["node"] == adj["src"]).select(
-            "seed",
-            cur["node"].alias("cu"),
-            "prev",
-            F.col("dst").alias("cand"),
-            "idx",
-        )
-        tri = adj.select(
-            F.col("src").alias("tp"), F.col("dst").alias("tc")
-        ).withColumn("is_tri", F.lit(1))
-        cand = cand.join(
-            tri, (cand["prev"] == tri["tp"]) & (cand["cand"] == tri["tc"]), "left"
-        ).select(
-            "seed",
-            "cu",
-            "prev",
-            "cand",
-            "idx",
-            F.when(F.col("cand") == F.col("prev"), F.lit(1))
-            .when(F.col("is_tri").isNotNull(), F.lit(2))
-            .otherwise(F.lit(1))
-            .cast("long")
-            .alias("slots"),
-        )
-        wseed = W.partitionBy("seed")
-        cand = cand.withColumn(
-            "st",
-            F.sum("slots").over(
-                wseed.orderBy("idx").rowsBetween(W.unboundedPreceding, 0)
-            )
-            - F.col("slots"),
-        ).withColumn("tot", F.sum("slots").over(wseed))
-        r = pick(step) % F.col("tot")
-        return cand.where((r >= F.col("st")) & (r < F.col("st") + F.col("slots"))).select(
-            "seed", F.col("cand").alias("node"), F.col("cu").alias("prev")
-        )
-
-    s2 = biased_pq_step(s1, 2)
-    s3 = biased_pq_step(s2, 3)
-
-    def out(df: DataFrame, t: int) -> DataFrame:
-        return df.select(
-            "seed",
-            F.lit(t).cast("long").alias("step"),
-            F.col("node").cast("long").alias("node"),
-        )
-
-    return (
-        seeds.select(
-            "seed",
-            F.lit(0).cast("long").alias("step"),
-            F.col("seed").cast("long").alias("node"),
-        )
-        .unionAll(out(s1, 1))
-        .unionAll(out(s2, 2))
-        .unionAll(out(s3, 3))
-    )
+    return _n2v_walk(spark, sf_dir, "n2vpq", _n2v_pq_step)
 
 
 _NEG_TRIALS = 3
@@ -688,41 +644,12 @@ def negative_edge_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = bucketed_global_rank(
         nodes, F.expr("n div 1000"), [F.col("n")]
     ).select("n", "pos", "n_total")
-    ekey = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("a").cast("string"), F.lit("-"), F.col("b").cast("string")
-                ).cast("binary")
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    ekey = md5_int(F.col("a"), "-", F.col("b"))
     pos_edges = pairs.where(ekey % _NEG_MOD == 0)
     trials = pos_edges.select(
         "a", "b", F.explode(F.array(*[F.lit(t) for t in range(1, _NEG_TRIALS + 1)])).alias("t")
     )
-    pick = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("neg"),
-                    F.col("a").cast("string"),
-                    F.lit(":"),
-                    F.col("b").cast("string"),
-                    F.lit(":"),
-                    F.col("t").cast("string"),
-                ).cast("binary")
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    pick = md5_int("neg", F.col("a"), ":", F.col("b"), ":", F.col("t"))
     cand = (
         trials.crossJoin(
             F.broadcast(idx.agg(F.max("n_total").cast("long").alias("nt")))

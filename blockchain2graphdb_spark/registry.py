@@ -12,6 +12,9 @@ value-hash gate pass bit-for-bit):
     (`exact.py`) and is cast back to double at the end;
   * every window/limit/top-k order has a unique tie-breaker column;
   * float embeddings are integer-quantized before dot products;
+  * every md5-derived integer (sample, split, bucket, A/B arm, walk
+    step) is `exact.md5_int` / `exact.hex_int`, whose oracle twin is
+    `('0x' || substr(md5(...), s, k))::BIGINT`, written out by hand;
   * no approximate sketches on the oracle path (HLL etc. are rows-only).
 """
 

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import events_raw_schema, normalize_events_ts, table
+from ..exact import md5_int
 from ..registry import query
 
 
@@ -309,9 +310,16 @@ def stream_stateful_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M2 streaming form: arbitrary stateful fold per key via
     applyInPandasWithState — the running address-stats maintenance
     (B:837–947 read-modify-write) as managed state."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    s = _events_stream(spark, sf_dir)
+    return _run(spark, _user_value_fold(s), output_mode="update")
 
-    s = _events_stream(spark, sf_dir).select("user_id", "value")
+
+def _user_value_fold(s: DataFrame) -> DataFrame:
+    """The per-user running (n_events, total_value_centi) fold of
+    `stream_stateful_agg` and its oracle-checked twin: one update-mode
+    row per user per micro-batch, state (n, total) carried across
+    batches by applyInPandasWithState."""
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def fold(key, pdfs, state: GroupState):
         n, total = state.get if state.exists else (0, 0)
@@ -324,14 +332,13 @@ def stream_stateful_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"user_id": [key[0]], "n_events": [n], "total_value_centi": [total]}
         )
 
-    out = s.groupBy("user_id").applyInPandasWithState(
+    return s.select("user_id", "value").groupBy("user_id").applyInPandasWithState(
         fold,
         outputStructType="user_id long, n_events long, total_value_centi long",
         stateStructType="n long, total long",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return _run(spark, out, output_mode="update")
 
 
 @query(
@@ -667,31 +674,9 @@ def stream_stateful_agg_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle side — exact integers, matching the fold's rounded
     int64 accumulation (fixture values are 2-decimal, so no rounding
     boundary exists)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     d = _two_file_replay(sf_dir)
-    s = _events_stream(spark, sf_dir, path=d, maxFilesPerTrigger="1").select(
-        "user_id", "value"
-    )
-
-    def fold(key, pdfs, state: GroupState):
-        n, total = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += int((pdf["value"] * 100).round().astype("int64").sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value_centi": [total]}
-        )
-
-    out = s.groupBy("user_id").applyInPandasWithState(
-        fold,
-        outputStructType="user_id long, n_events long, total_value_centi long",
-        stateStructType="n long, total long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    updates = _run(spark, out, output_mode="update")
+    s = _events_stream(spark, sf_dir, path=d, maxFilesPerTrigger="1")
+    updates = _run(spark, _user_value_fold(s), output_mode="update")
     w = W.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
         updates.withColumn("rn", F.row_number().over(w))
@@ -976,22 +961,7 @@ def stream_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     d = _time_replay(sf_dir)
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("sp"), F.col("user_id").cast("string")).cast(
-                        "binary"
-                    )
-                ),
-                1,
-                1,
-            ),
-            16,
-            10,
-        ).cast("long")
-        < 8
-    )
+    arm = md5_int("sp", F.col("user_id"), digits=1) < 8
     s = _events_stream(spark, sf_dir, path=d, maxFilesPerTrigger="1").select(
         F.when(arm, 1).otherwise(0).cast("long").alias("arm"),
         F.unix_micros("ts").alias("us"),
