@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..functions.vectors import float_cosine
+from ..functions.vectors import cosine, dot, float_cosine, float_sq_dist, sq_dist
 from ..registry import query
 
 _N_CENTROIDS = 16
@@ -113,11 +113,7 @@ def kmeans_fit(
             "vec_id",
             "q",
             "cell",
-            F.aggregate(
-                F.zip_with("q", "c", lambda x, y: (x.cast("double") - y) ** 2),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ).alias("dist"),
+            float_sq_dist("q", "c").alias("dist"),
         )
         assign = (
             scored.withColumn("rn", F.row_number().over(w))
@@ -252,13 +248,8 @@ def kmeans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def assign(centroids: DataFrame) -> DataFrame:
-        d2 = F.aggregate(
-            F.zip_with("qv", "cv", lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
         scored = q.crossJoin(F.broadcast(centroids)).select(
-            "vec_id", "cid", d2.alias("d2")
+            "vec_id", "cid", sq_dist("qv", "cv").alias("d2")
         )
         return (
             scored.groupBy("vec_id")
@@ -339,9 +330,9 @@ def ivf_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (SnapshotStore.append) would commit.
 
     Scale shape: centroids are a k-row broadcast; the distance kernel
-    is a JVM zip_with/aggregate (one row per (vector, centroid), no
-    explode); the argmin is a per-vector window over k rows. Nothing
-    pairwise over the base."""
+    is `vectors.sq_dist`, a JVM zip_with/aggregate (one row per
+    (vector, centroid), no explode); the argmin is a per-vector window
+    over k rows. Nothing pairwise over the base."""
     from ..functions.vectors import quantize
 
     emb = table(spark, sf_dir, "embeddings").where(F.size("embedding") > 0)
@@ -359,10 +350,7 @@ def ivf_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = batch.crossJoin(F.broadcast(cents)).select(
         "vec_id",
         "cell",
-        F.expr(
-            "aggregate(zip_with(qv, cvec, (x, y) -> (x - y) * (x - y)),"
-            " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-        ).alias("d2"),
+        sq_dist("qv", "cvec").alias("d2"),
     )
     w = W.partitionBy("vec_id").orderBy("d2", "cell")
     return (
@@ -371,6 +359,11 @@ def ivf_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "cell", "d2")
         .orderBy("vec_id")
     )
+
+
+ivf_index_incremental.__doc__ = ivf_index_incremental.__doc__.format(
+    _IVF_INC_CENT_MOD=_IVF_INC_CENT_MOD
+)
 
 
 _RC_QUERIES = 20
@@ -497,7 +490,7 @@ def ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (queries x corpus) with the small side broadcast — the acceptance
     eval is sampled by design; the production index swaps the centroid
     stand-in for kmeans_fit output, unchanged plan."""
-    from .similarity import _quantized
+    from .similarity import _quantized, brute_force_scores
 
     qdf = _quantized(spark, sf_dir).select("vec_id", "q", "norm2")
     cents = (
@@ -510,20 +503,12 @@ def ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("norm2").alias("cnorm2"),
         )
     )
-    idot = F.aggregate(
-        F.zip_with(F.col("q"), F.col("cv"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
     cassign = qdf.join(F.broadcast(cents)).select(
         "vec_id",
         "q",
         "norm2",
         "cell",
-        (
-            idot.cast("double")
-            / F.sqrt((F.col("norm2") * F.col("cnorm2")).cast("double"))
-        ).alias("sim"),
+        cosine(dot("q", "cv"), "norm2", "cnorm2").alias("sim"),
     )
     wa = W.partitionBy("vec_id").orderBy(F.desc("sim"), "cell")
     ranked = cassign.withColumn("rn", F.row_number().over(wa))
@@ -542,32 +527,20 @@ def ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cell",
         )
     )
-    pdot = F.aggregate(
-        F.zip_with(F.col("qq"), F.col("cq"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
+    pcos = cosine(dot("qq", "cq"), "qnorm2", "cnorm2x")
     wq = W.partitionBy("query_id").orderBy(F.desc("cosine"), "cand_id")
     queries = qdf.where(F.col("vec_id") < _RC_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("q").alias("qq"),
         F.col("norm2").alias("qnorm2"),
     )
+    cands = qdf.select(
+        F.col("vec_id").alias("cand_id"),
+        F.col("q").alias("cq"),
+        F.col("norm2").alias("cnorm2x"),
+    )
     bf = (
-        qdf.select(
-            F.col("vec_id").alias("cand_id"),
-            F.col("q").alias("cq"),
-            F.col("norm2").alias("cnorm2x"),
-        )
-        .join(F.broadcast(queries), F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            (
-                pdot.cast("double")
-                / F.sqrt((F.col("qnorm2") * F.col("cnorm2x")).cast("double"))
-            ).alias("cosine"),
-        )
+        brute_force_scores(queries, cands, ["query_id", "cand_id"], pcos)
         .withColumn("rn", F.row_number().over(wq))
         .where(F.col("rn") <= 10)
         .select("query_id", "cand_id", F.col("rn").alias("bf_rn"))
@@ -575,14 +548,7 @@ def ann_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivf = (
         probes.join(idx, "cell")
         .where(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            (
-                pdot.cast("double")
-                / F.sqrt((F.col("qnorm2") * F.col("cnorm2x")).cast("double"))
-            ).alias("cosine"),
-        )
+        .select("query_id", "cand_id", pcos.alias("cosine"))
         # No dedup needed: idx assigns each candidate to exactly ONE
         # cell and a query's probe cells are distinct, so (query_id,
         # cand_id) pairs are unique by construction — and the oracle

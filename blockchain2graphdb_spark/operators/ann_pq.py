@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..functions.vectors import quantize
+from ..functions.vectors import quantize, sq_dist
 from ..registry import query
 
 _M_SUB = 4       # subspaces
@@ -41,14 +41,6 @@ def _subvectors(df: DataFrame, vec_col: str) -> DataFrame:
                 ]
             )
         ).alias("s", "sub"),
-    )
-
-
-def _l2(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
     )
 
 
@@ -74,7 +66,7 @@ def pq_encode(pts: DataFrame, books: DataFrame) -> DataFrame:
     broadcast join + per-(vec_id, s) argmin, ties to the lowest code."""
     sub = _subvectors(pts, "q")
     scored = sub.join(F.broadcast(books), "s").select(
-        "vec_id", "s", "code", _l2(F.col("sub"), F.col("center")).alias("d")
+        "vec_id", "s", "code", sq_dist("sub", "center").alias("d")
     )
     w = W.partitionBy("vec_id", "s").orderBy("d", "code")
     return (
@@ -102,7 +94,7 @@ def similarity_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumnRenamed("vec_id", "query_id")
         .join(F.broadcast(books), "s")
         .select(
-            "query_id", "s", "code", _l2(F.col("sub"), F.col("center")).alias("d")
+            "query_id", "s", "code", sq_dist("sub", "center").alias("d")
         )
     )
     approx = (

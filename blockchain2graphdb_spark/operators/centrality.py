@@ -816,6 +816,9 @@ def katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+katz_centrality.__doc__ = katz_centrality.__doc__.format(_KATZ_ROUNDS=_KATZ_ROUNDS)
+
+
 @query(
     "khop_induced_subgraph",
     oracle=f"""

@@ -1415,6 +1415,11 @@ def minhash_estimate_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+minhash_estimate_calibration.__doc__ = minhash_estimate_calibration.__doc__.format(
+    _MHD_PERMS=_MHD_PERMS
+)
+
+
 def _shc_oracle() -> str:
     vote_cols = ",\n         ".join(
         f"SUM(CASE WHEN (th // {1 << i}) % 2 = 1 THEN cnt ELSE -cnt END) AS b{i}"

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..catalog import SESSION_GAP_US as _SESSION_GAP_US
 from ..catalog import table
 from ..exact import dec2, md5_int
+from ..functions.vectors import dot
 from ..registry import query
 
 _D38 = "decimal(38,0)"
@@ -904,10 +905,7 @@ def chunk_embed_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id",
         "doc_id",
         "start",
-        F.expr(
-            "aggregate(zip_with(qv, cv, (a, b) -> a * b),"
-            " cast(0 as bigint), (acc, x) -> acc + x)"
-        ).alias("score"),
+        dot("qv", "cv").alias("score"),
     )
     rk = F.row_number().over(
         W.partitionBy("query_id").orderBy(
@@ -1953,6 +1951,11 @@ def sequence_packing_shelf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("fill_micros"),
     )
+
+
+sequence_packing_shelf.__doc__ = sequence_packing_shelf.__doc__.format(
+    _PACK_BUDGET=_PACK_BUDGET
+)
 
 
 @query(

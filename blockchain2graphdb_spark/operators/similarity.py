@@ -21,7 +21,15 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..exact import md5_int
-from ..functions.vectors import float_cosine, quantize
+from ..functions.vectors import (
+    cosine,
+    dot,
+    float_cosine,
+    float_dot,
+    norm2,
+    quantize,
+    sq_dist,
+)
 from ..plans.iterate import local_checkpoint
 from ..registry import query
 
@@ -32,10 +40,55 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, label, q: array<long>, norm2: long) with q = round(x*1000)."""
     emb = table(spark, sf_dir, "embeddings")
     q = emb.select("vec_id", "label", quantize("embedding").alias("q"))
-    norm2 = F.aggregate(
-        F.transform(F.col("q"), lambda x: x * x), F.lit(0).cast("long"), lambda a, x: a + x
+    return q.withColumn("norm2", norm2("q"))
+
+
+def _sides(
+    qdf: DataFrame, is_query: F.Column, query_label: str | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """brute_force_scores inputs from `_quantized` rows: the queries
+    (query_id, qq, qnorm2) where `is_query`, and every row as a candidate
+    (cand_id, cq, cnorm2). With `query_label`, each side also carries its
+    label, named `query_label` and `cand_label`."""
+    q_label = [F.col("label").alias(query_label)] if query_label else []
+    c_label = [F.col("label").alias("cand_label")] if query_label else []
+    queries = qdf.where(is_query).select(
+        F.col("vec_id").alias("query_id"),
+        *q_label,
+        F.col("q").alias("qq"),
+        F.col("norm2").alias("qnorm2"),
     )
-    return q.withColumn("norm2", norm2)
+    cands = qdf.select(
+        F.col("vec_id").alias("cand_id"),
+        *c_label,
+        F.col("q").alias("cq"),
+        F.col("norm2").alias("cnorm2"),
+    )
+    return queries, cands
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The k highest-`cosine` rows of each query_id, ties to the lower cand_id."""
+    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
+    return scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k).drop("rn")
+
+
+def brute_force_scores(
+    queries: DataFrame,
+    cands: DataFrame,
+    cols: list[str],
+    score: F.Column,
+    extra: F.Column | None = None,
+) -> DataFrame:
+    """The exact brute-force scorer: the small `queries` side
+    (query_id, …) is broadcast against one scan of `cands` (cand_id, …),
+    so the candidates need no shuffle. One row per pair with
+    cand_id != query_id (and `extra`, when given): `cols`, then `score`
+    as `cosine`."""
+    on = F.col("cand_id") != F.col("query_id")
+    if extra is not None:
+        on = on & extra
+    return cands.join(F.broadcast(queries), on).select(*cols, score.alias("cosine"))
 
 
 @query(
@@ -74,29 +127,9 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactness; the query side is broadcast so candidates need no shuffle.
     """
     qdf = _quantized(spark, sf_dir)
-    queries = qdf.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("q").alias("qq"),
-        F.col("norm2").alias("qnorm2"),
-    )
-    cands = qdf.select(
-        F.col("vec_id").alias("cand_id"), F.col("q").alias("cq"), F.col("norm2").alias("cnorm2")
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("qq"), F.col("cq"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-    scored = (
-        cands.join(F.broadcast(queries), F.col("cand_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            dot.cast("double") / F.sqrt((F.col("qnorm2") * F.col("cnorm2")).cast("double")),
-        )
-        .select("query_id", "cand_id", "cosine")
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= 10).drop("rn")
+    queries, cands = _sides(qdf, F.col("vec_id") < 5)
+    score = cosine(dot("qq", "cq"), "qnorm2", "cnorm2")
+    return _top_k(brute_force_scores(queries, cands, ["query_id", "cand_id"], score), 10)
 
 
 @query("similarity_bruteforce")  # rows-only: float accumulation order is engine-specific
@@ -110,13 +143,8 @@ def similarity_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
     cands = emb.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("ce"))
-    scored = (
-        cands.join(F.broadcast(queries), F.col("cand_id") != F.col("query_id"))
-        .withColumn("cosine", float_cosine(F.col("qe"), F.col("ce")))
-        .select("query_id", "cand_id", "cosine")
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= 3).drop("rn")
+    score = float_cosine(F.col("qe"), F.col("ce"))
+    return _top_k(brute_force_scores(queries, cands, ["query_id", "cand_id"], score), 3)
 
 
 def lsh_candidate_pairs(
@@ -157,10 +185,7 @@ def lsh_candidate_pairs(
         # n_bits sign bits of table t packed into one long
         bits = []
         for b in range(n_bits):
-            products = F.zip_with(
-                vec, hyperplane(t * 1024 + b), lambda x, h: x.cast("double") * h
-            )
-            s = F.aggregate(products, F.lit(0.0), lambda a, x: a + x)
+            s = float_dot(vec, hyperplane(t * 1024 + b))
             bits.append(F.when(s >= 0, F.lit(1 << b)).otherwise(F.lit(0)))
         return sum(bits[1:], bits[0])
 
@@ -203,11 +228,7 @@ def lsh_topk(
     """LSH candidate pairs (see lsh_candidate_pairs) reranked to the
     exact-cosine top-k per query vector."""
     emb = table(spark, sf_dir, "embeddings")
-    pairs = lsh_candidate_pairs(emb, n_bits=n_bits, n_tables=n_tables)
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    return (
-        pairs.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k).drop("rn")
-    )
+    return _top_k(lsh_candidate_pairs(emb, n_bits=n_bits, n_tables=n_tables), k)
 
 
 @query("similarity_lsh")  # rows-only: approximate by design
@@ -252,21 +273,12 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     qdf = _quantized(spark, sf_dir)
     a = qdf.alias("a")
     b = qdf.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.q"), F.col("b.q"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
     pairs = (
         a.join(
             b,
             (F.col("a.label") == F.col("b.label")) & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
-        .withColumn(
-            "cosine",
-            dot.cast("double")
-            / F.sqrt((F.col("a.norm2") * F.col("b.norm2")).cast("double")),
-        )
+        .withColumn("cosine", cosine(dot("a.q", "b.q"), "a.norm2", "b.norm2"))
         .where(F.col("cosine") > 0.3)
         .select(
             F.col("a.vec_id").alias("vec_a"),
@@ -374,34 +386,15 @@ def similarity_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates and this predicate reranks them.
     """
     qdf = _quantized(spark, sf_dir)
-    queries = qdf.where(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("q").alias("qq"),
-        F.col("norm2").alias("qnorm2"),
-    )
-    cands = qdf.select(
-        F.col("vec_id").alias("cand_id"), F.col("q").alias("cq"), F.col("norm2").alias("cnorm2")
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("qq"), F.col("cq"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
+    queries, cands = _sides(qdf, F.col("vec_id") < 20)
     return (
         cands.join(F.broadcast(queries), F.col("cand_id") != F.col("query_id"))
-        .withColumn("dot", dot)
+        .withColumn("dot", dot("qq", "cq"))
         .where(
             (F.col("dot") > 0)
             & (F.lit(25) * F.col("dot") * F.col("dot") >= F.col("qnorm2") * F.col("cnorm2"))
         )
-        .select(
-            "query_id",
-            "cand_id",
-            (
-                F.col("dot").cast("double")
-                / F.sqrt((F.col("qnorm2") * F.col("cnorm2")).cast("double"))
-            ).alias("cosine"),
-        )
+        .select("query_id", "cand_id", cosine("dot", "qnorm2", "cnorm2").alias("cosine"))
     )
 
 
@@ -477,14 +470,8 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.col("maxabs").cast("long").alias("maxabs"),
         F.size("qv").cast("long").alias("n_dims"),
-        F.expr(
-            "aggregate(zip_with(codes, sequence(1, size(codes)), (c, i) -> c * i),"
-            " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-        ).alias("checksum"),
-        F.expr(
-            "aggregate(transform(codes, c -> c * c),"
-            " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-        ).alias("ssq"),
+        dot("codes", F.sequence(F.lit(1), F.size("codes"))).alias("checksum"),
+        norm2("codes").alias("ssq"),
         F.expr(
             "aggregate(zip_with(qv, codes, (x, c) -> abs(x * 127 - c * maxabs)),"
             " CAST(0 AS BIGINT), (acc, x) -> greatest(acc, x))"
@@ -658,19 +645,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     q = corpus.select("vec_id", quantize("embedding").alias("qv"))
-    norm2 = F.aggregate(
-        F.transform(F.col("qv"), lambda x: x * x),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
 
     def proj(p: int) -> F.Column:
-        coefs = F.array(*[F.lit(c) for c in _ND_COEFS[p]])
-        return F.aggregate(
-            F.zip_with(F.col("qv"), coefs, lambda x, c: x * c),
-            F.lit(0).cast("long"),
-            lambda a, x: a + x,
-        )
+        return dot("qv", F.array(*[F.lit(c) for c in _ND_COEFS[p]]))
 
     bucket = sum(
         (
@@ -680,7 +657,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         start=F.lit(0),
     )
     sig = q.select(
-        "vec_id", "qv", norm2.alias("norm2"), bucket.alias("bucket")
+        "vec_id", "qv", norm2("qv").alias("norm2"), bucket.alias("bucket")
     ).localCheckpoint(eager=True)
     a = sig.select(
         F.col("vec_id").alias("a"),
@@ -694,15 +671,10 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("norm2").alias("nb2"),
         "bucket",
     )
-    num = F.aggregate(
-        F.zip_with(F.col("qa"), F.col("qb"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
     return (
         a.join(b, "bucket")
         .where(F.col("a") < F.col("b"))
-        .withColumn("num", num)
+        .withColumn("num", dot("qa", "qb"))
         .where(
             (F.col("num") > 0)
             & (
@@ -714,10 +686,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             "a",
             "b",
             F.col("bucket").cast("long").alias("bucket"),
-            (
-                F.col("num").cast("double")
-                / F.sqrt((F.col("na2") * F.col("nb2")).cast("double"))
-            ).alias("cosine"),
+            cosine("num", "na2", "nb2").alias("cosine"),
         )
     )
 
@@ -770,7 +739,7 @@ def embedding_outlier_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per-dim sums via one posexplode aggregate (map-side
     combinable, O(#labels x dims) output); the sums fold back as ONE
     broadcast array per label (sort_array over collected (dim, sum)
-    structs), the distance is a zip_with/aggregate higher-order fold —
+    structs), the distance is one `vectors.sq_dist` fold scaled by n —
     no per-dim join amplification on the data side; top-5 per label
     compiles to WindowGroupLimit."""
     q = table(spark, sf_dir, "embeddings").select(
@@ -787,15 +756,7 @@ def embedding_outlier_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("sv")
     )
     cnt = q.groupBy("label").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    d2n2 = F.aggregate(
-        F.zip_with(
-            F.col("qv"),
-            F.col("sv"),
-            lambda x, s: (F.col("n") * x - s) * (F.col("n") * x - s),
-        ),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
+    d2n2 = sq_dist("qv", "sv", scale=F.col("n"))
     d = (
         q.join(F.broadcast(cent), "label")
         .join(F.broadcast(cnt), "label")
@@ -949,42 +910,15 @@ def hard_negative_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate generators (same file) slot in front unchanged when the
     candidate set outgrows a scan."""
     qdf = _quantized(spark, sf_dir)
-    queries = qdf.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("query_label"),
-        F.col("q").alias("qq"),
-        F.col("norm2").alias("qnorm2"),
+    queries, cands = _sides(qdf, F.col("vec_id") < 8, "query_label")
+    scored = brute_force_scores(
+        queries,
+        cands,
+        ["query_id", "cand_id", "cand_label"],
+        cosine(dot("qq", "cq"), "qnorm2", "cnorm2"),
+        extra=F.col("cand_label") != F.col("query_label"),
     )
-    cands = qdf.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("label").alias("cand_label"),
-        F.col("q").alias("cq"),
-        F.col("norm2").alias("cnorm2"),
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("qq"), F.col("cq"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-    scored = (
-        cands.join(
-            F.broadcast(queries),
-            (F.col("cand_id") != F.col("query_id"))
-            & (F.col("cand_label") != F.col("query_label")),
-        )
-        .withColumn(
-            "cosine",
-            dot.cast("double")
-            / F.sqrt((F.col("qnorm2") * F.col("cnorm2")).cast("double")),
-        )
-        .select("query_id", "cand_id", "cand_label", "cosine")
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 5)
-        .drop("rn")
-    )
+    return _top_k(scored, 5)
 
 
 # label_noise_knn candidate generation: 8 bands x 6 sign-planes of
@@ -1116,12 +1050,7 @@ def label_noise_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     qdf = _quantized(spark, sf_dir)
 
     def proj(band: int, p: int) -> F.Column:
-        coefs = F.array(*[F.lit(c) for c in _KNN_COEFS[band * _KNN_PLANES + p]])
-        return F.aggregate(
-            F.zip_with(F.col("q"), coefs, lambda x, c: x * c),
-            F.lit(0).cast("long"),
-            lambda a, x: a + x,
-        )
+        return dot("q", F.array(*[F.lit(c) for c in _KNN_COEFS[band * _KNN_PLANES + p]]))
 
     def bucket(band: int) -> F.Column:
         return sum(
@@ -1161,34 +1090,27 @@ def label_noise_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "band",
         "bucket",
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("qq"), F.col("cq"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
     # A pair sharing multiple bands appears once per band; num/norms are
     # functions of the pair, so a distinct over the scalar columns
     # dedupes in one shuffle without carrying the vectors.
     pairs = (
         queries.join(cands, ["band", "bucket"])
         .where(F.col("cand_id") != F.col("query_id"))
-        .withColumn("num", dot)
+        .withColumn("num", dot("qq", "cq"))
         .select(
             "query_id", "own_label", "na2", "cand_id", "cand_label", "nb2", "num"
         )
         .distinct()
     )
-    scored = pairs.withColumn(
-        "cosine",
-        F.col("num").cast("double")
-        / F.sqrt((F.col("na2") * F.col("nb2")).cast("double")),
-    )
-    w5 = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    top5 = (
-        scored.withColumn("rn", F.row_number().over(w5))
-        .where(F.col("rn") <= 5)
-        .select("query_id", "own_label", "cand_label")
-    )
+    return _knn_label_votes(pairs.withColumn("cosine", cosine("num", "na2", "nb2")))
+
+
+def _knn_label_votes(scored: DataFrame) -> DataFrame:
+    """The label-noise tail shared by both candidate generators: the 5
+    highest-cosine candidates of each query vote with their labels; the
+    majority (votes DESC, label ASC) is knn_label, and a row is flagged
+    when it disagrees with the vector's own label."""
+    top5 = _top_k(scored, 5).select("query_id", "own_label", "cand_label")
     votes = top5.groupBy("query_id", "own_label", "cand_label").agg(
         F.count(F.lit(1)).cast("long").alias("n_votes")
     )
@@ -1218,56 +1140,14 @@ def _label_noise_knn_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     compares the LSH candidate sets against this scorer's true top-5
     and pins the measured recall floor."""
     qdf = _quantized(spark, sf_dir)
-    queries = qdf.where(F.col("vec_id") % 4 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("own_label"),
-        F.col("q").alias("qq"),
-        F.col("norm2").alias("qnorm2"),
+    queries, cands = _sides(qdf, F.col("vec_id") % 4 == 0, "own_label")
+    scored = brute_force_scores(
+        queries,
+        cands,
+        ["query_id", "own_label", "cand_id", "cand_label"],
+        cosine(dot("qq", "cq"), "qnorm2", "cnorm2"),
     )
-    cands = qdf.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("label").alias("cand_label"),
-        F.col("q").alias("cq"),
-        F.col("norm2").alias("cnorm2"),
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("qq"), F.col("cq"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-    scored = (
-        cands.join(F.broadcast(queries), F.col("cand_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            dot.cast("double")
-            / F.sqrt((F.col("qnorm2") * F.col("cnorm2")).cast("double")),
-        )
-        .select("query_id", "own_label", "cand_id", "cand_label", "cosine")
-    )
-    w5 = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    top5 = (
-        scored.withColumn("rn", F.row_number().over(w5))
-        .where(F.col("rn") <= 5)
-        .select("query_id", "own_label", "cand_label")
-    )
-    votes = top5.groupBy("query_id", "own_label", "cand_label").agg(
-        F.count(F.lit(1)).cast("long").alias("n_votes")
-    )
-    wm = W.partitionBy("query_id").orderBy(F.desc("n_votes"), "cand_label")
-    majority = (
-        votes.withColumn("mr", F.row_number().over(wm))
-        .where(F.col("mr") == 1)
-        .select(
-            F.col("query_id").alias("vec_id"),
-            F.col("own_label").cast("long").alias("label"),
-            F.col("cand_label").cast("long").alias("knn_label"),
-            "n_votes",
-        )
-    )
-    return majority.withColumn(
-        "flagged",
-        F.when(F.col("label") != F.col("knn_label"), 1).otherwise(0).cast("long"),
-    )
+    return _knn_label_votes(scored)
 
 
 @query(
@@ -1764,3 +1644,8 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", F.col("j").cast("long").alias("proj_dim"), "y")
         .orderBy("vec_id", "proj_dim")
     )
+
+
+embedding_random_projection.__doc__ = embedding_random_projection.__doc__.format(
+    _RP_DIMS=_RP_DIMS
+)

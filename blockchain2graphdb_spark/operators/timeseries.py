@@ -614,6 +614,9 @@ def ewma_trailing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ewma_trailing.__doc__ = ewma_trailing.__doc__.format(K=_EWMA_K)
+
+
 @query(
     "acf_lags",
     oracle=f"""

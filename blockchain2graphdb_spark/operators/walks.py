@@ -158,6 +158,9 @@ def random_walk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+random_walk_sample.__doc__ = random_walk_sample.__doc__.format(_SEED_MOD=_SEED_MOD)
+
+
 @query(
     "gnn_neighbor_sample",
     oracle="""
@@ -681,3 +684,8 @@ def negative_edge_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("t").cast("long").alias("trial"),
         )
     )
+
+
+negative_edge_sample.__doc__ = negative_edge_sample.__doc__.format(
+    _NEG_MOD=_NEG_MOD, _NEG_TRIALS=_NEG_TRIALS
+)

@@ -11,7 +11,11 @@ value-hash gate pass bit-for-bit):
   * money/double aggregation goes through exact DECIMAL arithmetic
     (`exact.py`) and is cast back to double at the end;
   * every window/limit/top-k order has a unique tie-breaker column;
-  * float embeddings are integer-quantized before dot products;
+  * float embeddings are integer-quantized (`vectors.quantize`) before
+    dot products, and every dot product, squared norm, squared distance
+    and cosine over them is `vectors.dot` / `norm2` / `sq_dist` /
+    `cosine` (exact long left folds, one double quotient), whose oracle
+    twin `SUM(a.qv[i] * b.qv[i])` is written out by hand;
   * every md5-derived integer (sample, split, bucket, A/B arm, walk
     step) is `exact.md5_int` / `exact.hex_int`, whose oracle twin is
     `('0x' || substr(md5(...), s, k))::BIGINT`, written out by hand;

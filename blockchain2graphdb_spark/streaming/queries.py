@@ -1805,7 +1805,7 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the centroid table stays a k-row broadcast/literal and
     arrivals absorb at O(|batch| x k) — the same freshness contract
     as the batch key, now with no re-scan of the base."""
-    from ..functions.vectors import quantize
+    from ..functions.vectors import quantize, sq_dist
 
     emb = table(spark, sf_dir, "embeddings").where(F.size("embedding") > 0)
     q = emb.select("vec_id", quantize("embedding").alias("qv"))
@@ -1841,15 +1841,7 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.transform(
                 cent_arr,
                 lambda c: F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("qv"),
-                            c["cvec"],
-                            lambda x, y: (x - y) * (x - y),
-                        ),
-                        F.lit(0).cast("long"),
-                        lambda acc, v: acc + v,
-                    ).alias("d2"),
+                    sq_dist("qv", c["cvec"]).alias("d2"),
                     c["cell"].alias("cell"),
                 ),
             )

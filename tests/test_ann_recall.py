@@ -161,9 +161,8 @@ def test_pq_recall_floor_and_determinism(spark, sf_dir):
     recall@10 measured 0.32; 0.15 is the regression floor. Encoding and
     ranking are fully deterministic."""
     from blockchain2graphdb_spark.catalog import table
-    from blockchain2graphdb_spark.functions.vectors import quantize
+    from blockchain2graphdb_spark.functions.vectors import quantize, sq_dist
     from blockchain2graphdb_spark.operators.ann_pq import (
-        _l2,
         _subvectors,
         pq_codebooks,
         pq_encode,
@@ -184,7 +183,7 @@ def test_pq_recall_floor_and_determinism(spark, sf_dir):
         _subvectors(queries, "q")
         .withColumnRenamed("vec_id", "query_id")
         .join(F.broadcast(books), "s")
-        .select("query_id", "s", "code", _l2(F.col("sub"), F.col("center")).alias("d"))
+        .select("query_id", "s", "code", sq_dist("sub", "center").alias("d"))
     )
     w10 = W.partitionBy("query_id").orderBy("adc", "cand_id")
     pq10 = (
@@ -203,7 +202,7 @@ def test_pq_recall_floor_and_determinism(spark, sf_dir):
             pts.select(F.col("vec_id").alias("cand_id"), F.col("q").alias("cq"))
         )
         .where(F.col("cand_id") != F.col("query_id"))
-        .select("query_id", "cand_id", _l2(F.col("qq"), F.col("cq")).alias("adc"))
+        .select("query_id", "cand_id", sq_dist("qq", "cq").alias("adc"))
         .withColumn("rn", F.row_number().over(w10))
         .where(F.col("rn") <= 10)
         .select("query_id", "cand_id")

@@ -87,3 +87,17 @@ def test_warm_graph_keys_compile_no_codegen_classes(spark, sf_dir):
     for key in keys:
         specs[key].builder(spark, sf_dir).collect()
     assert codegen_stats(spark)[0] - before == 0
+
+
+def test_builder_docstrings_have_no_unformatted_placeholders():
+    """A docstring that names a module constant as `{NAME}` must be
+    formatted after the builder (`fn.__doc__ = fn.__doc__.format(...)`),
+    or `help()` and the registry show the braces instead of the value."""
+    import re
+
+    placeholder = re.compile(r"\{[A-Za-z_]\w*\}")
+    raw = {
+        key: placeholder.findall(spec.builder.__doc__ or "")
+        for key, spec in registry.load_all().items()
+    }
+    assert not {k: v for k, v in raw.items() if v}

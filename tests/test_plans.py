@@ -431,3 +431,20 @@ def test_skew_aqe_split_plan_and_restore(spark):
     # and the registered builder itself restores them too
     SPECS["join_skew_aqe_split"].builder(spark, SF_DIR)
     assert {k: spark.conf.get(k) for k in _SKEW_AQE_CONFS} == before
+
+
+def test_capture_plans_normalizes_session_tokens():
+    """Captured plans drop expression ids, `plan_id=`, the lambda
+    variables' process-wide counter and the checkout root, so one plan
+    diffs clean between two checkouts and two sessions."""
+    from blockchain2graphdb_spark.paths import REPO_ROOT
+    from tools.capture_plans import normalize
+
+    raw = (
+        "lambdafunction((lambda x_1#3L * lambda y_2#4L), lambda x_1#3L, lambda y_2#4L)"
+        f" [plan_id=7] InMemoryFileIndex [file:{REPO_ROOT}/.tmp/evpart_ab]"
+    )
+    assert normalize(raw) == (
+        "lambdafunction((lambda x * lambda y), lambda x, lambda y)"
+        " [] InMemoryFileIndex [file:<repo>/.tmp/evpart_ab]"
+    )
